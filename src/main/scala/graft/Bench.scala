@@ -146,14 +146,16 @@ object Bench {
     // through ParquetLoader into a parquet collection, and documents
     // through the V2 JSONL sink (full quirk transcode per row).
     //
-    // On the jsonl-vs-parquet rate gap (~31k docs/s vs ~91k rows/s at
-    // sf0.1): PROFILED, not a kernel or commit-protocol bound. The
-    // quirk transcode kernel costs ~0.02 s over the bare scan, and the
-    // V2 sink outruns Spark's stock text committer on the same data
-    // (and reaches ~140k docs/s on a 50k-doc corpus — ABOVE the
-    // parquet rows/s). The documents fixture is just 5,000 rows, so
-    // the reported rate is fixed job+commit overhead (~0.2 s) divided
-    // by a tiny corpus; it amortizes away at any real scale.
+    // The parquet load writes one file per write task (batchSize does
+    // not size files): sf0.1 lineitem, warm JVM, local[4] on a 4-core
+    // Xeon VM, loads 600k rows into 2 files at ~270-475k rows/s.
+    // The jsonl rate is lower, and PROFILED: not a kernel or
+    // commit-protocol bound. The quirk transcode kernel costs ~0.02 s
+    // over the bare scan, and the V2 sink outruns Spark's stock text
+    // committer on the same data (~140k docs/s on a 50k-doc corpus).
+    // The documents fixture is just 5,000 rows, so the reported rate is
+    // fixed job+commit overhead (~0.2 s) divided by a tiny corpus; it
+    // amortizes away at any real scale.
     def rate(x: Double) = String.format(java.util.Locale.ROOT, "%.0f",
       Double.box(x))
     val loadStats =

@@ -172,7 +172,7 @@ final class Collection private[core] (
     * nullability and column order (parquet resolves columns by name, so
     * those differences are harmless); fail loudly naming the drifted
     * columns. Cost: one footer-schema read per Append (the loader
-    * appends once per LOAD, not per batch — ParquetLoader.scala:82).
+    * appends once per LOAD, not per batch — [[graft.io.ParquetLoader.load]]).
     */
   private def checkAppendSchema(df: DataFrame): Unit = {
     val stored = spark.read.parquet(path).schema
@@ -237,15 +237,15 @@ final class Collection private[core] (
     if (hasData) spark.read.parquet(path).count() else 0L
 
   /** Rewrite the collection into ≈`targetRecordsPerFile`-row files —
-    * the small-files maintenance pass every batched loader eventually
-    * needs (a `batchSize=1000` load of a billion rows leaves a million
-    * tiny files; footer-open cost then dominates every scan). The
-    * compacted copy is written to a sibling staging directory first
-    * and swapped in with two renames; a crash mid-compact leaves
-    * either the old or the new data, never a mix — a crash BETWEEN the
-    * two renames strands the data in the retired sibling, and
-    * [[recoverCompact]] restores it automatically on the next data
-    * access. Like any destructive maintenance op this assumes no
+    * the small-files maintenance pass every append-fed collection
+    * eventually needs (each append adds a file per write task, so many
+    * small appends leave many tiny files; footer-open cost then
+    * dominates every scan). The compacted copy is written to a sibling
+    * staging directory first and swapped in with two renames; a crash
+    * mid-compact leaves either the old or the new data, never a mix — a
+    * crash BETWEEN the two renames strands the data in the retired
+    * sibling, and [[recoverCompact]] restores it automatically on the
+    * next data access. Like any destructive maintenance op this assumes no
     * concurrent writer (or concurrent compact), and in-flight readers
     * of the old directory should be drained first.
     *

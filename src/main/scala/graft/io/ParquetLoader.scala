@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.DataType
   * | `loadParquetFileIntoArango(loc, col, ow, n)`| [[load]] |
   * | `loadParquetFileIntoArangoAsync(...)`       | [[loadAsync]] |
   * | `addTypeConverter(LogicalType, Function)`   | [[addTypeConverter]] |
-  * | batchSize (docs per insert, default 1000)   | maxRecordsPerFile on the Parquet write |
+  * | batchSize (docs per insert, default 1000)   | validated only: a round-trip size (:142-156), not a file size — one file per write task |
   * | maxParallelBatches (async cap, default 10)  | executor task parallelism (no busy-wait loop to port) |
   *
   * Validation semantics match the reference: batchSize ≥ 1 →
@@ -79,8 +79,7 @@ final class ParquetLoader(spark: SparkSession) {
     // source a second time
     val obs = org.apache.spark.sql.Observation()
     collection.write(df.observe(obs, count(lit(1)).as("rows")),
-      if (overwriteCollection) SaveMode.Overwrite else SaveMode.Append,
-      maxRecordsPerFile = batchSize.toLong)
+      if (overwriteCollection) SaveMode.Overwrite else SaveMode.Append)
     obs.get("rows").asInstanceOf[Long]
   }
 

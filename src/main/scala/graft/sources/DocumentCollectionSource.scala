@@ -43,6 +43,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    are removed first;
   *  - abort: the temp directory is deleted, leaving the collection
   *    exactly as before — a failed job never publishes partial data.
+  *    The driver creates the temp directory before any task starts and
+  *    tasks open their files with `createNonRecursive`, so a task that
+  *    outlives the abort fails instead of recreating the deleted
+  *    directory. (On a local filesystem the parent check and the open
+  *    are two calls, which narrows the window to the open itself; HDFS
+  *    checks the parent in the same NameNode call.)
   *
   * The table accepts any schema (the collection's schema IS the
   * document shape, as in the reference where ArangoDB is schemaless).
@@ -225,12 +231,14 @@ private class DocumentBatchWrite(path: String, batchSize: Int,
   private val conf = SessionConf.capture()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
+      : DataWriterFactory = {
+    Staging.create(tmpDir, conf)
     new DocumentWriterFactory(tmpDir, batchSize, schema,
       // published names carry this write's id: two append jobs (even
       // from different applications, whose task ids both start at 0)
       // can never collide on a final file name
       fileSuffix = s"-${writeId.take(8)}.jsonl", conf)
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
@@ -261,7 +269,24 @@ private class DocumentWriterFactory(tmpDir: String, batchSize: Int,
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new DocumentWriter(tmpDir, batchSize, schema,
-      fileName = f"part-$partitionId%05d-$taskId$fileSuffix", conf)
+      fileName = f"part-$partitionId%05d-$taskId$fileSuffix", conf,
+      staged = true)
+}
+
+/** Driver-side creation of a write's staging directory, before any of
+  * its tasks start (see [[DocumentCollectionSource]] on abort).
+  */
+private object Staging {
+  def create(dir: String,
+      conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf): Unit = {
+    val p = new Path(dir)
+    if (!p.getFileSystem(conf.value).mkdirs(p))
+      throw new java.io.IOException(s"could not create staging dir $dir")
+  }
+
+  /** The streaming sink's per-epoch staging dir. */
+  def epochDir(path: String, writeId: String, epochId: Long): String =
+    s"$path/_tmp-$writeId-e$epochId"
 }
 
 /** Streaming flavor of the sink: each epoch publishes its files under
@@ -290,10 +315,25 @@ private[sources] class DocumentStreamingWrite(path: String, batchSize: Int,
   private val writeId = UUID.randomUUID().toString
   private val conf = SessionConf.capture()
 
+  /** Called on the driver once per micro-batch. Spark's micro-batch
+    * engine names the epoch in a local property; when it is set, its
+    * staging dir is created here, before the tasks start. A caller that
+    * drives the connector without it (continuous processing, a direct
+    * replay) gets writers that create the epoch dir themselves, and an
+    * abort-outliving task's leftover dir is then swept by that epoch's
+    * next commit.
+    */
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : streaming.StreamingDataWriterFactory =
+      : streaming.StreamingDataWriterFactory = {
+    val staged = Option(org.apache.spark.sql.SparkSession.active.sparkContext
+        .getLocalProperty(org.apache.spark.sql.execution.streaming.runtime
+          .MicroBatchExecution.BATCH_ID_KEY))
+      .map(_.toLong)
+    staged.foreach(e =>
+      Staging.create(Staging.epochDir(path, writeId, e), conf))
     new DocumentStreamingWriterFactory(path, writeId, batchSize, schema,
-      conf)
+      conf, staged)
+  }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -329,37 +369,55 @@ private[sources] class DocumentStreamingWrite(path: String, batchSize: Int,
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
-    fs.delete(new Path(s"$path/_tmp-$writeId-e$epochId"), true)
+    fs.delete(new Path(Staging.epochDir(path, writeId, epochId)), true)
   }
 }
 
 private class DocumentStreamingWriterFactory(path: String, writeId: String,
     batchSize: Int, schema: StructType,
-    conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf)
+    conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf,
+    stagedEpoch: Option[Long])
     extends streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
     // temp name stays attempt-unique (concurrent speculative attempts
     // must never share a file); the attempt marker is stripped at
     // commit so the PUBLISHED name is the epoch-stable one
-    new DocumentWriter(s"$path/_tmp-$writeId-e$epochId", batchSize, schema,
+    new DocumentWriter(Staging.epochDir(path, writeId, epochId),
+      batchSize, schema,
       fileName = f"epoch-$epochId-part-$partitionId%05d-a$taskId.jsonl",
-      conf)
+      conf, staged = stagedEpoch.contains(epochId))
 }
 
 /** Per-task writer: rows render through the quirk transcoder into an
   * in-memory batch of `batchSize` lines, each batch flushed with one
   * stream write — the reference's accumulate→insert→clear loop with a
   * file stream standing in for the database client.
+  *
+  * The file opens at the first flush with `createNonRecursive`: the
+  * staging dir must already exist (`staged`: the driver created it), so
+  * a writer that outlives its job's abort fails rather than recreating
+  * the dir the abort deleted. An abort before the first flush opens
+  * nothing.
   */
 private class DocumentWriter(tmpDir: String, batchSize: Int,
     schema: StructType, fileName: String,
-    conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf)
+    conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf,
+    staged: Boolean)
     extends DataWriter[InternalRow] {
 
   private val file = new Path(tmpDir, fileName)
   private val fs = file.getFileSystem(conf.value)
-  private lazy val out = fs.create(file, true)
+  private var opened: org.apache.hadoop.fs.FSDataOutputStream = null
+  private def out = {
+    if (opened == null) {
+      if (!staged) fs.mkdirs(file.getParent)
+      opened = fs.createNonRecursive(file, true,
+        fs.getConf.getInt("io.file.buffer.size", 4096),
+        fs.getDefaultReplication(file), fs.getDefaultBlockSize(file), null)
+    }
+    opened
+  }
   private val batch = new java.lang.StringBuilder(64 * 1024)
   private var inBatch = 0
   private var rows = 0L
@@ -384,10 +442,9 @@ private class DocumentWriter(tmpDir: String, batchSize: Int,
     DocumentCommitMessage(file.toString, rows)
   }
 
-  override def abort(): Unit = {
-    try out.close() catch { case _: Throwable => () }
+  override def abort(): Unit = if (opened != null) {
+    try opened.close() catch { case _: Throwable => () }
     try fs.delete(file, false) catch { case _: Throwable => () }
-    ()
   }
 
   override def close(): Unit = ()

@@ -16,31 +16,42 @@ class CacheScopeSpec extends SparkSpec {
       else s"alpha beta gamma delta ep$i eta"))
     .toDF("doc_id", "text")
 
-  private def cachedRddCount: Int = {
-    spark.sparkContext.getPersistentRDDs.size
-  }
+  /** Ids of the persistent RDDs alive now. Checks compare ids, not the
+    * JVM-wide count: Spark's ContextCleaner unpersists an earlier
+    * suite's unreferenced RDDs asynchronously, so the count can fall
+    * below a baseline while nothing leaked. A leak is a NEW surviving id.
+    */
+  private def cachedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Names of the persistent RDDs created since `before` still alive. */
+  private def createdSince(before: Set[Int]): Seq[String] =
+    spark.sparkContext.getPersistentRDDs.toSeq
+      .collect { case (id, rdd) if !before(id) => s"$id:${rdd.name}" }
 
   test("scoped: operator caches are gone at bracket exit; results match " +
       "the unscoped run") {
     spark.catalog.clearCache()
+    val beforeUnscoped = cachedIds
     val unscoped = Dedup.jaccardShinglePairs(docsDf, "doc_id", "text", 3, 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cachedRddCount > 0, "unscoped run should leave operator caches")
+    assert(createdSince(beforeUnscoped).nonEmpty,
+      "unscoped run should leave operator caches")
     spark.catalog.clearCache()
-    val before = cachedRddCount
+    val before = cachedIds
     val scoped = CacheScope.scoped {
       Dedup.jaccardShinglePairs(docsDf, "doc_id", "text", 3, 0.6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     assert(scoped == unscoped)
-    assert(cachedRddCount == before,
-      s"scoped run leaked caches: $cachedRddCount vs $before")
+    val leaked = createdSince(before)
+    assert(leaked.isEmpty, s"scoped run leaked caches: $leaked")
   }
 
   test("scopedWith: caches registered from a CHILD thread release with " +
       "the owning bracket (the foreachBatch composition)") {
     spark.catalog.clearCache()
-    val before = cachedRddCount
+    val before = cachedIds
     var childResult = -1L
     var childError: Throwable = null
     CacheScope.scopedWith { scope =>
@@ -53,13 +64,13 @@ class CacheScopeSpec extends SparkSpec {
       t.start()
       t.join()
       if (childError != null) throw childError
-      assert(cachedRddCount > before,
+      assert(createdSince(before).nonEmpty,
         "child-thread operator run should have registered caches")
     }
     assert(childResult >= 0)
-    assert(cachedRddCount == before,
-      s"cross-thread caches leaked past the owning bracket: " +
-        spark.sparkContext.getPersistentRDDs.values.map(_.name))
+    val leaked = createdSince(before)
+    assert(leaked.isEmpty,
+      s"cross-thread caches leaked past the owning bracket: $leaked")
   }
 
   test("scoped covers the similarity, bloom-join, and clustering " +
@@ -69,7 +80,7 @@ class CacheScopeSpec extends SparkSpec {
       (i, Array.fill(8)(((i % 5) + 1).toFloat))).toDF("vec_id", "vec")
     val big = (1L to 200L).map(i => (i, i % 7)).toDF("row_id", "k")
     val small = Seq((1L, 0L), (2L, 3L)).toDF("sid", "k")
-    val before = cachedRddCount
+    val before = cachedIds
     CacheScope.scoped {
       SimilaritySearch.cosineNearDupPairsLSH(emb, "vec_id", "vec", 0.95)
         .count()
@@ -79,29 +90,30 @@ class CacheScopeSpec extends SparkSpec {
         "id1", "id2").count()
       ()
     }
-    assert(cachedRddCount == before,
-      s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    val leaked = createdSince(before)
+    assert(leaked.isEmpty, s"leaked: $leaked")
   }
 
   test("scopes nest: the inner bracket releases only its own caches") {
     spark.catalog.clearCache()
-    val before = cachedRddCount
+    val before = cachedIds
     CacheScope.scoped {
       val outer = Dedup.jaccardShinglePairs(docsDf, "doc_id", "text", 3, 0.6)
       outer.count()
-      val afterOuter = cachedRddCount
-      assert(afterOuter > before, "outer scope should be holding caches")
+      val outerCaches = createdSince(before)
+      assert(outerCaches.nonEmpty, "outer scope should be holding caches")
       CacheScope.scoped {
         Dedup.simHashPairs(docsDf, "doc_id", "text", maxDist = 3).count()
         ()
       }
       // inner released its own; outer's caches still alive (its lazy
       // results remain usable inside the outer scope)
-      assert(cachedRddCount == afterOuter,
-        "inner scope must not release outer caches")
+      assert(createdSince(before).toSet == outerCaches.toSet,
+        "inner scope must release its own caches and keep the outer's")
       outer.count() // still served from the outer scope's caches
       ()
     }
-    assert(cachedRddCount == before)
+    val leaked = createdSince(before)
+    assert(leaked.isEmpty, s"nested scopes leaked: $leaked")
   }
 }

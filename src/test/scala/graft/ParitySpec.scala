@@ -43,10 +43,37 @@ class ParitySpec extends SparkSpec {
     assert(c.count() == fixtureRows)
   }
 
-  test("small batchSize load preserves count (batch = write file sizing)") {
+  test("small batchSize load preserves count") {
     val c = freshDb().collection("nation")
     new ParquetLoader(spark).load(fixture, c, batchSize = 3)
     assert(c.count() == fixtureRows)
+  }
+
+  test("batchSize does not shape the layout: one file per read task") {
+    import spark.implicits._
+    // batchSize is the reference's docs-per-insert round trip; the
+    // collection's files follow the load's write tasks, whatever it is
+    val in = Files.createTempDirectory("graft-multi").toString + "/in"
+    (1L to 3000L).map(i => (i, s"d$i")).toDF("id", "t").repartition(4)
+      .write.parquet(in)
+    val readTasks = spark.read.parquet(in).rdd.getNumPartitions
+    val db = freshDb()
+    val loader = new ParquetLoader(spark)
+    def loadWith(batch: Int) = {
+      val c = db.collection(s"b$batch")
+      assert(loader.load(in, c, batchSize = batch) == 3000L)
+      val files = new java.io.File(c.path).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      (c.read().as[(Long, String)].collect().sorted.toSeq, files)
+    }
+    val (rows3, files3) = loadWith(3)
+    val (rows1000, files1000) = loadWith(1000)
+    assert(rows3 == rows1000 && rows3.size == 3000)
+    assert(files3 == files1000, s"batch 3: $files3 files, 1000: $files1000")
+    assert(files3 >= 1 && files3 <= readTasks,
+      s"$files3 files from $readTasks read tasks (⌈3000/3⌉ would be 1000)")
+    intercept[IllegalArgumentException](
+      loader.load(in, db.collection("b0"), batchSize = 0))
   }
 
   test("async load matches sync semantics incl. append") {
@@ -208,10 +235,13 @@ class ParitySpec extends SparkSpec {
     assert(doc == """{"i":1,"s":"a"}""")
   }
 
-  // ---- the reference's OWN fixture files (the exact parquet inputs its
-  // 24-case matrix runs over, ParquetArangoLoaderTest.java:94-106) ----
+  // ---- the reference's fixture files (the parquet inputs its 24-case
+  // matrix runs over, ParquetArangoLoaderTest.java:94-106) ----
 
-  private val refRes = "/root/reference/src/test/resources"
+  // regenerated stand-ins for the reference's fixtures (same names, row
+  // counts and schemas; see src/test/resources/gen_fixtures.py)
+  private val refRes = new java.io.File(
+    getClass.getResource("/testTypes.parquet").toURI).getParent
   private val refFixtures = Seq(
     "testTypes.parquet" -> 26L,
     "testTypesWithPDIndex.parquet" -> 26L,

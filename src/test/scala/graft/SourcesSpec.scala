@@ -497,6 +497,65 @@ class SourcesSpec extends SparkSpec {
       names)
   }
 
+  test("graft-docs sink: a writer that outlives the abort leaves no _tmp") {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.connector.catalog.SupportsWrite
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val sc = spark.sparkContext // the connector captures the active session
+    val dir = Files.createTempDirectory("graft_v2late").toString + "/coll"
+    val write = new graft.sources.DocumentCollectionSource()
+      .getTable(new StructType(), Array.empty,
+        new java.util.HashMap[String, String] {
+          put("path", dir); put("batchSize", "1")
+        })
+      .asInstanceOf[SupportsWrite]
+      .newWriteBuilder(new LogicalWriteInfo {
+        override def queryId(): String = "late"
+        override def schema(): StructType =
+          StructType(Seq(StructField("id", LongType)))
+        override def options(): CaseInsensitiveStringMap =
+          CaseInsensitiveStringMap.empty()
+      }).build()
+    val info = new PhysicalWriteInfo { override def numPartitions(): Int = 2 }
+    val row = new GenericInternalRow(Array[Any](1L))
+    def tmpDirs: Seq[String] =
+      if (!Files.exists(Paths.get(dir))) Nil
+      else Files.list(Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("_tmp")).toSeq
+
+    // batch: the driver stages the dir before any task; a task still
+    // running after the abort cannot recreate it (batchSize 1 makes the
+    // first row open the file), and an idle one opens nothing
+    val batch = write.toBatch
+    val factory = batch.createBatchWriterFactory(info)
+    assert(tmpDirs.size == 1, "the driver creates the staging dir")
+    val idle = factory.createWriter(0, 1L)
+    val late = factory.createWriter(1, 2L)
+    batch.abort(Array.empty)
+    intercept[java.io.IOException](late.write(row))
+    late.abort()
+    idle.abort()
+    assert(tmpDirs.isEmpty, tmpDirs)
+
+    // streaming: the micro-batch engine names the epoch in a local
+    // property, so the driver stages that epoch's dir the same way
+    val sw = write.toStreaming
+    val sf =
+      try {
+        sc.setLocalProperty(MicroBatchExecution.BATCH_ID_KEY, "3")
+        sw.createStreamingWriterFactory(info)
+      } finally sc.setLocalProperty(MicroBatchExecution.BATCH_ID_KEY, null)
+    assert(tmpDirs.exists(_.endsWith("-e3")), tmpDirs)
+    val lateEpoch = sf.createWriter(0, 5L, 3L)
+    sw.abort(3L, Array.empty)
+    intercept[java.io.IOException](lateEpoch.write(row))
+    lateEpoch.abort()
+    assert(tmpDirs.isEmpty, tmpDirs)
+  }
+
   test("graft-docs sink: batchSize validation mirrors the loader's") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_v2val").toString + "/c"
