@@ -50,61 +50,11 @@ final class Collection private[core] (
     }
   }
 
-  /** Crash recovery for [[compact]]'s two-rename swap, run before every
-    * data access: a process that died between rename(path → retired)
-    * and rename(staging → path) leaves the collection directory absent
-    * and the data stranded in a `.old-<uuid>` sibling — without this,
-    * hasData turns false and count() silently reads 0. Recovery
-    * restores the retired directory (the original data — always safe;
-    * the interrupted compaction simply re-runs) and deletes stale
-    * `.compact-*` staging dirs; a crash AFTER publish but before
-    * cleanup instead leaves the published directory in place, and the
-    * retired copy is deleted as garbage. Like compact itself, this
-    * assumes no compact is running concurrently in another process
-    * (recovery would mistake its live staging dir for a stale one).
+  /** Run before every data access: a stranded [[compact]] swap must
+    * never read as an empty collection.
     */
-  private def recoverCompact(): Unit = {
-    // match ONLY compact()'s own siblings — the exact `.old-<uuid>` /
-    // `.compact-<uuid>` names it generates, via listStatus + regex. A
-    // glob on `path + ".old-*"` would be wrong twice over: a LEGAL
-    // collection named e.g. "docs.old-backup" would match and be
-    // deleted as garbage, and glob metacharacters in the collection
-    // name would match unrelated directories.
-    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
-    val dirName = new Path(path).getName
-    val parent = new Path(path).getParent
-    val siblings =
-      if (parent == null || !fs.exists(parent)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(parent)
-    val olds = siblings.filter(
-      _.getPath.getName.matches(java.util.regex.Pattern.quote(dirName) +
-        "\\.old-" + uuid))
-    val stagings = siblings.filter(
-      _.getPath.getName.matches(java.util.regex.Pattern.quote(dirName) +
-        "\\.compact-" + uuid))
-    if (olds.isEmpty && stagings.isEmpty) return
-    if (!fs.exists(new Path(path))) {
-      // died between the two renames: the original data is in the
-      // retired dir; two retired dirs would be ambiguous — fail loudly
-      if (olds.length > 1)
-        throw new IllegalStateException(
-          s"multiple retired copies of $path: " +
-            olds.map(_.getPath.getName).mkString(", ") +
-            " — manual recovery required")
-      olds.foreach { o =>
-        if (!fs.rename(o.getPath, new Path(path)))
-          throw new IllegalStateException(
-            s"could not restore ${o.getPath} to $path")
-      }
-    } else {
-      // died after publish, before cleanup: the collection is intact
-      // and the retired copy is garbage
-      olds.foreach(o => fs.delete(o.getPath, true))
-    }
-    // staging is stale in every recovered state (old data restored, or
-    // new data already published)
-    stagings.foreach(s => fs.delete(s.getPath, true))
-  }
+  private def recoverCompact(): Unit =
+    Publish.recover(spark.sparkContext.hadoopConfiguration, new Path(path))
 
   /** Partition key columns of the collection's Hive-style layout, in
     * directory-nesting order — empty for flat collections. Discovered
@@ -240,12 +190,9 @@ final class Collection private[core] (
     * the small-files maintenance pass every append-fed collection
     * eventually needs (each append adds a file per write task, so many
     * small appends leave many tiny files; footer-open cost then
-    * dominates every scan). The compacted copy is written to a sibling
-    * staging directory first and swapped in with two renames; a crash
-    * mid-compact leaves either the old or the new data, never a mix — a
-    * crash BETWEEN the two renames strands the data in the retired
-    * sibling, and [[recoverCompact]] restores it automatically on the
-    * next data access. Like any destructive maintenance op this assumes no
+    * dominates every scan). The compacted copy is staged and swapped
+    * in by [[Publish]], so a crash leaves the old or the new data, never
+    * a mix. Like any destructive maintenance op this assumes no
     * concurrent writer (or concurrent compact), and in-flight readers
     * of the old directory should be drained first.
     *
@@ -281,7 +228,7 @@ final class Collection private[core] (
     val n = df.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    val staging = new Path(path + s".compact-${java.util.UUID.randomUUID()}")
+    val staging = Publish.staging(new Path(path))
     import org.apache.spark.sql.functions.col
     val laid =
       if (parts.nonEmpty) {
@@ -295,15 +242,8 @@ final class Collection private[core] (
     val w = laid.write
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
       .parquet(staging.toString)
-    val retired = new Path(path + s".old-${java.util.UUID.randomUUID()}")
-    if (!fs.rename(new Path(path), retired))
-      throw new IllegalStateException(s"could not retire $path")
-    if (!fs.rename(staging, new Path(path))) {
-      // restore the original before failing — never leave no data
-      fs.rename(retired, new Path(path))
-      throw new IllegalStateException(s"could not publish $staging")
-    }
-    fs.delete(retired, true)
+    Publish.swap(spark.sparkContext.hadoopConfiguration, staging,
+      new Path(path))
     (before, dataFiles(new Path(path)))
   }
 

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.core.Publish
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,10 +40,9 @@ import org.apache.spark.sql.functions._
   * operators that produce the input — at 100 TB you shard first (x22)
   * and write many bounded file pairs, never one global blob.
   *
-  * Crash safety: everything lands in a staging directory first; the
-  * publish is the [[graft.core.Collection.compact]] two-rename swap
-  * (retire current → publish staging → drop retired), so readers never
-  * observe a half-written shard set. Within staging, each task ATTEMPT
+  * Crash safety: everything lands in a staging directory first and is
+  * swapped in by [[graft.core.Publish]], so readers never observe a
+  * half-written shard set. Within staging, each task ATTEMPT
   * writes attempt-unique files (`<stem>.tokens.attempt-<id>`) and
   * renames them into place only at stratum close — so a ZOMBIE attempt
   * (a task re-launched while the presumed-lost attempt is still
@@ -106,7 +106,7 @@ object TrainerShards {
     * tokens_md5, idx_md5) — the checksums accumulate on the write
     * stream, so integrity certification costs no second read
     * ([[verifyManifest]] is the loader-side check). EAGER — the write
-    * job has completed (and the two-rename publish succeeded) when
+    * job has completed (and the publish swap succeeded) when
     * this returns; the manifest frame is driver-built and
     * stratum-count-sized (bounded: strata are the declared shard
     * unit).
@@ -140,7 +140,7 @@ object TrainerShards {
         "shard file; disable speculation for this job")
     val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
-    val staging = s"$dir.staging-${java.util.UUID.randomUUID()}"
+    val staging = stagingFor(spark, dir)
     // pack compiled BEFORE the exchange: the shuffle moves the final
     // bytes exactly once, and the fold below never touches id arrays
     val packed = seqs.select(
@@ -239,7 +239,7 @@ object TrainerShards {
       .collect()
     sweepAttemptFiles(spark, staging)
     // the manifest SHIPS WITH the artifact (written into staging, so
-    // the two-rename publish makes shard files and manifest visible
+    // the publish swap makes shard files and manifest visible
     // atomically): a loader reads counts/width/bytes without deriving
     // them from file sizes, and a shard set is self-describing
     writeManifest(spark, staging, width, manifestRows, provenance)
@@ -510,31 +510,21 @@ object TrainerShards {
       }
   }
 
-  /** The [[graft.core.Collection.compact]] two-rename swap: retire the
-    * current shard set (if any), publish staging, drop the retired
-    * copy. A crash before the first rename leaves only staging garbage
-    * (the live dir untouched); between the renames the restore path
-    * puts the original back.
+  /** Recover `target`, then name its staging directory: recovery runs
+    * before anything is staged, or the live staging would look like
+    * crash residue. Readers do not recover; with no set they refuse.
     */
-  private def publish(spark: SparkSession, staging: String,
-      dir: String): Unit = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new HPath(dir)
-    val stagingP = new HPath(staging)
-    if (!fs.exists(stagingP))
-      // an empty input wrote no files; publish an empty shard set
-      fs.mkdirs(stagingP)
-    val retired = new HPath(dir + s".old-${java.util.UUID.randomUUID()}")
-    val hadOld = fs.exists(target)
-    if (hadOld && !fs.rename(target, retired))
-      throw new IllegalStateException(s"could not retire $dir")
-    if (!fs.rename(stagingP, target)) {
-      if (hadOld) fs.rename(retired, target)
-      throw new IllegalStateException(s"could not publish $staging")
-    }
-    if (hadOld) fs.delete(retired, true)
+  private def stagingFor(spark: SparkSession, target: String): String = {
+    val t = new HPath(target)
+    Publish.recover(spark.sparkContext.hadoopConfiguration, t)
+    Publish.staging(t).toString
   }
+
+  /** Swap a staged shard set (or epoch / blend directory) in. */
+  private def publish(spark: SparkSession, staging: String,
+      target: String): Unit =
+    Publish.swap(spark.sparkContext.hadoopConfiguration,
+      new HPath(staging), new HPath(target))
 
   /** Driver-side reference reader — the loader contract made
     * executable for the round-trip spec: parse the idx header +
@@ -653,7 +643,7 @@ object TrainerShards {
     * a distributed range join, then ONE stratum-keyed exchange sorted
     * by the hash key streams each stratum's positions to its sidecar
     * with O(1) task state — the [[write]] machinery, including
-    * attempt-unique staging files and the two-rename publish of the
+    * attempt-unique staging files and the publish swap of the
     * epoch directory (the live `.tokens`/`.idx` files are never
     * touched; re-writing an epoch swaps its directory atomically).
     */
@@ -669,9 +659,8 @@ object TrainerShards {
     require(strata.nonEmpty, s"no shards at $dir — write() first")
     val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
-    val staging =
-      s"$dir/.epoch-$epoch-staging-${java.util.UUID.randomUUID()}"
     val target = s"$dir/${epochDirName(epoch)}"
+    val staging = stagingFor(spark, target)
     import spark.implicits._
     val counts = strata.toDF("__s", "__n")
     val maxN = strata.map(_._2).max
@@ -963,7 +952,7 @@ object TrainerShards {
     * ordinal + u64 LE 1-based rank within that stratum) plus a
     * `_BLEND.json` manifest carrying the ordinal table, the quantized
     * weights, and the per-part inventory — all published by the same
-    * two-rename swap, so readers never observe a half-written
+    * [[graft.core.Publish]] swap, so readers never observe a half-written
     * schedule.
     *
     * SEMANTICS — deterministic weighted fair interleave (the public
@@ -1138,8 +1127,8 @@ object TrainerShards {
 
     val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
-    val staging = s"$epochDir/.blend-staging-${java.util.UUID.randomUUID()}"
     val target = s"$epochDir/$BlendDirName"
+    val staging = stagingFor(spark, target)
     import org.apache.spark.sql.types._
     val partSchema = StructType(Seq(
       StructField("part", LongType, nullable = false),
@@ -1644,11 +1633,13 @@ object TrainerShards {
     *     immutable `_RUN.<gen>.json`, `gen` = highest on disk + 1.
     *     Exactly one concurrent publisher can win this rename; the
     *     loser throws here, having changed nothing a reader keys on.
-    *  2. POINT: the SAME bytes then publish to `_RUN.json` via the
-    *     atomic overwriting rename readers key on (readers are
-    *     unchanged — the pointer IS the manifest; the generation
+    *  2. POINT: the SAME bytes then replace `_RUN.json`, the file
+    *     readers key on (the pointer IS the manifest; the generation
     *     files are the serialization token and the binding's audit
-    *     trail, one small JSON per extend).
+    *     trail, one small JSON per extend). Both steps are
+    *     [[graft.core.Publish.writeFile]]; a crash inside the pointer
+    *     swap leaves no `_RUN.json`, which readers refuse loudly
+    *     until the next publish recovers it.
     * A publisher crashing between 1 and 2 leaves a committed
     * generation newer than the pointer — [[verifyRun]] refuses that
     * state loudly (re-publish to heal); it can never LOSE a bound
@@ -1659,7 +1650,8 @@ object TrainerShards {
       bytes: Array[Byte]): Unit = {
     commitRunGeneration(spark, dir, bytes,
       maxRunGeneration(spark, dir) + 1)
-    writeFileAtomic(spark, new HPath(dir, RunManifestName), bytes)
+    Publish.writeFile(spark.sparkContext.hadoopConfiguration,
+      new HPath(dir, RunManifestName), bytes, replace = true)
   }
 
   /** The COMMIT step alone (no pointer update) with an EXPLICIT
@@ -1671,19 +1663,11 @@ object TrainerShards {
     */
   private[graft] def commitRunGeneration(spark: SparkSession,
       dir: String, bytes: Array[Byte], gen: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val genPath = new HPath(dir, runGenName(gen))
-    val fs = genPath.getFileSystem(conf)
-    val tmp = new HPath(
-      s"${genPath.toString}.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, conf)
-    try fc.rename(fs.makeQualified(tmp), fs.makeQualified(genPath))
+    try Publish.writeFile(spark.sparkContext.hadoopConfiguration,
+      genPath, bytes, replace = false)
     catch {
       case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false)
         throw new IllegalStateException(
           s"concurrent run-manifest publish at $dir: generation " +
             s"${genPath.getName} was committed by another writer " +
@@ -1691,26 +1675,6 @@ object TrainerShards {
             "commit (the winner's binding is untouched); re-read " +
             "the run and retry", e)
     }
-  }
-
-  /** Atomic single-file publish for the run manifest: temp file + an
-    * OVERWRITING `FileContext` rename — one filesystem operation, so
-    * a reader never observes a truncated `_RUN.json` and the previous
-    * manifest stays in place until the new one replaces it (the
-    * ExtendMarker commit idiom).
-    */
-  private def writeFileAtomic(spark: SparkSession, path: HPath,
-      bytes: Array[Byte]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = path.getFileSystem(conf)
-    val tmp = new HPath(
-      s"${path.toString}.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(path),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Publish `_RUN.json` at the shard root — the level above

@@ -282,8 +282,8 @@ final class DedupIndex private (
     * this is cheaper and more frequent than [[rebuild]]: compact on
     * the file-count cadence, rebuild on the drift cadence. Each
     * collection swaps via [[graft.core.Collection.compact]]'s
-    * crash-safe two-rename protocol; like every maintenance verb it
-    * assumes no concurrent writer OR reader (a stream planning a
+    * crash-safe [[graft.core.Publish]] swap; like every maintenance
+    * verb it assumes no concurrent writer OR reader (a stream planning a
     * micro-batch mid-swap could observe an absent collection for an
     * instant — run it on the same cadence as extends/restarts).
     * Returns (filesBefore, filesAfter) summed over the collections.
@@ -336,11 +336,10 @@ final class DedupIndex private (
     val survivors = CacheScope.cached(staging.read())
     DedupIndex.writeDerivedState(mgr, spark, survivors, k, threshold,
       numHashes, bands)
-    mgr.collection(DedupIndex.SetsName).drop()
-    val from = new org.apache.hadoop.fs.Path(path, DedupIndex.StagingSetsName)
-    val to = new org.apache.hadoop.fs.Path(path, DedupIndex.SetsName)
-    if (!fs.rename(from, to))
-      throw new IllegalStateException(s"could not publish rebuilt sets: $from")
+    // swap, not drop + rename: `sets` is never absent
+    graft.core.Publish.swap(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(path, DedupIndex.StagingSetsName),
+      new org.apache.hadoop.fs.Path(path, DedupIndex.SetsName))
     mgr.collection(DedupIndex.TombstonesName).drop()
     tomb.markDropped()
     fs.delete(marker, false)

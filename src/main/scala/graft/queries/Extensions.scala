@@ -467,8 +467,8 @@ object Extensions {
     * materialized training sequences written as the flat mmap-able
     * tokens-blob + offsets-sidecar pair a data loader actually opens
     * (Megatron-style public format), one file pair per stratum in
-    * deterministic seq_id order, published by a crash-safe two-rename
-    * swap. The query WRITES the shards, then reads the published blobs
+    * deterministic seq_id order, published by the crash-safe
+    * [[graft.core.Publish]] swap. The query WRITES the shards, then reads the published blobs
     * back through the binaryFile source and states their bytes: under
     * the zero-merge byte configuration (the x96 identity) each
     * stratum's width-1 blob is LITERALLY the concatenation of its

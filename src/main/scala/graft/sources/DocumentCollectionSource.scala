@@ -240,6 +240,13 @@ private class DocumentBatchWrite(path: String, batchSize: Int,
       fileSuffix = s"-${writeId.take(8)}.jsonl", conf)
   }
 
+  /** Publish every task's file into the collection directory, one
+    * rename each. Truncate is NOT crash-atomic: the previous document
+    * files are deleted first, so a crash mid-commit leaves the
+    * collection empty or partly written. Making it atomic needs a
+    * manifest or generation layout (a format change), so this commit
+    * does not use [[graft.core.Publish]]'s directory swap.
+    */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     val dest = new Path(path)

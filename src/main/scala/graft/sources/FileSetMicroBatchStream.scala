@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -62,7 +60,7 @@ private[sources] object FileSetOffset {
   * (`<checkpoint>/graft-offset-compact/compact-<gen>`, the full name
   * set as of generation `gen`) plus the names consumed since. When the
   * delta outgrows `compactThreshold` (default 1000 names) the stream
-  * writes the next compact file (temp + atomic rename, BEFORE the
+  * writes the next compact file ([[graft.core.Publish]], BEFORE the
   * offset referencing it is returned — so any logged offset's compact
   * file exists even across crashes; an orphan from a pre-log crash is
   * simply overwritten) and the offset resets to an empty delta. Offset
@@ -132,9 +130,10 @@ private[sources] abstract class FileSetMicroBatchStream(
       set
     }
 
-  /** Write the generation's full name set: temp file + atomic rename,
-    * BEFORE the offset referencing it is returned — so every logged
-    * offset's compact file exists, crash or not. An existing file with
+  /** Write the generation's full name set via
+    * [[graft.core.Publish.writeFile]], BEFORE the offset referencing
+    * it is returned — so every logged offset's compact file exists,
+    * crash or not. An existing file with
     * this generation is an orphan from a crash after compaction but
     * before the offset was logged (no logged offset references it, or
     * it holds identical content from this same (start, files) state) —
@@ -142,15 +141,9 @@ private[sources] abstract class FileSetMicroBatchStream(
     */
   private def writeCompact(gen: Int, names: Iterable[String]): Unit = {
     fs.mkdirs(compactDir)
-    val tmp = new Path(compactDir, s"compact-$gen.tmp-${UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(FileSetOffset.mapper
-      .writeValueAsBytes(names.toArray.sorted))
-    finally out.close()
-    val dst = compactFile(gen)
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new IllegalStateException(s"could not publish compact $dst")
+    graft.core.Publish.writeFile(conf.value, compactFile(gen),
+      FileSetOffset.mapper.writeValueAsBytes(names.toArray.sorted),
+      replace = true)
     // prune here rather than in commit(): the engine's source-commit
     // callback lags the last batch (and never fires before stop()), so
     // checkpoint-dir boundedness must not depend on it. Offsets that

@@ -1067,7 +1067,8 @@ object Streaming {
     * one ingest stream per index — the marker's read-modify-write is
     * not concurrent-safe, like every index maintenance verb).
     */
-  private final class ExtendMarker(indexPath: String, streamId: String) {
+  private[graft] final class ExtendMarker(indexPath: String,
+      streamId: String) {
     require(streamId.nonEmpty && !streamId.contains('\n') &&
       !streamId.contains('\t'),
       "streamId must be a non-empty single-line tab-free token")
@@ -1082,6 +1083,9 @@ object Streaming {
       * instead of silently double-appending.
       */
     def snapshot(spark: SparkSession): Map[String, Long] = {
+      // restore a marker retired by a crash inside record()'s swap
+      graft.core.Publish.recover(spark.sparkContext.hadoopConfiguration,
+        markerPath)
       val fs = markerPath.getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(markerPath)) Map.empty
@@ -1103,32 +1107,16 @@ object Streaming {
       }
     }
 
-    /** Persist `entries + (streamId -> batchId)` ATOMICALLY: temp file
-      * + OVERWRITING rename (`FileContext` with `Options.Rename
-      * .OVERWRITE` — one filesystem operation, so the old marker stays
-      * in place until the new one replaces it). The marker carries
-      * EVERY lineage's protection, so neither a crash mid-write (the
-      * truncate-in-place bug) nor a crash between a delete and a
-      * rename (the delete-then-rename bug — it left NO marker at all,
-      * erasing every lineage's replay protection) may ever make a
-      * lineage's entry regress or vanish.
+    /** Persist `entries + (streamId -> batchId)` crash-safely: the
+      * marker carries EVERY lineage's replay protection.
       */
     def record(spark: SparkSession, entries: Map[String, Long],
-        batchId: Long): Unit = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = markerPath.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${markerPath.toString}.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write((entries + (streamId -> batchId)).toSeq.sorted
-        .map { case (k, v) => s"$k\t$v" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(markerPath),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+        batchId: Long): Unit =
+      graft.core.Publish.writeFile(spark.sparkContext.hadoopConfiguration,
+        markerPath, (entries + (streamId -> batchId)).toSeq.sorted
+          .map { case (k, v) => s"$k\t$v" }.mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        replace = true)
   }
 
   /** The shared screen-then-extend micro-batch loop under

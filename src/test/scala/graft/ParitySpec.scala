@@ -334,7 +334,7 @@ class ParitySpec extends SparkSpec {
     assert(c.read().collect().map(_.getLong(0)).sorted.toSeq == beforeRows)
     // no staging/retired leftovers beside the collection
     val leftovers = new java.io.File(base).listFiles()
-      .map(_.getName).filter(n => n.contains(".compact-") ||
+      .map(_.getName).filter(n => n.contains(".staging-") ||
         n.contains(".old-"))
     assert(leftovers.isEmpty, leftovers.toSeq)
 
@@ -482,7 +482,7 @@ class ParitySpec extends SparkSpec {
     // staged compacted copy left beside it, the publish rename never ran
     val dir = new java.io.File(s"$base/docs")
     val retired = new java.io.File(s"$base/docs.old-${freshUuid()}")
-    val staging = new java.io.File(s"$base/docs.compact-${freshUuid()}")
+    val staging = new java.io.File(s"$base/docs.staging-${freshUuid()}")
     assert(dir.renameTo(retired))
     java.nio.file.Files.createDirectory(staging.toPath)
     assert(!dir.exists())

@@ -1,0 +1,386 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import graft.core.{CollectionManager, Publish}
+import graft.io.TrainerShards
+import graft.operators.{DedupIndex, Packing}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions._
+
+/** The crash-safe publish primitive ([[graft.core.Publish]]) and every
+  * site built on it. The fault matrix runs each site on the `faulty:`
+  * filesystem ([[FaultyFileSystem]]) crashing at its k-th protocol op,
+  * for k = 1, 2, … up to the first run the crash does not reach, and
+  * asserts that the site's reader sees exactly the old or the new
+  * state (or refuses loudly where that reader does not recover) and
+  * that the next open or write recovers with no residue.
+  */
+class PublishSpec extends SparkSpec {
+
+  private lazy val conf = {
+    val c = spark.sparkContext.hadoopConfiguration
+    FaultyFileSystem.register(c)
+    c
+  }
+
+  /** A fresh local directory (created). */
+  private def localDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  private def faulty(local: String): String = { conf; s"faulty:$local" }
+
+  /** Names beside `local` (a target path) that are publish residue. */
+  private def residue(local: String): Seq[String] = {
+    val f = new File(local)
+    Option(f.getParentFile.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(n => n.startsWith(f.getName + ".staging-") ||
+        n.startsWith(f.getName + ".old-") ||
+        n.startsWith(f.getName + ".tmp-"))
+  }
+
+  private def copyTree(from: String, to: String): Unit =
+    Files.walk(Paths.get(from)).iterator().asScala.foreach { p =>
+      val dst = Paths.get(to).resolve(Paths.get(from).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  /** Run `op` with a crash armed at the k-th op touching `targets`;
+    * true when the crash fired (the op then failed or stopped short).
+    */
+  private def crashAt(k: Int, targets: String*)(op: => Unit): Boolean = {
+    FaultyFileSystem.arm(k, targets: _*)
+    try { op; FaultyFileSystem.disarm() }
+    catch { case NonFatal(e) => if (FaultyFileSystem.disarm()) true else throw e }
+  }
+
+  /** Calls `run(k)` for k = 1, 2, … until it reports an unfaulted run;
+    * returns how many crash points were exercised.
+    */
+  private def faultMatrix(run: Int => Boolean): Int = {
+    var k = 1
+    while (run(k)) k += 1
+    assert(k > 1, "the armed crash never fired: the matrix is vacuous")
+    k - 1
+  }
+
+  private def readText(local: String): Option[String] = {
+    val f = new File(local)
+    if (f.exists()) Some(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+    else None
+  }
+
+  // ---- the primitive ----------------------------------------------
+
+  test("Publish.writeFile: replace swaps the file in, a non-replacing " +
+      "write refuses an existing file, and neither leaves residue") {
+    val dir = localDir("graft_publish_file")
+    val p = new Path(faulty(s"$dir/f.json"))
+    Publish.writeFile(conf, p, "one".getBytes("UTF-8"), replace = false)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Publish.writeFile(conf, p, "two".getBytes("UTF-8"), replace = false)
+    }
+    assert(readText(s"$dir/f.json").contains("one"))
+    Publish.writeFile(conf, p, "three".getBytes("UTF-8"), replace = true)
+    assert(readText(s"$dir/f.json").contains("three"))
+    assert(residue(s"$dir/f.json").isEmpty, residue(s"$dir/f.json"))
+  }
+
+  test("swap refuses to publish into a target that reappeared mid-swap " +
+      "(never nests staging inside it); the old rows stay readable") {
+    import spark.implicits._
+    val base = localDir("graft_publish_nested")
+    val c = new CollectionManager(spark, faulty(base)).collection("docs")
+    c.write((1 to 60).map(i => (i.toLong, s"d$i")).toDF("id", "t"),
+      SaveMode.Overwrite, maxRecordsPerFile = 10)
+    // between retire and publish, a reader's recovery restores the
+    // retired copy to the collection path
+    FaultyFileSystem.afterRename = (_, dst) =>
+      if (dst.getName.startsWith("docs.old-")) {
+        FaultyFileSystem.afterRename = (_, _) => ()
+        assert(new File(dst.toUri.getPath).renameTo(new File(base, "docs")))
+      }
+    val e =
+      try intercept[IllegalStateException](c.compact(targetRecordsPerFile = 30))
+      finally FaultyFileSystem.afterRename = (_, _) => ()
+    assert(e.getMessage.contains("docs.staging-") &&
+      e.getMessage.contains("docs.old-"), e.getMessage)
+    val inside = new File(base, "docs").listFiles().map(_.getName)
+      .filter(_.contains(".staging-"))
+    assert(inside.isEmpty, s"staging nested into the collection: " +
+      inside.toSeq)
+    assert(c.count() == 60)
+    assert(c.read().select("id").as[Long].collect().sorted.toSeq ==
+      (1L to 60L))
+    assert(residue(s"$base/docs").isEmpty, residue(s"$base/docs"))
+  }
+
+  // ---- fault matrix -----------------------------------------------
+
+  test("fault matrix: Collection.compact") {
+    import spark.implicits._
+    val template = localDir("graft_publish_compact_t")
+    val tc = new CollectionManager(spark, faulty(template))
+      .collection("docs")
+    tc.write((1 to 80).map(i => (i.toLong, s"d$i")).toDF("id", "t"),
+      SaveMode.Overwrite, maxRecordsPerFile = 10)
+    def dataFiles(d: String) = Files.walk(Paths.get(d)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    val before = dataFiles(s"$template/docs")
+    val crashes = faultMatrix { k =>
+      val base = localDir("graft_publish_compact")
+      copyTree(template, base)
+      val c = new CollectionManager(spark, faulty(base)).collection("docs")
+      val crashed = crashAt(k, s"$base/docs") {
+        c.compact(targetRecordsPerFile = 40)
+      }
+      // the collection recovers on read: old or new layout, same rows
+      assert(c.read().select("id").as[Long].collect().sorted.toSeq ==
+        (1L to 80L), s"k=$k")
+      assert(Set(before, 2).contains(dataFiles(s"$base/docs")), s"k=$k")
+      assert(residue(s"$base/docs").isEmpty, s"k=$k: ${residue(s"$base/docs")}")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  private def docsDf(rows: (Long, String, String)*): DataFrame = {
+    import spark.implicits._
+    rows.toSeq.toDF("doc_id", "lang", "text")
+  }
+
+  private lazy val shardDocs = docsDf(
+    (1L, "en", "the quick brown fox jumps over the lazy dog"),
+    (2L, "en", "pack my box with five dozen liquor jugs"),
+    (3L, "de", "zwei boxkaempfer jagen eva quer durch sylt"),
+    (4L, "fr", "portez ce vieux whisky au juge blond"))
+
+  private def seqs(df: DataFrame): DataFrame =
+    Packing.materializeSequences(df, "doc_id", "text", "lang", 8,
+      merges = Nil,
+      tokenPattern = graft.functions.TextFunctions.bpeBytePatternFull)
+
+  private def writeShards(df: DataFrame, dir: String): Unit = {
+    TrainerShards.write(seqs(df), "lang", "seq_id", "token_ids", 2, dir)
+    ()
+  }
+
+  private def manifestStrata(dir: String): Set[String] =
+    TrainerShards.readManifest(spark, dir).collect()
+      .map(_.getString(0)).toSet
+
+  test("a crash between retire and publish strands no TrainerShards " +
+      "set: reads refuse loudly and the next write recovers") {
+    val parent = localDir("graft_publish_stranded")
+    val dir = s"$parent/shards"
+    writeShards(shardDocs, dir)
+    def uuid() = java.util.UUID.randomUUID().toString
+    assert(new File(dir).renameTo(new File(s"$dir.old-${uuid()}")))
+    assert(new File(s"$dir.staging-${uuid()}").mkdir())
+    val e = intercept[Exception](TrainerShards.readManifest(spark, dir))
+    assert(e.getMessage.contains("manifest"), e.getMessage)
+    writeShards(shardDocs.filter(col("lang") =!= "fr"), dir)
+    assert(TrainerShards.listShards(spark, dir).toSet == Set("en", "de"))
+    assert(residue(dir).isEmpty, residue(dir))
+  }
+
+  test("fault matrix: TrainerShards.write") {
+    val template = localDir("graft_publish_shards_t")
+    writeShards(shardDocs, faulty(s"$template/shards"))
+    val oldSet = Set("en", "de", "fr")
+    val newDocs = shardDocs.filter(col("lang") =!= "fr")
+    val crashes = faultMatrix { k =>
+      val parent = localDir("graft_publish_shards")
+      copyTree(template, parent)
+      val dir = faulty(s"$parent/shards")
+      val crashed = crashAt(k, s"$parent/shards")(writeShards(newDocs, dir))
+      // readers do not recover: old, new, or a loud refusal
+      val seen = scala.util.Try(manifestStrata(dir))
+      assert(seen.isFailure || Set(oldSet, Set("en", "de"))
+        .contains(seen.get), s"k=$k: $seen")
+      writeShards(newDocs, dir)
+      assert(manifestStrata(dir) == Set("en", "de"), s"k=$k")
+      assert(residue(s"$parent/shards").isEmpty,
+        s"k=$k: ${residue(s"$parent/shards")}")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  private def epochSeed(local: String): Option[String] =
+    readText(s"$local/${TrainerShards.epochDirName(0)}/" +
+      TrainerShards.EpochManifestName).map(t =>
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
+        .get("seed").asText())
+
+  test("fault matrix: TrainerShards.writeEpochOrder") {
+    val template = localDir("graft_publish_epoch_t")
+    writeShards(shardDocs, faulty(s"$template/shards"))
+    TrainerShards.writeEpochOrder(spark, faulty(s"$template/shards"),
+      seed = "old", epoch = 0)
+    val crashes = faultMatrix { k =>
+      val parent = localDir("graft_publish_epoch")
+      copyTree(template, parent)
+      val local = s"$parent/shards"
+      val epochDir = s"$local/${TrainerShards.epochDirName(0)}"
+      val crashed = crashAt(k, epochDir) {
+        TrainerShards.writeEpochOrder(spark, faulty(local), seed = "new",
+          epoch = 0)
+      }
+      epochSeed(local) match {
+        case Some(s) => assert(Set("old", "new").contains(s), s"k=$k")
+        case None => intercept[Exception](
+          TrainerShards.readInEpochOrder(spark, faulty(local), 0).collect())
+      }
+      TrainerShards.writeEpochOrder(spark, faulty(local), seed = "new",
+        epoch = 0)
+      assert(epochSeed(local).contains("new"), s"k=$k")
+      assert(residue(epochDir).isEmpty, s"k=$k: ${residue(epochDir)}")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  test("fault matrix: TrainerShards run manifest (generation commit " +
+      "and pointer)") {
+    val template = localDir("graft_publish_run_t")
+    val tdir = faulty(s"$template/shards")
+    writeShards(shardDocs, tdir)
+    val weights = Map("en" -> 2.0, "de" -> 1.0, "fr" -> 1.0)
+    (0 to 1).foreach { e =>
+      TrainerShards.writeEpochOrder(spark, tdir, seed = "s", epoch = e)
+      TrainerShards.writeBlendSchedule(spark, tdir, e, weights,
+        stepsPerFile = 4)
+    }
+    TrainerShards.writeRunManifest(spark, tdir, Seq(0, 1))
+    def epochs(dir: String) =
+      TrainerShards.readRunMeta(spark, dir)._1.map(_.epoch)
+    val crashes = faultMatrix { k =>
+      val parent = localDir("graft_publish_run")
+      copyTree(template, parent)
+      val local = s"$parent/shards"
+      val dir = faulty(local)
+      val gen = TrainerShards.maxRunGeneration(spark, dir) + 1
+      val targets = Seq(s"$local/${TrainerShards.RunManifestName}",
+        s"$local/_RUN.$gen.json")
+      val crashed = crashAt(k, targets: _*) {
+        TrainerShards.writeRunManifest(spark, dir, Seq(1, 0))
+      }
+      val seen = scala.util.Try(epochs(dir))
+      assert(seen.isFailure ||
+        Set(Seq(0, 1), Seq(1, 0)).contains(seen.get), s"k=$k: $seen")
+      TrainerShards.writeRunManifest(spark, dir, Seq(1, 0))
+      assert(epochs(dir) == Seq(1, 0), s"k=$k")
+      TrainerShards.verifyRun(spark, dir)
+      targets.foreach(t => assert(residue(t).isEmpty, s"k=$k: ${residue(t)}"))
+      crashed
+    }
+    assert(crashes >= 5, s"commit, then the pointer swap: $crashes")
+  }
+
+  test("fault matrix: the streaming extend marker") {
+    val crashes = faultMatrix { k =>
+      val idx = localDir("graft_publish_marker")
+      val marker = s"$idx/stream_extend_batch"
+      val a = new graft.streaming.Streaming.ExtendMarker(faulty(idx), "a")
+      val b = new graft.streaming.Streaming.ExtendMarker(faulty(idx), "b")
+      a.record(spark, Map.empty, 1L)
+      val old = Map("a" -> 1L)
+      val crashed = crashAt(k, marker) {
+        b.record(spark, b.snapshot(spark), 7L)
+      }
+      // the reader recovers: lineage a's protection never vanishes
+      val seen = b.snapshot(spark)
+      assert(seen == old || seen == old + ("b" -> 7L), s"k=$k: $seen")
+      b.record(spark, b.snapshot(spark), 8L)
+      assert(a.snapshot(spark) == Map("a" -> 1L, "b" -> 8L), s"k=$k")
+      assert(residue(marker).isEmpty, s"k=$k: ${residue(marker)}")
+      crashed
+    }
+    assert(crashes >= 4, s"stage, retire, publish and cleanup: $crashes")
+  }
+
+  test("fault matrix: DedupIndex.rebuild publishes sets by swap") {
+    import spark.implicits._
+    val corpus = (1 to 30).map(i =>
+      (i.toLong, s"document number $i about topic ${i % 5} words")).toDF(
+      "doc_id", "text")
+    val template = localDir("graft_publish_dedup_t")
+    val tpath = faulty(s"$template/idx")
+    DedupIndex.build(corpus, "doc_id", "text", k = 3, threshold = 0.6,
+      path = tpath)
+      .delete(Seq(7L).toDF("doc_id"), "doc_id")
+    def setsCount(path: String) =
+      new CollectionManager(spark, path).collection("sets").count()
+    val crashes = faultMatrix { k =>
+      val parent = localDir("graft_publish_dedup")
+      copyTree(template, parent)
+      val local = s"$parent/idx"
+      val crashed = crashAt(k, s"$local/sets") {
+        DedupIndex.load(spark, faulty(local)).rebuild()
+      }
+      // `sets` is never absent: the stored sets are the old (30, the
+      // tombstoned document still present) or the rebuilt (29)
+      assert(Set(30L, 29L).contains(setsCount(faulty(local))), s"k=$k")
+      if (crashed) {
+        // a crashed rebuild is refused loudly until the documented
+        // remedy (a fresh build) runs
+        assert(intercept[IllegalArgumentException](
+          DedupIndex.load(spark, faulty(local))).getMessage
+          .contains("incomplete"))
+        DedupIndex.build(corpus.filter(col("doc_id") =!= 7L), "doc_id",
+          "text", k = 3, threshold = 0.6, path = faulty(local))
+      }
+      DedupIndex.load(spark, faulty(local))
+      assert(setsCount(faulty(local)) == 29L, s"k=$k")
+      val left = new File(local).list().toSeq
+        .filter(n => n.startsWith("sets.") || n == "sets_rebuild" ||
+          n.startsWith(".rebuild-pending-"))
+      assert(left.isEmpty, s"k=$k: $left")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  // ---- tooling guard ----------------------------------------------
+
+  test("only the publish module renames: every other `.rename(` in " +
+      "src/main is on the allow-list") {
+    // (file, the exact call, why it is not a publish)
+    val allowed = Seq(
+      ("io/TrainerShards.scala", "fs.rename(from, to)",
+        "commitAttemptFile: task-level rename-first commit between " +
+          "identical attempt twins"),
+      ("sources/DocumentCollectionSource.scala",
+        "fs.rename(src, new Path(dest, src.getName))",
+        "graft-docs batch commit moves N task files into the live " +
+          "directory"),
+      ("sources/DocumentCollectionSource.scala", "fs.rename(src, fin)",
+        "graft-docs streaming commit moves N task files into the live " +
+          "directory"))
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val rel = root.relativize(f).toString
+        Files.readAllLines(f).asScala.filter(_.contains(".rename("))
+          .map(l => (rel, l.trim))
+      }
+      .filterNot(_._1 == "core/Publish.scala")
+    val stray = hits.filterNot { case (rel, line) =>
+      allowed.exists(a => a._1 == rel && line.contains(a._2))
+    }
+    assert(stray.isEmpty, "hand-rolled rename outside graft.core.Publish " +
+      s"— publish through the module or allow-list it with a reason: $stray")
+    val stale = allowed.filterNot(a =>
+      hits.exists(h => h._1 == a._1 && h._2.contains(a._2)))
+    assert(stale.isEmpty, s"allow-list entries with no call left: $stale")
+  }
+}
