@@ -59,7 +59,9 @@ import org.apache.spark.sql.functions._
   * the engine uses. Symbols within a word start as single characters;
   * merges apply within words only, in rank order, leftmost-first.
   */
-object Bpe {
+object Bpe extends TokenizerSurface {
+
+  type Tok = BpeTokenizer
 
   /** Regex-literal quote for a symbol (symbols can be `.`/`+`/... from
     * punctuation words).
@@ -1002,12 +1004,7 @@ object Bpe {
 
   private def parseTokenizerTree(spark: SparkSession, path: String)
       : ParsedBpeJson = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
+    val tree = Tokenizer.readJson(spark, path)
     val model = tree.get("model")
     require(model != null && model.isObject,
       s"$path has no tokenizer model object")
@@ -1286,10 +1283,9 @@ object Bpe {
   // WordPiece/Unigram symmetry: published byte-level files (GPT-2,
   // RoBERTa) carry post-processor templates, truncation and padding
   // blocks the tuple-shaped loaders above refuse — this surface
-  // HONORS them, through the SAME shared homes the other two
-  // lineages assemble with ([[WordPiece.parseTemplateProcessing]] /
-  // [[WordPiece.pairAssembled]] / [[TokenizerTruncation]]), so the
-  // template arithmetic cannot drift across lineages. Pre-tokenization
+  // HONORS them: the encode surfaces come from [[TokenizerSurface]]
+  // and the template parse/emit from [[Tokenizer]], shared with the
+  // other two lineages. Pre-tokenization
   // is the PUBLISHED ByteLevel regex
   // ([[TextFunctions.bpeByteLevelGpt2Pattern]] — contractions, \p{L}/
   // \p{N} runs), with `add_prefix_space` honored.
@@ -1311,13 +1307,14 @@ object Bpe {
       padding: Option[TokenizerTruncation.Padding] = None,
       tokenPattern: String = TextFunctions.bpeByteLevelGpt2Pattern,
       ignoreMerges: Boolean = false, splitPre: Boolean = false)
+      extends Tokenizer
 
   /** Load a single-file byte-level `tokenizer.json` with the FULL
     * pipeline honored: the blocks the tuple loaders refuse —
     * post-processor templates (`RobertaProcessing`'s fixed
     * `<s> A </s>` / `<s> A </s> </s> B </s>` form with all-zero type
     * ids, or single+pair `TemplateProcessing` via the shared
-    * [[WordPiece.parseTemplateProcessing]] parser), `truncation` /
+    * [[Tokenizer.parseTemplateProcessing]] parser), `truncation` /
     * `padding` (the [[TokenizerTruncation]] semantics), and the
     * ByteLevel `add_prefix_space` option — all load here; everything
     * neither honorable nor id-neutral still refuses loudly
@@ -1391,7 +1388,7 @@ object Bpe {
               Seq((sep, 0L), (sep, 0L)), Seq((sep, 0L)),
               typeA = 0L, typeB = 0L))))
         case Some("TemplateProcessing") =>
-          Some(WordPiece.parseTemplateProcessing(node, vocabMap.get,
+          Some(Tokenizer.parseTemplateProcessing(node, vocabMap.get,
             path))
         case Some("Sequence") =>
           val ps = node.get("processors")
@@ -1430,9 +1427,7 @@ object Bpe {
     * serialization — save→load identity (spec-asserted; a
     * RobertaProcessing load re-emits as the equivalent
     * TemplateProcessing, which loads back to the identical template
-    * ids). Emits through the same shared emitters as the WordPiece
-    * save ([[WordPiece.emitTemplateProcessing]] /
-    * [[TokenizerTruncation]]).
+    * ids).
     */
   def saveTokenizerJsonAssembled(spark: SparkSession,
       tok: BpeTokenizer, path: String): Unit = {
@@ -1481,11 +1476,8 @@ object Bpe {
       }
     root.set[com.fasterxml.jackson.databind.JsonNode]("pre_tokenizer",
       pre)
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty &&
-        tok.pair.isEmpty)
-      root.putNull("post_processor")
-    else WordPiece.emitTemplateProcessing(mapper, root, tok.prefixIds,
-      tok.suffixIds, tok.pair, tok.vocab.map(_.swap).toMap)
+    Tokenizer.emitPostProcessor(mapper, root, tok,
+      tok.vocab.map(_.swap).toMap.get)
     val model = mapper.createObjectNode()
     model.put("type", "BPE")
     model.putNull("dropout")
@@ -1507,144 +1499,39 @@ object Bpe {
     model.set[com.fasterxml.jackson.databind.JsonNode]("merges",
       mergesArr)
     root.set[com.fasterxml.jackson.databind.JsonNode]("model", model)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    Tokenizer.writeJson(spark, path, root)
   }
 
-  /** The CORE content ids — NFC when the file demands it, the
-    * ByteLevel `add_prefix_space` prepend (a space is prepended
-    * unless the text already starts with one — the published
-    * behaviour, which makes `"word"` and `" word"` encode
-    * identically), the published ByteLevel regex split, the merge
-    * fold, and the id hop. No template, no truncation, no padding —
-    * the assembly surfaces below add those. Zero shuffles: one
-    * compiled-kernel projection.
+  /** The content ids — NFC when the file demands it, the ByteLevel
+    * `add_prefix_space` prepend (a space is prepended unless the text
+    * already starts with one — the published behaviour, which makes
+    * `"word"` and `" word"` encode identically), the file's split
+    * pattern, the merge fold, and the id hop. One compiled-kernel
+    * projection.
     */
-  private def coreIdsColumn(text: Column, tok: BpeTokenizer)
-      : Column =
+  protected def contentIds(text: Column, tok: BpeTokenizer): Column =
     graft.expressions.GraftFunctions.tokenIds(
       graft.expressions.GraftFunctions.bpeEncodeFull(
-        encodeView(text, tok),
-        tok.merges.sortBy(_._1).map(m => (m._1, m._2, m._3)),
-        tok.tokenPattern,
+        encodeView(text, tok), rankedMerges(tok), tok.tokenPattern,
         ignoreMergesVocab =
           if (tok.ignoreMerges) tok.vocab.map(_._1) else Nil,
         requireCover = tok.splitPre),
       tok.vocab, unkId = -1L)
 
-  /** Truncated content + template, UNPADDED — the pre-padding view
-    * [[encodeColumn]] pads and [[encodeWithMask]] masks from (the
-    * [[WordPiece]] assembly shape).
+  /** Content spans in code points into the ENCODE-VIEW text (see
+    * [[graft.expressions.BpeEncodeOffsets]] for the exact convention:
+    * untrimmed byte coverage, multi-byte splits covered whole, a
+    * documented divergence from the reference's trim_offsets).
     */
-  private def assembledColumn(text: Column, tok: BpeTokenizer)
-      : Column = {
-    val core0 = coreIdsColumn(text, tok)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-    else concat(typedLit(tok.prefixIds), core,
-      typedLit(tok.suffixIds))
-  }
+  protected def contentOffsets(text: Column, tok: BpeTokenizer)
+      : Column =
+    graft.expressions.GraftFunctions.bpeEncodeOffsets(
+      encodeView(text, tok), rankedMerges(tok), tok.tokenPattern,
+      tok.vocab, ignoreMerges = tok.ignoreMerges,
+      requireCover = tok.splitPre)
 
-  /** Single-sequence encode under the FULL pipeline: template ids,
-    * truncation, Fixed padding — the [[WordPiece.encodeColumn]]
-    * contract for the byte-level lineage. Zero shuffles.
-    */
-  def encodeColumn(text: Column, tok: BpeTokenizer): Column = {
-    val full = assembledColumn(text, tok)
-    tok.padding match {
-      case Some(p) => TokenizerTruncation.pad(full, p, p.padId)
-      case None => full
-    }
-  }
-
-  /** Distributed encode: `(idCol, token_ids)` — zero-shuffle. */
-  def encodeIds(df: DataFrame, idCol: String, textCol: String,
-      tok: BpeTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeColumn(col(textCol), tok).as("token_ids"))
-
-  /** Distributed encode WITH the attention mask: `(idCol, token_ids,
-    * attention_mask)` — positional from the PRE-padding length via
-    * an intermediate projection, never by matching pad_id values
-    * (the [[WordPiece.encodeWithMask]] rule: a pad id colliding with
-    * a content id must not zero real tokens). Zero shuffles.
-    */
-  def encodeWithMask(df: DataFrame, idCol: String, textCol: String,
-      tok: BpeTokenizer): DataFrame = {
-    val enc = df.select(col(idCol),
-      assembledColumn(col(textCol), tok).as("_graft_ids"))
-    enc.select(col(idCol),
-      (tok.padding match {
-        case Some(p) =>
-          TokenizerTruncation.pad(col("_graft_ids"), p, p.padId)
-        case None => col("_graft_ids")
-      }).as("token_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
-
-  private def requirePair(tok: BpeTokenizer): WordPiece.PairTemplate =
-    tok.pair.getOrElse(throw new IllegalArgumentException(
-      "this tokenizer defines no PAIR template — single-sequence " +
-        "encode is encodeColumn; refusing to fabricate segment " +
-        "structure for a two-sequence input"))
-
-  private def padPair(ids: Column, types: Column, tok: BpeTokenizer)
-      : (Column, Column) =
-    tok.padding match {
-      case Some(p) => (TokenizerTruncation.pad(ids, p, p.padId),
-        TokenizerTruncation.pad(types, p, p.padTypeId))
-      case None => (ids, types)
-    }
-
-  /** PAIR encode: `(idCol, token_ids, type_ids)` under the
-    * tokenizer's pair template — RoBERTa's `<s> A </s> </s> B </s>`
-    * or a file's own TemplateProcessing pair — through the SAME
-    * assembly home as the other two lineages
-    * ([[WordPiece.pairAssembled]]: template ids, published
-    * truncation strategies, Fixed padding). Content encodes
-    * materialize once behind an intermediate projection. Refuses
-    * loudly without a pair template. Zero shuffles.
-    */
-  def encodePair(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: BpeTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      coreIdsColumn(col(aCol), tok).as("_graft_ea"),
-      coreIdsColumn(col(bCol), tok).as("_graft_eb"))
-    val (ids, types) = WordPiece.pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val (pids, ptypes) = padPair(ids, types, tok)
-    enc.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"))
-  }
-
-  /** [[encodePair]] plus the positional attention mask. */
-  def encodePairWithMask(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: BpeTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      coreIdsColumn(col(aCol), tok).as("_graft_ea"),
-      coreIdsColumn(col(bCol), tok).as("_graft_eb"))
-    val (ids, types) = WordPiece.pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val mid = enc.select(col(idCol), ids.as("_graft_ids"),
-      types.as("_graft_types"))
-    val (pids, ptypes) = padPair(col("_graft_ids"),
-      col("_graft_types"), tok)
-    mid.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
+  private def rankedMerges(tok: BpeTokenizer): Seq[(Int, String, String)] =
+    tok.merges.sortBy(_._1).map(m => (m._1, m._2, m._3))
 
   /** The encode-view text the kernels scan: NFC when the file
     * demands it, then the `add_prefix_space` prepend — offsets index
@@ -1659,64 +1546,8 @@ object Bpe {
     else when(t1.startsWith(" "), t1).otherwise(concat(lit(" "), t1))
   }
 
-  /** The encode-with-OFFSETS column: `(id, start, end)` structs,
-    * spans in code points into the ENCODE-VIEW text (post-NFC,
-    * post-`add_prefix_space` — see
-    * [[graft.expressions.BpeEncodeOffsets]] for the exact convention:
-    * untrimmed byte coverage, multi-byte splits covered whole, a
-    * documented divergence from the reference's trim_offsets).
-    * Template specials carry the published (0, 0) span; truncation
-    * and Fixed padding apply exactly as to [[encodeColumn]] (pads as
-    * `(pad_id, 0, 0)`) — the [[WordPiece.encodeOffsetsColumn]]
-    * contract for the third lineage. Zero shuffles.
-    */
-  def encodeOffsetsColumn(text: Column, tok: BpeTokenizer): Column = {
-    def fixed(ids: Seq[Long]): Column = array(ids.map(id =>
-      struct(lit(id).as("id"), lit(0).as("start"),
-        lit(0).as("end"))): _*)
-    val core0 = graft.expressions.GraftFunctions.bpeEncodeOffsets(
-      encodeView(text, tok),
-      tok.merges.sortBy(_._1).map(m => (m._1, m._2, m._3)),
-      tok.tokenPattern, tok.vocab,
-      ignoreMerges = tok.ignoreMerges, requireCover = tok.splitPre)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    val full =
-      if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-      else concat(fixed(tok.prefixIds), core, fixed(tok.suffixIds))
-    tok.padding match {
-      case Some(p) =>
-        val padRow = struct(lit(p.padId).as("id"),
-          lit(0).as("start"), lit(0).as("end"))
-        val fill = array_repeat(padRow, lit(p.length) - size(full))
-        when(size(full) >= p.length, full).otherwise(
-          if (p.direction == "left") concat(fill, full)
-          else concat(full, fill))
-      case None => full
-    }
-  }
-
-  /** Distributed encode with offsets: `(idCol, tokens)` — the
-    * `(id, start, end)` struct array, via an intermediate projection
-    * (the [[WordPiece.encodeWithOffsets]] shape). Zero shuffles.
-    */
-  def encodeWithOffsets(df: DataFrame, idCol: String,
-      textCol: String, tok: BpeTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeOffsetsColumn(col(textCol), tok).as("tokens"))
-
-  /** Every fixed id any of the tokenizer's templates can emit —
-    * the decode-time skip set.
-    */
-  private def templateIds(tok: BpeTokenizer): Seq[Long] =
-    (tok.prefixIds ++ tok.suffixIds ++ tok.pair.toSeq.flatMap(pt =>
-      (pt.pre ++ pt.mid ++ pt.post).map(_._1))).distinct
-
-  /** The decode column for assembled sequences: template ids and
-    * the pad id (when a padding block is set) dropped, remaining
+  /** The decode column for assembled sequences: the
+    * [[TokenizerSurface]] skip set dropped, remaining
     * content ids unmapped to their original UTF-8 bytes through the
     * compiled [[graft.expressions.IdsToText]] kernel (special-token
     * markers outside the byte alphabet render literally). With no
@@ -1726,9 +1557,7 @@ object Bpe {
     */
   def decodeColumn(ids: Column, tok: BpeTokenizer,
       skipTemplateIds: Boolean = true): Column = {
-    val skip: Seq[Long] =
-      (if (skipTemplateIds) templateIds(tok) else Seq.empty[Long]) ++
-        tok.padding.map(_.padId).toSeq
+    val skip = decodeSkipIds(tok, skipTemplateIds)
     val content =
       if (skip.isEmpty) ids
       else filter(ids, i => !i.isInCollection(skip))
@@ -1825,12 +1654,7 @@ object Bpe {
     model.set[com.fasterxml.jackson.databind.JsonNode]("merges",
       mergesArr)
     root.set[com.fasterxml.jackson.databind.JsonNode]("model", model)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    Tokenizer.writeJson(spark, path, root)
   }
 
   /** [[encodeIdsBytes]] under an EXPLICIT vocabulary (a [[loadGpt2]]

@@ -315,24 +315,37 @@ object TokenizerTruncation {
   def attentionMask(unpadded: Column, p: Option[Padding]): Column =
     p match {
       case None => array_repeat(lit(1L), size(unpadded))
-      case Some(pd) =>
-        val ones = array_repeat(lit(1L), size(unpadded))
-        val zeros =
-          array_repeat(lit(0L), lit(pd.length) - size(unpadded))
-        when(size(unpadded) >= pd.length, ones).otherwise(
-          if (pd.direction == "left") concat(zeros, ones)
-          else concat(ones, zeros))
+      case Some(pd) => maskTo(unpadded, lit(pd.length), pd.direction)
     }
+
+  private def maskTo(unpadded: Column, length: Column,
+      direction: String): Column = {
+    val ones = array_repeat(lit(1L), size(unpadded))
+    val zeros = array_repeat(lit(0L), length - size(unpadded))
+    when(size(unpadded) >= length, ones).otherwise(
+      if (direction == "left") concat(zeros, ones)
+      else concat(ones, zeros))
+  }
 
   /** Pad an assembled sequence to the Fixed length with `padVal`
     * (the id for token arrays, the type id for type arrays) —
     * lengthen-only, the published Fixed semantics.
     */
-  def pad(arr: Column, p: Padding, padVal: Long): Column = {
-    val fill = array_repeat(lit(padVal), lit(p.length) - size(arr))
-    when(size(arr) >= p.length, arr).otherwise(
-      if (p.direction == "left") concat(fill, arr)
-      else concat(arr, fill))
+  def pad(arr: Column, p: Padding, padVal: Long): Column =
+    padWith(arr, p, lit(padVal))
+
+  /** [[pad]] with any element: the offsets surface pads with
+    * `(pad_id, 0, 0)` structs.
+    */
+  private[operators] def padWith(arr: Column, p: Padding, fill: Column)
+      : Column = padTo(arr, lit(p.length), p.direction, fill)
+
+  private def padTo(arr: Column, length: Column, direction: String,
+      fill: Column): Column = {
+    val pads = array_repeat(fill, length - size(arr))
+    when(size(arr) >= length, arr).otherwise(
+      if (direction == "left") concat(pads, arr)
+      else concat(arr, pads))
   }
 
   /** `BatchLongest` padding as what it actually IS: a property of the
@@ -362,30 +375,16 @@ object TokenizerTruncation {
       .otherwise(col(idsCol))
     val maxDf = df.agg(
       coalesce(max(size(col(idsCol))), lit(0)).as("__graft_maxlen"))
-    def padTo(arr: Column, padVal: Long): Column = {
-      val fill = array_repeat(lit(padVal),
-        col("__graft_maxlen") - size(arr))
-      when(size(arr) >= col("__graft_maxlen"), arr).otherwise(
-        if (direction == "left") concat(fill, arr)
-        else concat(arr, fill))
-    }
-    val mask = {
-      val ones = array_repeat(lit(1L), size(col(idsCol)))
-      val zeros = array_repeat(lit(0L),
-        col("__graft_maxlen") - size(col(idsCol)))
-      when(size(col(idsCol)) >= col("__graft_maxlen"), ones)
-        .otherwise(
-          if (direction == "left") concat(zeros, ones)
-          else concat(ones, zeros))
-    }
+    val maxLen = col("__graft_maxlen")
     val joined = df
       .withColumn(idsCol, guarded)
       .crossJoin(org.apache.spark.sql.functions.broadcast(maxDf))
     val withIds = joined
-      .withColumn("attention_mask", mask)
-      .withColumn(idsCol, padTo(col(idsCol), padId))
+      .withColumn("attention_mask", maskTo(col(idsCol), maxLen, direction))
+      .withColumn(idsCol, padTo(col(idsCol), maxLen, direction, lit(padId)))
     val withTypes = typeIdsCol match {
-      case Some(tc) => withIds.withColumn(tc, padTo(col(tc), padTypeId))
+      case Some(tc) => withIds.withColumn(tc,
+        padTo(col(tc), maxLen, direction, lit(padTypeId)))
       case None => withIds
     }
     withTypes.drop("__graft_maxlen")

@@ -30,7 +30,7 @@ import graft.functions.TextFunctions
   *    the single template's fixed special ids around one `A`
   *    sequence (Llama's `<s> $A` BOS shape) are emitted exactly, and
   *    a `pair` template (A-then-B with type ids) loads through the
-  *    shared [[WordPiece.parsePairTemplate]] state machine for
+  *    shared [[Tokenizer.parseTemplateProcessing]] state machine for
   *    [[encodePair]]; a `$B` in the SINGLE template is still
   *    rejected.
   *
@@ -42,7 +42,9 @@ import graft.functions.TextFunctions
   * −10.0 unknown penalty, `<0xNN>` fallback precedence) is pinned by
   * hand-computed lattice fixtures in UnigramSpec.
   */
-object Unigram {
+object Unigram extends TokenizerSurface {
+
+  type Tok = UnigramTokenizer
 
   /** A loaded Unigram tokenizer: pieces in id order (id = index),
     * `unkId < 0` = none, kernel-resident normalizer ops in file
@@ -60,6 +62,7 @@ object Unigram {
       truncation: Option[TokenizerTruncation.Truncation] = None,
       padding: Option[TokenizerTruncation.Padding] = None,
       pair: Option[WordPiece.PairTemplate] = None)
+      extends Tokenizer
 
   /** Load a `tokenizer.json` carrying a Unigram model, rejecting
     * loudly anything the engine cannot reproduce exactly — see the
@@ -67,12 +70,7 @@ object Unigram {
     */
   def loadTokenizerJson(spark: SparkSession, path: String)
       : UnigramTokenizer = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
+    val tree = Tokenizer.readJson(spark, path)
     val model = tree.get("model")
     require(model != null && model.isObject,
       s"$path has no tokenizer model object")
@@ -224,11 +222,12 @@ object Unigram {
               "mis-encode")
       }
 
-    // post-processor: absent, or a TemplateProcessing with a single
-    // template (fixed special ids around one A) and optionally the
-    // PAIR template (A-then-B with type ids — parsed by the shared
-    // [[WordPiece.parsePairTemplate]] state machine, the
-    // encodePair contract)
+    // post-processor: absent, or a TemplateProcessing (single
+    // template, optional pair) through the shared parser; vocab ids
+    // are piece positions
+    val pieceIdOf = pieces.map(_._1).zipWithIndex.toMap
+    val vocabIdOf: String => Option[Long] =
+      t => pieceIdOf.get(t).map(_.toLong)
     val post = tree.get("post_processor")
     val (prefixIds, suffixIds, pairTemplate)
         : (Seq[Long], Seq[Long], Option[WordPiece.PairTemplate]) =
@@ -239,72 +238,16 @@ object Unigram {
             .contains("TemplateProcessing"),
           s"$path post-processor type '${Option(post.get("type"))
             .map(_.asText()).getOrElse("?")}' is not reproducible — " +
-            "only absent or single-sequence TemplateProcessing is " +
-            "supported")
-        val single = post.get("single")
-        require(single != null && single.isArray,
-          s"$path TemplateProcessing without a single template")
-        // special-token id resolution: the processor's own table
-        // first, then the vocab position
-        val specialIds: Map[String, Long] = {
-          val m = Map.newBuilder[String, Long]
-          val st = post.get("special_tokens")
-          if (st != null && st.isObject) {
-            val it = st.fields()
-            while (it.hasNext) {
-              val e = it.next()
-              val ids = e.getValue.get("ids")
-              require(ids != null && ids.isArray && ids.size() == 1,
-                s"$path template special '${e.getKey}' maps to " +
-                  s"${if (ids == null) 0 else ids.size()} ids — " +
-                  "only single-id specials are reproducible")
-              m += (e.getKey -> ids.get(0).asLong())
-            }
-          }
-          m.result()
-        }
-        val pieceId = pieces.map(_._1).zipWithIndex.toMap
-        def idOf(name: String): Long =
-          specialIds.getOrElse(name, pieceId.get(name) match {
-            case Some(i) => i.toLong
-            case None => throw new IllegalArgumentException(
-              s"$path template names special '$name' with no id in " +
-                "special_tokens or the vocab")
-          })
-        val pre0 = Seq.newBuilder[Long]
-        val post0 = Seq.newBuilder[Long]
-        var seenA = false
-        val it = single.elements()
-        while (it.hasNext) {
-          val item = it.next()
-          if (item.get("SpecialToken") != null) {
-            val id = idOf(item.get("SpecialToken").get("id").asText())
-            if (seenA) post0 += id else pre0 += id
-          } else if (item.get("Sequence") != null) {
-            val sid = item.get("Sequence").get("id").asText()
-            require(sid == "A",
-              s"$path SINGLE template references '$sid' — the " +
-                "single form takes exactly one A sequence (the " +
-                "pair form is the separate `pair` template)")
-            require(!seenA, s"$path template references A twice")
-            seenA = true
-          } else throw new IllegalArgumentException(
-            s"$path template item is neither SpecialToken nor " +
-              "Sequence")
-        }
-        require(seenA, s"$path template never references sequence A")
-        (pre0.result(), post0.result(),
-          WordPiece.parsePairTemplate(post, idOf, path))
+            "only absent or TemplateProcessing is supported")
+        Tokenizer.parseTemplateProcessing(post, vocabIdOf, path)
       }
 
     // truncation / padding blocks: honored (the loader-contract
     // close); only_second is meaningful only on the pair surface —
     // a single-sequence encode under it refuses at ENCODE
-    // ([[TokenizerTruncation.truncateSingle]]), the WordPiece rule
+    // ([[TokenizerTruncation.truncateSingle]])
     val truncation = TokenizerTruncation.parseTruncation(tree, path)
-    val pieceIdOf = pieces.map(_._1).zipWithIndex.toMap
-    val padding = TokenizerTruncation.parsePadding(tree, path,
-      t => pieceIdOf.get(t).map(_.toLong))
+    val padding = TokenizerTruncation.parsePadding(tree, path, vocabIdOf)
 
     // the `decoder` block — previously IGNORED silently: verified
     // structurally here. The engine's decode ([[graft.expressions
@@ -389,9 +332,10 @@ object Unigram {
     val root = mapper.createObjectNode()
     root.put("version", "1.0")
     TokenizerTruncation.emitTruncation(mapper, root, tok.truncation)
-    TokenizerTruncation.emitPadding(mapper, root, tok.padding,
-      id => if (id >= 0 && id < tok.pieces.size)
-        Some(tok.pieces(id.toInt)._1) else None)
+    def nameOf(id: Long): Option[String] =
+      if (id >= 0 && id < tok.pieces.size) Some(tok.pieces(id.toInt)._1)
+      else None
+    TokenizerTruncation.emitPadding(mapper, root, tok.padding, nameOf)
     // normalizer
     val atoms = mapper.createArrayNode()
     if (tok.needsNfc) {
@@ -434,72 +378,7 @@ object Unigram {
         root.set[com.fasterxml.jackson.databind.JsonNode](
           "pre_tokenizer", n)
     }
-    // post-processor: reconstruct the single-sequence template and,
-    // when the tokenizer carries one, the PAIR template (the
-    // WordPiece saver's shape — save→load identity includes it)
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty &&
-        tok.pair.isEmpty)
-      root.putNull("post_processor")
-    else {
-      val post = mapper.createObjectNode()
-      post.put("type", "TemplateProcessing")
-      val specials = mapper.createObjectNode()
-      def nameOf(id: Long): String =
-        if (id >= 0 && id < tok.pieces.size) tok.pieces(id.toInt)._1
-        else s"<special:$id>"
-      def specialItem(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-          id: Long, typeId: Long): Unit = {
-        val name = nameOf(id)
-        val it = mapper.createObjectNode()
-        val st = mapper.createObjectNode()
-        st.put("id", name); st.put("type_id", typeId)
-        it.set[com.fasterxml.jackson.databind.JsonNode](
-          "SpecialToken", st)
-        arr.add(it)
-        if (!specials.has(name)) {
-          val entry = mapper.createObjectNode()
-          entry.put("id", name)
-          val ids = mapper.createArrayNode(); ids.add(id)
-          entry.set[com.fasterxml.jackson.databind.JsonNode]("ids",
-            ids)
-          val toks = mapper.createArrayNode(); toks.add(name)
-          entry.set[com.fasterxml.jackson.databind.JsonNode]("tokens",
-            toks)
-          specials.set[com.fasterxml.jackson.databind.JsonNode](name,
-            entry)
-        }
-      }
-      def seqItem(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-          name: String, typeId: Long): Unit = {
-        val it = mapper.createObjectNode()
-        val ref = mapper.createObjectNode()
-        ref.put("id", name); ref.put("type_id", typeId)
-        it.set[com.fasterxml.jackson.databind.JsonNode]("Sequence",
-          ref)
-        arr.add(it)
-      }
-      val single = mapper.createArrayNode()
-      tok.prefixIds.foreach(specialItem(single, _, 0L))
-      seqItem(single, "A", 0L)
-      tok.suffixIds.foreach(specialItem(single, _, 0L))
-      post.set[com.fasterxml.jackson.databind.JsonNode]("single",
-        single)
-      tok.pair.foreach { pt =>
-        val pairArr = mapper.createArrayNode()
-        pt.pre.foreach { case (id, ty) => specialItem(pairArr, id, ty) }
-        seqItem(pairArr, "A", pt.typeA)
-        pt.mid.foreach { case (id, ty) => specialItem(pairArr, id, ty) }
-        seqItem(pairArr, "B", pt.typeB)
-        pt.post.foreach { case (id, ty) =>
-          specialItem(pairArr, id, ty) }
-        post.set[com.fasterxml.jackson.databind.JsonNode]("pair",
-          pairArr)
-      }
-      post.set[com.fasterxml.jackson.databind.JsonNode](
-        "special_tokens", specials)
-      root.set[com.fasterxml.jackson.databind.JsonNode](
-        "post_processor", post)
-    }
+    Tokenizer.emitPostProcessor(mapper, root, tok, nameOf)
     // model
     val model = mapper.createObjectNode()
     model.put("type", "Unigram")
@@ -513,197 +392,31 @@ object Unigram {
     }
     model.set[com.fasterxml.jackson.databind.JsonNode]("vocab", vocab)
     root.set[com.fasterxml.jackson.databind.JsonNode]("model", model)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    Tokenizer.writeJson(spark, path, root)
   }
 
-  /** The encode column: NFC upstream when the file demands it (the
-    * compiled x89 kernel — still a pure projection), then the Viterbi
-    * kernel, truncated to the `truncation` block's content budget
-    * when the file carries one, then the template's fixed ids,
-    * padded to the `padding` block's Fixed length when set. Zero
-    * shuffles.
+  /** The lattice input: NFC upstream when the file demands it (the
+    * compiled x89 kernel — still a pure projection).
     */
-  /** Truncated content + template, UNPADDED — the pre-padding view
-    * [[encodeColumn]] pads and [[encodeWithMask]] masks from.
+  private def latticeText(text: Column, tok: UnigramTokenizer): Column =
+    if (tok.needsNfc) TextFunctions.normalizeUnicode(text, "NFC")
+    else text
+
+  /** The content ids: the Viterbi kernel over the lattice input. */
+  protected def contentIds(text: Column, tok: UnigramTokenizer)
+      : Column =
+    graft.expressions.GraftFunctions.unigramEncode(
+      latticeText(text, tok), tok)
+
+  /** Content spans in code points into the normalized-and-rewritten
+    * lattice string (see [[graft.expressions.UnigramEncodeOffsets]]
+    * for the exact convention — byte-fallback tokens carry their
+    * whole span's offsets).
     */
-  private def assembledColumn(text: Column, tok: UnigramTokenizer)
-      : Column = {
-    val normalized =
-      if (tok.needsNfc) TextFunctions.normalizeUnicode(text, "NFC")
-      else text
-    val core0 = graft.expressions.GraftFunctions.unigramEncode(
-      normalized, tok)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-    else concat(typedLit(tok.prefixIds), core,
-      typedLit(tok.suffixIds))
-  }
-
-  def encodeColumn(text: Column, tok: UnigramTokenizer): Column = {
-    val full = assembledColumn(text, tok)
-    tok.padding match {
-      case Some(p) => TokenizerTruncation.pad(full, p, p.padId)
-      case None => full
-    }
-  }
-
-  /** Distributed encode WITH the attention mask: `(idCol, token_ids,
-    * attention_mask)` — positional from the unpadded assembly,
-    * materialized once behind an intermediate projection (the
-    * [[graft.operators.WordPiece.encodeWithMask]] contract: never
-    * value-matched against pad_id, which may collide with a content
-    * id). Zero shuffles.
-    */
-  def encodeWithMask(df: DataFrame, idCol: String, textCol: String,
-      tok: UnigramTokenizer): DataFrame = {
-    val enc = df.select(col(idCol),
-      assembledColumn(col(textCol), tok).as("_graft_ids"))
-    enc.select(col(idCol),
-      (tok.padding match {
-        case Some(p) =>
-          TokenizerTruncation.pad(col("_graft_ids"), p, p.padId)
-        case None => col("_graft_ids")
-      }).as("token_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
-
-  /** The encode-with-OFFSETS column: `(id, start, end)` structs,
-    * spans in code points into the normalized-and-rewritten lattice
-    * string (see [[graft.expressions.UnigramEncodeOffsets]] for the
-    * exact convention — byte-fallback tokens carry their whole
-    * span's offsets). Template specials carry the published (0, 0)
-    * span; truncation and Fixed padding apply exactly as to
-    * [[encodeColumn]] (pad entries are `(pad_id, 0, 0)`). Zero
-    * shuffles.
-    */
-  def encodeOffsetsColumn(text: Column, tok: UnigramTokenizer)
-      : Column = {
-    def fixed(ids: Seq[Long]): Column = array(ids.map(id =>
-      struct(lit(id).as("id"), lit(0).as("start"),
-        lit(0).as("end"))): _*)
-    val normalized =
-      if (tok.needsNfc) TextFunctions.normalizeUnicode(text, "NFC")
-      else text
-    val core0 = graft.expressions.GraftFunctions.unigramEncodeOffsets(
-      normalized, tok)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    val full =
-      if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-      else concat(fixed(tok.prefixIds), core, fixed(tok.suffixIds))
-    tok.padding match {
-      case Some(p) =>
-        val padRow = struct(lit(p.padId).as("id"),
-          lit(0).as("start"), lit(0).as("end"))
-        val fill = array_repeat(padRow, lit(p.length) - size(full))
-        when(size(full) >= p.length, full).otherwise(
-          if (p.direction == "left") concat(fill, full)
-          else concat(full, fill))
-      case None => full
-    }
-  }
-
-  /** Distributed encode with offsets: `(idCol, tokens)` — the
-    * [[graft.operators.WordPiece.encodeWithOffsets]] shape for the
-    * sentencepiece lineage; the kernel lands in an intermediate
-    * projection so repeated references never re-run the lattice.
-    */
-  def encodeWithOffsets(df: DataFrame, idCol: String,
-      textCol: String, tok: UnigramTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeOffsetsColumn(col(textCol), tok).as("tokens"))
-
-  private def requirePair(tok: UnigramTokenizer)
-      : WordPiece.PairTemplate =
-    tok.pair.getOrElse(throw new IllegalArgumentException(
-      "this tokenizer defines no PAIR template — single-sequence " +
-        "encode is encodeColumn; refusing to fabricate segment " +
-        "structure for a two-sequence input"))
-
-  /** The content encode for ONE side of a pair (NFC + Viterbi, no
-    * template) — what [[WordPiece.pairAssembled]] assembles.
-    */
-  private def contentColumn(text: Column, tok: UnigramTokenizer)
-      : Column = {
-    val normalized =
-      if (tok.needsNfc) TextFunctions.normalizeUnicode(text, "NFC")
-      else text
-    graft.expressions.GraftFunctions.unigramEncode(normalized, tok)
-  }
-
-  /** PAIR encode for the sentencepiece lineage: `(idCol, token_ids,
-    * type_ids)` under the tokenizer's pair template — the
-    * [[WordPiece.encodePair]] semantics (shared
-    * [[WordPiece.pairAssembled]] arithmetic: template ids, the
-    * published truncation strategies over the content, Fixed
-    * padding), with each side's content running the Viterbi kernel.
-    * Both encodes land in an intermediate projection first — one
-    * lattice run per row per side. Refuses LOUDLY without a pair
-    * template. Zero shuffles.
-    */
-  def encodePair(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: UnigramTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      contentColumn(col(aCol), tok).as("_graft_ea"),
-      contentColumn(col(bCol), tok).as("_graft_eb"))
-    val (ids, types) = WordPiece.pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val (pids, ptypes) = padPairCols(ids, types, tok)
-    enc.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"))
-  }
-
-  /** [[encodePair]] plus the positional attention mask —
-    * `(idCol, token_ids, type_ids, attention_mask)`, the
-    * [[WordPiece.encodePairWithMask]] contract.
-    */
-  def encodePairWithMask(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: UnigramTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      contentColumn(col(aCol), tok).as("_graft_ea"),
-      contentColumn(col(bCol), tok).as("_graft_eb"))
-    val (ids, types) = WordPiece.pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val mid = enc.select(col(idCol), ids.as("_graft_ids"),
-      types.as("_graft_types"))
-    val (pids, ptypes) = padPairCols(col("_graft_ids"),
-      col("_graft_types"), tok)
-    mid.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
-
-  private def padPairCols(ids: Column, types: Column,
-      tok: UnigramTokenizer): (Column, Column) =
-    tok.padding match {
-      case Some(p) => (TokenizerTruncation.pad(ids, p, p.padId),
-        TokenizerTruncation.pad(types, p, p.padTypeId))
-      case None => (ids, types)
-    }
-
-  /** Distributed encode: one row per input row, `(idCol, token_ids)`
-    * — [[Bpe.encodeMapSide]]'s shape for the Unigram lineage.
-    */
-  def encodeIds(df: DataFrame, idCol: String, textCol: String,
-      tok: UnigramTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeColumn(col(textCol), tok).as("token_ids"))
+  protected def contentOffsets(text: Column, tok: UnigramTokenizer)
+      : Column =
+    graft.expressions.GraftFunctions.unigramEncodeOffsets(
+      latticeText(text, tok), tok)
 
   /** Driver-side decode — the sentencepiece convention, shared with
     * the distributed kernel through

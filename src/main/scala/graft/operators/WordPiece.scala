@@ -22,16 +22,17 @@ import org.apache.spark.sql.functions._
   *    punctuation isolation — the split WordPiece's greedy match is
   *    defined over; an absent pre-tokenizer would make the whole
   *    text one word, a different artifact class);
-  *  - post-processor: absent, single-sequence `TemplateProcessing`
-  *    (BERT's `[CLS] $A [SEP]`), or the legacy `BertProcessing`
-  *    (cls/sep pairs) — fixed ids around one sequence; pair
-  *    templates rejected.
+  *  - post-processor: absent, `TemplateProcessing` (BERT's
+  *    `[CLS] $A [SEP]`, plus the pair template when the file defines
+  *    one), or the legacy `BertProcessing` (cls/sep pairs).
   *
   * Honest bound, documented on the kernel: Unicode category lookups
   * use the JDK's tables; a `tokenizers` build pinned to a different
   * Unicode version could classify an exotic codepoint differently.
   */
-object WordPiece {
+object WordPiece extends TokenizerSurface {
+
+  type Tok = WordPieceTokenizer
 
   /** The PAIR post-processing template (BERT's
     * `[CLS] $A [SEP] $B:1 [SEP]:1` shape): fixed (id, type_id)
@@ -45,9 +46,8 @@ object WordPiece {
   /** A loaded WordPiece tokenizer. `pair` is the two-sequence
     * template when the file defines one — [[encodePair]]'s contract;
     * single-sequence encode ignores it. `truncation` / `padding` are
-    * the file's top-level blocks when present — HONORED by every
-    * encode surface (the [[TokenizerTruncation]] semantics), never
-    * silently ignored.
+    * the file's top-level blocks when present — honored by every
+    * [[TokenizerSurface]] encode, never silently ignored.
     */
   case class WordPieceTokenizer(vocab: Seq[(String, Long)],
       unkId: Long, contPrefix: String, maxInputCharsPerWord: Int,
@@ -58,142 +58,11 @@ object WordPiece {
       truncation: Option[TokenizerTruncation.Truncation] = None,
       padding: Option[TokenizerTruncation.Padding] = None,
       decoderCleanup: Option[Boolean] = None)
-
-  /** Parse a TemplateProcessing PAIR template — fixed (id, type_id)
-    * tokens before A, between A and B, and after B, plus the content
-    * type ids — the ONE parser both template-carrying lineages use
-    * (WordPiece here, [[Unigram.loadTokenizerJson]] for the
-    * sentencepiece lineage), so the A-then-B state machine and its
-    * refusals cannot drift between loaders. `idOf` resolves a
-    * special-token name through the caller's special_tokens table
-    * then its vocab.
-    */
-  private[operators] def parsePairTemplate(
-      post: com.fasterxml.jackson.databind.JsonNode,
-      idOf: String => Long, path: String): Option[PairTemplate] = {
-    val pairNode = post.get("pair")
-    if (pairNode == null || pairNode.isNull ||
-        !pairNode.isArray || pairNode.size() == 0) None
-    else {
-      def typeOf(item: com.fasterxml.jackson.databind.JsonNode,
-          key: String): Long = {
-        val t = item.get(key).get("type_id")
-        if (t == null || t.isNull) 0L else t.asLong()
-      }
-      val pre1 = Seq.newBuilder[(Long, Long)]
-      val mid1 = Seq.newBuilder[(Long, Long)]
-      val post1 = Seq.newBuilder[(Long, Long)]
-      var typeA = 0L; var typeB = 1L
-      var state = 0 // 0 = before A, 1 = between, 2 = after B
-      val pit = pairNode.elements()
-      while (pit.hasNext) {
-        val item = pit.next()
-        if (item.get("SpecialToken") != null) {
-          val id = idOf(item.get("SpecialToken").get("id").asText())
-          val ty = typeOf(item, "SpecialToken")
-          state match {
-            case 0 => pre1 += ((id, ty))
-            case 1 => mid1 += ((id, ty))
-            case _ => post1 += ((id, ty))
-          }
-        } else if (item.get("Sequence") != null) {
-          val sid = item.get("Sequence").get("id").asText()
-          val ty = typeOf(item, "Sequence")
-          if (sid == "A") {
-            require(state == 0,
-              s"$path pair template references A out of " +
-                "order — only A-then-B is reproducible")
-            typeA = ty; state = 1
-          } else if (sid == "B") {
-            require(state == 1,
-              s"$path pair template references B before A " +
-                "or twice — only A-then-B is reproducible")
-            typeB = ty; state = 2
-          } else throw new IllegalArgumentException(
-            s"$path pair template references sequence " +
-              s"'$sid' — only A and B exist in a pair")
-        } else throw new IllegalArgumentException(
-          s"$path pair template item is neither " +
-            "SpecialToken nor Sequence")
-      }
-      require(state == 2,
-        s"$path pair template must reference A then B")
-      Some(PairTemplate(pre1.result(), mid1.result(),
-        post1.result(), typeA, typeB))
-    }
-  }
-
-  /** Parse a full TemplateProcessing node — the SINGLE template's
-    * fixed prefix/suffix ids (around exactly one A) plus the PAIR
-    * template via [[parsePairTemplate]] — the one parser every
-    * template-carrying lineage shares (WordPiece here, the
-    * sentencepiece lineage's structurally-identical inline parse, and
-    * [[Bpe.loadTokenizerJsonAssembled]] for the byte-level lineage),
-    * so the A-only state machine and its refusals cannot drift
-    * between loaders. `idOf` resolves a special-token name through
-    * the processor's own `special_tokens` table then the caller's
-    * vocab.
-    */
-  private[operators] def parseTemplateProcessing(
-      post: com.fasterxml.jackson.databind.JsonNode,
-      vocabIdOf: String => Option[Long], path: String)
-      : (Seq[Long], Seq[Long], Option[PairTemplate]) = {
-    val single = post.get("single")
-    require(single != null && single.isArray,
-      s"$path TemplateProcessing without a single template")
-    val specialIds: Map[String, Long] = {
-      val m = Map.newBuilder[String, Long]
-      val st = post.get("special_tokens")
-      if (st != null && st.isObject) {
-        val it = st.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          val ids = e.getValue.get("ids")
-          require(ids != null && ids.isArray && ids.size() == 1,
-            s"$path template special '${e.getKey}' maps to " +
-              "more than one id — not reproducible")
-          m += (e.getKey -> ids.get(0).asLong())
-        }
-      }
-      m.result()
-    }
-    def idOf(name: String): Long =
-      specialIds.getOrElse(name, vocabIdOf(name).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path template names special '$name' with no id")))
-    val pre0 = Seq.newBuilder[Long]
-    val post0 = Seq.newBuilder[Long]
-    var seenA = false
-    val it = single.elements()
-    while (it.hasNext) {
-      val item = it.next()
-      if (item.get("SpecialToken") != null) {
-        val id = idOf(item.get("SpecialToken").get("id").asText())
-        if (seenA) post0 += id else pre0 += id
-      } else if (item.get("Sequence") != null) {
-        val sid = item.get("Sequence").get("id").asText()
-        require(sid == "A" && !seenA,
-          s"$path SINGLE template references '$sid' — the " +
-            "single form takes exactly one A sequence (the " +
-            "pair form is the separate `pair` template)")
-        seenA = true
-      } else throw new IllegalArgumentException(
-        s"$path template item is neither SpecialToken nor " +
-          "Sequence")
-    }
-    require(seenA, s"$path template never references sequence A")
-    (pre0.result(), post0.result(),
-      parsePairTemplate(post, idOf, path))
-  }
+      extends Tokenizer
 
   def loadTokenizerJson(spark: SparkSession, path: String)
       : WordPieceTokenizer = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
+    val tree = Tokenizer.readJson(spark, path)
     val model = tree.get("model")
     require(model != null && model.isObject,
       s"$path has no tokenizer model object")
@@ -302,7 +171,7 @@ object WordPiece {
             Some(PairTemplate(Seq((cls, 0L)), Seq((sep, 0L)),
               Seq((sep, 1L)), typeA = 0L, typeB = 1L)))
         case Some("TemplateProcessing") =>
-          parseTemplateProcessing(post, vocabMap.get, path)
+          Tokenizer.parseTemplateProcessing(post, vocabMap.get, path)
         case other => throw new IllegalArgumentException(
           s"$path post-processor type '${other.getOrElse("?")}' is " +
             "not reproducible — only absent, BertProcessing, or " +
@@ -382,13 +251,8 @@ object WordPiece {
     pre.put("type", "BertPreTokenizer")
     root.set[com.fasterxml.jackson.databind.JsonNode]("pre_tokenizer",
       pre)
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty &&
-        tok.pair.isEmpty)
-      root.putNull("post_processor")
-    else {
-      emitTemplateProcessing(mapper, root, tok.prefixIds,
-        tok.suffixIds, tok.pair, tok.vocab.map(_.swap).toMap)
-    }
+    Tokenizer.emitPostProcessor(mapper, root, tok,
+      tok.vocab.map(_.swap).toMap.get)
     tok.decoderCleanup match {
       case None => root.putNull("decoder")
       case Some(cu) =>
@@ -411,151 +275,28 @@ object WordPiece {
     tok.vocab.foreach { case (t, i) => vocab.put(t, i) }
     model.set[com.fasterxml.jackson.databind.JsonNode]("vocab", vocab)
     root.set[com.fasterxml.jackson.databind.JsonNode]("model", model)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    Tokenizer.writeJson(spark, path, root)
   }
 
-  /** Emit a single+pair TemplateProcessing post-processor node from
-    * loaded template state — the ONE emitter every template-carrying
-    * save shares (WordPiece, Unigram's structurally-identical
-    * emitter, [[Bpe.saveTokenizerJsonAssembled]]), the
-    * [[parseTemplateProcessing]] inverse: load(save(tok)) carries
-    * identical template ids (spec-asserted per lineage).
+  /** The content ids: the compiled greedy-match kernel (Bert
+    * normalizer, BertPreTokenizer split, longest-match-first).
     */
-  private[operators] def emitTemplateProcessing(
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      root: com.fasterxml.jackson.databind.node.ObjectNode,
-      prefixIds: Seq[Long], suffixIds: Seq[Long],
-      pair: Option[PairTemplate], idToTok: Map[Long, String]): Unit = {
-    val post = mapper.createObjectNode()
-    post.put("type", "TemplateProcessing")
-    val specials = mapper.createObjectNode()
-    def specialItem(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-        id: Long, typeId: Long): Unit = {
-      val name = idToTok.getOrElse(id, s"<special:$id>")
-      val it = mapper.createObjectNode()
-      val st = mapper.createObjectNode()
-      st.put("id", name); st.put("type_id", typeId)
-      it.set[com.fasterxml.jackson.databind.JsonNode](
-        "SpecialToken", st)
-      arr.add(it)
-      if (!specials.has(name)) {
-        val entry = mapper.createObjectNode()
-        entry.put("id", name)
-        val ids = mapper.createArrayNode(); ids.add(id)
-        entry.set[com.fasterxml.jackson.databind.JsonNode]("ids",
-          ids)
-        val toks = mapper.createArrayNode(); toks.add(name)
-        entry.set[com.fasterxml.jackson.databind.JsonNode]("tokens",
-          toks)
-        specials.set[com.fasterxml.jackson.databind.JsonNode](name,
-          entry)
-      }
-    }
-    def seqItem(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-        name: String, typeId: Long): Unit = {
-      val it = mapper.createObjectNode()
-      val ref = mapper.createObjectNode()
-      ref.put("id", name); ref.put("type_id", typeId)
-      it.set[com.fasterxml.jackson.databind.JsonNode]("Sequence",
-        ref)
-      arr.add(it)
-    }
-    val single = mapper.createArrayNode()
-    prefixIds.foreach(specialItem(single, _, 0L))
-    seqItem(single, "A", 0L)
-    suffixIds.foreach(specialItem(single, _, 0L))
-    post.set[com.fasterxml.jackson.databind.JsonNode]("single",
-      single)
-    pair.foreach { pt =>
-      val pairArr = mapper.createArrayNode()
-      pt.pre.foreach { case (id, ty) => specialItem(pairArr, id, ty) }
-      seqItem(pairArr, "A", pt.typeA)
-      pt.mid.foreach { case (id, ty) => specialItem(pairArr, id, ty) }
-      seqItem(pairArr, "B", pt.typeB)
-      pt.post.foreach { case (id, ty) => specialItem(pairArr, id, ty) }
-      post.set[com.fasterxml.jackson.databind.JsonNode]("pair",
-        pairArr)
-    }
-    post.set[com.fasterxml.jackson.databind.JsonNode](
-      "special_tokens", specials)
-    root.set[com.fasterxml.jackson.databind.JsonNode](
-      "post_processor", post)
-  }
+  protected def contentIds(text: Column, tok: WordPieceTokenizer)
+      : Column =
+    graft.expressions.GraftFunctions.wordPieceEncode(text, tok)
 
-  /** The encode column: the compiled kernel, truncated to the
-    * `truncation` block's content budget when the file carries one,
-    * plus the template's fixed ids, padded to the `padding` block's
-    * Fixed length when set. Zero shuffles.
+  /** Content spans in code points into the normalized text (see
+    * [[graft.expressions.WordPieceEncodeOffsets]] for the exact
+    * convention and its documented divergence from the reference's
+    * original-string byte offsets).
     */
-  /** Truncated content + template, UNPADDED — the pre-padding view
-    * [[encodeColumn]] pads and [[encodeWithMask]] masks from.
-    */
-  private def assembledColumn(text: Column, tok: WordPieceTokenizer)
-      : Column = {
-    val core0 = graft.expressions.GraftFunctions.wordPieceEncode(
-      text, tok)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-    else concat(typedLit(tok.prefixIds), core,
-      typedLit(tok.suffixIds))
-  }
-
-  def encodeColumn(text: Column, tok: WordPieceTokenizer): Column = {
-    val full = assembledColumn(text, tok)
-    tok.padding match {
-      case Some(p) => TokenizerTruncation.pad(full, p, p.padId)
-      case None => full
-    }
-  }
-
-  /** Distributed encode WITH the attention mask: `(idCol, token_ids,
-    * attention_mask)` — the mask is POSITIONAL (1 for every
-    * pre-padding position, 0 for pads, honoring the padding
-    * direction), computed from the unpadded assembly materialized
-    * once behind an intermediate projection — NEVER by matching
-    * pad_id values, which would zero real tokens in files whose pad
-    * id collides with a content id (`[UNK]`-as-pad). Without a
-    * padding block the mask is all ones. Zero shuffles.
-    */
-  def encodeWithMask(df: DataFrame, idCol: String, textCol: String,
-      tok: WordPieceTokenizer): DataFrame = {
-    val enc = df.select(col(idCol),
-      assembledColumn(col(textCol), tok).as("_graft_ids"))
-    enc.select(col(idCol),
-      (tok.padding match {
-        case Some(p) =>
-          TokenizerTruncation.pad(col("_graft_ids"), p, p.padId)
-        case None => col("_graft_ids")
-      }).as("token_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
-
-  /** Distributed encode: `(idCol, token_ids)` — zero-shuffle. */
-  def encodeIds(df: DataFrame, idCol: String, textCol: String,
-      tok: WordPieceTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeColumn(col(textCol), tok).as("token_ids"))
-
-  /** Every fixed id any of the tokenizer's templates can emit —
-    * the decode-time skip set.
-    */
-  private def templateIds(tok: WordPieceTokenizer): Seq[Long] =
-    (tok.prefixIds ++ tok.suffixIds ++ tok.pair.toSeq.flatMap(pt =>
-      (pt.pre ++ pt.mid ++ pt.post).map(_._1))).distinct
+  protected def contentOffsets(text: Column, tok: WordPieceTokenizer)
+      : Column =
+    graft.expressions.GraftFunctions.wordPieceEncodeOffsets(text, tok)
 
   /** The decode column — the published `decoders.WordPiece` join
-    * convention (space-join, continuation prefix attaches), template
-    * ids (single AND pair) dropped by default. Zero shuffles. Decode
+    * convention (space-join, continuation prefix attaches), the
+    * [[TokenizerSurface]] skip set dropped. Zero shuffles. Decode
     * is lossy across the Bert normalizer (case/accents/whitespace
     * discarded by the ENCODE); on pre-normalized in-coverage text
     * decode ∘ encode is the identity — the x124 oracle's statement.
@@ -575,180 +316,25 @@ object WordPiece {
       skipTemplateIds: Boolean = true,
       acceptSpaceJoin: Boolean = false): Column =
     graft.expressions.GraftFunctions.wordPieceDecode(ids, tok,
-      if (skipTemplateIds) templateIds(tok) else Seq.empty,
+      decodeSkipIds(tok, skipTemplateIds),
       cleanup = tok.decoderCleanup.contains(true) && !acceptSpaceJoin)
 
-  /** Assemble the pair (token_ids, type_ids) from two ALREADY
-    * MATERIALIZED content encodes — the one home for the template /
-    * truncation arithmetic, shared by [[encodePair]] /
-    * [[encodePairColumns]] / [[encodePairWithMask]] AND the Unigram
-    * pair surface ([[Unigram.encodePair]]) — the assembly is
-    * lineage-independent once the content encodes exist.
-    */
-  private[operators] def pairAssembled(ea: Column, eb: Column,
-      trunc: Option[TokenizerTruncation.Truncation],
-      pt: PairTemplate): (Column, Column) = {
-    val nTemplate = pt.pre.size + pt.mid.size + pt.post.size
-    val (ka, kb) = trunc match {
-      case Some(t) =>
-        val budget = TokenizerTruncation.contentBudget(t, nTemplate)
-        val (fa, fb) = TokenizerTruncation.pairKeepLengths(
-          size(ea), size(eb), budget, t.strategy)
-        (TokenizerTruncation.keepSeq(ea, fa, t.direction),
-          TokenizerTruncation.keepSeq(eb, fb, t.direction))
-      case None => (ea, eb)
-    }
-    val ids = concat(typedLit(pt.pre.map(_._1)), ka,
-      typedLit(pt.mid.map(_._1)), kb, typedLit(pt.post.map(_._1)))
-    val types = concat(typedLit(pt.pre.map(_._2)),
-      array_repeat(lit(pt.typeA), size(ka)),
-      typedLit(pt.mid.map(_._2)),
-      array_repeat(lit(pt.typeB), size(kb)),
-      typedLit(pt.post.map(_._2)))
-    (ids, types)
-  }
-
-  /** Apply the Fixed padding block (when set) to an assembled pair. */
-  private def padPair(ids: Column, types: Column,
-      tok: WordPieceTokenizer): (Column, Column) =
-    tok.padding match {
-      case Some(p) => (TokenizerTruncation.pad(ids, p, p.padId),
-        TokenizerTruncation.pad(types, p, p.padTypeId))
-      case None => (ids, types)
-    }
-
-  private def requirePair(tok: WordPieceTokenizer): PairTemplate =
-    tok.pair.getOrElse(throw new IllegalArgumentException(
-      "this tokenizer defines no PAIR template — single-sequence " +
-        "encode is encodeColumn; refusing to fabricate segment " +
-        "structure for a two-sequence input"))
-
-  /** PAIR encode — the BERT two-sequence form: `(token_ids,
-    * type_ids)` under the tokenizer's pair template (`[CLS] $A [SEP]
-    * $B:1 [SEP]:1` and friends): fixed (id, type) tokens around and
-    * between the two content encodes, content tokens carrying the
-    * template's A/B type ids, truncation applied to the CONTENT
-    * under the published longest-first / only-first / only-second
-    * rules, Fixed padding after the template — exactly what an
-    * NSP-style or sentence-pair training pipeline feeds the model.
-    * Refuses LOUDLY when the tokenizer defines no pair template
-    * (encoding a pair under a single-sequence template would
-    * silently fabricate segment structure). Pure projection — zero
-    * shuffles.
-    *
-    * NOTE: both returned columns reference the two encode kernels
-    * directly, so a consumer projecting both may evaluate each
-    * O(len²) encode more than once unless codegen subexpression
-    * elimination fuses them — [[encodePair]] is the production path:
-    * it materializes the encodes once behind an intermediate
-    * projection the optimizer will not inline (non-cheap aliases
-    * referenced more than once are never collapsed).
+  /** PAIR encode as two columns, `(token_ids, type_ids)`, under the
+    * tokenizer's pair template — the [[encodePair]] assembly without
+    * its DataFrame. Both returned columns reference the two encode
+    * kernels directly, so a consumer projecting both may evaluate
+    * each O(len²) encode more than once unless codegen subexpression
+    * elimination fuses them; [[encodePair]] is the production path.
     */
   def encodePairColumns(a: Column, b: Column,
       tok: WordPieceTokenizer): (Column, Column) = {
-    val (ids, types) = pairAssembled(
-      graft.expressions.GraftFunctions.wordPieceEncode(a, tok),
-      graft.expressions.GraftFunctions.wordPieceEncode(b, tok),
-      tok.truncation, requirePair(tok))
+    val (ids, types) = pairAssembled(contentIds(a, tok),
+      contentIds(b, tok), tok.truncation, requirePair(tok))
     padPair(ids, types, tok)
   }
 
-  /** Distributed pair encode: `(idCol, token_ids, type_ids)`. The
-    * two content encodes land in an intermediate projection first,
-    * so each O(len²) kernel runs exactly ONCE per row no matter how
-    * many times the assembly arithmetic references it.
-    */
-  def encodePair(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: WordPieceTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      graft.expressions.GraftFunctions.wordPieceEncode(col(aCol), tok)
-        .as("_graft_ea"),
-      graft.expressions.GraftFunctions.wordPieceEncode(col(bCol), tok)
-        .as("_graft_eb"))
-    val (ids, types) = pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val (pids, ptypes) = padPair(ids, types, tok)
-    enc.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"))
-  }
-
-  /** [[encodePair]] plus the attention mask: `(idCol, token_ids,
-    * type_ids, attention_mask)` — mask positional from the unpadded
-    * assembly (see [[encodeWithMask]] for why never value-matched),
-    * materialized once behind a second intermediate projection.
-    */
-  def encodePairWithMask(df: DataFrame, idCol: String, aCol: String,
-      bCol: String, tok: WordPieceTokenizer): DataFrame = {
-    val pt = requirePair(tok)
-    val enc = df.select(col(idCol),
-      graft.expressions.GraftFunctions.wordPieceEncode(col(aCol), tok)
-        .as("_graft_ea"),
-      graft.expressions.GraftFunctions.wordPieceEncode(col(bCol), tok)
-        .as("_graft_eb"))
-    val (ids, types) = pairAssembled(col("_graft_ea"),
-      col("_graft_eb"), tok.truncation, pt)
-    val mid = enc.select(col(idCol), ids.as("_graft_ids"),
-      types.as("_graft_types"))
-    val (pids, ptypes) = padPair(col("_graft_ids"),
-      col("_graft_types"), tok)
-    mid.select(col(idCol), pids.as("token_ids"),
-      ptypes.as("type_ids"),
-      TokenizerTruncation.attentionMask(col("_graft_ids"),
-        tok.padding).as("attention_mask"))
-  }
-
-  /** The encode-with-OFFSETS column: `(id, start, end)` structs,
-    * spans in code points into the normalized text (see
-    * [[graft.expressions.WordPieceEncodeOffsets]] for the exact
-    * convention and its documented divergence from the reference's
-    * original-string byte offsets). Template specials carry the
-    * published (0, 0) span; truncation and Fixed padding apply to
-    * this surface exactly as to [[encodeColumn]] (pad entries are
-    * `(pad_id, 0, 0)`). Zero shuffles.
-    */
-  def encodeOffsetsColumn(text: Column, tok: WordPieceTokenizer)
-      : Column = {
-    def fixed(ids: Seq[Long]): Column = array(ids.map(id =>
-      struct(lit(id).as("id"), lit(0).as("start"),
-        lit(0).as("end"))): _*)
-    val core0 =
-      graft.expressions.GraftFunctions.wordPieceEncodeOffsets(text,
-        tok)
-    val core = tok.truncation match {
-      case Some(t) => TokenizerTruncation.truncateSingle(core0, t,
-        tok.prefixIds.size + tok.suffixIds.size)
-      case None => core0
-    }
-    val full =
-      if (tok.prefixIds.isEmpty && tok.suffixIds.isEmpty) core
-      else concat(fixed(tok.prefixIds), core, fixed(tok.suffixIds))
-    tok.padding match {
-      case Some(p) =>
-        val padRow = struct(lit(p.padId).as("id"),
-          lit(0).as("start"), lit(0).as("end"))
-        val fill = array_repeat(padRow, lit(p.length) - size(full))
-        when(size(full) >= p.length, full).otherwise(
-          if (p.direction == "left") concat(fill, full)
-          else concat(full, fill))
-      case None => full
-    }
-  }
-
-  /** Distributed encode with offsets: `(idCol, tokens)` where
-    * `tokens` is the `(id, start, end)` struct array — the span
-    * surface PII token-masking and contamination span reporting
-    * consume. The kernel lands in an intermediate projection so
-    * consumers referencing it repeatedly never re-run the O(len²)
-    * matcher.
-    */
-  def encodeWithOffsets(df: DataFrame, idCol: String,
-      textCol: String, tok: WordPieceTokenizer): DataFrame =
-    df.select(col(idCol),
-      encodeOffsetsColumn(col(textCol), tok).as("tokens"))
-
   /** Distributed decode: `(idCol, text)` — [[encodeIds]]'s inverse
-    * shape (template ids dropped).
+    * shape (the skip set dropped).
     */
   def decodeIdsDf(df: DataFrame, idCol: String, idsCol: String,
       tok: WordPieceTokenizer): DataFrame =

@@ -1199,7 +1199,7 @@ object Extensions {
     * the positional mask are all DuckDB arithmetic. The three
     * template-carrying surfaces (WordPiece single/pair, Unigram
     * single/pair) now share ONE assembly home
-    * ([[graft.operators.WordPiece.pairAssembled]]) — this entry
+    * ([[graft.operators.TokenizerSurface]]) — this entry
     * certifies that home under the second lineage end to end.
     */
   def x131UnigramPairTruncPad(s: SparkSession, dir: String)
@@ -1305,7 +1305,7 @@ object Extensions {
     * POSITION `2 + fa` pins the split), pad count / first-pad /
     * type-id sum / positional mask are arithmetic over (fa, fb).
     * All three template-carrying lineages now certify the ONE
-    * assembly home ([[graft.operators.WordPiece.pairAssembled]])
+    * assembly home ([[graft.operators.TokenizerSurface]])
     * end to end.
     */
   def x133BpePairTruncPad(s: SparkSession, dir: String): DataFrame = {
@@ -2886,9 +2886,10 @@ object Extensions {
     // cache the pipeline output across domainQuota's TWO passes
     // (threshold agg, then join-back filter) — without it the whole
     // upstream (WARC read → extract → dedup shuffle) executes twice,
-    // measured as the x78 round-12 regression (tools/QuotaCost). The
-    // frame is the crawl batch's survivors: bounded, and exactly what
-    // a production pipeline persists before curation anyway.
+    // the x78 round-12 regression (measured by timing the threshold
+    // job and the join-back pass apart). The frame is the crawl
+    // batch's survivors: bounded, and exactly what a production
+    // pipeline persists before curation anyway.
     val withDomain = graft.core.CacheScope.cached(
       deduped.withColumn("domain",
         when(col("doc_id") % 10 < 5, lit("megafarm.com"))
