@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.CacheScope
 import graft.expressions.GraftFunctions
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -544,13 +544,6 @@ object Dedup {
       GraftFunctions.minHashSignature(
         GraftFunctions.wordShingles(col(textCol), k), numHashes))
 
-  /** LSH candidate pairs: the signature is cut into `bands` bands of
-    * `numHashes/bands` rows; documents sharing any band hash become a
-    * candidate pair. One explode (bands× row growth) + one shuffle on the
-    * band hash. Band buckets are hash-distributed → no planner-visible
-    * skew; at 100 TB add `spark.sql.adaptive.skewJoin` for pathological
-    * clusters of true duplicates.
-    */
   /** (id, band, bucket[, passthrough...]) rows from a MinHash signature
     * frame — the banding step shared by the batch pair join and the
     * streaming dedup-on-ingest path. Map-only (one explode, bands× row
@@ -579,44 +572,50 @@ object Dedup {
   val DefaultBucketCap: Int = 4096
 
   /** Candidate pairs from banded bucket rows, with BOUNDED per-bucket
-    * output: the `cap` smallest ids per bucket (bounded-state
-    * [[graft.functions.Aggregators.TopKRows]], score = −id ⇒ ascending
-    * id; at most cap rows per (bucket, partition) cross the exchange)
-    * pair fully among themselves, and every OVERFLOW member beyond the
-    * cap pairs with the bucket's minimum id only — the bucket
+    * output: the first `cap` rows of a bucket in ascending (id, payload)
+    * order — its members — pair fully among themselves, and every
+    * OVERFLOW row beyond the cap whose id exceeds the cap-th member's
+    * pairs with the bucket's minimum id only — the bucket
     * representative. Per-bucket output is therefore C(cap,2) + (n−cap),
     * never C(n,2): a corpus with 10⁵ copies of one boilerplate doc emits
-    * ~10⁵ candidate rows per band instead of 10¹⁰.
+    * ~10⁵ candidate rows per band instead of 10¹⁰. Output is
+    * (id1, id2[, pl1, pl2]) with id1 < id2, distinct; `pl1`/`pl2` are
+    * the optional long `payload` (e.g. the simhash) of `id1`/`id2`, so
+    * payload-consuming callers never join back to fetch it.
     *
-    * Semantics of the cap: pairs among the capped members are exactly
-    * the uncapped pairs (buckets under the cap are untouched); an
-    * overflow member's candidacy is representative-only, so a
-    * pathological mega-bucket still CLUSTERS completely (every member
-    * connects to the representative — connected components merges the
-    * whole bucket), while pairwise output stays linear. All emitted
-    * pairs go through the caller's exact verification, so the cap can
-    * only trade pair-level recall inside oversize buckets, never
-    * precision. Audit oversize buckets with [[lshBucketOverflow]] —
-    * the loud form of the boundary.
+    * Semantics of the cap: pairs among the members are exactly the
+    * uncapped pairs (buckets under the cap are untouched); an overflow
+    * row's candidacy is representative-only, so a pathological
+    * mega-bucket still CLUSTERS completely (every member connects to
+    * the representative — connected components merges the whole
+    * bucket), while pairwise output stays linear. Duplicate input ids
+    * never pair with themselves; an overflow copy of the cap-th
+    * member's id links nowhere new (its id is already a member). All
+    * emitted pairs go through the caller's exact verification, so the
+    * cap can only trade pair-level recall inside oversize buckets,
+    * never precision. Audit oversize buckets with [[lshBucketOverflow]]
+    * — the loud form of the boundary.
     *
-    * Requires long-castable ids (the bounded buffer carries longs —
-    * the engine's document-id contract, as in the streaming path).
+    * Mechanism: the narrow (keys, id, payload) rows cross ONE hash
+    * exchange on the bucket keys and are sorted within each partition
+    * by (keys, id, payload); one streaming pass
+    * ([[CappedPairIterator]]) then holds at most `cap` members of the
+    * current bucket and emits each pair lazily, so a full bucket never
+    * materializes its C(cap,2) pairs at once. No aggregation buffer, no
+    * join back to the banded rows, no broadcast of them, no cache (the
+    * banded rows have one consumer).
     *
-    * Caching: the narrow banded frame is cached (it feeds the bounded
-    * agg AND the overflow probe) under the standard operator-cache
-    * contract — released by an enclosing [[graft.core.CacheScope]]
-    * bracket, `clearCache()`, or session end; long-lived services
-    * should bracket their calls.
+    * Requires long-castable ids (the engine's document-id contract, as
+    * in the streaming path); a null id pairs with nothing.
     */
   private[graft] def cappedBucketPairs(banded: DataFrame,
       keys: Seq[String], cap: Int,
       payload: Option[String] = None): DataFrame = {
     require(cap >= 2, s"bucketCap must be >= 2, got $cap")
-    // loud precondition, not a mid-job encoder crash: the bounded
-    // buffer carries ids as longs (the engine's document-id contract —
-    // rerankTopK and the streaming paths share it). A string id would
-    // cast to null and either kill the udaf encoder or silently drop
-    // every overflow link.
+    // loud precondition, not a mid-job cast surprise: members are
+    // ordered and compared as longs (the engine's document-id contract
+    // — rerankTopK and the streaming paths share it). A string id would
+    // cast to null and silently drop out of every pair.
     val idOk = banded.schema("id").dataType match {
       case org.apache.spark.sql.types.ByteType |
            org.apache.spark.sql.types.ShortType |
@@ -628,57 +627,77 @@ object Dedup {
       s"capped LSH candidate generation needs an integral (long-" +
         s"castable) id column, got ${banded.schema("id").dataType}; " +
         "map string ids to longs (e.g. xxhash64) upstream")
-    val keep = udaf(new graft.functions.Aggregators.TopKRows(cap))
     val keyCols = keys.map(col)
-    val payloadCol = payload.map(col).getOrElse(lit(0L)).cast("long")
-    // the banded rows feed two consumers (the bounded agg and the
-    // overflow probe) — cache the narrow (keys, id[, payload]) frame so
-    // the upstream kernels (shingling, signatures, simhash) run once
-    // per action, not twice
-    val bandedC = CacheScope.cached(banded)
-    // ONE shuffle of the banded rows (the same count the uncapped
-    // self-join paid): per-bucket bounded member list + exact size.
-    // The TopKRows buffer's spare key2 slot carries an optional long
-    // `payload` per member (e.g. the simhash), so payload-consuming
-    // callers never join back to fetch it.
-    val members = bandedC.groupBy(keyCols: _*)
-      .agg(keep(-col("id").cast("double"), col("id").cast("long"),
-        payloadCol).as("__top"), count(lit(1)).as("__n"))
-      .select(keyCols :+ col("__top.key1").as("__ids") :+
-        col("__top.key2").as("__pls") :+ col("__n"): _*)
-    // pairs among members come straight off the aggregation output —
-    // no join back. Two-level generator (posexplode, then a sliced
-    // explode) so a full bucket streams C(cap,2) pairs row-by-row
-    // instead of materializing them as one giant array; each pair is
-    // produced exactly once, by its smaller end (arrays are ascending).
-    val zipped = members.select(
-      arrays_zip(col("__ids"), col("__pls")).as("__z"))
-    val memberPairs = zipped
-      .select(col("__z"), posexplode(col("__z")))
-      .select(col("col.__ids").as("id1"), col("col.__pls").as("pl1"),
-        explode(slice(col("__z"), col("pos") + lit(2), lit(cap))).as("o"))
-      .select(col("id1"), col("o.__ids").as("id2"),
-        col("pl1"), col("o.__pls").as("pl2"))
-      // duplicate input ids occupy adjacent member slots and would pair
-      // with themselves; the uncapped self-join's strict < excluded
-      // those by construction — preserve the id1 < id2 contract
-      .filter(col("id1") < col("id2"))
-    // overflow members (id beyond the bucket's cap smallest — i.e.
-    // greater than the last kept member) link to the bucket's min id.
-    // The oversize-bucket table is tiny by construction (≤ |banded|/cap
-    // buckets can overflow), so AQE turns this into a broadcast join:
-    // the banded side is NOT shuffled a second time.
-    val oversize = members.filter(col("__n") > cap)
-      .select(keyCols :+ element_at(col("__ids"), 1).as("__rep") :+
-        element_at(col("__pls"), 1).as("__reppl") :+
-        element_at(col("__ids"), cap).as("__maxm"): _*)
-    val overflowPairs = bandedC
-      .join(oversize, keys)
-      .filter(col("id").cast("long") > col("__maxm"))
-      .select(col("__rep").as("id1"), col("id").cast("long").as("id2"),
-        col("__reppl").as("pl1"), payloadCol.as("pl2"))
-    val all = memberPairs.unionByName(overflowPairs).distinct()
-    if (payload.isDefined) all else all.select(col("id1"), col("id2"))
+    val sorted = banded.filter(col("id").isNotNull)
+      .select(keyCols :+ col("id").cast("long").as("__id") :+
+        payload.map(col).getOrElse(lit(0L)).cast("long").as("__pl"): _*)
+      .repartition(keyCols: _*)
+      .sortWithinPartitions(keyCols :+ col("__id") :+ col("__pl"): _*)
+    val nKeys = keys.length
+    val pairs = sorted.mapPartitions(
+      rows => new CappedPairIterator(rows, nKeys, cap))(
+      org.apache.spark.sql.Encoders.row(CappedPairSchema))
+    if (payload.isDefined) pairs.distinct()
+    else pairs.select(col("id1"), col("id2")).distinct()
+  }
+
+  private val CappedPairSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("id1", LongType, nullable = false),
+      StructField("id2", LongType, nullable = false),
+      StructField("pl1", LongType), StructField("pl2", LongType)))
+  }
+
+  /** The streaming pass of [[cappedBucketPairs]] over one partition of
+    * (keys…, id, payload) rows sorted by (keys, id, payload). It keeps
+    * the first `cap` rows of the current bucket; a row arriving while
+    * the bucket is under the cap pairs with every kept member of
+    * smaller id, a later row pairs with the first member when its id
+    * exceeds the cap-th member's. One (id1, id2, pl1, pl2) row per
+    * `next()`.
+    */
+  private final class CappedPairIterator(rows: Iterator[Row],
+      nKeys: Int, cap: Int) extends Iterator[Row] {
+    private val ids = new Array[Long](cap)
+    private val pls = new Array[Any](cap)
+    private val bucket = new Array[Any](nKeys)
+    private var kept = -1 // members of the current bucket; -1 = none yet
+    private var id = 0L
+    private var pl: Any = null
+    // pending pairs: kept members [nextIx, end) with the current row
+    private var nextIx = 0
+    private var end = 0
+
+    override def hasNext: Boolean = {
+      while (nextIx >= end && rows.hasNext) advance(rows.next())
+      nextIx < end
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      val j = nextIx
+      nextIx += 1
+      Row(ids(j), id, pls(j), pl)
+    }
+
+    private def advance(r: Row): Unit = {
+      if (kept < 0 || (0 until nKeys).exists(k => r.get(k) != bucket(k))) {
+        (0 until nKeys).foreach(k => bucket(k) = r.get(k))
+        kept = 0
+      }
+      id = r.getLong(nKeys)
+      pl = r.get(nKeys + 1)
+      nextIx = 0
+      if (kept < cap) {
+        // members are ascending and <= id: the pairs are the prefix of
+        // members with a strictly smaller id (no self-pairs)
+        end = kept
+        while (end > 0 && ids(end - 1) == id) end -= 1
+        ids(kept) = id
+        pls(kept) = pl
+        kept += 1
+      } else end = if (id > ids(cap - 1)) 1 else 0
+    }
   }
 
   /** Bucket-size audit for the capped LSH candidate paths: one row
@@ -693,6 +712,13 @@ object Dedup {
       .agg(count(lit(1)).as("size"))
       .filter(col("size") > cap)
 
+  /** LSH candidate pairs: the signature is cut into `bands` bands of
+    * `numHashes/bands` rows; documents sharing any band hash become a
+    * candidate pair, with per-bucket membership capped at `bucketCap`
+    * by [[cappedBucketPairs]]. One explode (bands× row growth) + one
+    * shuffle of the banded rows on the band hash. Band buckets are
+    * hash-distributed → no planner-visible skew.
+    */
   def lshCandidatePairs(sigDf: DataFrame, idCol: String, numHashes: Int,
       bands: Int, bucketCap: Int = DefaultBucketCap): DataFrame =
     cappedBucketPairs(bandedBuckets(sigDf, idCol, numHashes, bands),
@@ -734,7 +760,7 @@ object Dedup {
     * 1−(1−J^r)^bands; identical docs collide in every band), asserted in
     * the spec suite against the exact incremental form — not a SQL
     * oracle. Ids must be unique across the two frames and long-castable
-    * (the bounded buffer's contract).
+    * (the capped generators' contract).
     */
   def minHashPairsAgainst(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, k: Int, numHashes: Int, bands: Int,
@@ -771,8 +797,8 @@ object Dedup {
     *    delta docs (typically the larger/new ids) to
     *    representative-only overflow;
     *  - delta×corpus pairs cross each delta member with the bucket's
-    *    `bucketCap` smallest corpus ids (the same bounded-state
-    *    TopKRows buffer) — per-bucket output ≤ nDelta·cap, never
+    *    `bucketCap` smallest corpus ids (a bounded-state TopKRows
+    *    buffer) — per-bucket output ≤ nDelta·cap, never
     *    nDelta·nCorpus; corpus members past the cap link to the
     *    bucket's minimum DELTA id, so the overflow edge stays
     *    delta-touching and a mega-bucket still CLUSTERS completely
@@ -943,7 +969,7 @@ object Dedup {
     * prints, …) shares one scale-shaped pair generator instead of each
     * re-deriving its own.
     *
-    * Scale shape: the signature rides through the bounded bucket agg as
+    * Scale shape: the signature rides through the capped pair pass as
     * the pair payload, so verification needs no join back to the
     * signatures — the whole operator is the (already computed)
     * signature column + one bucket-keyed shuffle with per-bucket

@@ -589,16 +589,18 @@ object SimilaritySearch {
 
   /** Sub-quadratic near-dup pairs: random-hyperplane signatures are cut
     * into `bands` bands of `bitsPerBand` sign bits; vectors sharing any
-    * exact band become candidates (equi-join per band), then candidates
-    * are scored with the exact cosine. For cos ≥ 0.95 and 8-bit bands,
+    * exact band become candidates, then candidates are scored with the
+    * exact cosine. For cos ≥ 0.95 and 8-bit bands,
     * per-band collision ≈ (1 − θ/π)⁸ ≈ 0.43, so 16 bands give ≈ 99.99 %
     * per-pair recall — measured against [[cosineNearDupPairs]] in the
-    * spec suite. This is the 100 TB path: linear explode + hash-
-    * partitioned equi-join, no n² pair enumeration, and per-bucket
-    * membership capped by [[Dedup.cappedBucketPairs]] (a bucket holding
-    * 10⁵ embeddings of one boilerplate doc pairs its overflow members
-    * with the bucket representative instead of emitting 10¹⁰ rows);
-    * every candidate still passes the exact cosine verification.
+    * spec suite. This is the 100 TB path: linear explode + one
+    * (band, bucket)-keyed shuffle into [[Dedup.cappedBucketPairs]]'
+    * streaming pair pass, no n² pair enumeration, and per-bucket
+    * membership capped (a bucket holding 10⁵ embeddings of one
+    * boilerplate doc pairs its overflow members with the bucket
+    * representative instead of emitting 10¹⁰ rows); every candidate
+    * still passes the exact cosine verification. Requires long-castable
+    * ids (the capped generator's contract).
     */
   def cosineNearDupPairsLSH(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bands: Int = 16, bitsPerBand: Int = 8,
@@ -806,11 +808,12 @@ object SimilaritySearch {
     * learning at web-scale through semantic deduplication",
     * arXiv:2303.09540 — cluster the embeddings, compare ONLY within a
     * cluster) splits the corpus into `nCells` cells; candidate pairs are
-    * generated per cell through the same bounded generator the LSH paths
-    * use ([[Dedup.cappedBucketPairs]] — a cell holding 10⁵ copies of one
-    * boilerplate doc pairs its overflow members with the cell
-    * representative instead of emitting 10¹⁰ rows), and every candidate
-    * passes the exact compiled cosine.
+    * generated per cell through the same capped generator the LSH paths
+    * use ([[Dedup.cappedBucketPairs]]: one cell-keyed shuffle, then a
+    * streaming pass that keeps at most `cellCap` members per cell — a
+    * cell holding 10⁵ copies of one boilerplate doc pairs its overflow
+    * members with the cell representative instead of emitting 10¹⁰
+    * rows), and every candidate passes the exact compiled cosine.
     *
     * vs [[cosineNearDupPairsLSH]]: the banded-LSH path is tuned for
     * NEAR-IDENTICAL vectors (per-pair collision falls off steeply below
@@ -829,7 +832,8 @@ object SimilaritySearch {
     * drops from n² to Σ_c n_c² ≈ n²/nCells for balanced cells, with the
     * per-cell cap bounding the worst case. One cell-keyed shuffle of
     * (id, cell) rows; the two verify joins ride measured-bytes broadcast
-    * hints. Requires long-castable ids (the bounded buffer's contract).
+    * hints. Requires long-castable ids (the capped generator's
+    * contract).
     *
     * Caching: the (id, v, nsq) projection is cached (it feeds training,
     * assignment, and both verify joins) under the standard operator-

@@ -879,9 +879,9 @@ object Streaming {
     // honored at the next batch
     val liveTomb = liveIds(docs.sparkSession, s"${index.path}/tombstones")
       .select(col("id").as("dup_of"))
-    // the cap smallest ids per bucket through the same bounded-state
-    // buffer the batch twin uses ([[graft.operators.Dedup
-    // .cappedBucketPairs]]'s TopKRows, score = −id ⇒ ascending id):
+    // the cap smallest ids per bucket — the members the batch twin
+    // ([[graft.operators.Dedup.cappedBucketPairs]]) keeps — through the
+    // bounded-state TopKRows buffer (score = −id ⇒ ascending id):
     // at most `bucketCap` rows per (bucket, partition) cross the
     // exchange, where the previous row_number window SORTED the whole
     // stored banded table at stream construction — a corpus-sized sort

@@ -118,6 +118,26 @@ class DedupSpec extends SparkSpec {
     assert(over.forall(_.getLong(2) >= 400L))
   }
 
+  /** Driver-side model of [[Dedup.cappedBucketPairs]]' documented
+    * semantics over (id, band, bucket, payload) rows: per bucket, the
+    * first `cap` rows in ascending (id, payload) order are members and
+    * pair among themselves where ids differ; a later row pairs with the
+    * first member when its id exceeds the cap-th member's. Rows are
+    * (id1, id2, pl1, pl2).
+    */
+  private def cappedModel(rows: Seq[(Long, Int, Long, Long)],
+      cap: Int): Set[(Long, Long, Long, Long)] =
+    rows.groupBy(t => (t._2, t._3)).values.flatMap { g =>
+      val (ms, rest) = g.map(t => (t._1, t._4)).sorted.splitAt(cap)
+      val inner = for {
+        i <- ms.indices; j <- (i + 1) until ms.size
+        if ms(i)._1 < ms(j)._1
+      } yield (ms(i)._1, ms(j)._1, ms(i)._2, ms(j)._2)
+      val overflow = rest.filter(_._1 > ms.last._1)
+        .map(r => (ms.head._1, r._1, ms.head._2, r._2))
+      inner ++ overflow
+    }.toSet
+
   test("cappedBucketPairs randomized (seeded): a non-binding cap equals " +
       "brute-force bucket pairs; a binding cap is bounded, complete on " +
       "members, a subset of brute force, and keeps every id connected") {
@@ -158,6 +178,36 @@ class DedupSpec extends SparkSpec {
         assert(capped.exists(p => p._1 == t._1 || p._2 == t._1),
           s"id ${t._1} dropped entirely")
       }
+
+      // duplicate ids on both sides of the cap boundary: in each
+      // oversize bucket either the (cap−1)-th member gains a copy (the
+      // copy takes the cap-th slot and pushes the old cap-th member
+      // into overflow) or the cap-th member gains two (overflow copies
+      // of a member id, which link nowhere new); plus random duplicates
+      val dups = groups.filter(_.size > cap).flatMap { g =>
+        val ids = g.map(_._1).sorted
+        val copies =
+          if (rnd.nextBoolean()) Seq(ids(cap - 2))
+          else Seq(ids(cap - 1), ids(cap - 1))
+        copies.map(id => (id, g.head._2, g.head._3))
+      } ++ rows.filter(_ => rnd.nextInt(10) == 0)
+      val payloadOf = (id: Long) => id * 1000003L ^ 0x5bd1e995L
+      val withPl = (rows ++ dups)
+        .map(t => (t._1, t._2, t._3, payloadOf(t._1)))
+      val model = cappedModel(withPl, cap)
+      val bandedPl = withPl.toDF("id", "band", "bucket", "pl")
+      val gotPl = Dedup.cappedBucketPairs(bandedPl, Seq("band", "bucket"),
+          cap = cap, payload = Some("pl"))
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(gotPl == model, "payload path diverges from the cap model")
+      assert(gotPl.forall(p => p._1 < p._2 && p._3 == payloadOf(p._1) &&
+        p._4 == payloadOf(p._2)), "a payload rode with the wrong id")
+      val gotIds = Dedup.cappedBucketPairs(bandedPl.drop("pl"),
+          Seq("band", "bucket"), cap = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(gotIds == model.map(p => (p._1, p._2)),
+        "duplicate ids across the cap diverge from the cap model")
     }
   }
 

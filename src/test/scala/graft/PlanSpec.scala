@@ -2,7 +2,14 @@ package graft
 
 import graft.queries.{Extensions, Relational}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ExplainMode, GenerateExec,
+  MapPartitionsExec, ProjectExec, SerializeFromObjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Physical-plan shape regressions: the properties that make the corpus
   * scale (scan pushdown, broadcast dimension joins, compiled kernels in
@@ -14,6 +21,61 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Every physical node under `p`, looking through the AQE wrapper and
+    * into cached relations.
+    */
+  private def physicalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => physicalNodes(a.executedPlan)
+    case m: InMemoryTableScanExec =>
+      m +: physicalNodes(m.relation.cachedPlan)
+    case _ => p +: p.children.flatMap(physicalNodes)
+  }
+
+  /** The banding step of the LSH paths: the posexplode that turns one
+    * row per document into one row per (band, bucket).
+    */
+  private val bandExplode: SparkPlan => Boolean = {
+    case g: GenerateExec => g.generator.prettyName == "posexplode"
+    case _ => false
+  }
+
+  /** The capped candidate shape: the banded rows (the output of the
+    * node `banding` matches) cross exactly ONE shuffle exchange, hash-
+    * partitioned on `bucketKeys`, before the streaming pair pass (the
+    * one node emitting (id1, id2[, pl1, pl2])); no BroadcastExchange
+    * carries them, and no join anywhere is keyed on a bucket column.
+    */
+  private def assertOneBandedExchange(df: DataFrame,
+      bucketKeys: Set[String])(banding: SparkPlan => Boolean): Unit = {
+    val all = physicalNodes(df.queryExecution.executedPlan)
+    val tree = all.head.treeString
+    val passes = all.collect {
+      case s: SerializeFromObjectExec
+          if s.output.map(_.name).take(2) == Seq("id1", "id2") => s
+    }
+    assert(passes.size == 1, s"expected one capped pair pass:\n$tree")
+    val crossed = physicalNodes(passes.head).collect {
+      case e: ShuffleExchangeExec if physicalNodes(e.child).exists(banding) =>
+        e
+    }
+    assert(crossed.size == 1,
+      s"banded rows cross ${crossed.size} shuffles:\n$tree")
+    crossed.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.flatMap(_.references.map(_.name)).toSet ==
+          bucketKeys, tree)
+      case other => fail(s"banded exchange partitioned by $other:\n$tree")
+    }
+    assert(!all.exists {
+      case b: BroadcastExchangeExec => physicalNodes(b).exists(banding)
+      case _ => false
+    }, s"the banded rows are broadcast:\n$tree")
+    val joinKeys = all.collect { case j: BaseJoinExec =>
+      (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+    }.flatten
+    assert(!joinKeys.exists(bucketKeys), s"a join on the bucket keys:\n$tree")
+  }
 
   test("mega-stratum rank windows are gone: temperatureSampleApprox " +
       "gates by hash rate (no md5-ordered window anywhere), " +
@@ -175,6 +237,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("graft_hyperplane_bands"), p)
+    assertOneBandedExchange(Extensions.x14NearDupLsh(spark, sfDir),
+      Set("band", "bucket"))(bandExplode)
   }
 
   test("x22/x23: shard window is lang-partitioned; centroid agg is partial") {
@@ -348,8 +412,9 @@ class PlanSpec extends SparkSpec {
     assert(a.nonEmpty)
   }
 
-  test("x4: capped LSH shuffles the banded rows once — candidates come " +
-      "off the bounded aggregation, not a second banded exchange") {
+  test("x4: capped LSH shuffles the banded rows once — one bucket-keyed " +
+      "exchange feeds the streaming pair pass, with no broadcast of the " +
+      "banded rows and no join on the bucket keys") {
     import org.apache.spark.sql.functions._
     val docs = graft.core.Graft.table(spark, sfDir, "documents")
     val sig = graft.operators.Dedup.withMinHashSignature(
@@ -357,28 +422,32 @@ class PlanSpec extends SparkSpec {
     val cand = graft.operators.Dedup
       .lshCandidatePairs(sig, "doc_id", 64, 16)
     val p = plan(cand)
-    // the banded lineage (wordShingles → minhash → posexplode) must
-    // appear under exactly TWO scans: the aggregation input and the
-    // overflow probe — and the overflow probe side must not feed a
-    // full exchange of its own beyond the oversize (aggregated) side
     assert(p.contains("graft_minhash"), p)
-    val objAggs = p.split("ObjectHashAggregate").length - 1
-    assert(objAggs >= 2, s"expected partial+final bounded agg:\n$p")
+    // the banded lineage (wordShingles → minhash → posexplode) crosses
+    // one exchange on (band, bucket) into the pair pass — no second
+    // exchange, broadcast or bucket-keyed join of the banded rows
+    assertOneBandedExchange(cand, Set("band", "bucket"))(bandExplode)
   }
 
   test("x55: semantic dedup pairs never enumerate the corpus — compiled " +
-      "cell assign, bounded per-cell candidates, no cartesian") {
+      "cell assign, bounded per-cell candidates off one cell-keyed " +
+      "exchange, no cartesian") {
     import org.apache.spark.sql.functions._
     val emb = graft.core.Graft.table(spark, sfDir, "embeddings")
-    val p = plan(graft.operators.SimilaritySearch.semDedupPairs(
-      emb, "vec_id", "embedding", threshold = 0.8, nCells = 4))
+    val pairs = graft.operators.SimilaritySearch.semDedupPairs(
+      emb, "vec_id", "embedding", threshold = 0.8, nCells = 4)
+    val p = plan(pairs)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("graft_nearest_cells"), p) // map-side compiled assign
-    // per-cell candidates come off the bounded partial+final agg, the
-    // same shape as the capped LSH paths
-    val objAggs = p.split("ObjectHashAggregate").length - 1
-    assert(objAggs >= 2, s"expected partial+final bounded agg:\n$p")
+    // per-cell candidates come off the same one-exchange capped pair
+    // pass as the LSH paths: the assigned (id, cell) rows cross one
+    // cell-keyed shuffle
+    assertOneBandedExchange(pairs, Set("cell")) {
+      case pr: ProjectExec =>
+        pr.projectList.exists(_.toString.contains("graft_nearest_cells"))
+      case _ => false
+    }
   }
 
   test("x57: dup-ngram coverage is explode + linear shingle-keyed aggs — " +
@@ -431,23 +500,24 @@ class PlanSpec extends SparkSpec {
     assert(p.split("Exchange").length - 1 <= 6, p)
   }
 
-  test("x66: perceptual-hash pairs ride the same capped bounded-agg " +
+  test("x66: perceptual-hash pairs ride the same capped one-exchange " +
       "shape as text SimHash — no cartesian, no pixel-pair work") {
-    val p = plan(Extensions.x66ImageHashPairs(spark, sfDir))
+    val df = Extensions.x66ImageHashPairs(spark, sfDir)
+    val p = plan(df)
     assert(!p.contains("CartesianProduct"), p)
-    // candidates come off the bounded per-bucket aggregation
-    // (partial+final), exactly like x4/x5 — never a self-join of the
-    // fingerprinted rows
-    val objAggs = p.split("ObjectHashAggregate").length - 1
-    assert(objAggs >= 2, s"expected partial+final bounded agg:\n$p")
-    // one dHash pass: the fingerprint MapPartitions is cached and the
-    // three consumers (bucket agg, overflow reps, overflow members)
-    // read the InMemoryRelation instead of re-decoding payloads
-    assert(p.contains("InMemoryTableScan"), p)
-    // five exchange nodes total (each printed twice by the formatted
-    // dump): bucket agg, overflow-probe agg, broadcast of overflow
-    // reps, pair distinct, result sort — nothing else shuffles
-    assert(p.split("Exchange").length - 1 <= 10, p)
+    // candidates come off the one (blk, blkval)-keyed exchange into the
+    // streaming pair pass, exactly like x4/x5 — never a self-join of
+    // the fingerprinted rows
+    assertOneBandedExchange(df, Set("blk", "blkval"))(bandExplode)
+    // one dHash pass: the payloads decode in exactly one MapPartitions
+    // besides the pair pass — its blocked rows have a single consumer
+    val mapPartitions = physicalNodes(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[MapPartitionsExec])
+    assert(mapPartitions == 2, p)
+    // three exchange nodes total (each printed twice by the formatted
+    // dump): bucket repartition, pair distinct, result sort — nothing
+    // else shuffles
+    assert(p.split("Exchange").length - 1 <= 6, p)
   }
 
   test("x18: winnow screen feeds exact gram verification — no " +

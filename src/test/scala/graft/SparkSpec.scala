@@ -11,6 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Release every cache the suite left in the JVM-wide session (suites
+    * run one after another in it), so a later suite's plans read their
+    * sources, not this suite's InMemoryRelations.
+    */
+  override def afterAll(): Unit =
+    try spark.catalog.clearCache() finally super.afterAll()
 }
 
 object SparkSpec {
