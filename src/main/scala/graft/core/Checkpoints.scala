@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 
 /** Deterministic release of `localCheckpoint()` block storage.
   *
-  * The iterative train loops (Bpe / WordPiece distributed merge loops)
-  * re-checkpoint their working frame every merge and drop the old
-  * reference; the superseded blocks are reclaimed only when the driver
-  * GC collects the old Dataset and the ContextCleaner notices — so a
-  * 30k-merge run can transiently hold many histogram generations in
-  * the block manager. This helper unpersists the checkpointed RDD
+  * The iterative loops (Bpe / WordPiece distributed merge loops, the
+  * ConnectedComponents fixpoints) re-checkpoint their working frame
+  * every round and drop the old reference; the superseded blocks are
+  * reclaimed only when the driver GC collects the old Dataset and the
+  * ContextCleaner notices — so a 30k-merge run can transiently hold
+  * many histogram generations in the block manager. This helper unpersists the checkpointed RDD
   * BEHIND a superseded frame explicitly (non-blocking), bounding the
   * footprint to the current generation plus the one being built.
   *

@@ -5,9 +5,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** A managed Parquet-backed document collection — the engine-native
   * replacement for the reference's ArangoDB collection
-  * (create-if-absent / overwrite=drop+recreate / append semantics,
-  * reference ParquetArangoLoader.java:129-135; count as the test oracle,
-  * ParquetArangoLoaderTest.java:114).
+  * (create-if-absent and append semantics, reference
+  * ParquetArangoLoader.java:129-135; count as the test oracle,
+  * ParquetArangoLoaderTest.java:114). Overwrite departs from the
+  * reference's drop+recreate on purpose: the new rows are staged
+  * beside the collection and swapped in through [[Publish]], so a
+  * failed or crashed overwrite leaves the previous rows.
   *
   * A collection is a directory of Parquet files under a database base
   * path. All filesystem access goes through the Hadoop FileSystem API,
@@ -25,22 +28,21 @@ final class Collection private[core] (
 
   def exists(): Boolean = fs.exists(new Path(path))
 
-  /** Create the (empty) collection directory if absent. Runs compact
-    * crash recovery first: creating a fresh directory on top of a
-    * stranded swap would make the retired data look like cleanup-able
-    * garbage.
+  /** Create the (empty) collection directory if absent. Runs crash
+    * recovery first: creating a fresh directory on top of a stranded
+    * swap would make the retired data look like cleanup-able garbage.
     */
-  def create(): Unit = { recoverCompact(); fs.mkdirs(new Path(path)); () }
+  def create(): Unit = { recover(); fs.mkdirs(new Path(path)); () }
 
   /** Drop the collection and all its data (including any stranded
-    * compact siblings — recovery first makes the delete total).
+    * swap siblings — recovery first makes the delete total).
     */
   def drop(): Unit = {
-    recoverCompact(); fs.delete(new Path(path), true); ()
+    recover(); fs.delete(new Path(path), true); ()
   }
 
   private def hasData: Boolean = {
-    recoverCompact()
+    recover()
     exists() &&
     fs.listStatus(new Path(path)).exists { f =>
       val n = f.getPath.getName
@@ -50,10 +52,10 @@ final class Collection private[core] (
     }
   }
 
-  /** Run before every data access: a stranded [[compact]] swap must
-    * never read as an empty collection.
+  /** Run before every data access: a stranded overwrite or [[compact]]
+    * swap must never read as an empty collection.
     */
-  private def recoverCompact(): Unit =
+  private def recover(): Unit =
     Publish.recover(spark.sparkContext.hadoopConfiguration, new Path(path))
 
   /** Partition key columns of the collection's Hive-style layout, in
@@ -86,20 +88,6 @@ final class Collection private[core] (
     if (hasData) spark.read.parquet(path)
     else spark.emptyDataFrame
 
-  /** Append or overwrite rows. `partitionBy` lays the collection out as
-    * a Hive-style partitioned directory tree — at scale the primary
-    * lever for partition pruning on reads (only matching subdirectories
-    * are scanned when a filter hits a partition column). `clusterBy`
-    * RANGE-CLUSTERS the data instead: rows are range-partitioned and
-    * sorted within partitions on the given columns before writing, so
-    * each parquet file (and each row group inside it) covers a narrow,
-    * near-disjoint min/max range — the layout that lets parquet
-    * predicate pushdown skip whole files/row groups on range filters
-    * (the second pruning lever at 100 TB, for high-cardinality columns
-    * where Hive partitioning would explode the directory count).
-    * Complementary: partitionBy for low-cardinality dimensions,
-    * clusterBy for ranges within them.
-    */
   /** The one definition of the range-cluster layout, shared by write()
     * and compact() so the two paths can never silently diverge.
     */
@@ -149,6 +137,28 @@ final class Collection private[core] (
         "mergeSchema to see the union)")
   }
 
+  /** Append or overwrite rows. `partitionBy` lays the collection out as
+    * a Hive-style partitioned directory tree — at scale the primary
+    * lever for partition pruning on reads (only matching subdirectories
+    * are scanned when a filter hits a partition column). `clusterBy`
+    * RANGE-CLUSTERS the data instead: rows are range-partitioned and
+    * sorted within partitions on the given columns before writing, so
+    * each parquet file (and each row group inside it) covers a narrow,
+    * near-disjoint min/max range — the layout that lets parquet
+    * predicate pushdown skip whole files/row groups on range filters
+    * (the second pruning lever at 100 TB, for high-cardinality columns
+    * where Hive partitioning would explode the directory count).
+    * Complementary: partitionBy for low-cardinality dimensions,
+    * clusterBy for ranges within them.
+    *
+    * Overwrite stages the rows beside the collection and swaps them in
+    * through [[Publish]]: a failed job leaves the previous rows, a crash
+    * leaves the old or the new rows for the next access's recovery,
+    * and `df` may read the collection it replaces. Append publishes
+    * file by file through Spark's output committer, so a crash
+    * mid-commit can leave a prefix of the append visible; there is no
+    * manifest, by decision.
+    */
   def write(df: DataFrame, mode: SaveMode,
       maxRecordsPerFile: Long = 0L,
       partitionBy: Seq[String] = Nil,
@@ -158,7 +168,7 @@ final class Collection private[core] (
       allowSchemaDrift: Boolean = false): Unit = {
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy and zOrderBy are alternative layouts — pass one")
-    recoverCompact() // never write beside a stranded swap
+    recover() // never write beside a stranded swap
     if (mode == SaveMode.Append && !allowSchemaDrift && hasData)
       checkAppendSchema(df)
     val src =
@@ -170,11 +180,22 @@ final class Collection private[core] (
         graft.operators.Layout.zClustered(df, zOrderBy, zOrderBits)
       else if (clusterBy.isEmpty) df
       else rangeClustered(df, clusterBy, None)
-    val w = src.write
-      .mode(mode)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
+    val w = src.write.option("maxRecordsPerFile", maxRecordsPerFile)
+    val laid = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
+    if (mode != SaveMode.Overwrite) laid.mode(mode).parquet(path)
+    else {
+      // the one overwrite (compact's too): fill a fresh staging sibling,
+      // then swap it in; a failed job or swap drops the staging copy
+      val staged = Publish.staging(new Path(path))
+      try {
+        laid.parquet(staged.toString)
+        Publish.swap(spark.sparkContext.hadoopConfiguration, staged,
+          new Path(path))
+      } catch {
+        // a copy this delete misses is dropped by the next recovery
+        case e: Throwable => scala.util.Try(fs.delete(staged, true)); throw e
+      }
+    }
   }
 
   /** Document count — the reference test suite's only oracle. Reads
@@ -211,7 +232,7 @@ final class Collection private[core] (
   def compact(targetRecordsPerFile: Long = 1 << 20,
       clusterBy: Seq[String] = Nil): (Int, Int) = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be > 0")
-    recoverCompact()
+    recover()
     def dataFiles(p: Path): Int = {
       if (!fs.exists(p)) return 0
       var n = 0
@@ -228,7 +249,6 @@ final class Collection private[core] (
     val n = df.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    val staging = Publish.staging(new Path(path))
     import org.apache.spark.sql.functions.col
     val laid =
       if (parts.nonEmpty) {
@@ -239,11 +259,7 @@ final class Collection private[core] (
       }
       else if (clusterBy.isEmpty) df.repartition(files)
       else rangeClustered(df, clusterBy, Some(files))
-    val w = laid.write
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(staging.toString)
-    Publish.swap(spark.sparkContext.hadoopConfiguration, staging,
-      new Path(path))
+    write(laid, SaveMode.Overwrite, partitionBy = parts)
     (before, dataFiles(new Path(path)))
   }
 

@@ -11,7 +11,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
   * retires the target to `<target>.old-<uuid>`, publishes, and drops
   * the retired copy. The target holds the old or the new copy, or is
   * absent beside the one `.old-` sibling [[recover]] restores (readers
-  * such as [[Collection]] recover before every access).
+  * such as [[Collection]] and the graft-docs listing recover before
+  * every access).
   *
   * Renames use `FileContext`: onto an existing directory
   * `FileSystem.rename` silently nests the source, `FileContext.rename`
@@ -23,10 +24,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
   * half-moved directory. Recovery assumes one writer per target:
   * another process's live siblings look exactly like crash residue.
   *
-  * Not built on this: the graft-docs commits move N task files into a
-  * live directory (an atomic truncate needs a manifest or generation
-  * layout, a format change); `TrainerShards.commitAttemptFile` is a
-  * task-level rename-first commit between identical attempt twins.
+  * Every overwrite of a collection is built on this ([[Collection]]'s
+  * `write` and `compact`, the graft-docs truncate commit); appends move
+  * files into the live directory one by one. Not built on this:
+  * `TrainerShards.commitAttemptFile`, a task-level rename-first commit
+  * between identical attempt twins.
   */
 object Publish {
 

@@ -20,14 +20,18 @@ import org.apache.spark.sql.types.DataType
   * | `addTypeConverter(LogicalType, Function)`   | [[addTypeConverter]] |
   * | batchSize (docs per insert, default 1000)   | validated only: a round-trip size (:142-156), not a file size — one file per write task |
   * | maxParallelBatches (async cap, default 10)  | executor task parallelism (no busy-wait loop to port) |
+  * | overwrite = drop + create (:129-135)        | stage-and-swap ([[graft.core.Collection.write]]): a failed load keeps the previous rows |
   *
   * Validation semantics match the reference: batchSize ≥ 1 →
   * IllegalArgumentException (ParquetArangoLoader.java:123-125);
   * the location must parse as a path → InvalidPathException (:283-288).
-  * Collection DDL matches :129-135 (create-if-absent; overwrite =
-  * drop+recreate, otherwise append). The reference's silent
-  * IOException→null swallow (ChunkedParquetReaderIterator.java:28-32)
-  * is deliberately NOT reproduced — read errors propagate.
+  * Collection DDL matches :129-135 in create-if-absent and append.
+  * Overwrite departs from the reference on purpose: nothing is dropped
+  * before the write succeeds, so an unreadable input or a failed job
+  * leaves the previous rows (row-count parity is unchanged). The
+  * reference's silent IOException→null swallow
+  * (ChunkedParquetReaderIterator.java:28-32) is deliberately NOT
+  * reproduced — read errors propagate.
   *
   * The scan itself is `spark.read.parquet`: vectorized, parallel,
   * pushdown-capable — strictly stronger than the reference's
@@ -70,7 +74,6 @@ final class ParquetLoader(spark: SparkSession) {
     validatePath(location)
 
     if (!collection.exists()) collection.create()
-    else if (overwriteCollection) { collection.drop(); collection.create() }
 
     val df = JsonDocEncoder.applyConverters(
       spark.read.parquet(location), converters)

@@ -590,7 +590,6 @@ final class IvfIndex private (
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     CacheScope.scoped {
       val staging = mgr.collection(AnnIndex.StagingVecsName)
-      staging.drop()
       staging.write(cells.select(col("neighbor_id"), col("cv"), col("cn")),
         SaveMode.Overwrite)
       val c = CacheScope.cached(staging.read())

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -81,7 +82,7 @@ object ConnectedComponents {
       val metrics = obs.getAsJava
       changed = metrics.get("changed").asInstanceOf[Long]
       resultRows = metrics.get("rows").asInstanceOf[Long]
-      if (prevRound != null) releaseTruncated(prevRound, reliable = false)
+      if (prevRound != null) Checkpoints.release(prevRound)
       labels = steppedT
       prevRound = steppedT
     }
@@ -90,8 +91,7 @@ object ConnectedComponents {
     // released by an enclosing CacheScope bracket at exit, else
     // reclaimed by the context cleaner once the result is dereferenced
     val fin = labels
-    graft.core.CacheScope.onRelease(
-      () => releaseTruncated(fin, reliable = false))
+    graft.core.CacheScope.onRelease(() => Checkpoints.release(fin))
     // a checkpointed frame carries NO stats (LogicalRDD defaults to
     // "huge"), so downstream joins — the representative/size joins every
     // consumer runs against the corpus — would plan sort-merge where the
@@ -262,27 +262,11 @@ object ConnectedComponents {
       finally p.unpersist(blocking = false)
     } else df.localCheckpoint()
 
-  /** Release a [[truncated]] frame's materialized blocks.
-    * Dataset.unpersist is a no-op on a checkpointed frame (its plan is
-    * a LogicalRDD, not a cache-manager entry) — release through the
-    * underlying RDD instead; idempotent. Reliable checkpoint FILES are
-    * governed by the cluster's checkpoint dir lifecycle
-    * (spark.cleaner.referenceTracking.cleanCheckpoints / context stop),
-    * not by this.
-    */
-  private def releaseTruncated(df: DataFrame, reliable: Boolean): Unit =
-    if (!reliable)
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-
   def clustersStarContraction(pairs: DataFrame, id1: String, id2: String,
       maxRounds: Int = 64, reliable: Boolean = false): DataFrame = {
     import graft.core.CacheScope
     def truncated(df: DataFrame): DataFrame =
       ConnectedComponents.truncated(df, reliable)
-    def releaseTruncated(df: DataFrame): Unit =
-      ConnectedComponents.releaseTruncated(df, reliable)
     // ONE materialization of the (possibly expensive) pair generator:
     // canonical distinct pairs, checkpointed, then split into real
     // edges and the self-pair-only node labels — ids appearing ONLY in
@@ -312,7 +296,7 @@ object ConnectedComponents {
               .distinct(),
             Seq("id"), "left_anti")
           .select(col("id"), col("id").as("label"))))
-    releaseTruncated(canon)
+    if (!reliable) Checkpoints.release(canon)
     var nEdges = edgesObs.getAsJava.get("n").asInstanceOf[Long]
     var converged = nEdges == 0L
     var round = 0
@@ -358,7 +342,7 @@ object ConnectedComponents {
       // runs only on candidate-convergence rounds (counts matched).
       converged = n2 == nEdges && smallC.except(edges).count() == 0L
       largeC.unpersist()
-      releaseTruncated(edges)
+      if (!reliable) Checkpoints.release(edges)
       edges = smallC
       nEdges = n2
       round += 1
@@ -374,9 +358,8 @@ object ConnectedComponents {
     // frame — released by an enclosing CacheScope bracket at exit, else
     // reclaimed by the context cleaner on dereference
     val finalEdges = edges
-    graft.core.CacheScope.onRelease(() => releaseTruncated(finalEdges))
-    selfLab.foreach(sl => graft.core.CacheScope.onRelease(
-      () => releaseTruncated(sl)))
+    if (!reliable) (finalEdges +: selfLab.toSeq)
+      .foreach(f => CacheScope.onRelease(() => Checkpoints.release(f)))
     selfLab.fold(out)(out.unionByName)
   }
 
@@ -425,8 +408,8 @@ object ConnectedComponents {
         .observe(seedObs, count(lit(1)).as("n")), reliable)
     locally {
       val seedFrame = frontier
-      graft.core.CacheScope.onRelease(
-        () => releaseTruncated(seedFrame, reliable))
+      if (!reliable)
+        graft.core.CacheScope.onRelease(() => Checkpoints.release(seedFrame))
     }
     // `visited` is a plain UNION of the per-hop materialized frontiers —
     // each hop's rows are stored exactly once (its own truncated frame)
@@ -460,8 +443,8 @@ object ConnectedComponents {
         .observe(hopObs, count(lit(1)).as("n"))
       val next = truncated(discovered, reliable)
       val hopFrame = next
-      graft.core.CacheScope.onRelease(
-        () => releaseTruncated(hopFrame, reliable))
+      if (!reliable)
+        graft.core.CacheScope.onRelease(() => Checkpoints.release(hopFrame))
       frontierN = hopObs.getAsJava.get("n").asInstanceOf[Long]
       visited = visited.unionByName(next)
       frontier = next

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Checkpoints}
 import graft.expressions.GraftFunctions
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, Observation, Row}
@@ -134,16 +134,6 @@ object Dedup {
       broadcast(_)
     else identity
   }
-
-  /** Release a localCheckpoint-backed frame's materialized blocks.
-    * Dataset.unpersist is a no-op on a checkpointed frame (its plan is
-    * a LogicalRDD, not a cache-manager entry) — release through the
-    * underlying RDD instead; idempotent.
-    */
-  private def releaseCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Verify candidate pairs with the exact set Jaccard: join the full
     * sets back, intersect per pair (merge-count via
@@ -341,7 +331,7 @@ object Dedup {
       .select(col("id1"), col("id2"))
       .observe(screenObs, count(lit(1)).as("n"))
       .localCheckpoint()
-    CacheScope.onRelease(() => releaseCheckpointBlocks(candT))
+    CacheScope.onRelease(() => Checkpoints.release(candT))
     val nCand = screenObs.getAsJava.get("n").asInstanceOf[Long]
     val candSmall = nCand * 64L <= VerifyBroadcastMaxBytes
     // exact gram sets ONLY for screened ids — the semi-join keeps the

@@ -331,7 +331,6 @@ final class DedupIndex private (
     // are rebuilt from the staged copy, so no collection is ever read
     // and overwritten in the same job
     val staging = mgr.collection(DedupIndex.StagingSetsName)
-    staging.drop()
     staging.write(sets, SaveMode.Overwrite)
     val survivors = CacheScope.cached(staging.read())
     DedupIndex.writeDerivedState(mgr, spark, survivors, k, threshold,

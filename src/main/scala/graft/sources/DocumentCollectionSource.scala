@@ -5,6 +5,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.Publish
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -23,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   df.write.format("graft-docs")
   *     .option("path", "/data/db/mycollection")
   *     .option("batchSize", "1000")
-  *     .mode("append")            // or "overwrite" (drop + recreate)
+  *     .mode("append")            // or "overwrite" (stage-and-swap)
   *     .save()
   * }}}
   *
@@ -37,10 +38,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    so concurrent attempts never collide) is fsync'd and its path
   *    returned as the commit message — only one attempt per partition
   *    wins Spark's output-commit coordination;
-  *  - job commit (driver): every committed temp file is renamed into
-  *    the collection directory — rename, not copy, so publication is
-  *    atomic per file; in truncate mode the previous document files
-  *    are removed first;
+  *  - job commit (driver), append: every committed temp file is
+  *    renamed into the collection directory — rename, not copy, so
+  *    publication is atomic per file, but a crash mid-commit can leave
+  *    a prefix of the append visible (there is no manifest, by
+  *    decision);
+  *  - job commit (driver), overwrite: the temp directory is a
+  *    `Publish.staging` sibling of the collection; files no commit
+  *    message names (a losing attempt's) are deleted, then
+  *    `Publish.swap` replaces the whole directory, so a crash leaves
+  *    the old or the new documents and readers recover first. Like
+  *    every swap it assumes one writer: a reader's recovery during the
+  *    job deletes the live staging directory, which fails the
+  *    overwrite and keeps the old documents;
   *  - abort: the temp directory is deleted, leaving the collection
   *    exactly as before — a failed job never publishes partial data.
   *    The driver creates the temp directory before any task starts and
@@ -227,46 +237,47 @@ private class DocumentBatchWrite(path: String, batchSize: Int,
     schema: StructType, truncate: Boolean) extends BatchWrite {
 
   private val writeId = UUID.randomUUID().toString
-  private def tmpDir = s"$path/_tmp-$writeId"
+  private val tmpDir = if (truncate) Publish.staging(new Path(path))
+    else new Path(path, s"_tmp-$writeId")
   private val conf = SessionConf.capture()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
-    Staging.create(tmpDir, conf)
-    new DocumentWriterFactory(tmpDir, batchSize, schema,
+    // never write beside a stranded swap
+    Publish.recover(conf.value, new Path(path))
+    Staging.create(tmpDir.toString, conf)
+    new DocumentWriterFactory(tmpDir.toString, batchSize, schema,
       // published names carry this write's id: two append jobs (even
       // from different applications, whose task ids both start at 0)
       // can never collide on a final file name
       fileSuffix = s"-${writeId.take(8)}.jsonl", conf)
   }
 
-  /** Publish every task's file into the collection directory, one
-    * rename each. Truncate is NOT crash-atomic: the previous document
-    * files are deleted first, so a crash mid-commit leaves the
-    * collection empty or partly written. Making it atomic needs a
-    * manifest or generation layout (a format change), so this commit
-    * does not use [[graft.core.Publish]]'s directory swap.
+  /** Overwrite: keep only the committed files in the staging
+    * directory and swap it in. Append: move each committed file into
+    * the collection directory, one rename each.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     val dest = new Path(path)
-    if (!fs.exists(dest)) fs.mkdirs(dest)
-    if (truncate)
-      fs.listStatus(dest)
-        .filter(_.getPath.getName.endsWith(".jsonl"))
-        .foreach(f => fs.delete(f.getPath, false))
-    messages.foreach { case DocumentCommitMessage(tempFile, _) =>
-      val src = new Path(tempFile)
-      if (!fs.rename(src, new Path(dest, src.getName)))
-        throw new IllegalStateException(s"could not publish $src")
+    val files = messages.map { case DocumentCommitMessage(f, _) => new Path(f) }
+    if (truncate) {
+      val names = files.map(_.getName).toSet
+      fs.listStatus(tmpDir).map(_.getPath).filterNot(p => names(p.getName))
+        .foreach(fs.delete(_, true))
+      Publish.swap(conf.value, tmpDir, dest)
+    } else {
+      if (!fs.exists(dest)) fs.mkdirs(dest)
+      files.foreach { src =>
+        if (!fs.rename(src, new Path(dest, src.getName)))
+          throw new IllegalStateException(s"could not publish $src")
+      }
+      fs.delete(tmpDir, true)
     }
-    fs.delete(new Path(tmpDir), true)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    fs.delete(new Path(tmpDir), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    tmpDir.getFileSystem(conf.value).delete(tmpDir, true)
 }
 
 private class DocumentWriterFactory(tmpDir: String, batchSize: Int,
@@ -328,10 +339,13 @@ private[sources] class DocumentStreamingWrite(path: String, batchSize: Int,
     * drives the connector without it (continuous processing, a direct
     * replay) gets writers that create the epoch dir themselves, and an
     * abort-outliving task's leftover dir is then swept by that epoch's
-    * next commit.
+    * next commit. Recovery runs first, as for a batch write: an epoch
+    * dir created on top of a stranded overwrite swap would make the
+    * retired documents look like residue.
     */
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : streaming.StreamingDataWriterFactory = {
+    Publish.recover(conf.value, new Path(path))
     val staged = Option(org.apache.spark.sql.SparkSession.active.sparkContext
         .getLocalProperty(org.apache.spark.sql.execution.streaming.runtime
           .MicroBatchExecution.BATCH_ID_KEY))
@@ -469,13 +483,16 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.read.{streaming => streamingread}
 
 /** The one definition of "which files are a collection's documents" —
-  * batch scan planning and streaming offsets must never disagree.
+  * batch scan planning and streaming offsets must never disagree. The
+  * listing recovers first: a stranded overwrite swap must never read
+  * as an empty collection.
   */
 private object DocumentFiles {
   def listFiles(path: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
-    val fs = new Path(path).getFileSystem(conf)
     val dir = new Path(path)
+    Publish.recover(conf, dir)
+    val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".jsonl"))

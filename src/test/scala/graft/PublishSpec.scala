@@ -150,6 +150,190 @@ class PublishSpec extends SparkSpec {
     assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
   }
 
+  // ---- overwrite: one stage-and-swap on every path ----------------
+
+  private def idRows(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, s"d$i")).toDF("id", "t")
+  }
+
+  private def ids(df: DataFrame): Seq[Long] = {
+    import spark.implicits._
+    df.select("id").as[Long].collect().sorted.toSeq
+  }
+
+  /** Throws on id 42: fails the job on one row. */
+  private val boom = udf { (i: Long) =>
+    if (i == 42L) throw new RuntimeException("boom on row 42"); i
+  }
+
+  private val docSchema = new org.apache.spark.sql.types.StructType()
+    .add("id", "long").add("t", "string")
+
+  private def saveDocs(df: DataFrame, path: String, mode: String): Unit =
+    df.write.format("graft-docs").option("path", path).mode(mode).save()
+
+  private def readDocs(path: String): Seq[Long] =
+    ids(spark.read.schema(docSchema).format("graft-docs").load(path))
+
+  /** Publish residue beside `local` and `_tmp-` directories inside it. */
+  private def overwriteResidue(local: String): Seq[String] =
+    residue(local) ++ Option(new File(local).list()).toSeq.flatten
+      .filter(_.startsWith("_tmp-"))
+
+  /** A parquet input directory of `ids`, three files. */
+  private def parquetInput(ids: Seq[Long]): String = {
+    val dir = localDir("graft_overwrite_in") + "/in"
+    idRows(ids).repartition(3).write.parquet(dir)
+    dir
+  }
+
+  private val oldIds = (1L to 100L)
+  private val newIds = (201L to 230L)
+
+  test("a failed overwrite leaves the previous rows: Collection.write") {
+    val base = localDir("graft_overwrite_fail_c")
+    val c = new CollectionManager(spark, base).collection("docs")
+    c.write(idRows(oldIds), SaveMode.Overwrite)
+    val e = intercept[Exception] {
+      c.write(spark.range(0, 100, 1, 4)
+        .select(boom(col("id")).as("id"), lit("x").as("t")),
+        SaveMode.Overwrite)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    // the failed write dropped its own staging copy (no reader has
+    // recovered yet)
+    assert(overwriteResidue(s"$base/docs").isEmpty,
+      overwriteResidue(s"$base/docs"))
+    assert(c.count() == 100L)
+    assert(ids(c.read()) == oldIds)
+  }
+
+  test("a failed overwrite leaves the previous rows: ParquetLoader.load " +
+      "(a throwing converter, a corrupt input file)") {
+    val base = localDir("graft_overwrite_fail_l")
+    val c = new CollectionManager(spark, base).collection("docs")
+    c.write(idRows(oldIds), SaveMode.Overwrite)
+    val input = parquetInput(newIds :+ 42L)
+    val throwing = new graft.io.ParquetLoader(spark)
+      .addTypeConverter(org.apache.spark.sql.types.LongType, boom(_))
+    intercept[Exception](throwing.load(input, c, overwriteCollection = true))
+    assert(overwriteResidue(s"$base/docs").isEmpty,
+      overwriteResidue(s"$base/docs"))
+    assert(c.count() == 100L)
+    assert(ids(c.read()) == oldIds)
+    Files.write(Paths.get(input, "part-99999-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception] {
+      new graft.io.ParquetLoader(spark).load(input, c,
+        overwriteCollection = true)
+    }
+    assert(overwriteResidue(s"$base/docs").isEmpty,
+      overwriteResidue(s"$base/docs"))
+    assert(c.count() == 100L)
+    assert(ids(c.read()) == oldIds)
+  }
+
+  test("a failed overwrite leaves the previous rows: graft-docs") {
+    val dir = localDir("graft_overwrite_fail_d") + "/docs"
+    saveDocs(idRows(oldIds), dir, "append")
+    intercept[Exception] {
+      saveDocs(spark.range(0, 100, 1, 4)
+        .select(boom(col("id")).as("id"), lit("x").as("t")), dir,
+        "overwrite")
+    }
+    assert(overwriteResidue(dir).isEmpty, overwriteResidue(dir))
+    assert(readDocs(dir) == oldIds)
+  }
+
+  test("a self-overwrite keeps exactly the filtered rows") {
+    val base = localDir("graft_overwrite_self")
+    val c = new CollectionManager(spark, base).collection("docs")
+    c.write(idRows(oldIds), SaveMode.Overwrite, maxRecordsPerFile = 10)
+    c.write(c.read().filter(col("id") % 3 === 0), SaveMode.Overwrite)
+    assert(ids(c.read()) == oldIds.filter(_ % 3 == 0))
+    assert(overwriteResidue(s"$base/docs").isEmpty,
+      overwriteResidue(s"$base/docs"))
+  }
+
+  test("batch and streaming graft-docs writes onto a stranded overwrite " +
+      "swap recover it first: the old documents stay") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val parent = localDir("graft_overwrite_stranded")
+    val dir = s"$parent/docs"
+    def strand(): Unit = assert(new File(dir).renameTo(
+      new File(s"$dir.old-${java.util.UUID.randomUUID()}")))
+    saveDocs(idRows(oldIds), dir, "append")
+    strand()
+    saveDocs(idRows(Seq(500L)), dir, "append")
+    assert(readDocs(dir) == oldIds :+ 500L)
+    strand()
+    val input = MemoryStream[(Long, String)]
+    val q = input.toDS().toDF("id", "t").writeStream.format("graft-docs")
+      .option("path", dir).option("checkpointLocation", s"$parent/ckpt")
+      .start()
+    try { input.addData((600L, "s")); q.processAllAvailable() }
+    finally q.stop()
+    assert(readDocs(dir) == oldIds ++ Seq(500L, 600L))
+    assert(overwriteResidue(dir).isEmpty, overwriteResidue(dir))
+  }
+
+  /** The overwrite fault matrix: copy `template` (a parent directory
+    * holding `docs` with [[oldIds]]), crash `overwrite` at each op on
+    * `docs`, then `read` must see the old or the new ids and leave no
+    * residue.
+    */
+  private def overwriteMatrix(template: String)(overwrite: String => Unit)
+      (read: String => Seq[Long]): Unit = {
+    val crashes = faultMatrix { k =>
+      val base = localDir("graft_overwrite_matrix")
+      copyTree(template, base)
+      val crashed = crashAt(k, s"$base/docs")(overwrite(faulty(base)))
+      val seen = read(faulty(base))
+      assert(seen == oldIds || seen == newIds, s"k=$k: $seen")
+      assert(overwriteResidue(s"$base/docs").isEmpty,
+        s"k=$k: ${overwriteResidue(s"$base/docs")}")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  private def collectionAt(base: String) =
+    new CollectionManager(spark, base).collection("docs")
+
+  test("fault matrix: Collection.write overwrite") {
+    val template = localDir("graft_overwrite_c_t")
+    collectionAt(faulty(template)).write(idRows(oldIds),
+      SaveMode.Overwrite, maxRecordsPerFile = 25)
+    overwriteMatrix(template)(base =>
+      collectionAt(base).write(idRows(newIds), SaveMode.Overwrite))(base =>
+      ids(collectionAt(base).read()))
+  }
+
+  test("fault matrix: ParquetLoader.load overwrite") {
+    val template = localDir("graft_overwrite_l_t")
+    collectionAt(faulty(template)).write(idRows(oldIds),
+      SaveMode.Overwrite, maxRecordsPerFile = 25)
+    val input = parquetInput(newIds)
+    overwriteMatrix(template) { base =>
+      new graft.io.ParquetLoader(spark).load(input, collectionAt(base),
+        overwriteCollection = true)
+      ()
+    }(base => ids(collectionAt(base).read()))
+  }
+
+  test("fault matrix: graft-docs overwrite") {
+    val template = localDir("graft_overwrite_d_t")
+    saveDocs(idRows(oldIds).repartition(4), s"${faulty(template)}/docs",
+      "append")
+    overwriteMatrix(template)(base =>
+      saveDocs(idRows(newIds).repartition(3), s"$base/docs", "overwrite"))(
+      base => readDocs(s"$base/docs"))
+  }
+
   private def docsDf(rows: (Long, String, String)*): DataFrame = {
     import spark.implicits._
     rows.toSeq.toDF("doc_id", "lang", "text")
@@ -359,8 +543,7 @@ class PublishSpec extends SparkSpec {
           "identical attempt twins"),
       ("sources/DocumentCollectionSource.scala",
         "fs.rename(src, new Path(dest, src.getName))",
-        "graft-docs batch commit moves N task files into the live " +
-          "directory"),
+        "graft-docs append commit"),
       ("sources/DocumentCollectionSource.scala", "fs.rename(src, fin)",
         "graft-docs streaming commit moves N task files into the live " +
           "directory"))
