@@ -1,26 +1,30 @@
 package graft.operators
 
-import graft.core.Checkpoints
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.util.DynamicVariable
+
+import graft.core.{CacheScope, Checkpoints, Fixpoint, Graft}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components over an undirected pair list — the dedup
   * CLUSTERING step: near-dup PAIRS (x3/x4/x14 output) → duplicate
   * CLUSTERS, so a curation pipeline can keep exactly one representative
   * per cluster instead of dropping only one side of each pair.
   *
-  * Algorithm: iterative min-label propagation. Every node starts
-  * labeled with its own id and repeatedly adopts the minimum label in
-  * its closed neighborhood until no label changes. Each round is two
-  * hash-partitioned shuffles (edge-label join + groupBy min) over the
-  * EDGE list only — nothing is collected to the driver, no per-row
-  * windows — and the loop runs O(component diameter) rounds. Near-dup
-  * components are small and dense (duplicates of one document all link
-  * to each other), so 2–4 rounds close the fixpoint in practice. At
-  * extreme diameters use [[clustersStarContraction]] — the
-  * large-star/small-star edge rewrite (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SoCC 2014) whose round count is
-  * logarithmic in component size instead of linear in diameter.
+  * Algorithm: a size-gated driver union-find, else iterative min-label
+  * propagation. Every node starts labeled with its own id and
+  * repeatedly adopts the minimum label in its closed neighborhood until
+  * no label changes. Each round is two hash-partitioned shuffles
+  * (edge-label join + groupBy min) over the EDGE list only, and the
+  * loop runs O(component diameter) rounds. Near-dup components are small
+  * and dense (duplicates of one document all link to each other), so
+  * 2–4 rounds close the fixpoint in practice. At extreme diameters use
+  * [[clustersStarContraction]] — the large-star/small-star edge rewrite
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC 2014) whose round count is logarithmic in component size
+  * instead of linear in diameter.
   *
   * The reference has no graph/clustering surface at all; this extends
   * the dedup family (SURVEY §2.2) with the operator that makes pair
@@ -32,77 +36,163 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Forces the [[clusters]] gate (the most pairs the driver branch
+    * collects) — `Some(0)` selects the distributed branch.
+    */
+  private[graft] val driverGate = new DynamicVariable[Option[Long]](None)
+
+  /** Min-label rounds before [[clusters]] gives up: a component of
+    * diameter near this many hops wants [[clustersStarContraction]].
+    */
+  private val MaxLabelRounds = 1000
+
+  /** Connected components of `pairs` — see the object doc.
+    *
+    * The pair list is read with ONE evaluation of `pairs` and kept;
+    * both branches read it, so the upstream pair generator never runs
+    * twice.
+    *
+    *  - DRIVER branch: one bounded collect of the pairs. If there are at
+    *    most `VerifyBroadcastMaxBytes / 128` of them, the graph has at
+    *    most `VerifyBroadcastMaxBytes / 64` nodes, so its label table
+    *    fits the broadcast gate at 64 B per node — the table the
+    *    distributed branch would broadcast anyway. Union-find on the
+    *    driver then labels every node, and the result is a local
+    *    relation (one job in all when `pairs` is materialized: the
+    *    collect). Ids must be integral or binary-collated strings, which
+    *    the driver orders as Spark's `min` does (strings by UTF-8 bytes);
+    *    null ids go to the distributed branch.
+    *  - DISTRIBUTED branch: min-label propagation over the symmetrized,
+    *    deduplicated pairs, one checkpointed [[Fixpoint]] round at a
+    *    time.
+    */
   def clusters(pairs: DataFrame, id1: String, id2: String): DataFrame = {
-    // symmetrize with ONE evaluation of `pairs` (an explode, not a
-    // union: union's two branches would each re-run the upstream plan —
-    // for pair generators like the Jaccard pipeline that doubles the
-    // dominant cost)
-    val edges0 = pairs.select(explode(array(
-        struct(col(id1).as("src"), col(id2).as("dst")),
-        struct(col(id2).as("src"), col(id1).as("dst")))).as("e"))
+    val spark = pairs.sparkSession
+    val idField = symmetric(pairs, id1, id2).schema("src")
+    // ONE evaluation of `pairs`: its id columns, kept as a LAZY local
+    // checkpoint that the first job reading it fills
+    val raw = Graft.labeled(spark, "clusters: edges")(pairs.select(
+        col(id1).cast(idField.dataType).as("src"),
+        col(id2).cast(idField.dataType).as("dst"))
+      .localCheckpoint(eager = false))
+    // one row past the gate: fewer rows than this is the whole pair list.
+    // The collect reads it as ONE partition, so it is one job (a limit
+    // over its partitions would scan them in waves).
+    val limit = math.min(driverGate.value
+      .getOrElse(Dedup.VerifyBroadcastMaxBytes / 128L), Int.MaxValue - 9L)
+      .toInt + 1
+    val onDriver = for {
+      order <- driverOrder(idField.dataType)
+      if limit > 1
+      edges = Graft.labeled(spark, "clusters: driver")(
+        raw.coalesce(1).limit(limit).collect())
+      if edges.length < limit
+      labels <- unionFind(edges, order)
+    } yield spark.createDataFrame(java.util.Arrays.asList(labels: _*),
+      StructType(Seq("id", "label").map(idField.copy(_))))
+    onDriver match {
+      // one partition: the table came from the driver and fits the
+      // broadcast gate, and a consumer's aggregate over it (a count)
+      // then needs no exchange
+      case Some(local) =>
+        Checkpoints.release(raw)
+        broadcast(local.coalesce(1))
+      case None =>
+        val edges = Graft.labeled(spark, "clusters: edges")(Fixpoint
+          .truncate(symmetric(raw, "src", "dst").distinct(), reliable = false))
+        Checkpoints.release(raw)
+        try labelPropagation(edges) finally Checkpoints.release(edges)
+    }
+  }
+
+  /** Both directions (src, dst) of every (a, b) row — an explode, not a
+    * union: union's two branches would each re-run the upstream plan,
+    * which for pair generators like the Jaccard pipeline doubles the
+    * dominant cost.
+    */
+  private def symmetric(df: DataFrame, a: String, b: String): DataFrame =
+    df.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-    val edgesC = graft.core.CacheScope.cached(edges0)
+
+  /** Spark's order on ids of type `dt`, for the types whose external
+    * values the driver hashes and orders exactly as Spark does.
+    */
+  private def driverOrder(dt: DataType): Option[Ordering[Any]] = dt match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+    case StringType => // the default, UTF8_BINARY collation
+      Some(Ordering.by[Any, UTF8String](
+        v => UTF8String.fromString(v.asInstanceOf[String]))(
+        (a, b) => a.binaryCompare(b)))
+    case _ => None
+  }
+
+  /** (id, min reachable id) for every node of `edges` — iterative
+    * union-find with path halving, each root kept at its set's minimum;
+    * None if an id is null.
+    */
+  private def unionFind(edges: Array[Row], order: Ordering[Any])
+      : Option[Array[Row]] = {
+    val index = new java.util.HashMap[Any, Integer]
+    val ids = new Array[Any](2 * edges.length)
+    val parent = new Array[Int](2 * edges.length)
+    var n = 0
+    def node(v: Any): Int = {
+      val i = index.putIfAbsent(v, n)
+      if (i != null) i
+      else { ids(n) = v; parent(n) = n; n += 1; n - 1 }
+    }
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    var k = 0
+    while (k < edges.length) {
+      val e = edges(k)
+      if (e.isNullAt(0) || e.isNullAt(1)) return None
+      val (a, b) = (find(node(e.get(0))), find(node(e.get(1))))
+      if (order.lt(ids(a), ids(b))) parent(b) = a
+      else if (a != b) parent(a) = b
+      k += 1
+    }
+    Some(Array.tabulate(n)(i => Row(ids(i), ids(find(i)))))
+  }
+
+  /** The distributed branch of [[clusters]] over the symmetric edges. */
+  private def labelPropagation(edges: DataFrame): DataFrame = {
     // seed with what the first propagation round would compute from
     // self-labels anyway — min(id, min direct neighbor) — saving one
     // full iteration (three shuffles); size-2 components (most near-dup
     // clusters) then converge in a single convergence-check round.
     // The seed stays LAZY: round 1's materialization computes it.
-    var labels = edgesC.groupBy(col("src").as("id"))
+    val seed = edges.groupBy(col("src").as("id"))
       .agg(least(col("id"), min(col("dst"))).as("label"))
-    var prevRound: DataFrame = null
-    var changed = 1L
-    var resultRows = -1L
-    while (changed > 0) {
-      val neighborMin = edgesC
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nmin"))
-      // prev label rides along in the same join that computes the new
-      // one, so the convergence count needs no second labels join; the
-      // count itself is an observe() metric collected BY the round's
-      // materializing job — one job per round, no separate count action
-      val obs = new Observation
-      val stepped = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("__prev"),
-          least(col("label"), coalesce(col("nmin"), col("label")))
-            .as("label"))
-        .observe(obs,
-          count(when(col("label") =!= col("__prev"), 1)).as("changed"),
-          count(lit(1)).as("rows"))
-        .select(col("id"), col("label"))
-      // localCheckpoint, not cache: each round's logical plan would
-      // otherwise NEST the previous round's (the cached form's final
-      // plan measured 5,700+ explain lines at 3 rounds — every round's
-      // count re-analyzed the whole stack, and every downstream
-      // consumer re-planned it). Truncation keeps per-round planning
-      // O(1) and lets the superseded round's blocks release eagerly.
-      val steppedT = stepped.localCheckpoint()
-      val metrics = obs.getAsJava
-      changed = metrics.get("changed").asInstanceOf[Long]
-      resultRows = metrics.get("rows").asInstanceOf[Long]
-      if (prevRound != null) Checkpoints.release(prevRound)
-      labels = steppedT
-      prevRound = steppedT
+    val res = Fixpoint.run("clusters: round", seed, MaxLabelRounds) {
+      (labels, probe) =>
+        val neighborMin = edges
+          .join(labels.select(col("id").as("dst"), col("label")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("label")).as("nmin"))
+        // prev label rides along in the same join that computes the new
+        // one, so the convergence count needs no second labels join
+        probe(labels
+          .join(neighborMin, Seq("id"), "left")
+          .select(col("id"), col("label").as("__prev"),
+            least(col("label"), coalesce(col("nmin"), col("label")))
+              .as("label")),
+          count(when(col("label") =!= col("__prev"), 1)))
+          .select(col("id"), col("label"))
     }
-    edgesC.unpersist()
-    // the final round's checkpointed blocks back the returned frame —
-    // released by an enclosing CacheScope bracket at exit, else
-    // reclaimed by the context cleaner once the result is dereferenced
-    val fin = labels
-    graft.core.CacheScope.onRelease(() => Checkpoints.release(fin))
     // a checkpointed frame carries NO stats (LogicalRDD defaults to
-    // "huge"), so downstream joins — the representative/size joins every
-    // consumer runs against the corpus — would plan sort-merge where the
-    // cached form's measured stats picked broadcast. The row count rode
-    // the final round's observe() metric for free; hint broadcast under
-    // a byte gate (rows × ~64 B of (id,label) + hash-relation overhead,
-    // same ceiling as Dedup.VerifyBroadcastMaxBytes). Beyond the gate —
-    // a label table too big to broadcast — consumers shuffle as before.
-    if (resultRows * 64L <= Dedup.VerifyBroadcastMaxBytes
-        && resultRows >= 0L) broadcast(labels)
-    else labels
+    // "huge"), so the corpus joins consumers run would plan sort-merge:
+    // hint broadcast when the final round's row count fits the gate at
+    // ~64 B of (id, label) per row; beyond it, consumers shuffle.
+    if (res.rounds.last.rows * 64L <= Dedup.VerifyBroadcastMaxBytes)
+      broadcast(res.frame)
+    else res.frame
   }
 
   /** INCREMENTAL connected components — the cluster-maintenance verb
@@ -201,29 +291,14 @@ object ConnectedComponents {
     * exactly one edge to the component minimum. Output matches
     * [[clusters]] exactly: (id, label = component min) for every node
     * appearing in `pairs`, deterministic and partitioning-independent.
-    * Each round materializes one checkpointed edge set and releases the
-    * previous round's blocks through its underlying RDD (a plain
-    * `Dataset.unpersist` is a no-op on checkpointed frames); the FINAL
-    * edge set backs the returned frame and is reclaimed by the context
-    * cleaner once the result is dereferenced. Nothing driver-side
-    * beyond the per-round convergence counts.
+    * Nothing driver-side beyond the per-round convergence counts.
     *
-    * Unlike [[clusters]] (whose 2–4 rounds tolerate a growing logical
-    * plan), a logarithmic loop still runs 10–20 rounds on deep graphs —
-    * enough nested join/distinct/except layers to overflow Catalyst's
-    * analysis recursion. Each round therefore TRUNCATES LINEAGE by
-    * checkpointing the new edge set: `localCheckpoint` (executor-local,
-    * no configuration) by default, or a reliable `checkpoint` when
-    * `reliable = true` (requires `sparkContext.setCheckpointDir`; the
-    * right choice on a large cluster, where losing an executor must not
-    * strand 20 rounds of contraction history). Reliable rounds persist
-    * the edge set before the checkpoint write (the write runs as its
-    * own job and would otherwise recompute the whole round) and release
-    * the cache after. CAVEAT: each reliable round leaves one checkpoint
-    * directory on the checkpoint filesystem for the lifetime of the
-    * run — enable `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * (or clean the checkpoint dir between runs) so a long contraction
-    * does not accumulate O(rounds) retired edge-set files.
+    * A logarithmic loop still runs 10–20 rounds on deep graphs — enough
+    * nested join/distinct/except layers to overflow Catalyst's analysis
+    * recursion — so each round's edge set is a [[Fixpoint]] round with
+    * truncated lineage: `localCheckpoint` by default, or a reliable
+    * `checkpoint` when `reliable = true` (see [[Fixpoint.truncate]] for
+    * its checkpoint-directory requirement and caveat).
     *
     * Self-pairs (id1 = id2) carry no connectivity but DO declare their
     * node: ids appearing only in self-pairs surface in the output with
@@ -238,128 +313,79 @@ object ConnectedComponents {
     * storage (2⁶⁴ nodes); hitting it indicates a non-converging edge
     * generator upstream, and throwing beats looping forever.
     */
-  /** Eagerly materialize `df` with TRUNCATED lineage — the per-round
-    * step of the iterative algorithms here, whose nested
-    * join/distinct/union layers would otherwise overflow Catalyst's
-    * analysis recursion after 10–20 rounds. `localCheckpoint`
-    * (executor-local, no configuration) by default; a reliable
-    * `checkpoint` when `reliable` (requires
-    * `sparkContext.setCheckpointDir` — the right choice on a large
-    * cluster, where losing an executor must not strand many rounds of
-    * iteration history). Reliable rounds persist the frame before the
-    * checkpoint write (the write runs as its own job and would
-    * otherwise recompute the whole round) and release the cache after.
-    * CAVEAT: each reliable round leaves one checkpoint directory on the
-    * checkpoint filesystem for the lifetime of the run — enable
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` (or clean the
-    * checkpoint dir between runs) so a long loop does not accumulate
-    * O(rounds) retired files.
-    */
-  private def truncated(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) {
-      val p = df.persist()
-      try p.checkpoint()
-      finally p.unpersist(blocking = false)
-    } else df.localCheckpoint()
-
   def clustersStarContraction(pairs: DataFrame, id1: String, id2: String,
       maxRounds: Int = 64, reliable: Boolean = false): DataFrame = {
-    import graft.core.CacheScope
-    def truncated(df: DataFrame): DataFrame =
-      ConnectedComponents.truncated(df, reliable)
     // ONE materialization of the (possibly expensive) pair generator:
     // canonical distinct pairs, checkpointed, then split into real
-    // edges and the self-pair-only node labels — ids appearing ONLY in
-    // self-pairs carry no edge but still belong in the output with
-    // their own label, exactly as [[clusters]] reports them. The
+    // edges (round 0) and the self-pair-only node labels — ids appearing
+    // ONLY in self-pairs carry no edge but still belong in the output
+    // with their own label, exactly as [[clusters]] reports them. The
     // self-pair count rides the canon job as an observe() metric, so
     // the common case (pair generators emit id1 < id2 only) pays no
     // probe job at all.
     val canonObs = new Observation
-    val canon = truncated(
-      pairs.select(greatest(col(id1), col(id2)).as("u"),
-          least(col(id1), col(id2)).as("v")).distinct()
-        .observe(canonObs,
-          count(when(col("u") === col("v"), 1)).as("selfPairs")))
-    // the edge count rides the edge-split job the same way
-    val edgesObs = new Observation
-    var edges = truncated(canon.filter(col("u") =!= col("v"))
-      .observe(edgesObs, count(lit(1)).as("n")))
-    val selfIds = canon.filter(col("u") === col("v"))
-      .select(col("u").as("id"))
+    val canon = Graft.labeled(pairs.sparkSession, "star: canon")(
+      Fixpoint.truncate(
+        pairs.select(greatest(col(id1), col(id2)).as("u"),
+            least(col(id1), col(id2)).as("v")).distinct()
+          .observe(canonObs,
+            count(when(col("u") === col("v"), 1)).as("selfPairs")),
+        reliable))
+    val start = Fixpoint.start("star: round", reliable)(
+      _(canon.filter(col("u") =!= col("v"))))
     val selfLab =
       if (canonObs.getAsJava.get("selfPairs").asInstanceOf[Long] == 0L) None
-      else Some(truncated(
-        selfIds
+      else Some(Fixpoint.truncate(
+        canon.filter(col("u") === col("v")).select(col("u").as("id"))
           .join(canon.filter(col("u") =!= col("v"))
               .select(explode(array(col("u"), col("v"))).as("id"))
               .distinct(),
             Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("label"))))
-    if (!reliable) Checkpoints.release(canon)
-    var nEdges = edgesObs.getAsJava.get("n").asInstanceOf[Long]
-    var converged = nEdges == 0L
-    var round = 0
-    while (!converged) {
-      require(round < maxRounds,
-        s"star contraction did not converge in $maxRounds rounds")
-      // large-star over the symmetrized adjacency: one explode (NOT a
-      // union — union would re-run the upstream pair generator per
-      // branch), one groupBy for the per-node closed-neighborhood min,
-      // one co-partitioned join back
-      val sym = edges.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-      val large = sym
-        .join(sym.groupBy(col("a"))
-          .agg(least(col("a"), min(col("b"))).as("m")), "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      val largeC = CacheScope.cached(large)
+          .select(col("id"), col("id").as("label")), reliable))
+    Checkpoints.release(canon)
+    // both sides of a round are distinct canonical sets: equal counts +
+    // empty one-way difference ⇒ set equality ⇒ fixpoint. The except
+    // job runs only on candidate-convergence rounds (counts matched).
+    var nEdges = -1L
+    val res = Fixpoint.runFrom("star: round", start, maxRounds,
+      done = (r, prev, next) => {
+        val same = r.rows == 0L ||
+          (r.rows == nEdges && next.except(prev).count() == 0L)
+        nEdges = r.rows
+        same
+      }) { (edges, probe) =>
+      // large-star over the symmetrized adjacency: one groupBy for the
+      // per-node closed-neighborhood min, one co-partitioned join back;
+      // cached for this round only (the loop releases it once the
+      // round's edge set is checkpointed)
+      val sym = symmetric(edges, "u", "v")
+      val largeC = CacheScope.cached(sym
+        .join(sym.groupBy(col("src"))
+          .agg(least(col("src"), min(col("dst"))).as("m")), "src")
+        .filter(col("dst") > col("src"))
+        .select(col("dst").as("u"), col("m").as("v"))
+        .filter(col("u") =!= col("v")).distinct())
       // small-star directly on the canonical direction: every group
       // (u, its smaller neighbors) collapses onto the group min — the
       // min rides the same join, then one explode emits both the u→m
       // edge and each displaced neighbor's v→m edge
-      val smallObs = new Observation
-      val small = largeC
+      probe(largeC
         .join(largeC.groupBy(col("u")).agg(min(col("v")).as("m")), "u")
         .select(explode(array(
           struct(col("u").as("s"), col("m").as("t")),
           struct(col("v").as("s"), col("m").as("t")))).as("e"))
         .select(col("e.s").as("u"), col("e.t").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .observe(smallObs, count(lit(1)).as("n"))
-      // checkpoint (not just cache): truncates the logical plan so 20
-      // rounds don't stack 20 rounds of Catalyst lineage. The new edge
-      // count rides the checkpoint job as an observe() metric — one
-      // job per alternation instead of checkpoint + count.
-      val smallC = truncated(small)
-      val n2 = smallObs.getAsJava.get("n").asInstanceOf[Long]
-      // both sides are distinct canonical sets: equal counts + empty
-      // one-way difference ⇒ set equality ⇒ fixpoint. The except job
-      // runs only on candidate-convergence rounds (counts matched).
-      converged = n2 == nEdges && smallC.except(edges).count() == 0L
-      largeC.unpersist()
-      if (!reliable) Checkpoints.release(edges)
-      edges = smallC
-      nEdges = n2
-      round += 1
+        .filter(col("u") =!= col("v")).distinct())
     }
     // fixpoint stars: children are (u → component min); the roots only
     // appear on the dst side, so emit their self-label from there
-    val out = edges.select(explode(array(
+    val out = res.frame.select(explode(array(
         struct(col("u").as("id"), col("v").as("label")),
         struct(col("v").as("id"), col("v").as("label")))).as("e"))
       .select(col("e.id").as("id"), col("e.label").as("label"))
       .distinct()
-    // the final edge set (and the self-label frame) back the returned
-    // frame — released by an enclosing CacheScope bracket at exit, else
-    // reclaimed by the context cleaner on dereference
-    val finalEdges = edges
-    if (!reliable) (finalEdges +: selfLab.toSeq)
-      .foreach(f => CacheScope.onRelease(() => Checkpoints.release(f)))
+    // the self-label frame backs the result with the final edge set
+    selfLab.foreach(f => CacheScope.onRelease(() => Checkpoints.release(f)))
     selfLab.fold(out)(out.unionByName)
   }
 
@@ -382,10 +408,9 @@ object ConnectedComponents {
     * symmetrized edge list — a shuffle proportional to the frontier's
     * adjacency, not the graph — dedups the discovered ids, and
     * anti-joins the visited set to keep only first sightings. Nothing
-    * is collected to the driver; per-round frames are eagerly
-    * materialized with truncated lineage ([[truncated]]: localCheckpoint
-    * by default, reliable checkpoint under `reliable`) so a deep BFS
-    * does not stack O(rounds) of Catalyst plan. The loop stops at the
+    * is collected to the driver; each hop is a [[Fixpoint]] round
+    * (truncated lineage, reliable checkpoints under `reliable`), so a
+    * deep BFS does not stack O(rounds) of Catalyst plan. The loop stops at the
     * first empty frontier — `maxHops` bounds it for cyclic graphs whose
     * useful horizon is known (quality propagation rarely wants more
     * than a few hops; distance saturates long before diameter).
@@ -394,65 +419,36 @@ object ConnectedComponents {
       seeds: DataFrame, seedCol: String, maxHops: Int = 16,
       reliable: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val edges = graft.core.CacheScope.cached(
-      pairs.select(explode(array(
-          struct(col(id1).as("a"), col(id2).as("b")),
-          struct(col(id2).as("a"), col(id1).as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-    val seedObs = new Observation
-    var frontier = truncated(
-      seeds.select(col(seedCol).as("id")).distinct()
-        .withColumn("dist", lit(0))
-        .observe(seedObs, count(lit(1)).as("n")), reliable)
-    locally {
-      val seedFrame = frontier
-      if (!reliable)
-        graft.core.CacheScope.onRelease(() => Checkpoints.release(seedFrame))
-    }
-    // `visited` is a plain UNION of the per-hop materialized frontiers —
+    val edges = CacheScope.cached(symmetric(pairs, id1, id2)
+      .filter(col("src") =!= col("dst")).distinct())
+    // hop 0 is the seed set; hop h keeps the nodes first reached at h
+    val start = Fixpoint.start("seedDistances: hop", reliable)(
+      _(seeds.select(col(seedCol).as("id")).distinct()
+        .withColumn("dist", lit(0))))
+    // the result is a plain UNION of the per-hop materialized frontiers —
     // each hop's rows are stored exactly once (its own truncated frame)
     // and the union is lazy plan glue over those leaves, so no hop pays
-    // a second visited-sized materialization (the previous form
-    // re-checkpointed the whole union every hop: O(V) extra bytes
-    // written per hop and one extra job). The union plan stays linear
-    // in hop count (≤ maxHops leaves), far below Catalyst's recursion
-    // budget, and every leaf is already lineage-truncated.
+    // a second visited-sized materialization. The union plan stays
+    // linear in hop count (≤ maxHops leaves), far below Catalyst's
+    // recursion budget, and every leaf is already lineage-truncated.
     //
     // BLOCK RETENTION BOUND: every per-hop frame backs the returned
-    // union, so none is released mid-loop — the block-manager
-    // high-water mark is the RESULT size (O(V) rows total across ≤
-    // maxHops frames, each row stored once), not one hop's frontier.
-    // That is the price of returning the distances without a second
-    // O(V) materialization; the frames are reclaimed by the context
-    // cleaner once the result is dereferenced.
-    var visited = frontier
-    var hop = 0
-    var frontierN = seedObs.getAsJava.get("n").asInstanceOf[Long]
-    while (frontierN > 0 && hop < maxHops) {
-      hop += 1
-      // the frontier count rides the hop's checkpoint job as an
-      // observe() metric — one job per hop instead of checkpoint+count
-      val hopObs = new Observation
-      val discovered = edges
-        .join(frontier.select(col("id").as("a")), "a")
-        .select(col("b").as("id")).distinct()
-        .join(visited.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .observe(hopObs, count(lit(1)).as("n"))
-      val next = truncated(discovered, reliable)
-      val hopFrame = next
-      if (!reliable)
-        graft.core.CacheScope.onRelease(() => Checkpoints.release(hopFrame))
-      frontierN = hopObs.getAsJava.get("n").asInstanceOf[Long]
-      visited = visited.unionByName(next)
-      frontier = next
+    // union, so the loop retains them all — the block-manager high-water
+    // mark is the RESULT size (O(V) rows total across ≤ maxHops frames,
+    // each row stored once), not one hop's frontier. That is the price
+    // of returning the distances without a second O(V) materialization.
+    val res = Fixpoint.runFrom("seedDistances: hop", start, maxHops,
+      retain = true,
+      done = (r, _, _) => r.rows == 0L || r.round == maxHops) {
+      (frontier, probe) =>
+        val visited = probe.history.reduce(_ unionByName _)
+        probe(edges
+          .join(frontier.select(col("id").as("src")), "src")
+          .select(col("dst").as("id")).distinct()
+          .join(visited.select(col("id")), Seq("id"), "left_anti")
+          .withColumn("dist", lit(probe.round)))
     }
-    // per-hop frames back the returned union — released by an enclosing
-    // CacheScope bracket at exit, else reclaimed by the context cleaner
-    // once the result is dereferenced
     edges.unpersist()
-    visited
+    res.frames.reduce(_ unionByName _)
   }
 }

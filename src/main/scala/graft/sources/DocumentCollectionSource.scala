@@ -6,7 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import graft.core.Publish
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -54,11 +54,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - abort: the temp directory is deleted, leaving the collection
   *    exactly as before — a failed job never publishes partial data.
   *    The driver creates the temp directory before any task starts and
-  *    tasks open their files with `createNonRecursive`, so a task that
+  *    tasks open their files without creating parents, so a task that
   *    outlives the abort fails instead of recreating the deleted
-  *    directory. (On a local filesystem the parent check and the open
-  *    are two calls, which narrows the window to the open itself; HDFS
-  *    checks the parent in the same NameNode call.)
+  *    directory; a file a task opens while the abort's delete runs is
+  *    swept by deleting again.
   *
   * The table accepts any schema (the collection's schema IS the
   * document shape, as in the reference where ArangoDB is schemaless).
@@ -277,7 +276,7 @@ private class DocumentBatchWrite(path: String, batchSize: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    tmpDir.getFileSystem(conf.value).delete(tmpDir, true)
+    Staging.delete(tmpDir, conf)
 }
 
 private class DocumentWriterFactory(tmpDir: String, batchSize: Int,
@@ -300,6 +299,24 @@ private object Staging {
     val p = new Path(dir)
     if (!p.getFileSystem(conf.value).mkdirs(p))
       throw new java.io.IOException(s"could not create staging dir $dir")
+  }
+
+  /** Abort-side removal of a staging dir. A task still running after
+    * its job failed may open its file while the recursive delete runs,
+    * which then fails on a non-empty dir: delete again until the dir is
+    * gone. Each task opens at most one file, and none can open one once
+    * the dir is gone, so a few attempts end it.
+    */
+  def delete(dir: Path,
+      conf: org.apache.spark.sql.graftbridge.SerializableHadoopConf): Unit = {
+    val fs = dir.getFileSystem(conf.value)
+    var attempts = 0
+    while (!fs.delete(dir, true) && fs.exists(dir)) {
+      attempts += 1
+      if (attempts == 10)
+        throw new java.io.IOException(s"could not delete staging dir $dir")
+      Thread.sleep(20)
+    }
   }
 
   /** The streaming sink's per-epoch staging dir. */
@@ -388,10 +405,8 @@ private[sources] class DocumentStreamingWrite(path: String, batchSize: Int,
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    fs.delete(new Path(Staging.epochDir(path, writeId, epochId)), true)
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    Staging.delete(new Path(Staging.epochDir(path, writeId, epochId)), conf)
 }
 
 private class DocumentStreamingWriterFactory(path: String, writeId: String,
@@ -415,7 +430,7 @@ private class DocumentStreamingWriterFactory(path: String, writeId: String,
   * stream write — the reference's accumulate→insert→clear loop with a
   * file stream standing in for the database client.
   *
-  * The file opens at the first flush with `createNonRecursive`: the
+  * The file opens at the first flush without creating parents: the
   * staging dir must already exist (`staged`: the driver created it), so
   * a writer that outlives its job's abort fails rather than recreating
   * the dir the abort deleted. An abort before the first flush opens
@@ -433,9 +448,12 @@ private class DocumentWriter(tmpDir: String, batchSize: Int,
   private def out = {
     if (opened == null) {
       if (!staged) fs.mkdirs(file.getParent)
-      opened = fs.createNonRecursive(file, true,
-        fs.getConf.getInt("io.file.buffer.size", 4096),
-        fs.getDefaultReplication(file), fs.getDefaultBlockSize(file), null)
+      // FileContext, not FileSystem.createNonRecursive: on a local
+      // filesystem the latter checks the parent and then mkdirs it, so
+      // a dir the abort deletes between the two calls comes back
+      opened = FileContext.getFileContext(fs.getUri, fs.getConf).create(file,
+        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+        Options.CreateOpts.donotCreateParent())
     }
     opened
   }

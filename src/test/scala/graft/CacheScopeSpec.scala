@@ -94,6 +94,24 @@ class CacheScopeSpec extends SparkSpec {
     assert(leaked.isEmpty, s"leaked: $leaked")
   }
 
+  test("scoped: both clusters branches, driver and distributed, leave " +
+      "nothing behind") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")
+    for (gate <- Seq(None, Some(0L))) {
+      spark.catalog.clearCache()
+      val before = cachedIds
+      val n = CacheScope.scoped {
+        graft.operators.ConnectedComponents.driverGate.withValue(gate) {
+          graft.operators.ConnectedComponents.clusters(pairs, "id1", "id2")
+            .count()
+        }
+      }
+      assert(n == 5L)
+      val leaked = createdSince(before)
+      assert(leaked.isEmpty, s"gate $gate leaked: $leaked")
+    }
+  }
+
   test("scopes nest: the inner bracket releases only its own caches") {
     spark.catalog.clearCache()
     val before = cachedIds
