@@ -92,14 +92,4 @@ object Graft {
     try body
     finally sc.setJobDescription(prev)
   }
-
-  /** Plan-estimated size in bytes — for a cached-and-materialized plan
-    * this is the measured in-memory size, otherwise the optimizer's
-    * estimate. Used to gate explicit `broadcast()` hints on BYTES rather
-    * than row count: a row count says nothing about wide array/embedding
-    * payloads, which is exactly what the dedup/similarity verify joins
-    * carry.
-    */
-  def estimatedBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
 }

@@ -47,12 +47,10 @@ import org.apache.spark.sql.functions._
   * Encoding mirrors the histogram trick: distinct words are encoded
   * ONCE (vocab-sized work) and joined back to the corpus — the
   * per-document cost is a join probe, independent of the merge-table
-  * size. The distinct-word table joins back under a broadcast hint
-  * ONLY when its measured in-memory bytes fit `broadcastMaxBytes`
-  * (the [[Dedup.VerifyBroadcastMaxBytes]] idiom): distinct words in a
-  * web corpus are 10⁷–10⁸ rows (typos, URLs, hashes) and an
-  * unconditional broadcast of that table is a driver/executor OOM, so
-  * above the bound the join falls back to a shuffle join on the word.
+  * size. The distinct-word table joins back through
+  * [[graft.core.BroadcastGate]]: distinct words in a web corpus are
+  * 10⁷–10⁸ rows (typos, URLs, hashes), so above the gate the join
+  * falls back to a shuffle join on the word.
   *
   * Words are [[TextFunctions.bpeTokenPattern]] matches (letter runs,
   * digit runs, single marks) — the same pre-tokenization the rest of
@@ -394,13 +392,9 @@ object Bpe extends TokenizerSurface {
     * per-document work is a join probe, so encoding cost scales with
     * corpus size + vocab size, never their product.
     *
-    * The encoded distinct-word table is cached, MEASURED, and joined
-    * under a broadcast hint only when its in-memory bytes fit
-    * `broadcastMaxBytes` (default [[Dedup.VerifyBroadcastMaxBytes]]);
-    * above the bound the join runs as a shuffle join — at web-corpus
-    * distinct-word counts (10⁷–10⁸ rows) an unconditional broadcast is
-    * a driver OOM, and AQE remains free to re-plan the shuffle join if
-    * runtime stats allow.
+    * The encoded distinct-word table is cached and joined back through
+    * [[graft.core.BroadcastGate]] — at web-corpus distinct-word counts
+    * (10⁷–10⁸ rows) an unconditional broadcast is a driver OOM.
     */
   /** Token-id vocabulary for a trained merge table: id 0 is the
     * reserved `<unk>`, ids 1..B are the training corpus's distinct
@@ -435,19 +429,14 @@ object Bpe extends TokenizerSurface {
     */
   def encodeIds(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
-      vocabTable: Seq[(String, Long)],
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame =
-    encode(df, idCol, textCol, merges, broadcastMaxBytes)
+      vocabTable: Seq[(String, Long)]): DataFrame =
+    encode(df, idCol, textCol, merges)
       .withColumn("token_ids", graft.expressions.GraftFunctions
         .tokenIds(col("tokens"), vocabTable, unkId = 0L))
 
   def encode(df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(Int, String, String, String, Long)],
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame =
-    encodeWith(df, idCol, textCol, merges, broadcastMaxBytes,
-      w => charPad(w))
+      merges: Seq[(Int, String, String, String, Long)]): DataFrame =
+    encodeWith(df, idCol, textCol, merges, w => charPad(w))
 
   /** The shared encode plan: [[encode]] (char symbols) and
     * [[encodeBytes]] (byte symbols) differ ONLY in how a distinct word
@@ -457,7 +446,6 @@ object Bpe extends TokenizerSurface {
     */
   private def encodeWith(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
-      broadcastMaxBytes: Long,
       symize: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       tokenPattern: String = TextFunctions.bpeTokenPattern)
       : DataFrame = {
@@ -472,11 +460,7 @@ object Bpe extends TokenizerSurface {
         case (acc, (_, l, r, _, _)) => applyMerge(acc, l, r)
       }.withColumn("word_tokens", split(trim(col("syms")), " "))
         .select(col("word").as("__w"), col("word_tokens")))
-    encoded.count() // materialize so the size is measured, not guessed
-    val hint: DataFrame => DataFrame =
-      if (graft.core.Graft.estimatedBytes(encoded) <= broadcastMaxBytes)
-        broadcast(_)
-      else identity
+    val hint = graft.core.BroadcastGate.hint("bpe encode: words", encoded)
     words.join(hint(encoded), col("word") === col("__w"))
       .groupBy(col(idCol))
       .agg(flatten(array_sort(collect_list(
@@ -551,10 +535,9 @@ object Bpe extends TokenizerSurface {
     */
   def encodeBytes(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes,
       tokenPattern: String = TextFunctions.bpeTokenPattern)
       : DataFrame =
-    encodeWith(df, idCol, textCol, merges, broadcastMaxBytes,
+    encodeWith(df, idCol, textCol, merges,
       w => charPad(graft.expressions.GraftFunctions.byteRemap(w)),
       tokenPattern)
 
@@ -627,11 +610,9 @@ object Bpe extends TokenizerSurface {
     */
   def encodeIdsBytes(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes,
       tokenPattern: String = TextFunctions.bpeTokenPattern)
       : DataFrame =
-    encodeBytes(df, idCol, textCol, merges, broadcastMaxBytes,
-      tokenPattern)
+    encodeBytes(df, idCol, textCol, merges, tokenPattern)
       .withColumn("token_ids", graft.expressions.GraftFunctions
         .tokenIds(col("tokens"), vocabBytes(merges), unkId = -1L))
 
@@ -1266,15 +1247,13 @@ object Bpe extends TokenizerSurface {
       textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
       vocabTable: Seq[(String, Long)], needsNfc: Boolean,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes,
       tokenPattern: String = TextFunctions.bpeTokenPattern)
       : DataFrame = {
     val input =
       if (!needsNfc) df
       else df.withColumn(textCol,
         TextFunctions.normalizeUnicode(col(textCol), "NFC"))
-    encodeIdsBytes(input, idCol, textCol, merges, vocabTable,
-      broadcastMaxBytes, tokenPattern)
+    encodeIdsBytes(input, idCol, textCol, merges, vocabTable, tokenPattern)
   }
 
   // ---- the ASSEMBLED tokenizer.json surface (round 18) --------------
@@ -1665,10 +1644,8 @@ object Bpe extends TokenizerSurface {
     */
   def encodeIdsBytes(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)],
-      vocabTable: Seq[(String, Long)], broadcastMaxBytes: Long,
-      tokenPattern: String): DataFrame =
-    encodeBytes(df, idCol, textCol, merges, broadcastMaxBytes,
-      tokenPattern)
+      vocabTable: Seq[(String, Long)], tokenPattern: String): DataFrame =
+    encodeBytes(df, idCol, textCol, merges, tokenPattern)
       .withColumn("token_ids", graft.expressions.GraftFunctions
         .tokenIds(col("tokens"), vocabTable, unkId = -1L))
 

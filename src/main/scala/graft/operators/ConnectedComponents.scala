@@ -1,8 +1,6 @@
 package graft.operators
 
-import scala.util.DynamicVariable
-
-import graft.core.{CacheScope, Checkpoints, Fixpoint, Graft}
+import graft.core.{BroadcastGate, CacheScope, Checkpoints, Fixpoint, Graft}
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,15 +34,15 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ConnectedComponents {
 
-  /** Forces the [[clusters]] gate (the most pairs the driver branch
-    * collects) — `Some(0)` selects the distributed branch.
-    */
-  private[graft] val driverGate = new DynamicVariable[Option[Long]](None)
-
   /** Min-label rounds before [[clusters]] gives up: a component of
     * diameter near this many hops wants [[clustersStarContraction]].
     */
   private val MaxLabelRounds = 1000
+
+  /** Gate bytes per pair of the driver branch: a pair adds at most two
+    * nodes of 64 B each to the label table.
+    */
+  private val PairBytes = 128L
 
   /** Connected components of `pairs` — see the object doc.
     *
@@ -52,11 +50,10 @@ object ConnectedComponents {
     * both branches read it, so the upstream pair generator never runs
     * twice.
     *
-    *  - DRIVER branch: one bounded collect of the pairs. If there are at
-    *    most `VerifyBroadcastMaxBytes / 128` of them, the graph has at
-    *    most `VerifyBroadcastMaxBytes / 64` nodes, so its label table
-    *    fits the broadcast gate at 64 B per node — the table the
-    *    distributed branch would broadcast anyway. Union-find on the
+    *  - DRIVER branch: one bounded collect of the pairs. If they fit
+    *    the [[graft.core.BroadcastGate]] at 128 B per pair (two nodes),
+    *    the graph's label table fits it at 64 B per node — the table
+    *    the distributed branch would broadcast anyway. Union-find on the
     *    driver then labels every node, and the result is a local
     *    relation (one job in all when `pairs` is materialized: the
     *    collect). Ids must be integral or binary-collated strings, which
@@ -78,15 +75,14 @@ object ConnectedComponents {
     // one row past the gate: fewer rows than this is the whole pair list.
     // The collect reads it as ONE partition, so it is one job (a limit
     // over its partitions would scan them in waves).
-    val limit = math.min(driverGate.value
-      .getOrElse(Dedup.VerifyBroadcastMaxBytes / 128L), Int.MaxValue - 9L)
-      .toInt + 1
+    val limit =
+      math.min(BroadcastGate.maxRows(PairBytes), Int.MaxValue - 9L).toInt + 1
     val onDriver = for {
       order <- driverOrder(idField.dataType)
       if limit > 1
       edges = Graft.labeled(spark, "clusters: driver")(
         raw.coalesce(1).limit(limit).collect())
-      if edges.length < limit
+      if BroadcastGate.rowsFit("clusters: driver", edges.length, PairBytes)
       labels <- unionFind(edges, order)
     } yield spark.createDataFrame(java.util.Arrays.asList(labels: _*),
       StructType(Seq("id", "label").map(idField.copy(_))))
@@ -190,7 +186,7 @@ object ConnectedComponents {
     // "huge"), so the corpus joins consumers run would plan sort-merge:
     // hint broadcast when the final round's row count fits the gate at
     // ~64 B of (id, label) per row; beyond it, consumers shuffle.
-    if (res.rounds.last.rows * 64L <= Dedup.VerifyBroadcastMaxBytes)
+    if (BroadcastGate.rowsFit("clusters: labels", res.rounds.last.rows, 64L))
       broadcast(res.frame)
     else res.frame
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.BroadcastGate
 import graft.functions.UrlFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,24 +62,17 @@ object Curation {
       .map(_.getString(0)).toSeq
   }
 
-  /** The blocklist side of both blocklist joins, deduped and
-    * broadcast only under the MEASURED-bytes gate (cache →
-    * materialize → real size; the [[Bpe.encode]] idiom): typical
-    * blocklists are 10⁴–10⁶ domains and broadcast, but aggressive
-    * open-web lists reach 10⁷+ (hundreds of MB after dedup) — above
-    * the bound the join runs shuffled, which AQE remains free to
-    * re-plan. The last class of caller-fed frames in src/main whose
-    * size the caller can get wrong now has the same insurance as the
-    * corpus-derived ones.
+  /** The blocklist side of both blocklist joins, deduped and gated by
+    * [[graft.core.BroadcastGate]]: typical blocklists are 10⁴–10⁶
+    * domains and broadcast, but aggressive open-web lists reach 10⁷+
+    * (hundreds of MB after dedup). The last class of caller-fed frames
+    * in src/main whose size the caller can get wrong now has the same
+    * insurance as the corpus-derived ones.
     */
-  private def gatedBlocklist(blocklist: DataFrame,
-      broadcastMaxBytes: Long): DataFrame = {
+  private def gatedBlocklist(blocklist: DataFrame): DataFrame = {
     val bl = graft.core.CacheScope.cached(
       blocklist.select(col("domain")).distinct())
-    bl.count() // materialize so the size is measured, not guessed
-    if (graft.core.Graft.estimatedBytes(bl) <= broadcastMaxBytes)
-      broadcast(bl)
-    else bl
+    BroadcastGate.hint("blocklist", bl)(bl)
   }
 
   /** Rows flagged `kept = false` when their registered domain appears in
@@ -88,10 +82,8 @@ object Curation {
     * `mark.filter(kept)` minus the bookkeeping columns.
     */
   def markBlocklisted(df: DataFrame, domainCol: String,
-      blocklist: DataFrame,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame = {
-    val bl = gatedBlocklist(blocklist, broadcastMaxBytes)
+      blocklist: DataFrame): DataFrame = {
+    val bl = gatedBlocklist(blocklist)
       .withColumn("__blocked", lit(true))
     df.join(bl, df(domainCol) === bl("domain"), "left")
       .withColumn("kept", coalesce(col("__blocked"), lit(false)) === lit(false))
@@ -104,14 +96,12 @@ object Curation {
     * list fits the bound.
     */
   def filterBlocklisted(df: DataFrame, domainCol: String,
-      blocklist: DataFrame,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame = {
+      blocklist: DataFrame): DataFrame = {
     // qualify the probe key through the blocklist frame itself: an
     // unqualified col("domain") is ambiguous whenever the INPUT also
     // carries a column named "domain" (domainCol == "domain" is the
     // common caller shape)
-    val bl = gatedBlocklist(blocklist, broadcastMaxBytes)
+    val bl = gatedBlocklist(blocklist)
     df.join(bl, df(domainCol) === bl("domain"), "left_anti")
   }
 
@@ -185,7 +175,7 @@ object Curation {
     * previous ranking-window form sorted the whole domain under one
     * task. The per-domain threshold frame scales with corpus
     * CARDINALITY (~10⁸ registered domains open-web), so its join-back
-    * broadcasts only under the measured-bytes gate, exactly like
+    * broadcasts only under [[graft.core.BroadcastGate]], exactly like
     * [[domainQuotaApprox]]'s counts frame.
     *
     * Selection key: `md5(id) || id` — the 32-hex md5 prefix decides
@@ -195,9 +185,7 @@ object Curation {
     * rows sharing an id share a key and are kept or dropped together.
     */
   def domainQuota(df: DataFrame, domainCol: String, idCol: String,
-      quota: Int,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame = {
+      quota: Int): DataFrame = {
     require(quota > 0, s"quota must be positive, got $quota")
     val sortKey = concat(md5(col(idCol).cast("string")),
       col(idCol).cast("string"))
@@ -206,11 +194,7 @@ object Curation {
     val thresholds = graft.core.CacheScope.cached(
       df.select(col(domainCol), sortKey.as("__k"))
         .groupBy(col(domainCol)).agg(bottomK(col("__k")).as("__thr")))
-    thresholds.count() // materialize so the size is measured, not guessed
-    val hint: DataFrame => DataFrame =
-      if (graft.core.Graft.estimatedBytes(thresholds) <= broadcastMaxBytes)
-        broadcast(_)
-      else identity
+    val hint = BroadcastGate.hint("domainQuota: thresholds", thresholds)
     // NULL-SAFE join: rows whose domain extraction failed form one
     // quota group of their own (the ranking-window semantics this form
     // replaced). A plain equi-join never matches null keys and would
@@ -233,25 +217,17 @@ object Curation {
     *
     * The domain-counts frame scales with CORPUS CARDINALITY (an
     * open-web crawl has ~10⁸ registered domains — multi-GB), so its
-    * join-back is broadcast only when its MEASURED cached bytes fit
-    * `broadcastMaxBytes` (the [[Dedup.sizedBroadcastHint]] idiom —
-    * cache, materialize, read the real size); above the bound it runs
-    * as a shuffle join on the domain key, which AQE remains free to
-    * re-plan. An unconditional broadcast here is the driver-OOM
-    * pattern at open-web domain counts.
+    * join-back is gated by [[graft.core.BroadcastGate]]; above the
+    * bound it runs as a shuffle join on the domain key. An
+    * unconditional broadcast here is the driver-OOM pattern at
+    * open-web domain counts.
     */
   def domainQuotaApprox(df: DataFrame, domainCol: String, idCol: String,
-      quota: Int,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame = {
+      quota: Int): DataFrame = {
     require(quota > 0, s"quota must be positive, got $quota")
     val counts = graft.core.CacheScope.cached(
       df.groupBy(col(domainCol)).agg(count(lit(1)).as("__n")))
-    counts.count() // materialize so the size is measured, not guessed
-    val hint: DataFrame => DataFrame =
-      if (graft.core.Graft.estimatedBytes(counts) <= broadcastMaxBytes)
-        broadcast(_)
-      else identity
+    val hint = BroadcastGate.hint("domainQuotaApprox: counts", counts)
     val m = BigInt(16).pow(8).toLong
     // null-safe: null-domain rows are one quota group, not dropped
     // (same contract as the exact form)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CacheScope, Checkpoints}
+import graft.core.{BroadcastGate, CacheScope, Checkpoints}
 import graft.expressions.GraftFunctions
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, Observation, Row}
@@ -107,34 +107,6 @@ object Dedup {
         extra.map(col)): _*)
   }
 
-  /** Estimated BYTES under which a verification-join side is broadcast;
-    * above it (corpus scale) the join falls back to a shuffle join on
-    * the candidate ids. A byte gate, not a row gate: the broadcast side
-    * carries full shingle arrays / embeddings, so a million narrow rows
-    * and a thousand wide ones are not the same thing. Sized well under
-    * typical driver/executor memory.
-    */
-  val VerifyBroadcastMaxBytes: Long = 128L << 20
-
-  /** Broadcast hint iff the (cached, materialized) frame's measured size
-    * fits [[VerifyBroadcastMaxBytes]]. Callers pass the CACHED base
-    * frame; the returned hint is applied to its projections.
-    */
-  private[graft] def sizedBroadcastHint(df: DataFrame)
-      : DataFrame => DataFrame = {
-    // materialize the cache so the size is measured, not guessed — but
-    // only if a prior action hasn't already loaded the column buffers
-    // (saves one redundant cached job per verify join)
-    val alreadyLoaded = df.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cacheBuilder.isCachedColumnBuffersLoaded
-    }.getOrElse(false)
-    if (!alreadyLoaded) df.count()
-    if (graft.core.Graft.estimatedBytes(df) <= VerifyBroadcastMaxBytes)
-      broadcast(_)
-    else identity
-  }
-
   /** Verify candidate pairs with the exact set Jaccard: join the full
     * sets back, intersect per pair (merge-count via
     * [[graft.expressions.SortedArrayIntersectCount]] for sorted string
@@ -146,8 +118,8 @@ object Dedup {
     * "decide with small rows, move big rows once"), by the measured
     * size of the materialized `sets` cache:
     *
-    *  - `sets` fits [[VerifyBroadcastMaxBytes]] (the verification-scale
-    *    regime, every local SF): the two id joins broadcast the sets
+    *  - `sets` fits the [[graft.core.BroadcastGate]] (the
+    *    verification-scale regime, every local SF): the two id joins broadcast the sets
     *    projections — the builds run CONCURRENTLY, so the whole verify
     *    is one DAG with no materialization barrier. (A candidate-side
     *    one-pass variant was A/B'd here and REVERTED: materializing the
@@ -171,16 +143,9 @@ object Dedup {
     */
   private[graft] def verifyJaccard(cand0: DataFrame, sets: DataFrame,
       threshold: Double, candRows: Option[Long] = None): DataFrame = {
-    // sets is cached by the caller; materialize so the gate reads a
-    // measured size, not a guess (skip the count if a prior action
-    // already loaded the buffers)
-    val setsLoaded = sets.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cacheBuilder.isCachedColumnBuffersLoaded
-    }.getOrElse(false)
-    if (!setsLoaded) sets.count()
-    val setsBytes = graft.core.Graft.estimatedBytes(sets)
-    if (setsBytes <= VerifyBroadcastMaxBytes)
+    // sets is cached by the caller; the gate skips its count when a
+    // prior action already loaded the buffers
+    if (BroadcastGate.fits("verifyJaccard: sets", sets))
       verifyJaccardJoin(cand0, sets, threshold, broadcast)
     else {
       val (cand, nCand) = candRows match {
@@ -189,16 +154,10 @@ object Dedup {
           val c = CacheScope.cached(cand0)
           (c, c.count())
       }
-      // per-pair payload after the attach: one set array per pair;
-      // materialized-cache stats usually carry the row count, one
-      // cheap count over the loaded cache otherwise
-      val setsRows = sets.queryExecution.optimizedPlan.stats.rowCount
-        .map(_.toLong).getOrElse(sets.count())
-      val avgSetBytes =
-        if (setsRows > 0) (setsBytes / setsRows).toLong else Long.MaxValue
-      val candFits = nCand * 64L <= VerifyBroadcastMaxBytes &&
-        (nCand == 0L ||
-          nCand <= VerifyBroadcastMaxBytes / math.max(avgSetBytes, 1L))
+      // both the 64 B id pairs and, after the attach, one set array
+      // per pair must fit
+      val candFits = BroadcastGate.rowsFit("verifyJaccard: melt", nCand,
+        math.max(64L, BroadcastGate.rowBytes(sets)))
       if (candFits) verifyJaccardMelt(cand, sets, threshold)
       else verifyJaccardJoin(cand, sets, threshold, identity)
     }
@@ -333,7 +292,8 @@ object Dedup {
       .localCheckpoint()
     CacheScope.onRelease(() => Checkpoints.release(candT))
     val nCand = screenObs.getAsJava.get("n").asInstanceOf[Long]
-    val candSmall = nCand * 64L <= VerifyBroadcastMaxBytes
+    val candSmall =
+      BroadcastGate.rowsFit("winnowedKgramPairs: candidate ids", nCand, 64L)
     // exact gram sets ONLY for screened ids — the semi-join keeps the
     // k·|text| gram materialization off the unscreened corpus. The id
     // set inherits the byte gate: ≤ 2·nCand ids, hinted so the corpus
@@ -359,7 +319,7 @@ object Dedup {
     val post = sets.select(col("id"), col("n"), explode(col("sh")).as("s"))
     val dfreq = CacheScope.cached(
       post.groupBy(col("s")).agg(count(lit(1)).as("df")))
-    val dfHint = sizedBroadcastHint(dfreq)
+    val dfHint = BroadcastGate.hint("prefix filter: dfreq", dfreq)
     // cached: the candidate self-join below reads the prefix TWICE, and
     // an uncached plan re-runs the whole shingle→df→rank pipeline per
     // side (measured in the x3 before-plan: the full prefix subtree
@@ -470,7 +430,8 @@ object Dedup {
       explode(col("sh")).as("s"))
     val dfreq = CacheScope.cached(
       post.groupBy(col("s")).agg(count(lit(1)).as("df")))
-    val dfHint = sizedBroadcastHint(dfreq)
+    val dfHint = BroadcastGate.hint("incremental prefix filter: dfreq",
+      dfreq)
     val prefix = prefixRanked(post.join(dfHint(dfreq), "s"), threshold,
       extra = Seq("isNew"))
     verifyJaccard(incrementalPrefixCands(prefix, threshold), sets,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CacheScope, CollectionManager}
+import graft.core.{BroadcastGate, CacheScope, CollectionManager}
 import graft.expressions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -176,7 +176,7 @@ final class DedupIndex private (
       Dedup.shingleSets(delta, idCol, textCol, k))
     val dPost = dSets.select(col("id"), col("n"), explode(col("sh")).as("s"))
     val dfreqC = CacheScope.cached(dfreq)
-    val dfHint = Dedup.sizedBroadcastHint(dfreqC)
+    val dfHint = BroadcastGate.hint("dedup-index query: dfreq", dfreqC)
     // delta shingles ranked under the SAME global order the corpus
     // prefix table was built with; unseen shingles coalesce to df 0
     val dPrefix = Dedup.prefixRanked(dPost
@@ -237,7 +237,7 @@ final class DedupIndex private (
       val dPost = dSets.select(col("id"), col("n"),
         explode(col("sh")).as("s"))
       val dfreqC = CacheScope.cached(dfreq)
-      val dfHint = Dedup.sizedBroadcastHint(dfreqC)
+      val dfHint = BroadcastGate.hint("dedup-index extend: dfreq", dfreqC)
       val dPrefix = Dedup.prefixRanked(dPost
         .join(dfHint(dfreqC), Seq("s"), "left")
         .withColumn("df", coalesce(col("df"), lit(0L))), threshold)
@@ -375,7 +375,7 @@ object DedupIndex {
     labeled(spark, "dedup-index build: dfreq") {
       mgr.collection(DfreqName).write(dfreq, SaveMode.Overwrite)
     }
-    val dfHint = Dedup.sizedBroadcastHint(dfreq)
+    val dfHint = BroadcastGate.hint("dedup-index build: dfreq", dfreq)
     val prefix = Dedup.prefixRanked(post.join(dfHint(dfreq), "s"),
       threshold)
     // the prefix and banded tables derive from already-materialized

@@ -253,17 +253,13 @@ object Mixing {
     * tiny size and load-bearing when a caller passes something bigger:
     * duplicate stratum rows are REJECTED loudly (the join would
     * otherwise fan each corpus row out once per duplicate — a silently
-    * wrong multiset, the worst failure class), and the join-back is
-    * broadcast only when the frame's MEASURED cached bytes fit
-    * `broadcastMaxBytes` (shuffle join above — the same measured gate
-    * as [[Bpe.encode]] / [[Curation.domainQuotaApprox]], insurance
-    * against a data-sized factor inventory OOMing the driver).
+    * wrong multiset, the worst failure class), and the join-back goes
+    * through [[graft.core.BroadcastGate]] (insurance against a
+    * data-sized factor inventory OOMing the driver).
     */
   def epochsPerStratumTable(df: DataFrame, stratumCol: String,
       idCol: String, factors: DataFrame, factorCol: String = "factor",
-      defaultFactor: Double = 1.0,
-      broadcastMaxBytes: Long = Dedup.VerifyBroadcastMaxBytes)
-      : DataFrame = {
+      defaultFactor: Double = 1.0): DataFrame = {
     require(defaultFactor >= 0 && defaultFactor < 1000,
       s"defaultFactor out of range: $defaultFactor")
     val full = BigInt(16).pow(8).toLong
@@ -274,16 +270,14 @@ object Mixing {
         floor((col("__r") - floor(col("__r"))) * lit(full.toDouble))
           .cast("long"))
       .drop("__r"))
-    val nRows = fBase.count() // also materializes the measured size
+    val nRows = fBase.count() // also materializes the gate's measurement
     val nStrata = fBase.select(col(stratumCol)).distinct().count()
     require(nRows == nStrata,
       s"factors has $nRows rows but only $nStrata distinct " +
         s"'$stratumCol' values — duplicate strata would silently " +
         "multiply their rows; aggregate to one factor per stratum first")
-    val f: DataFrame =
-      if (graft.core.Graft.estimatedBytes(fBase) <= broadcastMaxBytes)
-        broadcast(fBase)
-      else fBase
+    val f = graft.core.BroadcastGate.hint("epochsPerStratumTable: factors",
+      fBase)(fBase)
     val defBase = math.floor(defaultFactor).toLong
     val defThr = math.floor(
       (defaultFactor - math.floor(defaultFactor)) * full.toDouble).toLong

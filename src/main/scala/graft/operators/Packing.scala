@@ -420,7 +420,8 @@ object Packing {
         .withColumn("__end", sum(col("__cnt")).over(wHist))
         .select(col(strataCol), col("n_tokens"),
           (col("__end") - col("__cnt")).as("__start")))
-    val hint = Dedup.sizedBroadcastHint(offsets)
+    val hint = graft.core.BroadcastGate.hint("lengthGroupedBatches: offsets",
+      offsets)
     val tieRank = Window.partitionBy(col(strataCol), col("n_tokens"))
       .orderBy(col(idCol))
     val w2 = Window.partitionBy(col(strataCol), col("batch_id"))

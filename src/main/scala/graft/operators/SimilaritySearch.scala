@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.BroadcastGate
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -36,7 +37,7 @@ object SimilaritySearch {
     * (measured: x17 regressed 1.28× on the aggregate while the big
     * probed sets won 0.7–0.8×), and a window over a corpus this small
     * sorts trivially under one task. Callers pass MEASURED bytes
-    * ([[graft.core.Graft.estimatedBytes]] over a cached or
+    * ([[graft.core.BroadcastGate.estimatedBytes]] over a cached or
     * parquet-backed frame — a statistics read, no job), the engine's
     * broadcast-gate idiom; unknown sizes default to the aggregate,
     * the 100 TB-safe side.
@@ -461,7 +462,7 @@ object SimilaritySearch {
     // statistics read — the boundedTopK gate's input
     ivfScore(assignCells(c, "cv", cents), cents, nProbe, queries, idCol,
       vecCol, k, excludeSelf,
-      corpusBytesHint = Some(graft.core.Graft.estimatedBytes(c)))
+      corpusBytesHint = Some(BroadcastGate.estimatedBytes(c)))
   }
 
   /** Probe + exact-cosine scoring over an assigned (neighbor_id, cv,
@@ -610,7 +611,7 @@ object SimilaritySearch {
         normSq(col(vecCol)).as("nsq"),
         graft.expressions.GraftFunctions.hyperplaneBands(col(vecCol), bands,
           bitsPerBand).as("sig")))
-    val hint = Dedup.sizedBroadcastHint(v)
+    val hint = BroadcastGate.hint("cosineNearDupPairsLSH: vectors", v)
     val banded = v.select(col("id"), posexplode(col("sig")))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
     val cand = Dedup.cappedBucketPairs(banded, Seq("band", "bucket"),
@@ -862,7 +863,7 @@ object SimilaritySearch {
             org.apache.spark.sql.types.DoubleType))))
     val cells = assignCells(v, "v", cents).select(col("id"), col("cell"))
     val cand = Dedup.cappedBucketPairs(cells, Seq("cell"), cellCap)
-    val hint = Dedup.sizedBroadcastHint(v)
+    val hint = BroadcastGate.hint("semDedupPairs: vectors", v)
     cand
       .join(hint(v.select(col("id").as("id1"), col("v").as("v1"),
         col("nsq").as("n1"))), "id1")

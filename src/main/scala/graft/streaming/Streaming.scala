@@ -1451,17 +1451,18 @@ object Streaming {
     // concat and silently drop the doc) — they report n = size(null)
     // = -1, n_shared = 0, contaminated false, exactly like the batch
     // report's left-join path
-    // the static side rides the measured-bytes broadcast gate shared
-    // with the batch verify joins — an unconditional broadcast() would
-    // OOM on a training vocabulary of many GB, exactly the corpus size
-    // this screen targets; past the gate the stream-static join stays
-    // stateless either way (shuffled per micro-batch, no state store)
+    // the static side rides [[graft.core.BroadcastGate]] — an
+    // unconditional broadcast() would OOM on a training vocabulary of
+    // many GB, exactly the corpus size this screen targets; past the
+    // gate the stream-static join stays stateless either way (shuffled
+    // per micro-batch, no state store)
     val static = graft.core.CacheScope.cached(
       trainShingles.select(col("s"), lit(1).as("hit")))
+    val hint = graft.core.BroadcastGate.hint(
+      "contaminationStream: train shingles", static)
     exploded
       .withWatermark("ts", watermark)
-      .join(graft.operators.Dedup.sizedBroadcastHint(static)(static),
-        Seq("s"), "left")
+      .join(hint(static), Seq("s"), "left")
       .groupBy(window(col("ts"), windowDur), col("id"), col("n"))
       .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("n_shared"))
       .select(col("id"), col("n").cast("long").as("n_shingles"),

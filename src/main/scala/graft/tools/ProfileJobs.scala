@@ -53,9 +53,9 @@ object ProfileJobs {
       val t0 = System.nanoTime()
       val cnt = graft.SparkEntry.queries(n)(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // let the listener bus drain before reading (private API — a
-      // short sleep is enough for a dev tool)
-      Thread.sleep(300)
+      // every job's end event is delivered before the listener goes
+      org.apache.spark.graft.GraftSparkHooks
+        .drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"JOBS $n: total $wall%.2f s, rows $cnt, " +
         s"${jobs.size} jobs")

@@ -547,8 +547,7 @@ class BpeSpec extends SparkSpec {
 
     // a loaded artifact encodes to the SAME token ids
     val viaArtifact = Bpe.encodeIdsBytes(df, "id", "text", loadedMerges,
-        loadedVocab, graft.operators.Dedup.VerifyBroadcastMaxBytes,
-        graft.functions.TextFunctions.bpeBytePatternFull)
+        loadedVocab, graft.functions.TextFunctions.bpeBytePatternFull)
       .select(col("id"), col("token_ids")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
     val direct = Bpe.encodeIdsBytes(df, "id", "text", merges,
@@ -582,7 +581,6 @@ class BpeSpec extends SparkSpec {
     assert(m == Seq((1, "a", "b", "ab", 0L), (2, "ab", "c", "abc", 0L)))
     val df = Seq((1L, "abcabd")).toDF("id", "text")
     val ids = Bpe.encodeIdsBytes(df, "id", "text", m, v,
-        graft.operators.Dedup.VerifyBroadcastMaxBytes,
         graft.functions.TextFunctions.bpeTokenPattern)
       .select(col("token_ids")).head.getSeq[Long](0)
     // a b c a b d → (a b) → ab c ab d → (ab c) → abc ab d
@@ -623,7 +621,6 @@ class BpeSpec extends SparkSpec {
     // one pre-token): '###' → (# #)→(## #)→ one ### token
     val df = Seq((1L, "###")).toDF("id", "text")
     val ids = Bpe.encodeIdsBytes(df, "id", "text", m, v,
-        graft.operators.Dedup.VerifyBroadcastMaxBytes,
         graft.functions.TextFunctions.bpeBytePatternFull)
       .select(col("token_ids")).head.getSeq[Long](0)
     assert(ids == Seq(301L), ids.toString)
@@ -704,12 +701,10 @@ class BpeSpec extends SparkSpec {
       assert(tm == gm, s"merges differ (arrayMerges=$arrayMerges)")
       assert(tv == gv, s"vocab differs (arrayMerges=$arrayMerges)")
       val viaJson = Bpe.encodeIdsBytes(df, "id", "text", tm, tv,
-          graft.operators.Dedup.VerifyBroadcastMaxBytes,
           graft.functions.TextFunctions.bpeBytePatternFull)
         .select(col("id"), col("token_ids")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
       val viaPair = Bpe.encodeIdsBytes(df, "id", "text", gm, gv,
-          graft.operators.Dedup.VerifyBroadcastMaxBytes,
           graft.functions.TextFunctions.bpeBytePatternFull)
         .select(col("id"), col("token_ids")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
@@ -955,7 +950,6 @@ class BpeSpec extends SparkSpec {
           v, needsNfc, tokenPattern =
             graft.functions.TextFunctions.bpeBytePatternFull)
         else Bpe.encodeIdsBytes(df, "id", "text", m, v,
-          graft.operators.Dedup.VerifyBroadcastMaxBytes,
           graft.functions.TextFunctions.bpeBytePatternFull)
       out.select(col("token_ids")).head.getSeq[Long](0)
     }
@@ -998,12 +992,10 @@ class BpeSpec extends SparkSpec {
     assert(jv == gv, s"vocab round-trip broke: $jv")
     // cross-format encode parity on real text
     val viaJson = Bpe.encodeIdsBytes(df, "id", "text", jm, jv,
-        graft.operators.Dedup.VerifyBroadcastMaxBytes,
         graft.functions.TextFunctions.bpeBytePatternFull)
       .select(col("id"), col("token_ids")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
     val viaPair = Bpe.encodeIdsBytes(df, "id", "text", gm, gv,
-        graft.operators.Dedup.VerifyBroadcastMaxBytes,
         graft.functions.TextFunctions.bpeBytePatternFull)
       .select(col("id"), col("token_ids")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
@@ -1294,7 +1286,6 @@ class BpeSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val viaTuple = Bpe.encodeIdsBytes(corpus, "id", "text",
         plain.merges, plain.vocab,
-        graft.operators.Dedup.VerifyBroadcastMaxBytes,
         graft.functions.TextFunctions.bpeByteLevelGpt2Pattern)
       .collect().map(r => r.getLong(0) ->
         r.getSeq[Long](r.fieldIndex("token_ids"))).toMap

@@ -101,7 +101,7 @@ class CacheScopeSpec extends SparkSpec {
       spark.catalog.clearCache()
       val before = cachedIds
       val n = CacheScope.scoped {
-        graft.operators.ConnectedComponents.driverGate.withValue(gate) {
+        graft.core.BroadcastGate.forced.withValue(gate) {
           graft.operators.ConnectedComponents.clusters(pairs, "id1", "id2")
             .count()
         }

@@ -3,9 +3,9 @@ package graft
 import scala.collection.mutable
 import scala.util.Random
 
-import graft.core.Fixpoint
+import graft.core.{BroadcastGate, Fixpoint}
 import graft.operators.ConnectedComponents
-import org.apache.spark.ListenerBusAccess
+import org.apache.spark.graft.GraftSparkHooks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   private val Distributed = Some(0L)
 
   private def clusters(pairs: DataFrame, gate: Option[Long]): DataFrame =
-    ConnectedComponents.driverGate.withValue(gate) {
+    BroadcastGate.forced.withValue(gate) {
       ConnectedComponents.clusters(pairs, "id1", "id2")
     }
 
@@ -34,7 +34,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   /** Descriptions of the jobs `body` starts, in start order. */
   private def jobsOf[A](body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
-    ListenerBusAccess.drain(sc)
+    GraftSparkHooks.drainListenerBus(sc)
     val seen = mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -47,7 +47,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       val out = body
-      ListenerBusAccess.drain(sc)
+      GraftSparkHooks.drainListenerBus(sc)
       (out, seen.synchronized(seen.toList))
     } finally sc.removeSparkListener(listener)
   }
@@ -158,9 +158,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     val (_, small) = jobsOf(clusters(pairs, None))
     assert(small == Seq("clusters: driver"), small)
 
-    // over the gate (never collected, and collected past the bound):
-    // the counting filter sees every upstream row exactly once
-    for (gate <- Seq(Distributed, Some(2L))) {
+    // over the gate (never collected, and collected past the bound of
+    // two pairs at 128 B each): the counting filter sees every upstream
+    // row exactly once
+    for (gate <- Seq(Distributed, Some(256L))) {
       val acc = spark.sparkContext.longAccumulator
       val counted = udf((_: Long) => { acc.add(1); true }).asNondeterministic()
       val upstream = spark.range(0, 40, 1, 4).filter(counted(col("id")))

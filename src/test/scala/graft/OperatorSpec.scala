@@ -1376,7 +1376,7 @@ class OperatorSpec extends SparkSpec {
     assert(merges.nonEmpty)
     // (1) chunk ids ≡ sliding slices of the full per-doc id stream
     val fullIds = Bpe.encodeIdsBytes(docs, "doc_id", "text", merges,
-        Bpe.vocabBytes(merges), Long.MaxValue, full)
+        Bpe.vocabBytes(merges), full)
       .select(col("doc_id"), col("token_ids")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val win = Chunking.tokenWindowsBpe(docs, "doc_id", "text",

@@ -22,6 +22,10 @@ class PlanSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** `body` with every broadcast gate forced to its shuffle branch. */
+  private def shuffled[A](body: => A): A =
+    graft.core.BroadcastGate.forced.withValue(Some(0L))(body)
+
   /** Every physical node under `p`, looking through the AQE wrapper and
     * into cached relations.
     */
@@ -673,7 +677,7 @@ class PlanSpec extends SparkSpec {
       assert(nodes(pHinted, "BroadcastHashJoin") == 1,
         s"measured-small vocab did not broadcast:\n$pHinted")
       val pGated = plan(
-        Bpe.encode(docs, "doc_id", "text", merges, broadcastMaxBytes = 0L))
+        shuffled(Bpe.encode(docs, "doc_id", "text", merges)))
       assert(nodes(pGated, "BroadcastHashJoin") == 0,
         s"over-bound vocab still broadcast:\n$pGated")
       assert(nodes(pGated, "SortMergeJoin") +
@@ -723,8 +727,8 @@ class PlanSpec extends SparkSpec {
         df, "dom", "doc_id", 5))
       assert(nodes(pHinted, "BroadcastHashJoin") == 1,
         s"measured-small counts did not broadcast:\n$pHinted")
-      val pGated = plan(graft.operators.Curation.domainQuotaApprox(
-        df, "dom", "doc_id", 5, broadcastMaxBytes = 0L))
+      val pGated = plan(shuffled(graft.operators.Curation.domainQuotaApprox(
+        df, "dom", "doc_id", 5)))
       assert(nodes(pGated, "BroadcastHashJoin") == 0,
         s"over-bound counts still broadcast:\n$pGated")
       assert(nodes(pGated, "SortMergeJoin") +
@@ -733,8 +737,8 @@ class PlanSpec extends SparkSpec {
       val kept = graft.operators.Curation.domainQuotaApprox(
         df, "dom", "doc_id", 5)
         .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-      val keptGated = graft.operators.Curation.domainQuotaApprox(
-        df, "dom", "doc_id", 5, broadcastMaxBytes = 0L)
+      val keptGated = shuffled(graft.operators.Curation.domainQuotaApprox(
+        df, "dom", "doc_id", 5))
         .select(col("doc_id")).collect().map(_.getLong(0)).sorted
       assert(kept.toSeq == keptGated.toSeq)
     } finally
@@ -881,8 +885,8 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val pGated = plan(graft.operators.Curation.domainQuota(
-        df, "dom", "doc_id", 5, broadcastMaxBytes = 0L))
+      val pGated = plan(shuffled(graft.operators.Curation.domainQuota(
+        df, "dom", "doc_id", 5)))
       assert(nodes(pGated, "BroadcastHashJoin") == 0,
         s"over-bound thresholds still broadcast:\n$pGated")
       assert(nodes(pGated, "SortMergeJoin") +
@@ -919,18 +923,18 @@ class PlanSpec extends SparkSpec {
       val pHinted = plan(graft.operators.Curation.filterBlocklisted(
         df, "dom", bl))
       assert(nodes(pHinted, "BroadcastHashJoin") == 1, pHinted)
-      val pGated = plan(graft.operators.Curation.filterBlocklisted(
-        df, "dom", bl, broadcastMaxBytes = 0L))
+      val pGated = plan(shuffled(graft.operators.Curation.filterBlocklisted(
+        df, "dom", bl)))
       assert(nodes(pGated, "BroadcastHashJoin") == 0, pGated)
       val a = graft.operators.Curation.filterBlocklisted(df, "dom", bl)
         .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-      val b = graft.operators.Curation.filterBlocklisted(df, "dom", bl,
-          broadcastMaxBytes = 0L)
+      val b = shuffled(graft.operators.Curation.filterBlocklisted(df, "dom",
+          bl))
         .select(col("doc_id")).collect().map(_.getLong(0)).sorted
       assert(a.toSeq == b.toSeq)
       // the mark form agrees with the drop form either way
-      val kept = graft.operators.Curation.markBlocklisted(df, "dom", bl,
-          broadcastMaxBytes = 0L)
+      val kept = shuffled(graft.operators.Curation.markBlocklisted(df, "dom",
+          bl))
         .filter(col("kept")).select(col("doc_id")).collect()
         .map(_.getLong(0)).sorted
       assert(kept.toSeq == a.toSeq)
@@ -952,15 +956,15 @@ class PlanSpec extends SparkSpec {
       val pHinted = plan(graft.operators.Mixing.epochsPerStratumTable(
         df, "lang", "doc_id", ft))
       assert(nodes(pHinted, "BroadcastHashJoin") == 1, pHinted)
-      val pGated = plan(graft.operators.Mixing.epochsPerStratumTable(
-        df, "lang", "doc_id", ft, broadcastMaxBytes = 0L))
+      val pGated = plan(shuffled(graft.operators.Mixing.epochsPerStratumTable(
+        df, "lang", "doc_id", ft)))
       assert(nodes(pGated, "BroadcastHashJoin") == 0, pGated)
       val a = graft.operators.Mixing.epochsPerStratumTable(
         df, "lang", "doc_id", ft)
         .select(col("doc_id"), col("copy_idx")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted
-      val b = graft.operators.Mixing.epochsPerStratumTable(
-        df, "lang", "doc_id", ft, broadcastMaxBytes = 0L)
+      val b = shuffled(graft.operators.Mixing.epochsPerStratumTable(
+        df, "lang", "doc_id", ft))
         .select(col("doc_id"), col("copy_idx")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted
       assert(a.toSeq == b.toSeq)
