@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions.broadcast
   *
   * Contract:
   *  - a frame side is a CACHED frame, measured by [[fits]] / [[hint]]:
-  *    the cache is materialized (one count) only when its buffers are
-  *    not loaded yet, then its in-memory size is read — a cache a prior
-  *    action already loaded costs no job at all;
+  *    the cache is materialized (one job that only builds its buffers)
+  *    only when its buffers are not loaded yet, then its in-memory size
+  *    is read — a cache a prior action already loaded costs no job;
   *  - a side whose row count the caller already observed is measured
   *    as rows × bytes per row by [[rowsFit]], with no job;
   *  - every decision is logged once at INFO: site, measurement, gate
@@ -48,12 +48,16 @@ object BroadcastGate {
   private[graft] def estimatedBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** Whether the cached frame `df`'s measured size fits the gate. */
+  /** Whether the cached frame `df`'s measured size fits the gate. Each
+    * cache in its plan whose buffers are not loaded is built by one
+    * action over the cached batches: a `count()` would add its own
+    * aggregation stages on top.
+    */
   def fits(site: String, df: DataFrame): Boolean = {
-    val loaded = df.queryExecution.optimizedPlan.collectFirst {
-      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
-    }.getOrElse(false)
-    if (!loaded) df.count()
+    df.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.filterNot(_.isCachedColumnBuffersLoaded)
+      .foreach(_.cachedColumnBuffers.count())
     val bytes = estimatedBytes(df)
     decide(site, s"$bytes B measured", bytes <= maxBytes)
   }
@@ -73,8 +77,8 @@ object BroadcastGate {
   def maxRows(bytesPerRow: Long): Long = maxBytes / bytesPerRow
 
   /** Mean bytes per row of the materialized cache `df`: its measured
-    * size over its row count (from the cache's statistics, else one
-    * count over the loaded cache); `Long.MaxValue` when it is empty.
+    * size over its row count (from the loaded cache's statistics, else
+    * one count); `Long.MaxValue` when it is empty.
     */
   def rowBytes(df: DataFrame): Long = {
     val rows = df.queryExecution.optimizedPlan.stats.rowCount

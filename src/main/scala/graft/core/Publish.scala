@@ -25,8 +25,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
   * another process's live siblings look exactly like crash residue.
   *
   * Every overwrite of a collection is built on this ([[Collection]]'s
-  * `write` and `compact`, the graft-docs truncate commit); appends move
-  * files into the live directory one by one. Not built on this:
+  * `write` and `compact`, the graft-docs truncate commit), and so is
+  * every build and rebuild of a persisted index (`DedupIndex`,
+  * `PqIndex`, `IvfIndex`, `IvfPqIndex` stage their whole directory
+  * through `graft.operators.IndexRoot`); appends move files into the
+  * live directory one by one. Not built on this:
   * `TrainerShards.commitAttemptFile`, a task-level rename-first commit
   * between identical attempt twins.
   */

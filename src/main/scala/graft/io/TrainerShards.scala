@@ -298,6 +298,10 @@ object TrainerShards {
     * the loader-facing inventory, strata-count-sized; the first five
     * columns match [[write]]'s returned manifest frame name-for-name
     * so the two inventories are interchangeable.
+    * Readers do not run crash recovery: after a crash between a
+    * rewrite's retire and publish steps `dir` is absent beside its one
+    * `.old-` copy, and this refuses loudly until the next [[write]]
+    * recovers the set.
     */
   def readManifest(spark: SparkSession, dir: String): DataFrame = {
     val fs = new HPath(dir)
@@ -371,6 +375,10 @@ object TrainerShards {
     * written by a pre-checksum version refuses (no vacuous pass).
     * Returns the per-stratum verified frame (stratum, file,
     * tokens_md5, idx_md5) for callers who want the inventory.
+    * Readers do not run crash recovery: after a crash between a
+    * rewrite's retire and publish steps `dir` is absent beside its one
+    * `.old-` copy, and this refuses loudly (as [[readManifest]]) until
+    * the next [[write]] recovers the set.
     */
   def verifyManifest(spark: SparkSession, dir: String): DataFrame = {
     val m = readManifest(spark, dir)
@@ -595,6 +603,10 @@ object TrainerShards {
     * limit — the same bound the writer's
     * `targetRecordsPerFile`-less-but-stratum-sized shards should be
     * sized under; a real trainer mmaps instead.
+    * Readers do not run crash recovery: after a crash between a
+    * rewrite's retire and publish steps `dir` is absent beside its one
+    * `.old-` copy, and this refuses loudly until the next [[write]]
+    * recovers the set.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val tokens = spark.read.format("binaryFile")
@@ -1872,6 +1884,9 @@ object TrainerShards {
     * additionally re-checksums every level through [[verifyManifest]],
     * [[verifyEpochOrder]] and [[verifyBlendSchedule]]. Returns
     * (epoch, seed, first_run_step, total_steps).
+    * Readers do not run crash recovery: a crash inside a publish's
+    * `_RUN.json` swap leaves no `_RUN.json`, and this refuses loudly
+    * until the next publish recovers it.
     */
   def verifyRun(spark: SparkSession, dir: String,
       deep: Boolean = false): DataFrame = {
@@ -2000,6 +2015,9 @@ object TrainerShards {
     * through its epoch's `.ord` permutation (wraparound included) to
     * its sequence bytes, as `(run_step, epoch, global_step, stratum,
     * rank, pos, token_ids)`. Order by `run_step` to consume.
+    * Readers do not run crash recovery: a crash inside a publish's
+    * `_RUN.json` swap leaves no `_RUN.json`, and this refuses loudly
+    * until the next publish recovers it.
     */
   def readInRunOrder(spark: SparkSession, dir: String,
       afterStep: Long = 0L): DataFrame = {

@@ -5,6 +5,8 @@ import graft.functions.VectorFunctions._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType,
+  StructField, StructType}
 
 /** PERSISTED ANN indexes — encode once, store, query many. The inline
   * forms ([[SimilaritySearch.pqTopK]] / [[SimilaritySearch.ivfTopK]])
@@ -28,11 +30,15 @@ import org.apache.spark.sql.functions._
   * PqIndex would decode re-encoded codes with old codebooks (silently
   * wrong similarities), a stale IvfIndex would compute probe sets from
   * old centroids against re-partitioned cells (silent recall loss).
-  * Every build/rebuild therefore rotates an epoch marker file
+  * Every build/rebuild therefore publishes a fresh epoch marker file
   * (`.epoch-<uuid>` at the index root) and every verb verifies the
-  * handle's epoch against it — one filesystem listing, piggybacked on
-  * the crash-marker check — failing LOUDLY on a mismatch instead of
-  * returning silently wrong answers.
+  * handle's epoch against it — one filesystem listing after crash
+  * recovery — failing LOUDLY on a mismatch instead of returning
+  * silently wrong answers.
+  *
+  * Lifecycle: build and rebuild write the whole index directory into a
+  * staging root and swap it in ([[IndexRoot.publish]]), so a failed or
+  * crashed (re)build leaves the previous index or the new one loadable.
   */
 object AnnIndex {
   private[operators] val MetaName = "meta"
@@ -41,52 +47,20 @@ object AnnIndex {
   private[operators] val CentroidsName = "centroids"
   private[operators] val CellsName = "cells"
   private[operators] val StatsName = "build_stats"
-  private[operators] val StagingVecsName = "vecs_rebuild"
-  private[operators] val RebuildPendingPrefix =
-    IndexMarkers.RebuildPendingPrefix
   private[operators] val EpochPrefix = ".epoch-"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The epochs stored at the index root, read after crash recovery. */
+  private def storedEpochs(spark: SparkSession, path: String): Seq[String] =
+    IndexRoot.liveNames(spark, path).filter(_.startsWith(EpochPrefix))
+      .map(_.stripPrefix(EpochPrefix))
 
-  private def rootNames(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val root = new HPath(path)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).map(_.getPath.getName).toSeq
-  }
-
-  private def refusePending(names: Seq[String], path: String): Unit = {
-    val stuck = names.filter(_.startsWith(RebuildPendingPrefix))
-    require(stuck.isEmpty,
-      s"ANN index at $path has ${stuck.length} incomplete rebuild(s) — " +
-        "its collections may mix pre- and post-rebuild state. Re-run " +
-        "rebuild (or rebuild from the corpus), then remove: " +
-        stuck.mkString(", "))
-  }
-
-  /** Refuse an index whose build/rebuild crashed mid-way: the stored
-    * collections are then a silent mix of pre- and post-write state.
-    * One FS list; same loud-refusal contract as
-    * [[DedupIndex.checkPending]]. Used at [[PqIndex.load]] /
-    * [[IvfIndex.load]], before a handle (and its epoch) exists.
-    */
-  private[operators] def checkPending(spark: SparkSession,
-      path: String): Unit =
-    refusePending(rootNames(spark, path), path)
-
-  /** The per-verb guard: crash-marker check PLUS handle-epoch check,
-    * one filesystem listing total. A pending marker refuses first (a
-    * mid-crash index has no trustworthy epoch); then the handle's
-    * epoch must match the stored `.epoch-*` marker or the handle is
-    * STALE — the index was rebuilt under it.
+  /** The per-verb guard: crash recovery, then the handle's epoch must
+    * match the stored `.epoch-*` marker or the handle is STALE — the
+    * index was rebuilt under it.
     */
   private[operators] def checkLive(spark: SparkSession, path: String,
       epoch: String): Unit = {
-    val names = rootNames(spark, path)
-    refusePending(names, path)
-    val stored = names.filter(_.startsWith(EpochPrefix))
-      .map(_.stripPrefix(EpochPrefix))
+    val stored = storedEpochs(spark, path)
     require(stored.contains(epoch),
       s"stale index handle for $path: handle epoch $epoch, stored " +
         s"epoch ${stored.mkString(",")} — the index was rebuilt, so " +
@@ -94,43 +68,115 @@ object AnnIndex {
         "the stored collections; reload the index")
   }
 
-  /** Read the stored epoch at load time (exactly one must exist). */
+  /** The same guard at load time, before a handle exists: exactly one
+    * epoch must be stored.
+    */
   private[operators] def readEpoch(spark: SparkSession,
       path: String): String = {
-    val stored = rootNames(spark, path).filter(_.startsWith(EpochPrefix))
-      .map(_.stripPrefix(EpochPrefix))
+    val stored = storedEpochs(spark, path)
     require(stored.length == 1,
-      s"index at $path carries ${stored.length} epoch markers — " +
-        "incomplete build or manual tampering; rebuild the index")
+      s"index at $path carries ${stored.length} epoch markers — not a " +
+        "built index, or manual tampering; rebuild the index")
     stored.head
   }
 
-  /** Rotate the epoch marker — the LAST write of a successful
-    * build/rebuild (before its pending marker is cleared).
+  /** Build or rebuild the ANN index at `path` by stage-and-swap
+    * ([[IndexRoot.publish]]): `fill` writes the kind's collections into
+    * the fresh root, the meta row and a new epoch marker complete it,
+    * and the swap puts it in place. Returns the new epoch; every older
+    * handle at `path` is stale from then on.
     */
-  private[operators] def writeEpoch(spark: SparkSession,
-      path: String): String = {
-    val fs = fsOf(spark, path)
-    val root = new HPath(path)
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(EpochPrefix))
-      .foreach(f => fs.delete(f.getPath, false))
-    val e = java.util.UUID.randomUUID().toString
-    fs.create(new HPath(root, EpochPrefix + e)).close()
-    e
+  private[operators] def publish(spark: SparkSession, path: String,
+      kind: String, p1: Int, p2: Int)(fill: CollectionManager => Unit)
+      : String = IndexRoot.publish(spark, path) { root =>
+    import spark.implicits._
+    val mgr = new CollectionManager(spark, root)
+    fill(mgr)
+    mgr.collection(MetaName).write(
+      Seq((kind, p1, p2)).toDF("kind", "p1", "p2"), SaveMode.ErrorIfExists)
+    val epoch = java.util.UUID.randomUUID().toString
+    val marker = new HPath(root, EpochPrefix + epoch)
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(marker).close()
+    epoch
   }
 
-  private[operators] def createPending(spark: SparkSession,
-      path: String): HPath = IndexMarkers.createPending(spark, path)
+  private val VecType = ArrayType(FloatType, containsNull = false)
 
-  private[operators] def clearPending(spark: SparkSession,
-      path: String): Unit = IndexMarkers.clearPending(spark, path)
+  /** The tiny (cell, vec) centroid frame — shared by the IVF builds'
+    * writes and the drift audit's distance join.
+    */
+  private[operators] def centroidsDf(spark: SparkSession,
+      cents: Seq[Seq[Float]]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        cents.zipWithIndex.map { case (v, i) => Row(i, v) }, 1),
+      StructType(Seq(StructField("cell", IntegerType, nullable = false),
+        StructField("vec", VecType, nullable = false))))
 
-  private[operators] def writeMeta(mgr: CollectionManager,
-      spark: SparkSession, kind: String, a: Int, b: Int): Unit = {
-    import spark.implicits._
-    mgr.collection(MetaName).write(
-      Seq((kind, a, b)).toDF("kind", "p1", "p2"), SaveMode.Overwrite)
+  /** The (subspace, cidx, vec) codebook table the PQ builds store. */
+  private[operators] def codebooksDf(spark: SparkSession,
+      codebooks: IndexedSeq[Seq[Seq[Float]]]): DataFrame = {
+    val rows = for {
+      s <- codebooks.indices
+      (cent, ci) <- codebooks(s).zipWithIndex
+    } yield Row(s, ci, cent)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("subspace", IntegerType, nullable = false),
+        StructField("cidx", IntegerType, nullable = false),
+        StructField("vec", VecType, nullable = false))))
+  }
+
+  /** The stored codebook table regrouped per subspace, the inverse of
+    * [[codebooksDf]].
+    */
+  private[operators] def readCodebooks(mgr: CollectionManager, path: String,
+      numSubspaces: Int): IndexedSeq[Seq[Seq[Float]]] = {
+    val cb = mgr.collection(CodebooksName).read()
+      .orderBy(col("subspace"), col("cidx")).collect()
+    val codebooks = (0 until numSubspaces).map { s =>
+      cb.filter(_.getInt(0) == s).map(_.getSeq[Float](2)).toSeq
+    }
+    require(codebooks.forall(_.nonEmpty), s"empty codebook in $path")
+    codebooks
+  }
+
+  /** Per-subspace (subspace, n, mean_err_sq) over a codes frame's
+    * encode errors `qerrs`: the PQ drift baseline a build stores, and
+    * today's side of [[pqDriftReport]].
+    */
+  private[operators] def errorStats(codes: DataFrame): DataFrame =
+    codes.select(posexplode(col("qerrs")).as(Seq("subspace", "e")))
+      .groupBy(col("subspace"))
+      .agg(count(lit(1)).as("n"), avg(col("e")).as("mean_err_sq"))
+
+  /** The stored drift baseline; refuses an index built before it. */
+  private[operators] def buildStats(mgr: CollectionManager,
+      path: String): DataFrame = {
+    val statsC = mgr.collection(StatsName)
+    require(statsC.exists(),
+      s"index at $path predates drift statistics — rebuild() once to " +
+        "record the baseline")
+    statsC.read()
+  }
+
+  /** The PQ drift audit of [[PqIndex.driftReport]] and
+    * [[IvfPqIndex.driftReport]]: per subspace, the build-time mean
+    * squared encode error against the same statistic over the `live`
+    * codes. Columns: (subspace, mean_err_sq_build, n_now,
+    * mean_err_sq_now, err_ratio).
+    */
+  private[operators] def pqDriftReport(mgr: CollectionManager, path: String,
+      live: DataFrame): DataFrame = {
+    val base = buildStats(mgr, path).select(col("subspace"),
+      col("mean_err_sq").as("mean_err_sq_build"))
+    val now = errorStats(live).select(col("subspace"),
+      col("n").as("n_now"), col("mean_err_sq").as("mean_err_sq_now"))
+    base.join(now, Seq("subspace"), "full_outer")
+      .withColumn("err_ratio",
+        when(col("mean_err_sq_build") > 0,
+          col("mean_err_sq_now") / col("mean_err_sq_build")))
+      .orderBy(col("subspace"))
   }
 
   /** Loud dimension guard for the extend paths: the encode/assign
@@ -232,22 +278,7 @@ final class PqIndex private (
     */
   def driftReport(): DataFrame = {
     checkLive()
-    val statsC = mgr.collection(AnnIndex.StatsName)
-    require(statsC.exists(),
-      s"index at $path predates drift statistics — rebuild() once to " +
-        "record the baseline")
-    val base = statsC.read().select(col("subspace"),
-      col("mean_err_sq").as("mean_err_sq_build"))
-    val now = codes
-      .select(posexplode(col("qerrs")).as(Seq("subspace", "e")))
-      .groupBy(col("subspace"))
-      .agg(count(lit(1)).as("n_now"),
-        avg(col("e")).as("mean_err_sq_now"))
-    base.join(now, Seq("subspace"), "full_outer")
-      .withColumn("err_ratio",
-        when(col("mean_err_sq_build") > 0,
-          col("mean_err_sq_now") / col("mean_err_sq_build")))
-      .orderBy(col("subspace"))
+    AnnIndex.pqDriftReport(mgr, path, codes)
   }
 
   /** COMPACT the stored codes (and tombstones) into few large files —
@@ -260,10 +291,8 @@ final class PqIndex private (
     */
   def compact(targetRecordsPerFile: Long = 1 << 20): (Int, Int) = {
     checkLive()
-    val counts = Seq(AnnIndex.CodesName, "tombstones")
-      .map(mgr.collection(_)).filter(_.exists())
-      .map(_.compact(targetRecordsPerFile))
-    (counts.map(_._1).sum, counts.map(_._2).sum)
+    IndexRoot.compact(spark, path, Seq(AnnIndex.CodesName),
+      targetRecordsPerFile)
   }
 
   /** REBUILD from the current corpus: PQ codes are lossy (the original
@@ -339,64 +368,36 @@ object PqIndex {
   /** Train codebooks (sample-trainable, deterministic — identical to
     * the inline [[SimilaritySearch.pqTopK]] training), encode the
     * corpus in one map pass, and persist (codebooks, codes + encode
-    * errors, drift baseline, meta) under `path`. The multi-collection
-    * overwrite is crash-bracketed with a `.rebuild-pending-*` marker
-    * (a crash between the writes would otherwise leave new codes under
-    * old codebooks — silently wrong distances forever), and a
-    * successful build rotates the epoch marker, staling any older
-    * handle at this path. Every cache the build creates is released
-    * before it returns. Returns None for an empty corpus (nothing to
-    * index, nothing written).
+    * errors, drift baseline, meta) under `path` by stage-and-swap
+    * ([[AnnIndex.publish]]): a failed or crashed build leaves the
+    * previous index or the new one, never new codes under old
+    * codebooks. The new epoch stales any older handle at this path.
+    * Every cache the build creates is released before it returns.
+    * Returns None for an empty corpus (nothing to index, nothing
+    * written).
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       numSubspaces: Int = 8, nCentroids: Int = 16, kmeansIters: Int = 2,
       trainFraction: Double = 1.0, path: String): Option[PqIndex] = {
     val spark = corpus.sparkSession
-    val mgr = new CollectionManager(spark, path)
     CacheScope.scoped {
       val c = CacheScope.cached(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
           normSq(col(vecCol)).as("cn")))
       SimilaritySearch.pqTrainEncode(c, numSubspaces, nCentroids,
-          kmeansIters, trainFraction) match {
-        case None => None
-        case Some((dim, codebooks, _)) =>
-          val sub = dim / numSubspaces
-          AnnIndex.createPending(spark, path)
-          val codes = encodeWithErrors(c, codebooks, numSubspaces, sub)
+          kmeansIters, trainFraction).map { case (dim, codebooks, _) =>
+        val epoch = AnnIndex.publish(spark, path, "pq", numSubspaces,
+            nCentroids) { mgr =>
+          val codes = encodeWithErrors(c, codebooks, numSubspaces,
+            dim / numSubspaces)
           mgr.collection(AnnIndex.CodesName).write(codes,
-            SaveMode.Overwrite)
-          // drift baseline: mean per-subspace encode error at build
+            SaveMode.ErrorIfExists)
           mgr.collection(AnnIndex.StatsName).write(
-            codes.select(posexplode(col("qerrs")).as(Seq("subspace", "e")))
-              .groupBy(col("subspace"))
-              .agg(count(lit(1)).as("n"), avg(col("e")).as("mean_err_sq")),
-            SaveMode.Overwrite)
-          val cbRows = for {
-            s <- codebooks.indices
-            (cent, ci) <- codebooks(s).zipWithIndex
-          } yield Row(s, ci, cent)
+            AnnIndex.errorStats(codes), SaveMode.ErrorIfExists)
           mgr.collection(AnnIndex.CodebooksName).write(
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(cbRows, 1),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("subspace",
-                  org.apache.spark.sql.types.IntegerType, nullable = false),
-                org.apache.spark.sql.types.StructField("cidx",
-                  org.apache.spark.sql.types.IntegerType, nullable = false),
-                org.apache.spark.sql.types.StructField("vec",
-                  org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.FloatType,
-                    containsNull = false), nullable = false)))),
-            SaveMode.Overwrite)
-          AnnIndex.writeMeta(mgr, spark, "pq", numSubspaces, nCentroids)
-          // a fresh build IS the surviving corpus — stale tombstones
-          // from a previous index here must not keep hiding vectors
-          mgr.collection("tombstones").drop()
-          val epoch = AnnIndex.writeEpoch(spark, path)
-          AnnIndex.clearPending(spark, path)
-          Some(new PqIndex(spark, path, numSubspaces, nCentroids,
-            codebooks, epoch))
+            AnnIndex.codebooksDf(spark, codebooks), SaveMode.ErrorIfExists)
+        }
+        new PqIndex(spark, path, numSubspaces, nCentroids, codebooks, epoch)
       }
     }
   }
@@ -405,17 +406,11 @@ object PqIndex {
     * read; the codes collection stays on disk until queried.
     */
   def load(spark: SparkSession, path: String): PqIndex = {
-    AnnIndex.checkPending(spark, path)
     val epoch = AnnIndex.readEpoch(spark, path)
     val mgr = new CollectionManager(spark, path)
     val (numSubspaces, nCentroids) = AnnIndex.readMeta(mgr, path, "pq")
-    val cb = mgr.collection(AnnIndex.CodebooksName).read()
-      .orderBy(col("subspace"), col("cidx")).collect()
-    val codebooks = (0 until numSubspaces).map { s =>
-      cb.filter(_.getInt(0) == s).map(_.getSeq[Float](2)).toSeq
-    }
-    require(codebooks.forall(_.nonEmpty), s"empty codebook in $path")
-    new PqIndex(spark, path, numSubspaces, nCentroids, codebooks, epoch)
+    new PqIndex(spark, path, numSubspaces, nCentroids,
+      AnnIndex.readCodebooks(mgr, path, numSubspaces), epoch)
   }
 }
 
@@ -436,11 +431,11 @@ final class IvfIndex private (
   private def mgr = new CollectionManager(spark, path)
   private val tomb = new TombstoneStore(spark, path, "neighbor_id")
 
-  /** Crash-marker + handle-epoch check, exposed for the streaming
-    * layer (it refuses a mid-rebuild or stale index at stream
-    * construction, like indexDedupStream).
+  /** Crash recovery + handle-epoch check, exposed for the streaming
+    * layer (it refuses a stale index at stream construction, like
+    * indexDedupStream).
     */
-  private[graft] def checkPending(): Unit =
+  private[graft] def checkLive(): Unit =
     AnnIndex.checkLive(spark, path, epoch)
 
   /** (neighbor_id, cv, cn, cell) — the stored LIVE assigned corpus
@@ -462,7 +457,7 @@ final class IvfIndex private (
     * physical rows persist until [[rebuild]] compacts them away.
     */
   def delete(ids: DataFrame, idCol: String): Unit = {
-    checkPending()
+    checkLive()
     tomb.append(ids, idCol)
   }
 
@@ -474,7 +469,7 @@ final class IvfIndex private (
     */
   def topK(queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    checkPending()
+    checkLive()
     // tiny driver-side probe-set computation (queries are the bounded
     // side by the ANN contract) -> a LITERAL isin partition filter the
     // parquet source prunes directories with
@@ -496,7 +491,7 @@ final class IvfIndex private (
     * stay unique across the original corpus and every extension.
     */
   def extend(delta: DataFrame, idCol: String, vecCol: String): Unit = {
-    checkPending()
+    checkLive()
     tomb.refuse(delta, idCol, "rebuild")
     AnnIndex.requireDim(delta, vecCol, centroids.head.length)
     mgr.collection(AnnIndex.CellsName).write(
@@ -518,11 +513,9 @@ final class IvfIndex private (
     * writer or reader. Returns (filesBefore, filesAfter).
     */
   def compact(targetRecordsPerFile: Long = 1 << 20): (Int, Int) = {
-    checkPending()
-    val counts = Seq(AnnIndex.CellsName, "tombstones")
-      .map(mgr.collection(_)).filter(_.exists())
-      .map(_.compact(targetRecordsPerFile))
-    (counts.map(_._1).sum, counts.map(_._2).sum)
+    checkLive()
+    IndexRoot.compact(spark, path, Seq(AnnIndex.CellsName),
+      targetRecordsPerFile)
   }
 
   /** DRIFT AUDIT — the cheap measurement that tells the operator WHEN
@@ -544,12 +537,8 @@ final class IvfIndex private (
     * max/mean size_ratio skew passes ~4.
     */
   def driftReport(): DataFrame = {
-    checkPending()
-    val statsC = mgr.collection(AnnIndex.StatsName)
-    require(statsC.exists(),
-      s"index at $path predates drift statistics — rebuild() once to " +
-        "record the baseline")
-    val base = statsC.read().select(col("cell"),
+    checkLive()
+    val base = AnnIndex.buildStats(mgr, path).select(col("cell"),
       col("n").as("n_build"),
       col("mean_dist_sq").as("mean_dist_sq_build"))
     val now = IvfIndex.cellStats(cells, centroids).select(col("cell"),
@@ -571,44 +560,23 @@ final class IvfIndex private (
     * quantizer under today's distribution, reassign, rewrite, refresh
     * the drift baseline, and clear tombstones — restoring the balanced
     * cells and probe recall that [[extend]]'s frozen centroids erode.
-    * Survivors are staged to a sibling collection first and the whole
-    * rewrite is bracketed by a `.rebuild-pending-*` marker: a crash
-    * mid-rebuild is a loud refusal on the next access, never a silent
-    * mix of old and new cells. The rebuild rotates the stored epoch,
-    * so THIS handle is stale afterwards — use the returned index.
+    * The survivors are read from the live index while the new one is
+    * staged, and the swap publishes it whole (see [[IvfIndex.build]]):
+    * a crashed rebuild leaves this index or the rebuilt one. The
+    * rebuild publishes a new epoch, so THIS handle is stale afterwards
+    * — use the returned index.
     */
   def rebuild(kmeansIters: Int = 2, trainFraction: Double = 1.0)
       : IvfIndex = {
-    checkPending()
-    // refuse a degenerate rebuild BEFORE the crash bracket: failing
-    // past the marker would strand it and lock the index for nothing
+    checkLive()
     require(!cells.limit(1).isEmpty,
       s"rebuild of $path found no surviving vectors (everything " +
         "tombstoned) — drop the index instead")
-    val marker = AnnIndex.createPending(spark, path)
-    val fs = new HPath(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     CacheScope.scoped {
-      val staging = mgr.collection(AnnIndex.StagingVecsName)
-      staging.write(cells.select(col("neighbor_id"), col("cv"), col("cn")),
-        SaveMode.Overwrite)
-      val c = CacheScope.cached(staging.read())
-      val cents = SimilaritySearch.trainCentroids(c, "neighbor_id", "cv",
-        nCells, kmeansIters, trainFraction)
-      assert(cents.nonEmpty) // guarded above; keep the invariant loud
-      val assigned = SimilaritySearch.assignCells(c, "cv", cents)
-      mgr.collection(AnnIndex.CellsName).write(assigned,
-        SaveMode.Overwrite, partitionBy = Seq("cell"))
-      mgr.collection(AnnIndex.CentroidsName).write(
-        IvfIndex.centroidsDf(spark, cents), SaveMode.Overwrite)
-      mgr.collection(AnnIndex.StatsName).write(
-        IvfIndex.cellStats(assigned, cents), SaveMode.Overwrite)
-      AnnIndex.writeMeta(mgr, spark, "ivf", cents.length, 0)
-      staging.drop()
-      mgr.collection("tombstones").drop()
-      val newEpoch = AnnIndex.writeEpoch(spark, path)
-      fs.delete(marker, false)
-      new IvfIndex(spark, path, cents.length, cents, newEpoch)
+      IvfIndex.buildFrom(
+        CacheScope.cached(cells.select(col("neighbor_id"), col("cv"),
+          col("cn"))),
+        nCells, kmeansIters, trainFraction, path).get
     }
   }
 }
@@ -618,61 +586,44 @@ object IvfIndex {
   /** Train the coarse quantizer (sample-trainable, identical to the
     * inline [[SimilaritySearch.ivfTopK]] training), assign cells in
     * one map pass, and persist (centroids, cells partitioned-by-cell,
-    * drift baseline, meta) under `path`. The multi-collection
-    * overwrite is crash-bracketed and a successful build rotates the
-    * epoch marker (see [[PqIndex.build]]). Returns None for an empty
-    * corpus.
+    * drift baseline, meta) under `path` by stage-and-swap (see
+    * [[PqIndex.build]]). Returns None for an empty corpus.
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, kmeansIters: Int = 2, trainFraction: Double = 1.0,
-      path: String): Option[IvfIndex] = {
-    val spark = corpus.sparkSession
-    val mgr = new CollectionManager(spark, path)
+      path: String): Option[IvfIndex] =
     CacheScope.scoped {
-      val c = CacheScope.cached(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          normSq(col(vecCol)).as("cn")))
-      val cents = SimilaritySearch.trainCentroids(c, "neighbor_id", "cv",
-        nCells, kmeansIters, trainFraction)
-      if (cents.isEmpty) None
-      else {
-        AnnIndex.createPending(spark, path)
+      buildFrom(
+        CacheScope.cached(corpus.select(col(idCol).as("neighbor_id"),
+          col(vecCol).as("cv"), normSq(col(vecCol)).as("cn"))),
+        nCells, kmeansIters, trainFraction, path)
+    }
+
+  /** [[build]] and [[IvfIndex.rebuild]] over the cached (neighbor_id,
+    * cv, cn) frame `c`.
+    */
+  private def buildFrom(c: DataFrame, nCells: Int, kmeansIters: Int,
+      trainFraction: Double, path: String): Option[IvfIndex] = {
+    val spark = c.sparkSession
+    val cents = SimilaritySearch.trainCentroids(c, "neighbor_id", "cv",
+      nCells, kmeansIters, trainFraction)
+    if (cents.isEmpty) None
+    else {
+      val epoch = AnnIndex.publish(spark, path, "ivf", cents.length, 0) {
+          mgr =>
         val assigned = SimilaritySearch.assignCells(c, "cv", cents)
         mgr.collection(AnnIndex.CellsName).write(assigned,
-          SaveMode.Overwrite, partitionBy = Seq("cell"))
+          SaveMode.ErrorIfExists, partitionBy = Seq("cell"))
         mgr.collection(AnnIndex.CentroidsName).write(
-          centroidsDf(spark, cents), SaveMode.Overwrite)
+          AnnIndex.centroidsDf(spark, cents), SaveMode.ErrorIfExists)
         // the drift baseline driftReport() compares against: per-cell
         // member count and mean squared assignment distance at build
         mgr.collection(AnnIndex.StatsName).write(
-          cellStats(assigned, cents), SaveMode.Overwrite)
-        AnnIndex.writeMeta(mgr, spark, "ivf", cents.length, 0)
-        // a fresh build IS the surviving corpus — stale tombstones
-        // from a previous index here must not keep hiding vectors
-        mgr.collection("tombstones").drop()
-        mgr.collection(AnnIndex.StagingVecsName).drop()
-        val epoch = AnnIndex.writeEpoch(spark, path)
-        AnnIndex.clearPending(spark, path)
-        Some(new IvfIndex(spark, path, cents.length, cents, epoch))
+          cellStats(assigned, cents), SaveMode.ErrorIfExists)
       }
+      Some(new IvfIndex(spark, path, cents.length, cents, epoch))
     }
   }
-
-  /** The tiny (cell, vec) centroid frame — shared by build/rebuild
-    * writes and the drift audit's distance join.
-    */
-  private[operators] def centroidsDf(spark: SparkSession,
-      cents: Seq[Seq[Float]]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cents.zipWithIndex.map { case (v, i) => Row(i, v) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("vec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType,
-            containsNull = false), nullable = false))))
 
   /** Per-cell (cell, n, mean_dist_sq) over an assigned (cv, cell)
     * frame: one broadcast join against the nCells-row centroid table +
@@ -682,7 +633,7 @@ object IvfIndex {
   private[operators] def cellStats(assigned: DataFrame,
       cents: Seq[Seq[Float]]): DataFrame =
     assigned
-      .join(broadcast(centroidsDf(assigned.sparkSession, cents)),
+      .join(broadcast(AnnIndex.centroidsDf(assigned.sparkSession, cents)),
         Seq("cell"))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"),
@@ -690,7 +641,6 @@ object IvfIndex {
 
   /** Open an index previously written by [[build]]. */
   def load(spark: SparkSession, path: String): IvfIndex = {
-    AnnIndex.checkPending(spark, path)
     val epoch = AnnIndex.readEpoch(spark, path)
     val mgr = new CollectionManager(spark, path)
     val (nCells, _) = AnnIndex.readMeta(mgr, path, "ivf")

@@ -384,18 +384,6 @@ object Bpe extends TokenizerSurface {
     hist.withColumn("syms", regexp_replace(col("syms"),
       s"(?<= )${q(l)} ${q(r)}(?= )", qr(l + r)))
 
-  /** Encode a corpus with a trained merge table: every row gets
-    * `tokens` (the word's subword symbols, in order, words
-    * concatenated) and `n_tokens`. Distinct words are encoded once by
-    * folding the ranked merges into a chain of regexp passes over the
-    * padded symbol form, then joined back onto the exploded corpus —
-    * per-document work is a join probe, so encoding cost scales with
-    * corpus size + vocab size, never their product.
-    *
-    * The encoded distinct-word table is cached and joined back through
-    * [[graft.core.BroadcastGate]] — at web-corpus distinct-word counts
-    * (10⁷–10⁸ rows) an unconditional broadcast is a driver OOM.
-    */
   /** Token-id vocabulary for a trained merge table: id 0 is the
     * reserved `<unk>`, ids 1..B are the training corpus's distinct
     * single-character base symbols in code-point-string sort order,
@@ -434,6 +422,18 @@ object Bpe extends TokenizerSurface {
       .withColumn("token_ids", graft.expressions.GraftFunctions
         .tokenIds(col("tokens"), vocabTable, unkId = 0L))
 
+  /** Encode a corpus with a trained merge table: every row gets
+    * `tokens` (the word's subword symbols, in order, words
+    * concatenated) and `n_tokens`. Distinct words are encoded once by
+    * folding the ranked merges into a chain of regexp passes over the
+    * padded symbol form, then joined back onto the exploded corpus —
+    * per-document work is a join probe, so encoding cost scales with
+    * corpus size + vocab size, never their product.
+    *
+    * The encoded distinct-word table is cached and joined back through
+    * [[graft.core.BroadcastGate]] — at web-corpus distinct-word counts
+    * (10⁷–10⁸ rows) an unconditional broadcast is a driver OOM.
+    */
   def encode(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(Int, String, String, String, Long)]): DataFrame =
     encodeWith(df, idCol, textCol, merges, w => charPad(w))

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * stores it as parquet collections (the engine's own
   * [[graft.core.Collection]] layout — crash-recovered, compactable,
   * object-store addressable), and every subsequent delta batch reads
-  * only the index, never the corpus source.
+  * only the index, never the corpus source. Build and rebuild publish
+  * the whole index directory by stage-and-swap ([[IndexRoot.publish]]),
+  * so a crash leaves the previous index or the new one.
   *
   * Stored collections under `path`:
   *  - `sets`   (id, sh, n)        — shingle sets, the verification side
@@ -76,32 +78,8 @@ final class DedupIndex private (
   private def fs = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** [[extend]] appends to THREE collections and [[rebuild]] rewrites
-    * five; a crash mid-way would leave them mutually inconsistent —
-    * documents present for verification but absent from candidate
-    * generation, i.e. silently missed duplicates forever. Both
-    * therefore bracket their writes with a marker file, and every
-    * query/extend/rebuild/load refuses a marked index LOUDLY instead
-    * of returning silently-incomplete answers.
-    */
-  private[graft] def checkPending(): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) return
-    val stuck = fs.listStatus(root)
-      .filter { f =>
-        val n = f.getPath.getName
-        n.startsWith(DedupIndex.PendingPrefix) ||
-          n.startsWith(DedupIndex.RebuildPendingPrefix)
-      }
-    require(stuck.isEmpty,
-      s"dedup index at $path has ${stuck.length} incomplete " +
-        "operation(s) — a crash interrupted extend() or rebuild() " +
-        "between its collection writes, so the stored state is " +
-        "mutually inconsistent (silently missing pairs). Rebuild with " +
-        "DedupIndex.build (or re-run the failed operation on a " +
-        "restored copy), then remove: " +
-        stuck.map(_.getPath.getName).mkString(", "))
-  }
+  /** The per-verb guard (see [[DedupIndex.checkLive]]). */
+  private[graft] def checkLive(): Unit = DedupIndex.checkLive(spark, path)
 
   /** (id, sh, n) LIVE corpus shingle sets — the verification side
     * (tombstoned documents excluded; the presence probe is cached per
@@ -152,7 +130,7 @@ final class DedupIndex private (
     * refused) until a rebuild, after which the id is free again.
     */
   def delete(ids: DataFrame, idCol: String): Unit = {
-    checkPending()
+    checkLive()
     tomb.append(ids, idCol)
   }
 
@@ -167,7 +145,7 @@ final class DedupIndex private (
     */
   def jaccardPairsAgainst(delta: DataFrame, idCol: String, textCol: String,
       queryThreshold: Double): DataFrame = {
-    checkPending()
+    checkLive()
     require(queryThreshold >= threshold - 1e-12,
       s"index was built for threshold >= $threshold; a query at " +
         s"$queryThreshold needs prefix rows the build truncated away — " +
@@ -218,12 +196,14 @@ final class DedupIndex private (
     * each extend writes a `.extend-pending-*` marker first and removes
     * it only after all three succeed — a crash mid-extend leaves the
     * marker, and every later query/extend/load REFUSES the index
-    * loudly (see [[DedupIndex.checkPending]]) instead of silently
-    * missing the half-appended documents' pairs.
+    * loudly (see [[DedupIndex.checkLive]]) instead of silently
+    * missing the half-appended documents' pairs. Extend stays an
+    * append, not a stage-and-swap: staging a copy of the index per
+    * delta batch would cost O(index).
     */
   def extend(delta: DataFrame, idCol: String, textCol: String): Unit =
     CacheScope.scoped {
-      checkPending()
+      checkLive()
       // re-adding a tombstoned id would append live sets/prefix/banded
       // rows the tombstone filter then hides — state that silently
       // resurrects when the tombstone is compacted away. Refuse.
@@ -262,7 +242,7 @@ final class DedupIndex private (
   def minHashPairsAgainst(delta: DataFrame, idCol: String, textCol: String,
       queryThreshold: Double,
       bucketCap: Int = Dedup.DefaultBucketCap): DataFrame = {
-    checkPending()
+    checkLive()
     val dSets = CacheScope.cached(
       Dedup.shingleSets(delta, idCol, textCol, k))
     val dSig = dSets.withColumn("minhash_sig",
@@ -289,14 +269,10 @@ final class DedupIndex private (
     * Returns (filesBefore, filesAfter) summed over the collections.
     */
   def compact(targetRecordsPerFile: Long = 1 << 20): (Int, Int) = {
-    checkPending()
-    val names = Seq(DedupIndex.SetsName, DedupIndex.DfreqName,
-      DedupIndex.PrefixName, DedupIndex.BandedName,
-      DedupIndex.TombstonesName)
-    val counts = names.map(mgr.collection(_))
-      .filter(_.exists())
-      .map(_.compact(targetRecordsPerFile))
-    (counts.map(_._1).sum, counts.map(_._2).sum)
+    checkLive()
+    IndexRoot.compact(spark, path, Seq(DedupIndex.SetsName,
+      DedupIndex.DfreqName, DedupIndex.PrefixName, DedupIndex.BandedName),
+      targetRecordsPerFile)
   }
 
   /** REBUILD the index from its own surviving state — the maintenance
@@ -312,37 +288,19 @@ final class DedupIndex private (
     * [[DedupIndex.build]] run fresh over the surviving documents
     * (spec-asserted), and previously tombstoned ids are free again.
     *
-    * Crash-bracketed like [[extend]]: survivors are staged to a
-    * sibling collection first, and a `.rebuild-pending-*` marker makes
-    * any mid-rebuild crash a loud refusal, never a silent mix of old
-    * and new tables.
+    * The survivors are read from the live index while the rebuilt one
+    * is staged beside it, and the swap publishes it whole (see
+    * [[DedupIndex.build]]): a crashed rebuild leaves this index or the
+    * rebuilt one, and this handle serves either.
     */
   def rebuild(): Unit = CacheScope.scoped {
-    checkPending()
-    // refuse a degenerate rebuild BEFORE the crash bracket: failing
-    // past the marker would strand it and lock the index for nothing
+    checkLive()
     require(!sets.limit(1).isEmpty,
       s"rebuild of $path found no surviving documents (everything " +
         "tombstoned) — drop the index instead")
-    val marker = new org.apache.hadoop.fs.Path(path,
-      DedupIndex.RebuildPendingPrefix + java.util.UUID.randomUUID())
-    fs.create(marker).close()
-    // stage survivors OUTSIDE the sets collection: the derived tables
-    // are rebuilt from the staged copy, so no collection is ever read
-    // and overwritten in the same job
-    val staging = mgr.collection(DedupIndex.StagingSetsName)
-    staging.write(sets, SaveMode.Overwrite)
-    val survivors = CacheScope.cached(staging.read())
-    DedupIndex.writeDerivedState(mgr, spark, survivors, k, threshold,
+    DedupIndex.publish(spark, path, CacheScope.cached(sets), k, threshold,
       numHashes, bands)
-    // swap, not drop + rename: `sets` is never absent
-    graft.core.Publish.swap(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(path, DedupIndex.StagingSetsName),
-      new org.apache.hadoop.fs.Path(path, DedupIndex.SetsName))
-    mgr.collection(DedupIndex.TombstonesName).drop()
     tomb.markDropped()
-    fs.delete(marker, false)
-    ()
   }
 }
 
@@ -353,65 +311,93 @@ object DedupIndex {
   private[operators] val PrefixName = "prefix"
   private[operators] val BandedName = "banded"
   private[operators] val MetaName = "meta"
-  private[operators] val TombstonesName = "tombstones"
-  private[operators] val StagingSetsName = "sets_rebuild"
   private[operators] val PendingPrefix = ".extend-pending-"
-  private[operators] val RebuildPendingPrefix = ".rebuild-pending-"
 
-  /** Derive and overwrite every table downstream of the shingle sets —
-    * the shared tail of [[build]] (sets fresh from the corpus) and
-    * [[DedupIndex.rebuild]] (sets staged from the survivors): document
-    * frequencies, the prefix rows ranked under them, the banded MinHash
-    * buckets, and the meta row. `sets` must be cached by the caller
-    * (it feeds three derivations).
+  /** The per-verb guard, also run by [[load]]: crash recovery of the
+    * index root, then a loud refusal of an index carrying an
+    * `.extend-pending-*` marker. [[DedupIndex.extend]] appends to THREE
+    * collections; a crash between them leaves them mutually
+    * inconsistent — documents present for verification but absent from
+    * candidate generation, i.e. silently missed duplicates forever.
     */
-  private def writeDerivedState(mgr: CollectionManager,
-      spark: SparkSession, sets: DataFrame, k: Int, threshold: Double,
-      numHashes: Int, bands: Int): Unit = {
-    import graft.core.Graft.labeled
-    val post = sets.select(col("id"), col("n"), explode(col("sh")).as("s"))
-    val dfreq = CacheScope.cached(
-      post.groupBy(col("s")).agg(count(lit(1)).as("df")))
-    labeled(spark, "dedup-index build: dfreq") {
-      mgr.collection(DfreqName).write(dfreq, SaveMode.Overwrite)
-    }
-    val dfHint = BroadcastGate.hint("dedup-index build: dfreq", dfreq)
-    val prefix = Dedup.prefixRanked(post.join(dfHint(dfreq), "s"),
-      threshold)
-    // the prefix and banded tables derive from already-materialized
-    // caches (sets, dfreq) through INDEPENDENT plans — overlap the two
-    // writes (guide §2.6: concurrent jobs back-fill each other's task
-    // tails; at cluster scale they also overlap output commit waits).
-    // The caches are thread-safe to read; the enclosing CacheScope
-    // bracket owns release.
-    val prefixWrite = scala.concurrent.Future {
-      labeled(spark, "dedup-index build: prefix") {
-        mgr.collection(PrefixName).write(prefix, SaveMode.Overwrite)
-      }
-    }(scala.concurrent.ExecutionContext.global)
-    val sig = sets.withColumn("minhash_sig",
-      GraftFunctions.minHashSignature(col("sh"), numHashes))
-    labeled(spark, "dedup-index build: banded") {
-      mgr.collection(BandedName).write(
-        Dedup.bandedBuckets(sig, "id", numHashes, bands),
-        SaveMode.Overwrite)
-    }
-    scala.concurrent.Await.result(prefixWrite,
-      scala.concurrent.duration.Duration.Inf)
-    import spark.implicits._
-    mgr.collection(MetaName).write(
-      Seq((k, threshold, numHashes, bands))
-        .toDF("k", "threshold", "num_hashes", "bands"),
-      SaveMode.Overwrite)
+  private def checkLive(spark: SparkSession, path: String): Unit = {
+    val stuck = IndexRoot.liveNames(spark, path)
+      .filter(_.startsWith(PendingPrefix))
+    require(stuck.isEmpty,
+      s"dedup index at $path has ${stuck.length} incomplete " +
+        "operation(s) — a crash interrupted extend() between its " +
+        "collection appends, so the stored state is mutually " +
+        "inconsistent (silently missing pairs). Rebuild with " +
+        "DedupIndex.build, which replaces the whole directory, or " +
+        "re-run the failed extend on a restored copy and remove: " +
+        stuck.mkString(", "))
   }
 
+  /** Write the whole index for the shingle sets `sets` into a fresh
+    * root and swap it in at `path` ([[IndexRoot.publish]]) — the shared
+    * body of [[build]] (sets fresh from the corpus) and
+    * [[DedupIndex.rebuild]] (the live survivors): the sets, their
+    * document frequencies, the prefix rows ranked under them, the
+    * banded MinHash buckets, and the meta row. `sets` must be cached by
+    * the caller (it feeds four writes).
+    */
+  private def publish(spark: SparkSession, path: String, sets: DataFrame,
+      k: Int, threshold: Double, numHashes: Int, bands: Int): Unit =
+    IndexRoot.publish(spark, path) { root =>
+      import graft.core.Graft.labeled
+      val mgr = new CollectionManager(spark, root)
+      labeled(spark, "dedup-index build: sets") {
+        mgr.collection(SetsName).write(sets, SaveMode.ErrorIfExists)
+      }
+      val post = sets.select(col("id"), col("n"), explode(col("sh")).as("s"))
+      val dfreq = CacheScope.cached(
+        post.groupBy(col("s")).agg(count(lit(1)).as("df")))
+      labeled(spark, "dedup-index build: dfreq") {
+        mgr.collection(DfreqName).write(dfreq, SaveMode.ErrorIfExists)
+      }
+      val dfHint = BroadcastGate.hint("dedup-index build: dfreq", dfreq)
+      val prefix = Dedup.prefixRanked(post.join(dfHint(dfreq), "s"),
+        threshold)
+      // the prefix and banded tables derive from already-materialized
+      // caches (sets, dfreq) through INDEPENDENT plans — overlap the two
+      // writes (guide §2.6: concurrent jobs back-fill each other's task
+      // tails; at cluster scale they also overlap output commit waits).
+      // The caches are thread-safe to read; the enclosing CacheScope
+      // bracket owns release.
+      val prefixWrite = scala.concurrent.Future {
+        labeled(spark, "dedup-index build: prefix") {
+          mgr.collection(PrefixName).write(prefix, SaveMode.ErrorIfExists)
+        }
+      }(scala.concurrent.ExecutionContext.global)
+      val sig = sets.withColumn("minhash_sig",
+        GraftFunctions.minHashSignature(col("sh"), numHashes))
+      val bandedWrite = scala.util.Try(
+        labeled(spark, "dedup-index build: banded") {
+          mgr.collection(BandedName).write(
+            Dedup.bandedBuckets(sig, "id", numHashes, bands),
+            SaveMode.ErrorIfExists)
+        })
+      // both writes end before a failure reaches the staging cleanup
+      scala.concurrent.Await.result(prefixWrite,
+        scala.concurrent.duration.Duration.Inf)
+      bandedWrite.get
+      import spark.implicits._
+      mgr.collection(MetaName).write(
+        Seq((k, threshold, numHashes, bands))
+          .toDF("k", "threshold", "num_hashes", "bands"),
+        SaveMode.ErrorIfExists)
+    }
+
   /** Compute and persist the corpus-side dedup state under `path`
-    * (overwriting any previous index there). One shingle pass over the
-    * corpus feeds all four tables; every cache the build creates is
-    * released before it returns ([[graft.core.CacheScope.scoped]]).
-    * `threshold` is the LOOSEST Jaccard threshold later queries may
-    * use; `numHashes`/`bands` fix the LSH operating point (recall
-    * 1−(1−J^(numHashes/bands))^bands, as in the recompute form).
+    * (replacing any previous index there by stage-and-swap: a failed or
+    * crashed build leaves the previous index or the new one, and an
+    * index with an interrupted extend is replaced whole). One shingle
+    * pass over the corpus feeds all four tables; every cache the build
+    * creates is released before it returns
+    * ([[graft.core.CacheScope.scoped]]). `threshold` is the LOOSEST
+    * Jaccard threshold later queries may use; `numHashes`/`bands` fix
+    * the LSH operating point (recall 1−(1−J^(numHashes/bands))^bands,
+    * as in the recompute form).
     */
   def build(corpus: DataFrame, idCol: String, textCol: String, k: Int,
       threshold: Double, numHashes: Int = 64, bands: Int = 16,
@@ -420,50 +406,25 @@ object DedupIndex {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val spark = corpus.sparkSession
-    val mgr = new CollectionManager(spark, path)
     CacheScope.scoped {
-      // crash bracket: build overwrites five collections; a crash
-      // between the writes would leave e.g. fresh sets under stale
-      // prefix rows — silently missed pairs forever (same contract as
-      // extend/rebuild, see [[checkPending]])
-      IndexMarkers.createPending(spark, path)
-      val sets = CacheScope.cached(
-        Dedup.shingleSets(corpus, idCol, textCol, k))
-      graft.core.Graft.labeled(spark, "dedup-index build: sets") {
-        mgr.collection(SetsName).write(sets, SaveMode.Overwrite)
-      }
-      writeDerivedState(mgr, spark, sets, k, threshold, numHashes, bands)
-      // a fresh build IS the surviving corpus — stale tombstones from a
-      // previous index at this path must not keep hiding documents
-      mgr.collection(TombstonesName).drop()
-      mgr.collection(StagingSetsName).drop()
-      // clear EVERY marker (including a stale one from the crashed
-      // extend/rebuild this build is recovering from): the state is
-      // wholly consistent again — build IS the documented remedy
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter { f =>
-          val n = f.getPath.getName
-          n.startsWith(PendingPrefix) || n.startsWith(RebuildPendingPrefix)
-        }
-        .foreach(f => fs.delete(f.getPath, false))
+      publish(spark, path, CacheScope.cached(
+        Dedup.shingleSets(corpus, idCol, textCol, k)), k, threshold,
+        numHashes, bands)
     }
     new DedupIndex(spark, path, k, threshold, numHashes, bands)
   }
 
   /** Open an index previously written by [[build]]. Refuses an index
-    * with an interrupted extension (see [[DedupIndex.checkPending]]).
+    * with an interrupted extension (see [[DedupIndex.checkLive]]).
     */
   def load(spark: SparkSession, path: String): DedupIndex = {
+    checkLive(spark, path)
     val rows = new CollectionManager(spark, path)
       .collection(MetaName).read().collect()
     require(rows.length == 1, s"not a dedup index (no meta row): $path")
     val r = rows(0)
-    val idx = new DedupIndex(spark, path,
+    new DedupIndex(spark, path,
       r.getAs[Int]("k"), r.getAs[Double]("threshold"),
       r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
-    idx.checkPending()
-    idx
   }
 }

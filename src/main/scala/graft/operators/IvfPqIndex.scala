@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.core.{CacheScope, CollectionManager}
 import graft.functions.VectorFunctions._
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,8 +34,8 @@ import org.apache.spark.sql.functions._
   * vec — residual codebooks), `codes` (neighbor_id, cn, codes, qerrs)
   * HIVE-PARTITIONED BY CELL, `build_stats` (per-subspace residual
   * encode error — the drift baseline), `meta`. Same lifecycle contracts
-  * as [[PqIndex]]/[[IvfIndex]]: crash-bracketed multi-collection
-  * writes, epoch-rotating builds with loud stale-handle refusal,
+  * as [[PqIndex]]/[[IvfIndex]]: stage-and-swap builds that publish the
+  * whole index directory and a new epoch, loud stale-handle refusal,
   * tombstoned deletes honored immediately, compaction preserving the
   * cell partition layout, corpus-fed rebuild (PQ codes are lossy).
   *
@@ -57,9 +56,9 @@ final class IvfPqIndex private (
   private def mgr = new CollectionManager(spark, path)
   private val tomb = new TombstoneStore(spark, path, "neighbor_id")
 
-  /** Crash-marker + handle-epoch check, exposed for the streaming
-    * layer (it refuses a mid-rebuild or stale index at stream
-    * construction, like [[IvfIndex.checkPending]]).
+  /** Crash recovery + handle-epoch check, exposed for the streaming
+    * layer (it refuses a stale index at stream construction and per
+    * ingest batch, like [[IvfIndex.checkLive]]).
     */
   private[graft] def checkLive(): Unit =
     AnnIndex.checkLive(spark, path, epoch)
@@ -234,10 +233,8 @@ final class IvfPqIndex private (
     */
   def compact(targetRecordsPerFile: Long = 1 << 20): (Int, Int) = {
     checkLive()
-    val counts = Seq(AnnIndex.CodesName, "tombstones")
-      .map(mgr.collection(_)).filter(_.exists())
-      .map(_.compact(targetRecordsPerFile))
-    (counts.map(_._1).sum, counts.map(_._2).sum)
+    IndexRoot.compact(spark, path, Seq(AnnIndex.CodesName),
+      targetRecordsPerFile)
   }
 
   /** DRIFT AUDIT — per subspace, the build-time mean squared RESIDUAL
@@ -251,22 +248,7 @@ final class IvfPqIndex private (
     */
   def driftReport(): DataFrame = {
     checkLive()
-    val statsC = mgr.collection(AnnIndex.StatsName)
-    require(statsC.exists(),
-      s"index at $path predates drift statistics — rebuild() once to " +
-        "record the baseline")
-    val base = statsC.read().select(col("subspace"),
-      col("mean_err_sq").as("mean_err_sq_build"))
-    val now = codes
-      .select(posexplode(col("qerrs")).as(Seq("subspace", "e")))
-      .groupBy(col("subspace"))
-      .agg(count(lit(1)).as("n_now"),
-        avg(col("e")).as("mean_err_sq_now"))
-    base.join(now, Seq("subspace"), "full_outer")
-      .withColumn("err_ratio",
-        when(col("mean_err_sq_build") > 0,
-          col("mean_err_sq_now") / col("mean_err_sq_build")))
-      .orderBy(col("subspace"))
+    AnnIndex.pqDriftReport(mgr, path, codes)
   }
 
   /** ADC threshold CALIBRATION — the measured answer to "what
@@ -452,16 +434,15 @@ object IvfPqIndex {
     * (the shared [[SimilaritySearch.pqTrainEncode]] training over the
     * residual frame), encode residuals + per-subspace encode errors in
     * one more map pass, and persist (centroids, codebooks,
-    * codes-partitioned-by-cell, drift baseline, meta) under `path`.
-    * Crash-bracketed; a successful build rotates the epoch marker.
-    * Returns None for an empty corpus.
+    * codes-partitioned-by-cell, drift baseline, meta) under `path` by
+    * stage-and-swap (see [[PqIndex.build]]). Returns None for an empty
+    * corpus.
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, numSubspaces: Int = 8, nCentroids: Int = 16,
       kmeansIters: Int = 2, trainFraction: Double = 1.0,
       path: String): Option[IvfPqIndex] = {
     val spark = corpus.sparkSession
-    val mgr = new CollectionManager(spark, path)
     CacheScope.scoped {
       val c = CacheScope.cached(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -480,53 +461,23 @@ object IvfPqIndex {
                 col("cell"), cents).as("cv")))
         SimilaritySearch.pqTrainEncode(res.select(col("neighbor_id"),
             col("cv"), col("cn")), numSubspaces, nCentroids, kmeansIters,
-            trainFraction) match {
-          case None => None
-          case Some((dim, codebooks, _)) =>
-            val sub = dim / numSubspaces
-            AnnIndex.createPending(spark, path)
+            trainFraction).map { case (dim, codebooks, _) =>
+          val epoch = AnnIndex.publish(spark, path, "ivfpq", numSubspaces,
+              nCentroids) { mgr =>
             val codes = PqIndex.encodeWithErrors(res, codebooks,
-              numSubspaces, sub, extraCols = Seq("cell"))
+              numSubspaces, dim / numSubspaces, extraCols = Seq("cell"))
             mgr.collection(AnnIndex.CodesName).write(codes,
-              SaveMode.Overwrite, partitionBy = Seq("cell"))
+              SaveMode.ErrorIfExists, partitionBy = Seq("cell"))
             // drift baseline: mean per-subspace RESIDUAL encode error
             mgr.collection(AnnIndex.StatsName).write(
-              codes.select(posexplode(col("qerrs"))
-                  .as(Seq("subspace", "e")))
-                .groupBy(col("subspace"))
-                .agg(count(lit(1)).as("n"),
-                  avg(col("e")).as("mean_err_sq")),
-              SaveMode.Overwrite)
+              AnnIndex.errorStats(codes), SaveMode.ErrorIfExists)
             mgr.collection(AnnIndex.CentroidsName).write(
-              IvfIndex.centroidsDf(spark, cents), SaveMode.Overwrite)
-            val cbRows = for {
-              s <- codebooks.indices
-              (cent, ci) <- codebooks(s).zipWithIndex
-            } yield org.apache.spark.sql.Row(s, ci, cent)
+              AnnIndex.centroidsDf(spark, cents), SaveMode.ErrorIfExists)
             mgr.collection(AnnIndex.CodebooksName).write(
-              spark.createDataFrame(
-                spark.sparkContext.parallelize(cbRows, 1),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("subspace",
-                    org.apache.spark.sql.types.IntegerType,
-                    nullable = false),
-                  org.apache.spark.sql.types.StructField("cidx",
-                    org.apache.spark.sql.types.IntegerType,
-                    nullable = false),
-                  org.apache.spark.sql.types.StructField("vec",
-                    org.apache.spark.sql.types.ArrayType(
-                      org.apache.spark.sql.types.FloatType,
-                      containsNull = false), nullable = false)))),
-              SaveMode.Overwrite)
-            AnnIndex.writeMeta(mgr, spark, "ivfpq", numSubspaces,
-              nCentroids)
-            // a fresh build IS the surviving corpus — stale tombstones
-            // must not keep hiding vectors
-            mgr.collection("tombstones").drop()
-            val epoch = AnnIndex.writeEpoch(spark, path)
-            AnnIndex.clearPending(spark, path)
-            Some(new IvfPqIndex(spark, path, cents.length, numSubspaces,
-              nCentroids, cents, codebooks, epoch))
+              AnnIndex.codebooksDf(spark, codebooks), SaveMode.ErrorIfExists)
+          }
+          new IvfPqIndex(spark, path, cents.length, numSubspaces,
+            nCentroids, cents, codebooks, epoch)
         }
       }
     }
@@ -537,20 +488,13 @@ object IvfPqIndex {
     * queried.
     */
   def load(spark: SparkSession, path: String): IvfPqIndex = {
-    AnnIndex.checkPending(spark, path)
     val epoch = AnnIndex.readEpoch(spark, path)
     val mgr = new CollectionManager(spark, path)
     val (numSubspaces, nCentroids) = AnnIndex.readMeta(mgr, path, "ivfpq")
     val cents = mgr.collection(AnnIndex.CentroidsName).read()
       .orderBy(col("cell")).collect().map(_.getSeq[Float](1)).toSeq
     require(cents.nonEmpty, s"empty centroid table in $path")
-    val cb = mgr.collection(AnnIndex.CodebooksName).read()
-      .orderBy(col("subspace"), col("cidx")).collect()
-    val codebooks = (0 until numSubspaces).map { s =>
-      cb.filter(_.getInt(0) == s).map(_.getSeq[Float](2)).toSeq
-    }
-    require(codebooks.forall(_.nonEmpty), s"empty codebook in $path")
     new IvfPqIndex(spark, path, cents.length, numSubspaces, nCentroids,
-      cents, codebooks, epoch)
+      cents, AnnIndex.readCodebooks(mgr, path, numSubspaces), epoch)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.core.CollectionManager
+import graft.core.{CollectionManager, Publish}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -15,10 +16,11 @@ import org.apache.spark.sql.functions.col
   * Cache contract (the engine-wide single-writer assumption, as with
   * [[graft.core.Collection.compact]]): deletes go through THIS handle
   * (or a reload). `append` flips the cache to present; a rebuild that
-  * drops the collection reports it via [[markDropped]]. When
-  * tombstones ARE present the frame is re-read on every access — a
-  * delete between two queries is honored by the second, and the read
-  * stays delta-sized (the collection holds only deleted ids).
+  * publishes an index without tombstones reports it via
+  * [[markDropped]]. When tombstones ARE present the frame is re-read
+  * on every access — a delete between two queries is honored by the
+  * second, and the read stays delta-sized (the collection holds only
+  * deleted ids).
   *
   * The presence probe goes through [[graft.core.Collection.read]]'s
   * data check, not bare directory existence: a tombstones directory
@@ -88,43 +90,76 @@ private[operators] final class TombstoneStore(
           s"fresh id or $remedy first")
     }
 
-  /** Record that a rebuild dropped the collection. */
+  /** Record that a rebuild published an index without tombstones. */
   def markDropped(): Unit = present = Some(false)
 }
 
-/** The `.rebuild-pending-*` crash bracket shared by every index build:
-  * a multi-collection overwrite that crashes mid-way leaves the stored
-  * collections a silent mix of pre- and post-write state (new codes
-  * under old codebooks, sets without their prefix rows) — the marker
-  * turns the next access into a loud refusal instead.
+/** The lifecycle every persisted index ([[DedupIndex]], [[PqIndex]],
+  * [[IvfIndex]], [[IvfPqIndex]]) shares. Build and rebuild write the
+  * WHOLE index directory (every collection, the meta row, the ANN
+  * epoch marker) into a fresh [[graft.core.Publish.staging]] root and
+  * [[graft.core.Publish.swap]] it in, so a failed or crashed (re)build
+  * leaves the previous index or the new one, never a mix of the two;
+  * every verb and `load` reads the root through [[liveNames]], which
+  * recovers it first.
   */
-private[operators] object IndexMarkers {
-  val RebuildPendingPrefix = ".rebuild-pending-"
+private[graft] object IndexRoot {
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The ingest streams' per-lineage replay marker (see
+    * [[graft.streaming.Streaming.ExtendMarker]]): root-level state that
+    * is not derived from the indexed vectors, so it outlives a rebuild.
+    */
+  val StreamMarkerName = "stream_extend_batch"
 
-  /** Open the bracket (creates the index root if absent). */
-  def createPending(spark: SparkSession,
-      path: String): org.apache.hadoop.fs.Path = {
-    val fs = fsOf(spark, path)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    val m = new org.apache.hadoop.fs.Path(path,
-      RebuildPendingPrefix + java.util.UUID.randomUUID())
-    fs.create(m).close()
-    m
+  private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** Repair a crash inside a (re)build's swap (restore the retired
+    * index or drop the stale staging copy), then list the names at the
+    * index root; Nil when there is no index.
+    */
+  def liveNames(spark: SparkSession, path: String): Seq[String] = {
+    val root = new Path(path)
+    Publish.recover(conf(spark), root)
+    val fs = root.getFileSystem(conf(spark))
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).map(_.getPath.getName).toSeq
   }
 
-  /** Close the bracket. Clears EVERY pending marker, not just this
-    * build's own: a full (re)build overwrites all state, so stale
-    * markers from the crash it is recovering from are obsolete —
-    * build IS the documented remedy for a stuck index.
+  /** Fill a fresh staging root (`fill` gets its path and writes into it
+    * with no overwrite), then swap it in at `path`. The collections
+    * need no swap of their own. A failure deletes the staging copy and
+    * rethrows. `fill` may read the live index: it stays in place until
+    * the swap.
     */
-  def clearPending(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.getPath.getName.startsWith(RebuildPendingPrefix))
-      .foreach(f => fs.delete(f.getPath, false))
+  def publish[T](spark: SparkSession, path: String)(fill: String => T): T = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(conf(spark))
+    Publish.recover(conf(spark), target)
+    val staged = Publish.staging(target)
+    try {
+      val out = fill(staged.toString)
+      val marker = new Path(target, StreamMarkerName)
+      Publish.recover(conf(spark), marker)
+      if (fs.exists(marker))
+        FileUtil.copy(fs, marker, fs, new Path(staged, StreamMarkerName),
+          false, conf(spark))
+      Publish.swap(conf(spark), staged, target)
+      out
+    } catch {
+      // a copy this delete misses is dropped by the next recovery
+      case e: Throwable => scala.util.Try(fs.delete(staged, true)); throw e
+    }
+  }
+
+  /** Compact each present collection in `names` and the tombstones of
+    * the index at `path`; returns (filesBefore, filesAfter) summed over
+    * them.
+    */
+  def compact(spark: SparkSession, path: String, names: Seq[String],
+      targetRecordsPerFile: Long): (Int, Int) = {
+    val mgr = new CollectionManager(spark, path)
+    val counts = (names :+ "tombstones").map(mgr.collection(_))
+      .filter(_.exists()).map(_.compact(targetRecordsPerFile))
+    (counts.map(_._1).sum, counts.map(_._2).sum)
   }
 }

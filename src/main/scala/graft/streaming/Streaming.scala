@@ -858,7 +858,7 @@ object Streaming {
       windowDur: String = "10 minutes",
       bucketCap: Int = graft.operators.Dedup.DefaultBucketCap): DataFrame = {
     import graft.expressions.GraftFunctions
-    index.checkPending()
+    index.checkLive()
     val k = index.k
     // shingle ONCE per arriving doc and derive the signature from the
     // shared column — the shingle kernel is the dominant per-doc cost
@@ -974,7 +974,7 @@ object Streaming {
       threshold: Double, tsCol: String, watermark: String = "1 hour",
       windowDur: String = "10 minutes", nProbe: Int = 4): DataFrame = {
     import graft.functions.VectorFunctions._
-    index.checkPending()
+    index.checkLive()
     val liveTomb = liveIds(vecs.sparkSession, s"${index.path}/tombstones")
       .select(col("id").as("dup_of"))
     val cells = graft.core.CacheScope.cached(
@@ -1061,9 +1061,10 @@ object Streaming {
   /** Per-lineage extend marker shared by the ingest compositions
     * ([[annIngestStreamPq]] / [[annIngestStream]]): one
     * `"<streamId>\t<batchId>"` line per lineage ever used under
-    * `<indexPath>/stream_extend_batch` — batch ids are only comparable
-    * within one lineage, and a second lineage's append must not erase
-    * the first's replay protection. Single-writer by contract (at most
+    * `<indexPath>/stream_extend_batch`, carried across index rebuilds
+    * — batch ids are only comparable within one lineage, and a second
+    * lineage's append must not erase the first's replay protection.
+    * Single-writer by contract (at most
     * one ingest stream per index — the marker's read-modify-write is
     * not concurrent-safe, like every index maintenance verb).
     */
@@ -1073,7 +1074,7 @@ object Streaming {
       !streamId.contains('\t'),
       "streamId must be a non-empty single-line tab-free token")
     private val markerPath = new org.apache.hadoop.fs.Path(
-      s"$indexPath/stream_extend_batch")
+      s"$indexPath/${graft.operators.IndexRoot.StreamMarkerName}")
 
     /** All lineages' last-extended batch ids. Read ONCE per batch; the
       * same snapshot feeds both the skip decision and [[record]], so a
@@ -1384,7 +1385,7 @@ object Streaming {
       (onMatches: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.VectorFunctions._
     ingestLoop(vecs, index.path, index.centroids.head.length,
-      () => index.checkPending(),
+      () => index.checkLive(),
       screen = (arrivals, batchIds) => {
         val screenable = index.cells
           .select(col("neighbor_id").as("dup_of"), col("cv"),

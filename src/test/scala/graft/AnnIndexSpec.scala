@@ -18,6 +18,14 @@ class AnnIndexSpec extends SparkSpec {
     graft.core.Graft.table(spark, sfDir, "embeddings")
   private def queries: DataFrame = emb.filter(col("vec_id") < 10)
 
+  /** Stage-and-swap residue beside the index root `path`. */
+  private def residue(path: String): Seq[String] = {
+    val f = new java.io.File(path)
+    f.getParentFile.list().toSeq.filter(n =>
+      n.startsWith(f.getName + ".staging-") ||
+        n.startsWith(f.getName + ".old-"))
+  }
+
   private def rows(df: DataFrame): Seq[(Any, Int, Any, Double)] =
     df.orderBy(col("query_id"), col("rk")).collect()
       .map(r => (r.get(0), r.getInt(1), r.get(2), r.getDouble(3))).toSeq
@@ -248,7 +256,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("IVF rebuild: tombstones compact away physically, the drift " +
       "baseline resets, results equal brute force over the survivors, " +
-      "and an interrupted rebuild refuses loudly") {
+      "and the rebuilt index reloads with no staging residue") {
     import spark.implicits._
     val path = tmpDir()
     val ivf0 = IvfIndex.build(emb, "vec_id", "embedding", nCells = 16,
@@ -262,7 +270,6 @@ class AnnIndexSpec extends SparkSpec {
       .filter(col("neighbor_id") === victim).count() == 0,
       "victim survived the rebuild physically")
     assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/vecs_rebuild").exists())
 
     // probe-all IVF scoring is exact, so the rebuilt index must equal
     // brute force over the survivors REGARDLESS of retrained centroids
@@ -279,20 +286,9 @@ class AnnIndexSpec extends SparkSpec {
         assert(dr > 0.99 && dr < 1.01, s"post-rebuild dist_ratio: $r")
       }
 
-    // reload sees the rebuilt state; a marker refuses everything
-    assert(IvfIndex.load(spark, path).nCells == ivf.nCells)
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(path,
-      ".rebuild-pending-deadbeef"))
-    for (op <- Seq(
-        () => ivf.topK(queries, "vec_id", "embedding", k = 5),
-        () => ivf.extend(emb.limit(1), "vec_id", "embedding"),
-        () => ivf.delete(Seq(1L).toDF("vec_id"), "vec_id"),
-        () => ivf.driftReport(),
-        () => ivf.rebuild(),
-        () => IvfIndex.load(spark, path))) {
-      val e = intercept[IllegalArgumentException](op())
-      assert(e.getMessage.contains("incomplete rebuild"), e.getMessage)
-    }
+    // reload sees the rebuilt state; the swap left nothing beside it
+    assert(IvfIndex.load(spark, path).centroids == ivf.centroids)
+    assert(residue(path).isEmpty, residue(path))
   }
 
   test("PQ driftReport: steady-state err_ratio stays ~1; an " +
@@ -360,7 +356,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("PQ rebuild with an UNPURGED corpus does not resurrect a " +
-      "tombstoned vector; an interrupted PQ build refuses loudly") {
+      "tombstoned vector; a later build replaces the index whole") {
     import spark.implicits._
     val path = tmpDir()
     val pq0 = PqIndex.build(emb, "vec_id", "embedding", path = path).get
@@ -373,26 +369,16 @@ class AnnIndexSpec extends SparkSpec {
       "tombstoned vector resurrected through an unpurged rebuild corpus")
     assert(!rows(pq.topK(queries, "vec_id", "embedding", k = 10))
       .exists(_._3 == victim))
-    // interrupted build: the crash bracket refuses everything (a crash
-    // between the codes and codebooks overwrites would otherwise be a
-    // SILENT mix — new codes scored under old codebooks)
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(path,
-      ".rebuild-pending-cafebabe"))
-    for (op <- Seq(
-        () => pq.topK(queries, "vec_id", "embedding", k = 5),
-        () => PqIndex.load(spark, path): Any)) {
-      val e = intercept[IllegalArgumentException](op())
-      assert(e.getMessage.contains("incomplete rebuild"), e.getMessage)
-    }
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path,
-      ".rebuild-pending-cafebabe"))
-    // a completed build clears the stale marker it recovered from
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(path,
-      ".rebuild-pending-deadbeef"))
+    // a build over it publishes a whole new index: one epoch, no
+    // tombstones, every vector back, and nothing left beside it
     val fresh = PqIndex.build(emb, "vec_id", "embedding", path = path).get
-    assert(rows(fresh.topK(queries, "vec_id", "embedding", k = 5)).nonEmpty)
+    assert(new java.io.File(path).list().count(_.startsWith(".epoch-")) == 1)
+    assert(!new java.io.File(s"$path/tombstones").exists())
+    assert(fresh.codes.count() == emb.count())
     assert(rows(PqIndex.load(spark, path)
-      .topK(queries, "vec_id", "embedding", k = 5)).nonEmpty)
+      .topK(queries, "vec_id", "embedding", k = 5)) ==
+      rows(fresh.topK(queries, "vec_id", "embedding", k = 5)))
+    assert(residue(path).isEmpty, residue(path))
   }
 
   test("compact: per-batch extend files collapse in both index kinds, " +

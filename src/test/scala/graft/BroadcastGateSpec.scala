@@ -34,17 +34,22 @@ class BroadcastGateSpec extends SparkSpec {
 
   test("the frame gate runs one count on an unloaded cache and no job " +
       "on a loaded one") {
-    // a count over a fresh cache is several jobs (the cache build, then
-    // the count's own stages), so the gate is measured against one
+    // a Dataset count over a fresh cache is several jobs (the cache
+    // build, then the count's own stages); the gate's one count is over
+    // the cached batches, the build alone, and the row count it leaves
+    // in the cache's statistics is read with no job
     def frame(tag: String) = spark.range(0, 1000, 1, 4)
       .select(col("id"), lit(s"broadcast-gate-spec $tag").as("tag")).cache()
     val (ref, gated) = (frame("count"), frame("gate"))
     try {
       val (_, countJobs) = jobsOf(ref.count())
-      assert(countJobs >= 1)
       val (cold, coldJobs) = jobsOf(BroadcastGate.fits("spec: cold", gated))
       assert(cold)
-      assert(coldJobs == countJobs, s"unloaded cache: $coldJobs jobs")
+      assert(coldJobs == 1, s"unloaded cache: $coldJobs jobs")
+      assert(countJobs > coldJobs, s"count: $countJobs jobs")
+      val (rowBytes, rowJobs) = jobsOf(BroadcastGate.rowBytes(gated))
+      assert(rowJobs == 0, s"row count: $rowJobs jobs")
+      assert(rowBytes == (BroadcastGate.estimatedBytes(gated) / 1000).toLong)
       val (warm, warmJobs) = jobsOf(BroadcastGate.fits("spec: warm", gated))
       assert(warm)
       assert(warmJobs == 0, s"loaded cache: $warmJobs jobs")

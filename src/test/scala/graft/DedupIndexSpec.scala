@@ -293,7 +293,6 @@ class DedupIndexSpec extends SparkSpec {
     val rawSets = spark.read.parquet(s"$path/sets")
     assert(rawSets.filter(col("id") === victim).count() == 0)
     assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/sets_rebuild").exists())
 
     // the rebuilt index answers EXACTLY like a fresh build over the
     // survivors (df order recomputed over the same documents)
@@ -324,54 +323,30 @@ class DedupIndexSpec extends SparkSpec {
     idx.delete(Seq(1L, 2L).toDF("doc_id"), "doc_id")
     val e = intercept[IllegalArgumentException](idx.rebuild())
     assert(e.getMessage.contains("no surviving"), e.getMessage)
-    assert(!java.nio.file.Files.list(java.nio.file.Paths.get(path))
-      .anyMatch(p =>
-        p.getFileName.toString.startsWith(".rebuild-pending-")))
+    val root = new java.io.File(path)
+    assert(!root.getParentFile.list().exists(n =>
+      n.startsWith(root.getName + ".staging-") ||
+        n.startsWith(root.getName + ".old-")))
     // still queryable: everything deleted -> empty answers, no error
     assert(idx.jaccardPairsAgainst(corpus, "doc_id", "text", 0.6)
       .filter(col("id1") <= 2L || col("id2") <= 2L).count() == 0)
   }
 
-  test("an interrupted rebuild is refused as loudly as an interrupted " +
-      "extend") {
-    val corpus = Seq((1L, "a b c d e f g")).toDF("doc_id", "text")
-    val path = tmpDir()
-    val idx = DedupIndex.build(corpus, "doc_id", "text", k = 3,
-      threshold = 0.6, path = path)
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(path,
-      ".rebuild-pending-deadbeef"))
-    for (op <- Seq(
-        () => idx.jaccardPairsAgainst(corpus, "doc_id", "text", 0.6),
-        () => idx.rebuild(),
-        () => idx.delete(Seq(1L).toDF("doc_id"), "doc_id"),
-        () => DedupIndex.load(spark, path))) {
-      val e = intercept[IllegalArgumentException](op())
-      assert(e.getMessage.contains("incomplete operation"), e.getMessage)
-    }
-  }
-
-  test("build is crash-bracketed AND is the recovery verb: an " +
-      "interrupted build refuses, a completed build clears stale markers") {
+  test("build is the recovery verb for an interrupted extend: it " +
+      "publishes a whole new directory, and the marker goes with the old") {
     val corpus = Seq((1L, "a b c d e f g"), (2L, "a b c d e f g"))
       .toDF("doc_id", "text")
     val path = tmpDir()
     DedupIndex.build(corpus, "doc_id", "text", k = 3, threshold = 0.6,
       path = path)
-    // a crash mid-build over an existing index leaves fresh sets under
-    // stale prefix rows — silently missed pairs; the bracket refuses
     java.nio.file.Files.createFile(java.nio.file.Paths.get(path,
-      ".rebuild-pending-feedface"))
+      ".extend-pending-feedface"))
     val e = intercept[IllegalArgumentException](DedupIndex.load(spark, path))
     assert(e.getMessage.contains("incomplete operation"), e.getMessage)
-    // re-running build IS the documented remedy — and it now also
-    // clears the stale marker instead of leaving manual cleanup
     val idx = DedupIndex.build(corpus, "doc_id", "text", k = 3,
       threshold = 0.6, path = path)
-    assert(!java.nio.file.Files.list(java.nio.file.Paths.get(path))
-      .anyMatch(p => p.getFileName.toString.startsWith(".rebuild-pending-")))
-    // the delta here re-uses corpus ids (fine for a marker-clearing
-    // probe; the operator's id contract is exercised elsewhere) — the
-    // distinct pair set is what matters
+    assert(!new java.io.File(path).list().exists(_.startsWith(".")),
+      new java.io.File(path).list().toSeq)
     assert(idx.jaccardPairsAgainst(corpus, "doc_id", "text", 0.6)
       .select(col("id1"), col("id2")).distinct().count() == 1)
     assert(DedupIndex.load(spark, path).threshold == 0.6)

@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import graft.core.{CollectionManager, Publish}
 import graft.io.TrainerShards
-import graft.operators.{DedupIndex, Packing}
+import graft.operators.{DedupIndex, IvfIndex, IvfPqIndex, Packing, PqIndex}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -490,46 +490,167 @@ class PublishSpec extends SparkSpec {
     assert(crashes >= 4, s"stage, retire, publish and cleanup: $crashes")
   }
 
-  test("fault matrix: DedupIndex.rebuild publishes sets by swap") {
-    import spark.implicits._
-    val corpus = (1 to 30).map(i =>
-      (i.toLong, s"document number $i about topic ${i % 5} words")).toDF(
-      "doc_id", "text")
-    val template = localDir("graft_publish_dedup_t")
-    val tpath = faulty(s"$template/idx")
-    DedupIndex.build(corpus, "doc_id", "text", k = 3, threshold = 0.6,
-      path = tpath)
-      .delete(Seq(7L).toDF("doc_id"), "doc_id")
-    def setsCount(path: String) =
-      new CollectionManager(spark, path).collection("sets").count()
+  // ---- index build and rebuild: one stage-and-swap per index ------
+
+  /** The index fault matrix: `template` holds an index at `idx`. Each
+    * run copies it, crashes `op` at the k-th op on the index root or
+    * its siblings, then `answers` (which loads the index, so recovery
+    * runs first) must equal the old side's or the new side's — the new
+    * side read from one unfaulted run — with no residue.
+    */
+  private def indexMatrix(template: String)(op: String => Unit)
+      (answers: String => Seq[Any]): Unit = {
+    val old = answers(faulty(s"$template/idx"))
+    val reference = localDir("graft_index_matrix_new")
+    copyTree(template, reference)
+    op(faulty(s"$reference/idx"))
+    val fresh = answers(faulty(s"$reference/idx"))
+    assert(fresh != old, "the operation changed no answer: the matrix " +
+      "could not tell the two sides apart")
     val crashes = faultMatrix { k =>
-      val parent = localDir("graft_publish_dedup")
+      val parent = localDir("graft_index_matrix")
       copyTree(template, parent)
       val local = s"$parent/idx"
-      val crashed = crashAt(k, s"$local/sets") {
-        DedupIndex.load(spark, faulty(local)).rebuild()
-      }
-      // `sets` is never absent: the stored sets are the old (30, the
-      // tombstoned document still present) or the rebuilt (29)
-      assert(Set(30L, 29L).contains(setsCount(faulty(local))), s"k=$k")
-      if (crashed) {
-        // a crashed rebuild is refused loudly until the documented
-        // remedy (a fresh build) runs
-        assert(intercept[IllegalArgumentException](
-          DedupIndex.load(spark, faulty(local))).getMessage
-          .contains("incomplete"))
-        DedupIndex.build(corpus.filter(col("doc_id") =!= 7L), "doc_id",
-          "text", k = 3, threshold = 0.6, path = faulty(local))
-      }
-      DedupIndex.load(spark, faulty(local))
-      assert(setsCount(faulty(local)) == 29L, s"k=$k")
-      val left = new File(local).list().toSeq
-        .filter(n => n.startsWith("sets.") || n == "sets_rebuild" ||
-          n.startsWith(".rebuild-pending-"))
-      assert(left.isEmpty, s"k=$k: $left")
+      val crashed = crashAt(k, local)(op(faulty(local)))
+      val seen = answers(faulty(local))
+      assert(seen == old || seen == fresh, s"k=$k: $seen")
+      assert(residue(local).isEmpty, s"k=$k: ${residue(local)}")
       crashed
     }
     assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  private def storedRows(path: String, collection: String): Long =
+    new CollectionManager(spark, path).collection(collection).count()
+
+  private def dedupCorpus: DataFrame = {
+    import spark.implicits._
+    (1 to 30).map(i =>
+      (i.toLong, s"document number ${i % 12} about topic ${i % 5} words"))
+      .toDF("doc_id", "text")
+  }
+
+  /** The stored sets' row count (tombstoned rows included) and the
+    * pairs one probe document finds.
+    */
+  private def dedupAnswers(path: String): Seq[Any] = {
+    import spark.implicits._
+    val pairs = DedupIndex.load(spark, path).jaccardPairsAgainst(
+      Seq((100L, "document number 3 about topic 3 words")).toDF(
+        "doc_id", "text"), "doc_id", "text", 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    storedRows(path, "sets") +: pairs // after the load recovered
+  }
+
+  /** A dedup index over [[dedupCorpus]] with document 3 tombstoned. */
+  private def dedupTemplate(): String = {
+    import spark.implicits._
+    val template = localDir("graft_index_dedup_t")
+    DedupIndex.build(dedupCorpus, "doc_id", "text", k = 3,
+      threshold = 0.6, path = faulty(s"$template/idx"))
+      .delete(Seq(3L).toDF("doc_id"), "doc_id")
+    template
+  }
+
+  test("fault matrix: DedupIndex.build") {
+    indexMatrix(dedupTemplate())(path => DedupIndex.build(
+      dedupCorpus.filter(col("doc_id") =!= 15L), "doc_id", "text", k = 3,
+      threshold = 0.6, path = path))(dedupAnswers)
+  }
+
+  test("fault matrix: DedupIndex.rebuild publishes sets by swap") {
+    // with the whole index: sets, derived tables and meta swap as one
+    indexMatrix(dedupTemplate())(path =>
+      DedupIndex.load(spark, path).rebuild())(dedupAnswers)
+  }
+
+  test("a failed index build leaves the previous index and no staging " +
+      "copy") {
+    val path = s"${dedupTemplate()}/idx"
+    val before = dedupAnswers(faulty(path))
+    // boom fails the build's first write, inside the staging root
+    val e = intercept[Exception](DedupIndex.build(
+      dedupCorpus.select(boom(col("doc_id") + 12L).as("doc_id"),
+        col("text")), "doc_id", "text", k = 3, threshold = 0.6,
+      path = faulty(path)))
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("boom"))), e)
+    assert(dedupAnswers(faulty(path)) == before)
+    assert(residue(path).isEmpty, residue(path))
+  }
+
+  /** 240 seeded 16-dim vectors around 4 centers, ids 1..240. */
+  private def annCorpus: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val centers = Seq.fill(4)(Seq.fill(16)(rnd.nextGaussian() * 3))
+    (1 to 240).map { i =>
+      (i.toLong, centers(i % 4).map(c => (c + rnd.nextGaussian()).toFloat))
+    }.toDF("vec_id", "embedding")
+  }
+
+  /** Build the template index over [[annCorpus]] with vector 2
+    * tombstoned, then run the build matrix (a build over two thirds of
+    * the corpus) and the rebuild matrix. `answers` gets the stored row
+    * count of the index's `main` collection prepended.
+    */
+  private def annMatrices(main: String)
+      (build: (DataFrame, String) => Unit)
+      (delete: (String, DataFrame) => Unit)(rebuild: String => Unit)
+      (answers: (String, DataFrame) => DataFrame): Unit = {
+    import spark.implicits._
+    val template = localDir("graft_index_ann_t")
+    build(annCorpus, faulty(s"$template/idx"))
+    delete(faulty(s"$template/idx"), Seq(2L).toDF("vec_id"))
+    def seen(path: String): Seq[Any] = {
+      val top = answers(path, annCorpus.filter(col("vec_id") <= 6))
+        .orderBy(col("query_id"), col("rk")).collect().map(_.toSeq).toSeq
+      storedRows(path, main) +: top // after `answers` loaded (recovered)
+    }
+    indexMatrix(template)(path =>
+      build(annCorpus.filter(col("vec_id") % 3 =!= 0), path))(seen)
+    indexMatrix(template)(rebuild)(seen)
+  }
+
+  test("fault matrix: PqIndex build and rebuild") {
+    annMatrices("codes")((c, path) => PqIndex.build(c, "vec_id",
+      "embedding", numSubspaces = 4, nCentroids = 8, path = path))(
+      (path, ids) => PqIndex.load(spark, path).delete(ids, "vec_id"))(
+      path => PqIndex.load(spark, path).rebuild(annCorpus, "vec_id",
+        "embedding"))(
+      (path, q) => PqIndex.load(spark, path).topK(q, "vec_id",
+        "embedding", k = 3))
+  }
+
+  test("fault matrix: IvfIndex build and rebuild") {
+    annMatrices("cells")((c, path) => IvfIndex.build(c, "vec_id",
+      "embedding", nCells = 4, path = path))(
+      (path, ids) => IvfIndex.load(spark, path).delete(ids, "vec_id"))(
+      path => IvfIndex.load(spark, path).rebuild())(
+      (path, q) => IvfIndex.load(spark, path).topK(q, "vec_id",
+        "embedding", k = 3, nProbe = 2))
+  }
+
+  test("an index rebuild carries the ingest streams' replay marker into " +
+      "the new directory") {
+    val path = s"${localDir("graft_index_marker")}/idx"
+    IvfIndex.build(annCorpus, "vec_id", "embedding", nCells = 4,
+      path = path)
+    val marker = new graft.streaming.Streaming.ExtendMarker(path, "a")
+    marker.record(spark, Map.empty, 3L)
+    IvfIndex.load(spark, path).rebuild()
+    assert(marker.snapshot(spark) == Map("a" -> 3L))
+  }
+
+  test("fault matrix: IvfPqIndex build and rebuild") {
+    annMatrices("codes")((c, path) => IvfPqIndex.build(c, "vec_id",
+      "embedding", nCells = 4, numSubspaces = 4, nCentroids = 8,
+      path = path))(
+      (path, ids) => IvfPqIndex.load(spark, path).delete(ids, "vec_id"))(
+      path => IvfPqIndex.load(spark, path).rebuild(annCorpus, "vec_id",
+        "embedding"))(
+      (path, q) => IvfPqIndex.load(spark, path).topK(q, "vec_id",
+        "embedding", k = 3, nProbe = 2))
   }
 
   // ---- tooling guard ----------------------------------------------
