@@ -54,9 +54,9 @@ object AnnIndex {
     IndexRoot.liveNames(spark, path).filter(_.startsWith(EpochPrefix))
       .map(_.stripPrefix(EpochPrefix))
 
-  /** The per-verb guard: crash recovery, then the handle's epoch must
-    * match the stored `.epoch-*` marker or the handle is STALE — the
-    * index was rebuilt under it.
+  /** The guard every verb and public accessor runs: crash recovery,
+    * then the handle's epoch must match the stored `.epoch-*` marker or
+    * the handle is STALE — the index was rebuilt under it.
     */
   private[operators] def checkLive(spark: SparkSession, path: String,
       epoch: String): Unit = {
@@ -232,8 +232,10 @@ final class PqIndex private (
   /** (neighbor_id, cn, codes, qerrs) — the stored LIVE encoded corpus
     * (tombstoned vectors excluded).
     */
-  def codes: DataFrame =
+  def codes: DataFrame = {
+    checkLive()
     tomb.minus(mgr.collection(AnnIndex.CodesName).read())
+  }
 
   /** ADC top-k against the stored codes — [[SimilaritySearch.pqTopK]]'s
     * output for the index's build parameters, with NO training and NO
@@ -441,7 +443,7 @@ final class IvfIndex private (
   /** (neighbor_id, cv, cn, cell) — the stored LIVE assigned corpus
     * (tombstoned vectors excluded).
     */
-  def cells: DataFrame = tomb.minus(cellsRaw)
+  def cells: DataFrame = { checkLive(); tomb.minus(cellsRaw) }
 
   /** The stored assigned corpus WITHOUT the tombstone filter — the
     * streaming layer caches this corpus-sized frame once and applies

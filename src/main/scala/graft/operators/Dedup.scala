@@ -3,9 +3,10 @@ package graft.operators
 import graft.core.{BroadcastGate, CacheScope, Checkpoints}
 import graft.expressions.GraftFunctions
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for large-scale document corpora.
   *
@@ -516,6 +517,13 @@ object Dedup {
         col("pos").as("band") :+ col("col").as("bucket"): _*)
   }
 
+  /** [[bandedBuckets]] of (id, sh, …) shingle sets, signed first. */
+  private[operators] def bandedSets(sets: DataFrame, numHashes: Int,
+      bands: Int, passthrough: Seq[String] = Nil): DataFrame =
+    bandedBuckets(sets.withColumn("minhash_sig", GraftFunctions
+      .minHashSignature(col("sh"), numHashes)), "id", numHashes, bands,
+      passthrough)
+
   /** Default per-(band, bucket) membership cap for the batch LSH paths —
     * the batch twin of [[graft.streaming.Streaming.lshCandidateStream]]'s
     * `maxBucketSize`.
@@ -554,7 +562,8 @@ object Dedup {
     * current bucket and emits each pair lazily, so a full bucket never
     * materializes its C(cap,2) pairs at once. No aggregation buffer, no
     * join back to the banded rows, no broadcast of them, no cache (the
-    * banded rows have one consumer).
+    * banded rows have one consumer). [[incrementalCappedPairs]] runs
+    * the same pass over sectioned rows.
     *
     * Requires long-castable ids (the engine's document-id contract, as
     * in the streaming path); a null id pairs with nothing.
@@ -562,60 +571,82 @@ object Dedup {
   private[graft] def cappedBucketPairs(banded: DataFrame,
       keys: Seq[String], cap: Int,
       payload: Option[String] = None): DataFrame = {
-    require(cap >= 2, s"bucketCap must be >= 2, got $cap")
-    // loud precondition, not a mid-job cast surprise: members are
-    // ordered and compared as longs (the engine's document-id contract
-    // — rerankTopK and the streaming paths share it). A string id would
-    // cast to null and silently drop out of every pair.
-    val idOk = banded.schema("id").dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(idOk,
-      s"capped LSH candidate generation needs an integral (long-" +
-        s"castable) id column, got ${banded.schema("id").dataType}; " +
-        "map string ids to longs (e.g. xxhash64) upstream")
-    val keyCols = keys.map(col)
-    val sorted = banded.filter(col("id").isNotNull)
-      .select(keyCols :+ col("id").cast("long").as("__id") :+
-        payload.map(col).getOrElse(lit(0L)).cast("long").as("__pl"): _*)
-      .repartition(keyCols: _*)
-      .sortWithinPartitions(keyCols :+ col("__id") :+ col("__pl"): _*)
-    val nKeys = keys.length
-    val pairs = sorted.mapPartitions(
-      rows => new CappedPairIterator(rows, nKeys, cap))(
-      org.apache.spark.sql.Encoders.row(CappedPairSchema))
+    val pairs = cappedPass(memberRows(banded, keys,
+      payload.map(col).getOrElse(lit(0L))), keys, cap, sectioned = false)
     if (payload.isDefined) pairs.distinct()
     else pairs.select(col("id1"), col("id2")).distinct()
   }
 
-  private val CappedPairSchema = {
-    import org.apache.spark.sql.types._
+  /** The (keys…, __id, __pl) rows the capped pass reads: non-null ids
+    * as longs, `pl` as a long beside them.
+    */
+  private def memberRows(banded: DataFrame, keys: Seq[String],
+      pl: Column): DataFrame = {
+    // loud precondition, not a mid-job cast surprise: members are
+    // ordered and compared as longs (the engine's document-id contract
+    // — rerankTopK and the streaming paths share it). A string id would
+    // cast to null and silently drop out of every pair.
+    val idType = banded.schema("id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType)
+      .contains(idType), s"capped LSH candidate generation needs an " +
+        s"integral (long-castable) id column, got $idType; map string " +
+        "ids to longs (e.g. xxhash64) upstream")
+    banded.filter(col("id").isNotNull)
+      .select(keys.map(col) :+ col("id").cast("long").as("__id") :+
+        pl.cast("long").as("__pl"): _*)
+  }
+
+  /** The one capped pass: [[memberRows]] cross ONE hash exchange on the
+    * bucket keys, are sorted within partitions and stream through
+    * [[CappedPairIterator]]. Plain rows sort by (keys, id, payload).
+    * `sectioned` rows carry the side in `__pl` (0 delta, 1 corpus);
+    * after the exchange each delta row is duplicated into section 2,
+    * and the rows sort by (keys, section, id).
+    */
+  private def cappedPass(members: DataFrame, keys: Seq[String], cap: Int,
+      sectioned: Boolean): DataFrame = {
+    require(cap >= 2, s"bucketCap must be >= 2, got $cap")
+    val keyCols = keys.map(col)
+    val exchanged = members.repartition(keyCols: _*)
+    val (rows, order) =
+      if (!sectioned) (exchanged, Seq("__id", "__pl"))
+      else (exchanged.withColumn("__pl", explode(when(col("__pl") === 0L,
+          array(lit(0), lit(2))).otherwise(array(lit(1))))),
+        Seq("__pl", "__id"))
+    rows.sortWithinPartitions(keyCols ++ order.map(col): _*).mapPartitions(
+      it => new CappedPairIterator(it, keys.length, cap, sectioned))(
+      org.apache.spark.sql.Encoders.row(CappedPairSchema))
+  }
+
+  private val CappedPairSchema =
     StructType(Seq(StructField("id1", LongType, nullable = false),
       StructField("id2", LongType, nullable = false),
       StructField("pl1", LongType), StructField("pl2", LongType)))
-  }
 
-  /** The streaming pass of [[cappedBucketPairs]] over one partition of
-    * (keys…, id, payload) rows sorted by (keys, id, payload). It keeps
-    * the first `cap` rows of the current bucket; a row arriving while
-    * the bucket is under the cap pairs with every kept member of
-    * smaller id, a later row pairs with the first member when its id
-    * exceeds the cap-th member's. One (id1, id2, pl1, pl2) row per
-    * `next()`.
+  /** The streaming pass of [[cappedPass]] over one partition of sorted
+    * (keys…, id, payload|section) rows. It keeps the first `cap` rows of
+    * the current bucket (of its section 0 when `sectioned`); a row
+    * arriving while the bucket is under the cap pairs with every kept
+    * member of smaller id, a later row pairs with the first member when
+    * its id exceeds the cap-th member's. Sectioned buckets go on with
+    * section 1, whose first `cap` ids are kept and whose later ids past
+    * the cap-th link to the first section-0 member, and section 2,
+    * whose every row pairs with each kept section-1 id; those pairs are
+    * emitted (smaller, larger) with null payloads. One (id1, id2, pl1,
+    * pl2) row per `next()`; state is at most 2·`cap` ids.
     */
   private final class CappedPairIterator(rows: Iterator[Row],
-      nKeys: Int, cap: Int) extends Iterator[Row] {
+      nKeys: Int, cap: Int, sectioned: Boolean) extends Iterator[Row] {
     private val ids = new Array[Long](cap)
     private val pls = new Array[Any](cap)
+    private val cids = if (sectioned) new Array[Long](cap) else null
     private val bucket = new Array[Any](nKeys)
     private var kept = -1 // members of the current bucket; -1 = none yet
+    private var cKept = 0 // kept section-1 ids of the current bucket
+    private var sec = 0
     private var id = 0L
     private var pl: Any = null
-    // pending pairs: kept members [nextIx, end) with the current row
+    // pending pairs of the current row: indexes [nextIx, end)
     private var nextIx = 0
     private var end = 0
 
@@ -628,26 +659,39 @@ object Dedup {
       if (!hasNext) throw new NoSuchElementException
       val j = nextIx
       nextIx += 1
-      Row(ids(j), id, pls(j), pl)
+      if (sec == 0) Row(ids(j), id, pls(j), pl)
+      else {
+        val other = if (sec == 1) ids(0) else cids(j)
+        Row(math.min(other, id), math.max(other, id), null, null)
+      }
     }
 
     private def advance(r: Row): Unit = {
       if (kept < 0 || (0 until nKeys).exists(k => r.get(k) != bucket(k))) {
         (0 until nKeys).foreach(k => bucket(k) = r.get(k))
         kept = 0
+        cKept = 0
       }
       id = r.getLong(nKeys)
-      pl = r.get(nKeys + 1)
+      if (sectioned) sec = r.getInt(nKeys + 1) else pl = r.get(nKeys + 1)
       nextIx = 0
-      if (kept < cap) {
-        // members are ascending and <= id: the pairs are the prefix of
-        // members with a strictly smaller id (no self-pairs)
-        end = kept
-        while (end > 0 && ids(end - 1) == id) end -= 1
-        ids(kept) = id
-        pls(kept) = pl
-        kept += 1
-      } else end = if (id > ids(cap - 1)) 1 else 0
+      sec match {
+        case 0 if kept < cap =>
+          // members are ascending and <= id: the pairs are the prefix
+          // of members with a strictly smaller id (no self-pairs)
+          end = kept
+          while (end > 0 && ids(end - 1) == id) end -= 1
+          ids(kept) = id
+          pls(kept) = pl
+          kept += 1
+        case 0 => end = if (id > ids(cap - 1)) 1 else 0
+        case 1 if cKept < cap =>
+          end = 0
+          cids(cKept) = id
+          cKept += 1
+        case 1 => end = if (kept > 0 && id > cids(cap - 1)) 1 else 0
+        case _ => end = cKept
+      }
     }
   }
 
@@ -696,16 +740,13 @@ object Dedup {
     * the union once (map-only), then generate candidates ONLY in buckets
     * where at least one delta document landed — every pure-corpus bucket
     * (the overwhelming majority when |delta| ≪ |corpus|) is pruned by
-    * one linear aggregation + one equi-join before any pair work. Delta
-    * and corpus members are capped SEPARATELY inside a touched bucket:
-    * delta×delta pairs ride [[cappedBucketPairs]] over delta members
-    * only, delta×corpus pairs cross each delta member with the bucket's
-    * `bucketCap` smallest corpus ids (corpus members past the cap link
-    * to the bucket's minimum delta id, keeping mega-bucket clusters
-    * connected) — so a bucket dominated by corpus docs can never demote
-    * delta docs to overflow, and no corpus×corpus pair work is ever
-    * generated. Verification is shared verbatim with the batch path
-    * ([[verifyJaccard]]), so reported Jaccard values stay exact.
+    * a semi-join against the delta's buckets before any pair work. Delta
+    * and corpus members are capped SEPARATELY inside a touched bucket
+    * by [[incrementalCappedPairs]]' one sorted pass, so a bucket
+    * dominated by corpus docs can never demote delta docs to overflow,
+    * and no corpus×corpus pair work is ever generated. Verification is
+    * shared verbatim with the batch path ([[verifyJaccard]]), so
+    * reported Jaccard values stay exact.
     *
     * Same recall regime as [[minHashPairs]] (per-pair detection
     * 1−(1−J^r)^bands; identical docs collide in every band), asserted in
@@ -721,81 +762,52 @@ object Dedup {
         .withColumn("isNew", lit(false))
         .unionByName(shingleSets(delta, idCol, textCol, k)
           .withColumn("isNew", lit(true))))
-    val sig = sets.withColumn("minhash_sig",
-      GraftFunctions.minHashSignature(col("sh"), numHashes))
     val banded = CacheScope.cached(
-      bandedBuckets(sig, "id", numHashes, bands,
-        passthrough = Seq("isNew")))
-    verifyJaccard(
-      incrementalCappedPairs(
-        banded.filter(col("isNew")).select(col("id"), col("band"),
-          col("bucket")),
-        banded.filter(!col("isNew")).select(col("id"), col("band"),
-          col("bucket")),
-        bucketCap),
-      sets, threshold)
+      bandedSets(sets, numHashes, bands, passthrough = Seq("isNew")))
+    verifyJaccard(incrementalCappedPairs(banded.filter(col("isNew")),
+      banded.filter(!col("isNew")), bucketCap), sets, threshold)
   }
 
   /** Candidate pairs for the incremental LSH forms: `deltaBanded` and
-    * `corpusBanded` are (id, band, bucket) frames for the two sides —
-    * the corpus side is first pruned to TOUCHED buckets (those where at
-    * least one delta doc landed; every pure-corpus bucket generates
-    * nothing), then delta and corpus members are capped SEPARATELY:
+    * `corpusBanded` are (id, band, bucket) frames for the two sides.
+    * Per bucket:
     *
-    *  - delta×delta pairs ride [[cappedBucketPairs]] over delta members
-    *    only — a touched bucket dominated by corpus docs can never fill
-    *    the cap's smallest-id slots with corpus members and demote
-    *    delta docs (typically the larger/new ids) to
+    *  - delta×delta pairs follow [[cappedBucketPairs]]' cap over the
+    *    delta members only — a touched bucket dominated by corpus docs
+    *    can never fill the cap's smallest-id slots with corpus members
+    *    and demote delta docs (typically the larger/new ids) to
     *    representative-only overflow;
-    *  - delta×corpus pairs cross each delta member with the bucket's
-    *    `bucketCap` smallest corpus ids (a bounded-state TopKRows
-    *    buffer) — per-bucket output ≤ nDelta·cap, never
-    *    nDelta·nCorpus; corpus members past the cap link to the
-    *    bucket's minimum DELTA id, so the overflow edge stays
-    *    delta-touching and a mega-bucket still CLUSTERS completely
-    *    after the delta filter.
+    *  - every delta member pairs with the bucket's `bucketCap` smallest
+    *    corpus ids — per-bucket output ≤ nDelta·cap, never
+    *    nDelta·nCorpus;
+    *  - each corpus member past the cap links to the bucket's minimum
+    *    DELTA id, so the overflow edge stays delta-touching and a
+    *    mega-bucket still CLUSTERS completely after the delta filter;
+    *  - a bucket with no delta member emits nothing, and no
+    *    corpus×corpus pair is ever generated.
     *
-    * No corpus×corpus pair is ever generated. Shared by the recompute
-    * form ([[minHashPairsAgainst]]) and the persisted-index form
+    * Mechanism: the corpus rows are first pruned to TOUCHED buckets by a
+    * left-semi join against the delta's (band, bucket) keys, broadcast
+    * when the cached delta rows fit the [[graft.core.BroadcastGate]].
+    * Then both sides cross [[cappedBucketPairs]]' one exchange on the
+    * bucket keys into one sorted streaming pass in three sections per
+    * bucket: the delta rows (delta×delta pairs; the first is the
+    * minimum), the corpus rows (the first `bucketCap` are kept, later
+    * ones link to the minimum delta id), and the delta rows again, each
+    * pairing with the kept corpus ids. Shared by the recompute form
+    * ([[minHashPairsAgainst]]) and the persisted-index form
     * ([[DedupIndex.minHashPairsAgainst]]). Ids must be long-castable
     * and unique across the two sides.
     */
-  private[operators] def incrementalCappedPairs(deltaBanded: DataFrame,
+  private[graft] def incrementalCappedPairs(deltaBanded: DataFrame,
       corpusBanded: DataFrame, bucketCap: Int): DataFrame = {
-    val dB = CacheScope.cached(deltaBanded)
-    val touched = dB.select(col("band"), col("bucket")).distinct()
-    val corpusHot = CacheScope.cached(
-      corpusBanded.join(touched, Seq("band", "bucket"))
-        .select(col("id"), col("band"), col("bucket")))
-    val dd = cappedBucketPairs(dB, Seq("band", "bucket"), bucketCap)
-    val keep = udaf(new graft.functions.Aggregators.TopKRows(bucketCap))
-    val corpusM = corpusHot
-      .groupBy(col("band"), col("bucket"))
-      .agg(keep(-col("id").cast("double"), col("id").cast("long"),
-        lit(0L)).as("__top"), count(lit(1)).as("__n"))
-      .select(col("band"), col("bucket"),
-        col("__top.key1").as("__ids"), col("__n"))
-    val dc = dB
-      .join(corpusM, Seq("band", "bucket"))
-      .select(col("id").cast("long").as("did"),
-        explode(col("__ids")).as("cid"))
-    val deltaMin = dB.groupBy(col("band"), col("bucket"))
-      .agg(min(col("id").cast("long")).as("dmin"))
-    val oversize = corpusM.filter(col("__n") > bucketCap)
-      .select(col("band"), col("bucket"),
-        element_at(col("__ids"), bucketCap).as("__maxm"))
-    val overflow = corpusHot
-      .join(oversize, Seq("band", "bucket"))
-      .filter(col("id").cast("long") > col("__maxm"))
-      .join(deltaMin, Seq("band", "bucket"))
-      .select(col("dmin").as("did"), col("id").cast("long").as("cid"))
-    // ids are unique ACROSS the two sides, so did ≠ cid always; the
-    // canonicalization + distinct collapses cross-band repeats
-    val dcPairs = dc.unionByName(overflow)
-      .select(least(col("did"), col("cid")).as("id1"),
-        greatest(col("did"), col("cid")).as("id2"))
-      .distinct()
-    dd.unionByName(dcPairs).distinct()
+    val keys = Seq("band", "bucket")
+    val delta = CacheScope.cached(memberRows(deltaBanded, keys, lit(0L)))
+    val hint = BroadcastGate.hint("incremental lsh: delta buckets", delta)
+    val corpus = memberRows(corpusBanded, keys, lit(1L))
+      .join(hint(delta.select(keys.map(col): _*)), keys, "left_semi")
+    cappedPass(delta.unionByName(corpus), keys, bucketCap, sectioned = true)
+      .select(col("id1"), col("id2")).distinct()
   }
 
   /** The DISTINCT shingle set of a corpus as a one-column frame (s) —

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.core.{BroadcastGate, CacheScope, CollectionManager}
-import graft.expressions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,7 +58,7 @@ import org.apache.spark.sql.functions._
   * the same work ONE recompute call already pays, now amortized over
   * every future delta. Per-delta cost after that: map-only
   * shingle/sign/band of the delta, a vocabulary join against `dfreq`,
-  * the bucket equi-join against `banded` (touched buckets only), and
+  * the touched-bucket semi-join against `banded`, and
   * verification joins that read `sets` — all index-parquet scans, no
   * corpus-source scan anywhere (plan-asserted in the spec suite).
   */
@@ -81,11 +80,14 @@ final class DedupIndex private (
   /** The per-verb guard (see [[DedupIndex.checkLive]]). */
   private[graft] def checkLive(): Unit = DedupIndex.checkLive(spark, path)
 
+  /** `df` read after the guard: every public accessor recovers first. */
+  private def live(df: => DataFrame): DataFrame = { checkLive(); df }
+
   /** (id, sh, n) LIVE corpus shingle sets — the verification side
     * (tombstoned documents excluded; the presence probe is cached per
     * handle, see [[TombstoneStore]]).
     */
-  def sets: DataFrame = tomb.minus(setsRaw)
+  def sets: DataFrame = live(tomb.minus(setsRaw))
 
   /** The stored shingle sets WITHOUT the tombstone filter — the
     * streaming layer caches this corpus-sized frame once and applies
@@ -103,14 +105,14 @@ final class DedupIndex private (
     * benign way [[extend]] does — candidates inflate, verified pairs
     * stay exact; [[rebuild]] restores the rarest-first economy).
     */
-  def dfreq: DataFrame = mgr.collection(DedupIndex.DfreqName).read()
+  def dfreq: DataFrame = live(mgr.collection(DedupIndex.DfreqName).read())
 
   /** (id, n, s, rn) LIVE corpus prefix rows under the build threshold. */
   def prefix: DataFrame =
-    tomb.minus(mgr.collection(DedupIndex.PrefixName).read())
+    live(tomb.minus(mgr.collection(DedupIndex.PrefixName).read()))
 
   /** (id, band, bucket) LIVE corpus MinHash-LSH bucket assignments. */
-  def banded: DataFrame = tomb.minus(bandedRaw)
+  def banded: DataFrame = live(tomb.minus(bandedRaw))
 
   /** The stored bucket assignments WITHOUT the tombstone filter — see
     * [[setsRaw]].
@@ -208,6 +210,9 @@ final class DedupIndex private (
       // rows the tombstone filter then hides — state that silently
       // resurrects when the tombstone is compacted away. Refuse.
       tomb.refuse(delta, idCol, "rebuild")
+      // read before the marker exists (the accessor's guard refuses a
+      // pending one); extend never writes dfreq
+      val dfreqC = CacheScope.cached(dfreq)
       val marker = new org.apache.hadoop.fs.Path(path,
         DedupIndex.PendingPrefix + java.util.UUID.randomUUID())
       fs.create(marker).close()
@@ -216,17 +221,13 @@ final class DedupIndex private (
       mgr.collection(DedupIndex.SetsName).write(dSets, SaveMode.Append)
       val dPost = dSets.select(col("id"), col("n"),
         explode(col("sh")).as("s"))
-      val dfreqC = CacheScope.cached(dfreq)
       val dfHint = BroadcastGate.hint("dedup-index extend: dfreq", dfreqC)
       val dPrefix = Dedup.prefixRanked(dPost
         .join(dfHint(dfreqC), Seq("s"), "left")
         .withColumn("df", coalesce(col("df"), lit(0L))), threshold)
       mgr.collection(DedupIndex.PrefixName).write(dPrefix, SaveMode.Append)
-      val dSig = dSets.withColumn("minhash_sig",
-        GraftFunctions.minHashSignature(col("sh"), numHashes))
       mgr.collection(DedupIndex.BandedName).write(
-        Dedup.bandedBuckets(dSig, "id", numHashes, bands),
-        SaveMode.Append)
+        Dedup.bandedSets(dSets, numHashes, bands), SaveMode.Append)
       fs.delete(marker, false)
       ()
     }
@@ -234,10 +235,11 @@ final class DedupIndex private (
   /** Incremental MinHash-LSH pairs against the stored corpus —
     * [[Dedup.minHashPairsAgainst]]'s output with the corpus banding
     * served from the index: delta docs are shingled/signed/banded
-    * map-side, only stored-corpus buckets a delta doc landed in
-    * generate candidates ([[Dedup.incrementalCappedPairs]] — delta and
-    * corpus capped separately), and verification reads the stored
-    * shingle sets. The corpus source is never scanned.
+    * map-side, the stored `banded` rows are semi-joined to the buckets
+    * a delta doc landed in, and both sides run through
+    * [[Dedup.incrementalCappedPairs]]' one sorted pass (delta and corpus
+    * capped separately); verification reads the stored shingle sets.
+    * The corpus source is never scanned.
     */
   def minHashPairsAgainst(delta: DataFrame, idCol: String, textCol: String,
       queryThreshold: Double,
@@ -245,10 +247,8 @@ final class DedupIndex private (
     checkLive()
     val dSets = CacheScope.cached(
       Dedup.shingleSets(delta, idCol, textCol, k))
-    val dSig = dSets.withColumn("minhash_sig",
-      GraftFunctions.minHashSignature(col("sh"), numHashes))
-    val dBanded = Dedup.bandedBuckets(dSig, "id", numHashes, bands)
-    val cand = Dedup.incrementalCappedPairs(dBanded, banded, bucketCap)
+    val cand = Dedup.incrementalCappedPairs(
+      Dedup.bandedSets(dSets, numHashes, bands), banded, bucketCap)
     val vSets = CacheScope.cached(sets.unionByName(dSets))
     Dedup.verifyJaccard(cand, vSets, queryThreshold)
   }
@@ -313,12 +313,13 @@ object DedupIndex {
   private[operators] val MetaName = "meta"
   private[operators] val PendingPrefix = ".extend-pending-"
 
-  /** The per-verb guard, also run by [[load]]: crash recovery of the
-    * index root, then a loud refusal of an index carrying an
-    * `.extend-pending-*` marker. [[DedupIndex.extend]] appends to THREE
-    * collections; a crash between them leaves them mutually
-    * inconsistent — documents present for verification but absent from
-    * candidate generation, i.e. silently missed duplicates forever.
+  /** The guard every verb and public accessor runs, also run by
+    * [[load]]: crash recovery of the index root, then a loud refusal of
+    * an index carrying an `.extend-pending-*` marker.
+    * [[DedupIndex.extend]] appends to THREE collections; a crash between
+    * them leaves them mutually inconsistent — documents present for
+    * verification but absent from candidate generation, i.e. silently
+    * missed duplicates forever.
     */
   private def checkLive(spark: SparkSession, path: String): Unit = {
     val stuck = IndexRoot.liveNames(spark, path)
@@ -369,12 +370,10 @@ object DedupIndex {
           mgr.collection(PrefixName).write(prefix, SaveMode.ErrorIfExists)
         }
       }(scala.concurrent.ExecutionContext.global)
-      val sig = sets.withColumn("minhash_sig",
-        GraftFunctions.minHashSignature(col("sh"), numHashes))
       val bandedWrite = scala.util.Try(
         labeled(spark, "dedup-index build: banded") {
           mgr.collection(BandedName).write(
-            Dedup.bandedBuckets(sig, "id", numHashes, bands),
+            Dedup.bandedSets(sets, numHashes, bands),
             SaveMode.ErrorIfExists)
         })
       // both writes end before a failure reaches the staging cleanup

@@ -73,8 +73,7 @@ final class IvfPqIndex private (
   /** (neighbor_id, cn, codes, qerrs, cell) — the stored LIVE encoded
     * corpus (tombstoned vectors excluded).
     */
-  def codes: DataFrame =
-    tomb.minus(mgr.collection(AnnIndex.CodesName).read())
+  def codes: DataFrame = { checkLive(); tomb.minus(codesRaw) }
 
   /** The stored codes WITHOUT the tombstone filter — the streaming
     * layer caches this frame once and anti-joins the LIVE tombstone

@@ -881,13 +881,9 @@ object Streaming {
       .select(col("id").as("dup_of"))
     // the cap smallest ids per bucket — the members the batch twin
     // ([[graft.operators.Dedup.cappedBucketPairs]]) keeps — through the
-    // bounded-state TopKRows buffer (score = −id ⇒ ascending id):
-    // at most `bucketCap` rows per (bucket, partition) cross the
-    // exchange, where the previous row_number window SORTED the whole
-    // stored banded table at stream construction — a corpus-sized sort
-    // paid once per stream start on a 100 TB index. Identical kept
-    // members (ids are unique within a band, so the (id) order is
-    // total); same long-castable-id contract as every capped LSH path.
+    // bounded-state TopKRows buffer (score = −id ⇒ ascending id; ids
+    // are unique within a band, so the order is total); same
+    // long-castable-id contract as every capped LSH path.
     val keepCap = udaf(new graft.functions.Aggregators.TopKRows(bucketCap))
     val cappedCorpus = graft.core.CacheScope.cached(
       index.bandedRaw

@@ -50,6 +50,27 @@ class DedupIndexSpec extends SparkSpec {
       idx.minHashPairsAgainst(deltaDocs, "doc_id", "text", 0.6))
     assert(indexed == recompute)
     assert(indexed.nonEmpty, "vacuous corpus: no delta-touching pairs")
+
+    // a binding cap: 12 corpus copies of one document and one delta
+    // copy share a bucket in every band, so bucketCap = 4 keeps 4
+    // corpus members and links the other 8 to the delta doc
+    val notice = "this page uses cookies to improve your browsing " +
+      "experience on our site"
+    def withCopies(df: DataFrame, ids: Seq[Long]) =
+      df.select(col("doc_id"), col("text"))
+        .unionByName(ids.map(i => (i, notice)).toDF("doc_id", "text"))
+    val copies = (900001L to 900012L)
+    val corpus2 = withCopies(corpusDocs, copies)
+    val delta2 = withCopies(deltaDocs, Seq(900100L))
+    val idx2 = DedupIndex.build(corpus2, "doc_id", "text", k = 3,
+      threshold = 0.6, numHashes = 64, bands = 16, path = tmpDir())
+    val capped = pairSet(idx2.minHashPairsAgainst(delta2, "doc_id", "text",
+      0.6, bucketCap = 4))
+    assert(capped == pairSet(Dedup.minHashPairsAgainst(corpus2, delta2,
+      "doc_id", "text", k = 3, numHashes = 64, bands = 16,
+      threshold = 0.6, bucketCap = 4)))
+    assert(capped.filter(p => p._1 > 900000L) ==
+      copies.map(c => (c, 900100L, 1.0)).toSet)
   }
 
   test("a second delta batch reuses the index: NO corpus-source scan " +

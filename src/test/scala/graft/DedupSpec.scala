@@ -211,6 +211,80 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Driver-side model of [[Dedup.incrementalCappedPairs]]' four rules
+    * over (id, band, bucket) rows of each side, ids unique across the
+    * sides: per bucket with a delta member, delta×delta pairs follow
+    * [[cappedModel]]; every delta id pairs with the `cap` smallest
+    * corpus ids; each later corpus id links to the minimum delta id. A
+    * bucket with no delta member emits nothing. Pairs are (min, max).
+    */
+  private def incrementalModel(delta: Seq[(Long, Int, Long)],
+      corpus: Seq[(Long, Int, Long)], cap: Int): Set[(Long, Long)] = {
+    val corpusOf = corpus.groupBy(t => (t._2, t._3))
+    def ordered(a: Long, b: Long) = (math.min(a, b), math.max(a, b))
+    delta.groupBy(t => (t._2, t._3)).toSeq.flatMap { case (b, ds) =>
+      val dd = cappedModel(ds.map(t => (t._1, t._2, t._3, 0L)), cap)
+        .map(p => (p._1, p._2))
+      val dIds = ds.map(_._1).sorted
+      val (kept, over) =
+        corpusOf.getOrElse(b, Nil).map(_._1).sorted.splitAt(cap)
+      dd ++ (for (d <- dIds; c <- kept) yield ordered(d, c)) ++
+        over.map(ordered(dIds.head, _))
+    }.toSet
+  }
+
+  test("incrementalCappedPairs randomized (seeded) equals the driver " +
+      "model of its four rules: non-binding and binding caps, a corpus " +
+      "mega-bucket touched by one delta doc, a delta mega-bucket, both " +
+      "sides over the cap, pure-corpus buckets; broadcast and shuffled " +
+      "touched-bucket pruning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(1729)
+    for (_ <- 1 to 2) {
+      // ids unique across the sides, interleaved in id order
+      val ids = rnd.shuffle((1 to 140 + rnd.nextInt(40)).map(_.toLong))
+      val (dIds, cIds) = ids.splitAt(45)
+      // bands 0..2: a random bucket per id, as bandedBuckets shapes it
+      def random(side: Seq[Long]) = for {
+        id <- side; band <- 0 until 3
+      } yield (id, band, rnd.nextInt(6).toLong)
+      // band 3: planted buckets, each id in at most one of them
+      def planted(side: Seq[Long], sizes: Seq[(Long, Int)]) = {
+        val slices = sizes.scanLeft(0)(_ + _._2)
+        sizes.zip(slices).flatMap { case ((bucket, n), from) =>
+          side.slice(from, from + n).map(id => (id, 3, bucket))
+        }
+      }
+      val delta = random(dIds) ++
+        planted(dIds, Seq(90L -> 1, 91L -> 20, 92L -> 10))
+      // corpus-only rows in band 3 bucket 93 and in band 4: pure-corpus
+      val corpus = random(cIds) ++
+        planted(cIds, Seq(90L -> 30, 91L -> 3, 92L -> 10, 93L -> 12)) ++
+        cIds.take(20).map(id => (id, 4, 0L))
+      val deltaDf = delta.toDF("id", "band", "bucket")
+      val corpusDf = corpus.toDF("id", "band", "bucket")
+      for (cap <- Seq(1000, 4);
+           gate <- Seq(None, Some(0L))) {
+        val got = graft.core.BroadcastGate.forced.withValue(gate) {
+          Dedup.incrementalCappedPairs(deltaDf, corpusDf, cap)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        }
+        val model = incrementalModel(delta, corpus, cap)
+        assert(got == model, s"cap $cap, gate $gate: " +
+          s"missing ${(model -- got).take(5)}, extra ${(got -- model).take(5)}")
+        // the planted corpus mega-bucket: one delta doc reaches all 30
+        // corpus members, past the cap through the overflow link
+        val d90 = dIds.head
+        cIds.take(30).foreach { c =>
+          assert(got.contains((math.min(d90, c), math.max(d90, c))),
+            s"cap $cap: corpus $c of the mega-bucket not linked to $d90")
+        }
+        assert(!got.exists(p => cIds.contains(p._1) && cIds.contains(p._2)),
+          "a corpus×corpus pair")
+      }
+    }
+  }
+
   test("capped LSH edge cases: duplicate input ids never emit self-" +
       "pairs, and non-integral id columns fail loudly at construction") {
     import spark.implicits._

@@ -3,13 +3,18 @@ package graft
 import graft.queries.{Extensions, Relational}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{ExplainMode, GenerateExec,
-  MapPartitionsExec, ProjectExec, SerializeFromObjectExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.Not
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{ExplainMode, FilterExec,
+  GenerateExec, MapPartitionsExec, ProjectExec, SerializeFromObjectExec,
+  SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
 
 /** Physical-plan shape regressions: the properties that make the corpus
   * scale (scan pushdown, broadcast dimension joins, compiled kernels in
@@ -49,9 +54,15 @@ class PlanSpec extends SparkSpec {
     * partitioned on `bucketKeys`, before the streaming pair pass (the
     * one node emitting (id1, id2[, pl1, pl2])); no BroadcastExchange
     * carries them, and no join anywhere is keyed on a bucket column.
+    * With `touchedBuild` (the incremental form), exactly one join is
+    * keyed on them: a left-semi hash join whose build side, and only
+    * that side, holds a node `touchedBuild` matches; that build side is
+    * the one broadcast of banded rows allowed.
     */
   private def assertOneBandedExchange(df: DataFrame,
-      bucketKeys: Set[String])(banding: SparkPlan => Boolean): Unit = {
+      bucketKeys: Set[String],
+      touchedBuild: Option[SparkPlan => Boolean] = None)
+      (banding: SparkPlan => Boolean): Unit = {
     val all = physicalNodes(df.queryExecution.executedPlan)
     val tree = all.head.treeString
     val passes = all.collect {
@@ -71,14 +82,33 @@ class PlanSpec extends SparkSpec {
           bucketKeys, tree)
       case other => fail(s"banded exchange partitioned by $other:\n$tree")
     }
+    val bucketJoins = all.collect { case j: BaseJoinExec
+        if (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+          .exists(bucketKeys) => j
+    }
+    val allowed = touchedBuild match {
+      case None =>
+        assert(bucketJoins.isEmpty, s"a join on the bucket keys:\n$tree")
+        Set.empty[SparkPlan]
+      case Some(isBuild) =>
+        assert(bucketJoins.size == 1, s"bucket-keyed joins:\n$tree")
+        val (build, streamed) = bucketJoins.head match {
+          case j: HashJoin if j.joinType == LeftSemi => j.buildSide match {
+            case BuildRight => (j.right, j.left)
+            case BuildLeft => (j.left, j.right)
+          }
+          case j => fail(s"not a left-semi hash join: ${j.nodeName}\n$tree")
+        }
+        assert(physicalNodes(build).exists(isBuild) &&
+          !physicalNodes(streamed).exists(isBuild),
+          s"the semi-join builds on the wrong side:\n$tree")
+        Set(build)
+    }
     assert(!all.exists {
-      case b: BroadcastExchangeExec => physicalNodes(b).exists(banding)
+      case b: BroadcastExchangeExec =>
+        !allowed(b) && physicalNodes(b).exists(banding)
       case _ => false
     }, s"the banded rows are broadcast:\n$tree")
-    val joinKeys = all.collect { case j: BaseJoinExec =>
-      (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
-    }.flatten
-    assert(!joinKeys.exists(bucketKeys), s"a join on the bucket keys:\n$tree")
   }
 
   test("mega-stratum rank windows are gone: temperatureSampleApprox " +
@@ -204,14 +234,27 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("isNew"), p)
   }
 
-  test("x60: incremental LSH rides the bounded bucket generator — " +
-      "no cartesian, partial+final bounded agg, touched-bucket join") {
-    val p = plan(Extensions.x60IncrementalLsh(spark, sfDir))
+  test("x60: incremental LSH rides the one capped pass — the banded " +
+      "rows cross one (band, bucket) exchange, no bounded-agg buffer, " +
+      "and the only bucket-keyed join is the touched-bucket semi-join " +
+      "built on the delta") {
+    val df = Extensions.x60IncrementalLsh(spark, sfDir)
+    val p = plan(df)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    val objAggs = p.split("ObjectHashAggregate").length - 1
-    assert(objAggs >= 2, s"expected partial+final bounded agg:\n$p")
-    assert(p.contains("isNew"), p) // the delta-touched bucket pruning
+    // the delta rows: filtered on isNew, not on NOT isNew
+    val delta: SparkPlan => Boolean = {
+      case f: FilterExec =>
+        f.condition.references.exists(_.name == "isNew") &&
+          f.condition.find(_.isInstanceOf[Not]).isEmpty
+      case _ => false
+    }
+    assertOneBandedExchange(df, Set("band", "bucket"), Some(delta))(
+      bandExplode)
+    assert(!physicalNodes(df.queryExecution.executedPlan).exists {
+      case a: ObjectHashAggregateExec => physicalNodes(a).exists(bandExplode)
+      case _ => false
+    }, s"an object aggregation over the banded rows:\n$p")
   }
 
   test("q1: aggregation is partial (map-side) before the single exchange") {

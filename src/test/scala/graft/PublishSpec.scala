@@ -493,25 +493,40 @@ class PublishSpec extends SparkSpec {
   // ---- index build and rebuild: one stage-and-swap per index ------
 
   /** The index fault matrix: `template` holds an index at `idx`. Each
-    * run copies it, crashes `op` at the k-th op on the index root or
-    * its siblings, then `answers` (which loads the index, so recovery
-    * runs first) must equal the old side's or the new side's — the new
-    * side read from one unfaulted run — with no residue.
+    * run copies it, opens a handle on the copy (`counts` loads it and
+    * returns its public accessors' row counts), crashes `op` at the
+    * k-th op on the index root or its siblings, then reads the counts
+    * through that handle: they must be the old side's or the new
+    * side's, or a loud refusal (a stale handle) — never the 0 of an
+    * unrecovered read. Then `answers` (which loads the index, so
+    * recovery runs first) must equal the old side's or the new side's
+    * — the new side read from one unfaulted run — with no residue.
     */
   private def indexMatrix(template: String)(op: String => Unit)
-      (answers: String => Seq[Any]): Unit = {
+      (answers: String => Seq[Any])
+      (counts: String => () => Seq[Long]): Unit = {
     val old = answers(faulty(s"$template/idx"))
+    val oldCounts = counts(faulty(s"$template/idx"))()
     val reference = localDir("graft_index_matrix_new")
     copyTree(template, reference)
     op(faulty(s"$reference/idx"))
     val fresh = answers(faulty(s"$reference/idx"))
+    val freshCounts = counts(faulty(s"$reference/idx"))()
     assert(fresh != old, "the operation changed no answer: the matrix " +
       "could not tell the two sides apart")
     val crashes = faultMatrix { k =>
       val parent = localDir("graft_index_matrix")
       copyTree(template, parent)
       val local = s"$parent/idx"
+      val opened = counts(faulty(local))
       val crashed = crashAt(k, local)(op(faulty(local)))
+      scala.util.Try(opened()) match {
+        case scala.util.Success(n) => assert(n == oldCounts ||
+          n == freshCounts, s"k=$k: accessor counts $n, old $oldCounts, " +
+          s"new $freshCounts")
+        case scala.util.Failure(e) => assert(
+          e.isInstanceOf[IllegalArgumentException], s"k=$k: $e")
+      }
       val seen = answers(faulty(local))
       assert(seen == old || seen == fresh, s"k=$k: $seen")
       assert(residue(local).isEmpty, s"k=$k: ${residue(local)}")
@@ -552,16 +567,22 @@ class PublishSpec extends SparkSpec {
     template
   }
 
+  /** Row counts of a [[DedupIndex]] handle's public accessors. */
+  private def dedupCounts(path: String): () => Seq[Long] = {
+    val idx = DedupIndex.load(spark, path)
+    () => Seq(idx.sets, idx.dfreq, idx.prefix, idx.banded).map(_.count())
+  }
+
   test("fault matrix: DedupIndex.build") {
     indexMatrix(dedupTemplate())(path => DedupIndex.build(
       dedupCorpus.filter(col("doc_id") =!= 15L), "doc_id", "text", k = 3,
-      threshold = 0.6, path = path))(dedupAnswers)
+      threshold = 0.6, path = path))(dedupAnswers)(dedupCounts)
   }
 
   test("fault matrix: DedupIndex.rebuild publishes sets by swap") {
     // with the whole index: sets, derived tables and meta swap as one
     indexMatrix(dedupTemplate())(path =>
-      DedupIndex.load(spark, path).rebuild())(dedupAnswers)
+      DedupIndex.load(spark, path).rebuild())(dedupAnswers)(dedupCounts)
   }
 
   test("a failed index build leaves the previous index and no staging " +
@@ -592,12 +613,14 @@ class PublishSpec extends SparkSpec {
   /** Build the template index over [[annCorpus]] with vector 2
     * tombstoned, then run the build matrix (a build over two thirds of
     * the corpus) and the rebuild matrix. `answers` gets the stored row
-    * count of the index's `main` collection prepended.
+    * count of the index's `main` collection prepended; `counts` is the
+    * matrix's accessor probe.
     */
   private def annMatrices(main: String)
       (build: (DataFrame, String) => Unit)
       (delete: (String, DataFrame) => Unit)(rebuild: String => Unit)
-      (answers: (String, DataFrame) => DataFrame): Unit = {
+      (answers: (String, DataFrame) => DataFrame)
+      (counts: String => () => Seq[Long]): Unit = {
     import spark.implicits._
     val template = localDir("graft_index_ann_t")
     build(annCorpus, faulty(s"$template/idx"))
@@ -608,8 +631,8 @@ class PublishSpec extends SparkSpec {
       storedRows(path, main) +: top // after `answers` loaded (recovered)
     }
     indexMatrix(template)(path =>
-      build(annCorpus.filter(col("vec_id") % 3 =!= 0), path))(seen)
-    indexMatrix(template)(rebuild)(seen)
+      build(annCorpus.filter(col("vec_id") % 3 =!= 0), path))(seen)(counts)
+    indexMatrix(template)(rebuild)(seen)(counts)
   }
 
   test("fault matrix: PqIndex build and rebuild") {
@@ -619,7 +642,10 @@ class PublishSpec extends SparkSpec {
       path => PqIndex.load(spark, path).rebuild(annCorpus, "vec_id",
         "embedding"))(
       (path, q) => PqIndex.load(spark, path).topK(q, "vec_id",
-        "embedding", k = 3))
+        "embedding", k = 3)) { path =>
+      val idx = PqIndex.load(spark, path)
+      () => Seq(idx.codes.count())
+    }
   }
 
   test("fault matrix: IvfIndex build and rebuild") {
@@ -628,7 +654,10 @@ class PublishSpec extends SparkSpec {
       (path, ids) => IvfIndex.load(spark, path).delete(ids, "vec_id"))(
       path => IvfIndex.load(spark, path).rebuild())(
       (path, q) => IvfIndex.load(spark, path).topK(q, "vec_id",
-        "embedding", k = 3, nProbe = 2))
+        "embedding", k = 3, nProbe = 2)) { path =>
+      val idx = IvfIndex.load(spark, path)
+      () => Seq(idx.cells.count())
+    }
   }
 
   test("an index rebuild carries the ingest streams' replay marker into " +
@@ -650,7 +679,10 @@ class PublishSpec extends SparkSpec {
       path => IvfPqIndex.load(spark, path).rebuild(annCorpus, "vec_id",
         "embedding"))(
       (path, q) => IvfPqIndex.load(spark, path).topK(q, "vec_id",
-        "embedding", k = 3, nProbe = 2))
+        "embedding", k = 3, nProbe = 2)) { path =>
+      val idx = IvfPqIndex.load(spark, path)
+      () => Seq(idx.codes.count())
+    }
   }
 
   // ---- tooling guard ----------------------------------------------
