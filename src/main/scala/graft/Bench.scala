@@ -33,8 +33,11 @@ package graft
   * burned on its min-wall pass), `tasks`, and `exec_ms` (executor run
   * time) — so `cpu/sec` reads as effective parallelism per query and
   * an 8-vs-32-core wall ratio of ~1 is attributable (overhead-bound at
-  * this SF) instead of suspicious. Snapshots are taken outside the
-  * timed region after a listener-bus drain.
+  * this SF) instead of suspicious — plus `compiles` and `compile_ms`,
+  * the generated classes that pass compiled and their Janino time
+  * ([[graft.core.Graft.codegenTotals]]); `pass_compiles` sums them per
+  * pass, so a warm pass that still compiles is visible. Snapshots are
+  * taken outside the timed region after a listener-bus drain.
   *
   * On the round-2 numbers (x6 183 s, x8 26 s, q10 4.4 s) and round-3's
   * x3 112 s: measurement artifacts of sustained host CPU-steal windows
@@ -101,13 +104,15 @@ object Bench {
     catch { case _: Throwable => () }
 
     final case class QRun(name: String, sec: Double, ok: Boolean,
-      cpuSec: Double, tasks: Long, execMs: Long)
+      cpuSec: Double, tasks: Long, execMs: Long, compiles: Long,
+      compileMs: Double)
     def pass(): Seq[QRun] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         org.apache.spark.graft.GraftSparkHooks
           .drainListenerBus(spark.sparkContext)
         val (tasks0, exec0, cpu0) =
           (taskCount.get(), execRunMs.get(), processCpuSec)
+        val codegen0 = graft.core.Graft.codegenTotals
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -120,8 +125,10 @@ object Bench {
         // and the wait is never charged to the query
         org.apache.spark.graft.GraftSparkHooks
           .drainListenerBus(spark.sparkContext)
+        val codegen = graft.core.Graft.codegenTotals
         QRun(name, sec, ok, processCpuSec - cpu0,
-          taskCount.get() - tasks0, execRunMs.get() - exec0)
+          taskCount.get() - tasks0, execRunMs.get() - exec0,
+          codegen._1 - codegen0._1, codegen._2 - codegen0._2)
       }
 
     // operators cache intermediate sets and never unpersist (lazy results
@@ -206,6 +213,7 @@ object Bench {
       s""","contended":$contended"""
 
     val all = passes.result()
+    val passCompiles = all.map(_.map(_.compiles).sum)
     // per query: min wall across passes (the protocol since round 1),
     // with cpu/tasks/exec attributed from the pass that won the min —
     // consistent per-pass attribution, never a mix
@@ -232,10 +240,11 @@ object Bench {
     val detail = results.map { case (k, sec, ok, best) =>
       s""""$k":{"sec":${num(sec, 3)},"ok":$ok,""" +
         s""""cpu":${num(best.cpuSec, 3)},"tasks":${best.tasks},""" +
-        s""""exec_ms":${best.execMs}}"""
+        s""""exec_ms":${best.execMs},"compiles":${best.compiles},""" +
+        s""""compile_ms":${num(best.compileMs, 1)}}"""
     }.mkString("{", ",", "}")
     val detailLine =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$detail,"failed":$failed,"pass_wall":${arr(wall.result())},"pass_cpu":${arr(cpu.result())}$loadStats$hostStats,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$detail,"failed":$failed,"pass_wall":${arr(wall.result())},"pass_cpu":${arr(cpu.result())},"pass_compiles":${passCompiles.mkString("[", ",", "]")}$loadStats$hostStats,"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("bench_detail.json")
       java.nio.file.Files.write(p, (detailLine + "\n").getBytes("UTF-8"))

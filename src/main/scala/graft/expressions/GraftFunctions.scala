@@ -64,6 +64,10 @@ object GraftFunctions {
     c(PqAdcDot(e(codes), e(table), nCentroids))
   def minHashSignature(shingles: Column, numHashes: Int): Column =
     c(MinHashSignature(e(shingles), numHashes))
+  def minHashBandKeys(sig: Column, bands: Int, rows: Int): Column =
+    c(MinHashBandKeys(e(sig), bands, rows))
+  def qualityScore(text: Column, stopwords: Seq[String]): Column =
+    c(QualityScore(e(text), stopwords))
   def simHash64(text: Column): Column = c(SimHash64(e(text)))
   def htmlNcrDecode(text: Column): Column = c(HtmlNcrDecode(e(text)))
   def pslRegisteredDomain(host: Column, rules: Seq[String]): Column =

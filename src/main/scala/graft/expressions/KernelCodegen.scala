@@ -1,7 +1,9 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 
 /** Whole-stage-codegen participation for kernels whose logic lives in a
   * compiled Scala method rather than emitted Java: the generated code
@@ -16,6 +18,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGe
   * per-row boxing. With this trait the stage stays one generated method
   * and only the kernel call crosses a (JIT-inlinable, megamorphic at
   * worst) virtual dispatch per row.
+  *
+  * Spark's lambda built-ins are `CodegenFallback`: `filter`,
+  * `aggregate`, `transform`, `array_sort` and `exists` (and the other
+  * higher-order functions) evaluate interpreted, element by element.
+  * A per-row hot path that needs one gets a kernel here instead.
   */
 trait UnaryKernelCodegen extends UnaryExpression {
 
@@ -32,6 +39,31 @@ trait UnaryKernelCodegen extends UnaryExpression {
     // plain-casts for reference slots (ArrayData, UTF8String, ...)
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $ref.kernel($a);")
+  }
+}
+
+/** Unary variant whose kernel also takes a NULL input, for kernels whose
+  * result on null is a value, not null: the kernel never returns null.
+  */
+trait UnaryKernelCodegenNullInput extends UnaryExpression {
+
+  /** The expression's evaluation; `input` may be null. Public because
+    * the generated code calls it. Must NEVER return null.
+    */
+  def kernel(input: Any): Any
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = kernel(child.eval(input))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("kernel", this, getClass.getName)
+    val in = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${in.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        (${CodeGenerator.boxedType(dataType)}) $ref.kernel(${in.isNull} ? null : ${in.value});
+      """, isNull = FalseLiteral)
   }
 }
 

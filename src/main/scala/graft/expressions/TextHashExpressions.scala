@@ -4,9 +4,10 @@ import java.util.regex.Pattern
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native single-pass text/hash kernels for the dedup operators.
@@ -21,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `xxhash64()` function, so results are deterministic and stable across
   * partitionings, executors, and re-runs.
   */
-private[expressions] object Tok {
+private[graft] object Tok {
   val ws: Pattern = Pattern.compile("\\s+")
 
   /** Whitespace tokens of lowercase(text), empties dropped — exactly
@@ -280,6 +281,156 @@ object MinHashSignature {
       Array.tabulate(n)(i => mix(2L * i + 2).abs % P)))
   def as(n: Int): Array[Long] = consts(n)._1
   def bs(n: Int): Array[Long] = consts(n)._2
+}
+
+/** LSH band keys of a MinHash signature: element b is the XXH64 (seed
+  * 42) of the UTF-8 bytes `"<b>_<v1>,…,<vr>"` over signature slots
+  * b·r … b·r+r−1 — byte-for-byte the key of the composed form
+  * `xxhash64(concat_ws("_", b, array_join(transform(slice(sig, b·r+1,
+  * r), _.cast("string")), ",")))` that stored banded collections and
+  * streaming LSH state were written with, in one compiled pass and no
+  * string allocation. Its edge cases follow that form: null slots are
+  * dropped (as `array_join` drops them), a band past the end of a short
+  * signature keys `"<b>_"`, and a NULL signature keys `"<b>"` on every
+  * band (`concat_ws` skips the null join), so the output is never null.
+  */
+case class MinHashBandKeys(child: Expression, bands: Int, r: Int)
+    extends UnaryExpression with UnaryKernelCodegenNullInput {
+
+  require(bands >= 1 && r >= 1, s"bands and rows must be >= 1, got $bands, $r")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash_band_keys"
+
+  override def kernel(input: Any): Any = {
+    val sig = input.asInstanceOf[ArrayData]
+    val out = new Array[Long](bands)
+    // widest band key: "<b>_" plus r 20-byte longs and their commas
+    val buf = new Array[Byte](12 + 21 * r)
+    var b = 0
+    while (b < bands) {
+      var len = MinHashBandKeys.putLong(buf, 0, b)
+      if (sig != null) {
+        buf(len) = '_'
+        len += 1
+        val end = math.min(sig.numElements(), b * r + r)
+        var i = b * r
+        var first = true
+        while (i < end) {
+          if (!sig.isNullAt(i)) {
+            if (!first) { buf(len) = ','; len += 1 }
+            len = MinHashBandKeys.putLong(buf, len, sig.getLong(i))
+            first = false
+          }
+          i += 1
+        }
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
+    copy(child = newChild)
+}
+
+object MinHashBandKeys {
+
+  /** ASCII decimal of `v` (`Long.toString`'s bytes) into `buf` at `at`;
+    * returns the end offset. Digits come from the non-positive
+    * magnitude, so `Long.MinValue` needs no special case.
+    */
+  private def putLong(buf: Array[Byte], at: Int, v: Long): Int = {
+    var pos = at
+    if (v < 0) { buf(pos) = '-'; pos += 1 }
+    var n = if (v < 0) v else -v
+    val start = pos
+    do {
+      buf(pos) = ('0' - (n % 10)).toByte
+      n /= 10
+      pos += 1
+    } while (n != 0)
+    var (i, j) = (start, pos - 1)
+    while (i < j) {
+      val t = buf(i); buf(i) = buf(j); buf(j) = t
+      i += 1; j -= 1
+    }
+    pos
+  }
+}
+
+/** The heuristic quality score of
+  * [[graft.functions.TextFunctions.qualityScore]] in one tokenize pass.
+  * The pass takes five counts: `size(tokens(text))` ([[Tok.tokens]]),
+  * `length(text)`, the code points outside `[A-Za-z0-9\s]`
+  * (`length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))`), the tokens
+  * in `stopwords`, and the summed token lengths. The score over them is
+  * the same double operations in the same order as the composed Spark
+  * form (`least`, then `round(…, 6)` half-up through `BigDecimal`), so
+  * every score is bit-identical to it.
+  *
+  * Why the arithmetic is here and not Spark expressions over a counts
+  * struct: a filter condition gets no codegen subexpression
+  * elimination, and the optimizer pushes a filter below any projection
+  * that binds the struct once, so the tokenize pass would run once per
+  * reference (up to 10 per row in the curate quality filter).
+  */
+case class QualityScore(child: Expression, stopwords: Seq[String])
+    extends UnaryExpression with UnaryKernelCodegenNullInput {
+
+  @transient private lazy val stopSet: Set[String] = stopwords.toSet
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_quality_score"
+  // never null, but nullable like the composed form, so every frame
+  // that carries the score keeps its schema
+  override def nullable: Boolean = true
+
+  override def kernel(t: Any): Any = {
+    // the composed form on NULL text, under Spark's default ANSI mode
+    // (`size(null)` is null): least(null, 1.0) = 1.0 and both ratios
+    // fall to their otherwise-0 branches
+    if (t == null) return 0.5
+    val text = t.asInstanceOf[UTF8String]
+    val toks = Tok.tokens(text)
+    var stops = 0
+    var tokenChars = 0
+    var i = 0
+    while (i < toks.length) {
+      val tok = toks(i)
+      if (stopSet.contains(tok)) stops += 1
+      tokenChars += tok.codePointCount(0, tok.length)
+      i += 1
+    }
+    // regexp_replace matches over the decoded java String, so count the
+    // same decoded code points (`\s` without UNICODE_CHARACTER_CLASS is
+    // [ \t\n\x0B\f\r])
+    val s = text.toString
+    var punct = 0
+    i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      val keep = (cp >= 'a' && cp <= 'z') || (cp >= 'A' && cp <= 'Z') ||
+        (cp >= '0' && cp <= '9') || cp == ' ' || (cp >= '\t' && cp <= '\r')
+      if (!keep) punct += 1
+      i += Character.charCount(cp)
+    }
+    val nTok = toks.length.toDouble
+    val nChars = text.numChars.toDouble
+    val punctRatio = if (nChars > 0) punct / nChars else 0.0
+    val stopRatio = if (nTok > 0) stops / nTok else 0.0
+    val meanLen = if (nTok > 0) tokenChars / nTok else 0.0
+    val raw = math.min(nTok / 50, 1.0) * 0.25 +
+      (1.0 - punctRatio) * 0.25 +
+      math.min(stopRatio * 5, 1.0) * 0.25 +
+      math.min(meanLen / 8, 1.0) * 0.25
+    java.math.BigDecimal.valueOf(raw)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): QualityScore =
+    copy(child = newChild)
 }
 
 /** 64-bit SimHash of a text column over whitespace tokens (every

@@ -7,10 +7,13 @@ import org.apache.spark.sql.functions._
   * shingling, language ID, quality scoring, token counting, document
   * fingerprinting.
   *
-  * Everything is built from codegen'd built-ins (split/filter/transform/
-  * aggregate/regexp) — no UDFs — so each function is a pure map over the
-  * documents table: zero shuffles, scales linearly to 100 TB, and has an
-  * exactly-equivalent ANSI SQL form the DuckDB oracle runs.
+  * Everything is built from Spark built-ins or graft's compiled kernels
+  * — no UDFs — so each function is a pure map over the documents table:
+  * zero shuffles, scales linearly to 100 TB, and has an
+  * exactly-equivalent ANSI SQL form the DuckDB oracle runs. The
+  * lambda built-ins (`filter`, `transform`, `aggregate`) evaluate
+  * interpreted; per-row hot paths use a kernel instead
+  * ([[qualityScore]]).
   */
 object TextFunctions {
 
@@ -129,30 +132,13 @@ object TextFunctions {
 
   /** Heuristic quality score in [0,1]:
     * 0.25·min(tokens/50,1) + 0.25·(1−punctRatio) + 0.25·stopRatio·5 capped
-    * + 0.25·meanTokenLen/8 capped. Deterministic double arithmetic,
-    * rounded to 6 decimals.
+    * + 0.25·meanTokenLen/8 capped, over [[tokens]]. Deterministic double
+    * arithmetic, rounded to 6 decimals. One compiled pass per row
+    * ([[graft.expressions.QualityScore]]), bit-identical to the composed
+    * form over `tokens`, `length` and `regexp_replace`.
     */
-  def qualityScore(text: Column): Column = {
-    val tk = tokens(text)
-    val nTok = size(tk).cast("double")
-    val nChars = length(text).cast("double")
-    val punct = length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
-      .cast("double")
-    val punctRatio = when(nChars > 0, punct / nChars).otherwise(0.0)
-    val enStops = array(stopwords.head._2.map(lit): _*)
-    val stopCnt = size(filter(tk, t => array_contains(enStops, t)))
-      .cast("double")
-    val stopRatio = when(nTok > 0, stopCnt / nTok).otherwise(0.0)
-    val sumLen = aggregate(tk, lit(0), (acc, t) => acc + length(t))
-      .cast("double")
-    val meanLen = when(nTok > 0, sumLen / nTok).otherwise(0.0)
-    round(
-      least(nTok / 50, lit(1.0)) * 0.25 +
-        (lit(1.0) - punctRatio) * 0.25 +
-        least(stopRatio * 5, lit(1.0)) * 0.25 +
-        least(meanLen / 8, lit(1.0)) * 0.25,
-      6)
-  }
+  def qualityScore(text: Column): Column =
+    graft.expressions.GraftFunctions.qualityScore(text, stopwords.head._2)
 
   /** PII scrub patterns. Deliberately RE2-compatible (no lookaround, no
     * backreferences), so the SAME pattern strings run under Java regex

@@ -508,11 +508,8 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     sigDf.select(col(idCol).as("id") +: passthrough.map(col) :+
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws("_", lit(b),
-          array_join(transform(slice(col("minhash_sig"), b * r + 1, r),
-            _.cast("string")), ",")))
-      }: _*)): _*)
+      posexplode(GraftFunctions.minHashBandKeys(col("minhash_sig"), bands,
+        r)): _*)
       .select(col("id") +: passthrough.map(col) :+
         col("pos").as("band") :+ col("col").as("bucket"): _*)
   }

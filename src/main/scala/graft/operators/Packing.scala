@@ -156,9 +156,11 @@ object Packing {
       .withColumn("__fe", least(col("__end"),
         (col("seq_id") + 1) * seqLen))
       .select(col(strataCol), col("seq_id"),
-        // pos FIRST: array_sort on structs orders by leading fields,
+        // pos FIRST: sort_array on structs orders by leading fields,
         // and pos is unique within a sequence — fragment order is the
-        // packed stream order
+        // packed stream order (compiled sort_array, not the lambda-
+        // backed array_sort; no fragment is null, so null placement
+        // never matters)
         struct((col("__fb") - col("seq_id") * seqLen).as("pos"),
           col(idCol).as("doc"),
           (col("__fe") - col("__fb")).as("n"),
@@ -166,7 +168,7 @@ object Packing {
             .cast("int"), (col("__fe") - col("__fb")).cast("int"))
             .as("ids")).as("__frag"))
     val seqs = frags.groupBy(col(strataCol), col("seq_id"))
-      .agg(array_sort(collect_list(col("__frag"))).as("__frags"))
+      .agg(sort_array(collect_list(col("__frag")), asc = true).as("__frags"))
       .select(col(strataCol), col("seq_id"),
         flatten(col("__frags.ids")).as("token_ids"),
         expr("transform(__frags, f -> " +
