@@ -30,7 +30,7 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
   * `PqIndex`, `IvfIndex`, `IvfPqIndex` stage their whole directory
   * through `graft.operators.IndexRoot`); appends move files into the
   * live directory one by one. Not built on this:
-  * `TrainerShards.commitAttemptFile`, a task-level rename-first commit
+  * `ShardArtifact.commitAttemptFile`, a task-level rename-first commit
   * between identical attempt twins.
   */
 object Publish {

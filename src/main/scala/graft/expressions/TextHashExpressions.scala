@@ -1118,10 +1118,9 @@ case class PackedTokenBinary(child: Expression, width: Int)
 }
 
 /** Trainer-shard file pair → the sequences it encodes, as ONE compiled
-  * pass per shard: parse the idx sidecar ([[graft.io.TrainerShards]]'s
-  * layout — `GRFTSHRD` magic, u32 LE version + width, u64 LE
-  * end-offsets), slice the tokens blob accordingly, and decode the
-  * fixed-width little-endian ids. The distributed-read inverse of
+  * pass per shard: parse the idx sidecar, slice the tokens blob
+  * accordingly, and decode the fixed-width little-endian ids (layout:
+  * [[graft.io.ShardArtifact]]'s file formats). The distributed-read inverse of
   * [[PackedTokenBinary]] + the shard writer, so the on-disk artifact is
   * queryable (and oracle-checkable) without a driver-side reader. A
   * malformed pair fails LOUDLY (bad magic/version/width, offset/blob
@@ -1138,22 +1137,12 @@ case class ShardSequences(left: Expression, right: Expression)
   override def kernel(blobAny: Any, idxAny: Any): Any = {
     val blob = blobAny.asInstanceOf[Array[Byte]]
     val idx = idxAny.asInstanceOf[Array[Byte]]
-    val header = graft.io.TrainerShards.HeaderBytes
-    val magic = graft.io.TrainerShards.Magic
-    require(idx.length >= header && {
-      var ok = true; var i = 0
-      while (ok && i < magic.length) { ok = idx(i) == magic(i); i += 1 }
-      ok
-    }, "not a trainer-shard idx (bad magic)")
-    val bb = java.nio.ByteBuffer.wrap(idx)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(magic.length)
-    require(version == graft.io.TrainerShards.Version,
-      s"unsupported shard version $version")
-    val width = bb.getInt(magic.length + 4)
+    val layout = graft.io.ShardArtifact.ShardIdx
+    val header = layout.headerBytes
+    val bb = layout.check(idx)
+    val width = bb.getInt(layout.magic.length + 4)
     require(width == 1 || width == 2 || width == 4,
       s"corrupt shard width $width")
-    require((idx.length - header) % 8 == 0, "truncated shard idx")
     val count = (idx.length - header) / 8
     val tb = java.nio.ByteBuffer.wrap(blob)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -1192,10 +1181,9 @@ case class ShardSequences(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Epoch-order sidecar (`<stem>.ord` — [[graft.io.TrainerShards
-  * .writeEpochOrder]]'s layout: `GRFTEPOC` magic, u32 LE version, u32
-  * LE epoch, then u64 LE sequence POSITIONS in consumption order) →
-  * the position array, one compiled pass per shard. The distributed
+/** Epoch-order sidecar (`<stem>.ord`, written by [[graft.io
+  * .TrainerShards.writeEpochOrder]]; layout: [[graft.io.ShardArtifact]]'s
+  * file formats) → the position array, one compiled pass per shard. The distributed
   * read half of the epoch artifact: a trainer mmaps the same file and
   * walks it with pointer arithmetic. A malformed sidecar fails LOUDLY:
   * this kernel checks magic/version/truncation/negative positions, and
@@ -1213,20 +1201,8 @@ case class EpochOrdPositions(child: Expression)
 
   override def kernel(a: Any): Any = {
     val ord = a.asInstanceOf[Array[Byte]]
-    val header = graft.io.TrainerShards.EpochHeaderBytes
-    val magic = graft.io.TrainerShards.EpochMagic
-    require(ord.length >= header && {
-      var ok = true; var i = 0
-      while (ok && i < magic.length) { ok = ord(i) == magic(i); i += 1 }
-      ok
-    }, "not an epoch-order sidecar (bad magic)")
-    val bb = java.nio.ByteBuffer.wrap(ord)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(magic.length)
-    require(version == graft.io.TrainerShards.EpochVersion,
-      s"unsupported epoch-order version $version")
-    require((ord.length - header) % 8 == 0,
-      "truncated epoch-order sidecar")
+    val header = graft.io.ShardArtifact.EpochOrd.headerBytes
+    val bb = graft.io.ShardArtifact.EpochOrd.check(ord)
     val count = (ord.length - header) / 8
     val out = new Array[Any](count)
     var i = 0
@@ -1243,11 +1219,9 @@ case class EpochOrdPositions(child: Expression)
       newChild: Expression): EpochOrdPositions = copy(child = newChild)
 }
 
-/** Blend-schedule part file (`part-NNNNN.blend` —
-  * [[graft.io.TrainerShards.writeBlendSchedule]]'s layout: `GRFTBLNP`
-  * magic, u32 LE version, u32 LE epoch, u64 LE first global step, then
-  * one 12-byte record per step: u32 LE stratum ordinal + u64 LE
-  * 1-based rank within that stratum's epoch order) → a struct of
+/** Blend-schedule part file (`part-NNNNN.blend`, written by
+  * [[graft.io.TrainerShards.writeBlendSchedule]]; layout:
+  * [[graft.io.ShardArtifact]]'s file formats) → a struct of
   * (epoch, first_step, ordinals, ranks), one compiled pass per part
   * file. The distributed read half of the cross-stratum blend
   * artifact: a trainer mmaps the same file and walks 12-byte records.
@@ -1270,23 +1244,12 @@ case class BlendEntries(child: Expression)
 
   override def kernel(a: Any): Any = {
     val blob = a.asInstanceOf[Array[Byte]]
-    val header = graft.io.TrainerShards.BlendHeaderBytes
-    val magic = graft.io.TrainerShards.BlendMagic
-    require(blob.length >= header && {
-      var ok = true; var i = 0
-      while (ok && i < magic.length) { ok = blob(i) == magic(i); i += 1 }
-      ok
-    }, "not a blend-schedule part (bad magic)")
-    val bb = java.nio.ByteBuffer.wrap(blob)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(magic.length)
-    require(version == graft.io.TrainerShards.BlendVersion,
-      s"unsupported blend-schedule version $version")
-    val epoch = bb.getInt(magic.length + 4)
-    val firstStep = bb.getLong(magic.length + 8)
+    val layout = graft.io.ShardArtifact.BlendPart
+    val header = layout.headerBytes
+    val bb = layout.check(blob)
+    val epoch = bb.getInt(layout.magic.length + 4)
+    val firstStep = bb.getLong(layout.magic.length + 8)
     require(firstStep >= 1, s"corrupt blend first step $firstStep")
-    require((blob.length - header) % 12 == 0,
-      "truncated blend-schedule part")
     val count = (blob.length - header) / 12
     val ords = new Array[Any](count)
     val ranks = new Array[Any](count)

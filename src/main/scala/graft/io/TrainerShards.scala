@@ -1,9 +1,13 @@
 package graft.io
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.core.Publish
+import graft.io.ShardArtifact._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** CONTIGUOUS trainer-shard writer — the last hop from materialized
   * training sequences ([[graft.operators.Packing.materializeSequences]]
@@ -16,45 +20,26 @@ import org.apache.spark.sql.functions._
   *
   * One FILE PAIR PER STRATUM (the stratum is the shard unit, the same
   * contract as the x22 shard assignment and the x73/x110 shuffle-shard
-  * epoch):
-  *  - `<stratum>.tokens` — every sequence's ids as fixed-width
-  *    little-endian integers (`width` ∈ 1/2/4 bytes via the compiled
-  *    [[graft.expressions.PackedTokenBinary]] kernel), concatenated in
-  *    ascending `seq_id` order. `mmap` + pointer arithmetic reads any
-  *    sequence directly.
-  *  - `<stratum>.idx` — a 16-byte header (magic `GRFTSHRD`, u32 LE
-  *    version, u32 LE width) then one u64 LE END-byte-offset per
-  *    sequence (begin = previous end, count = (size − 16) / 8), so the
-  *    sidecar is itself mmap-able with no parsing.
+  * epoch): `<stratum>.tokens` holds every sequence's fixed-width ids
+  * (`width` ∈ 1/2/4 bytes via the compiled
+  * [[graft.expressions.PackedTokenBinary]] kernel) in ascending
+  * `seq_id` order, and `<stratum>.idx` one end offset per sequence.
+  * Above the pairs sit per-epoch consumption orders, cross-stratum
+  * blend schedules and the run manifest. The file formats, the one
+  * part writer, manifest codec and verifier the levels share, and the
+  * readers' crash contract are [[ShardArtifact]]'s.
   *
   * Determinism: sequence order is `seq_id` ascending within a stratum
   * and every byte is a pure function of the input frame, so re-runs
   * are byte-identical (spec-asserted) — the property that lets a
   * restarted pipeline overwrite shards idempotently.
   *
-  * Scale shape: ONE exchange keyed by the stratum column, a spill-safe
-  * partition sort, then each stratum STREAMS to its file pair with
-  * O(1) task state (an open stream and a running offset — no sequence
-  * list, no buffered blob; the idx offsets stream out as the tokens
-  * do). The stratum is the parallelism unit, exactly like the packing
-  * operators that produce the input — at 100 TB you shard first (x22)
-  * and write many bounded file pairs, never one global blob.
-  *
-  * Crash safety: everything lands in a staging directory first and is
-  * swapped in by [[graft.core.Publish]], so readers never observe a
-  * half-written shard set. Within staging, each task ATTEMPT
-  * writes attempt-unique files (`<stem>.tokens.attempt-<id>`) and
-  * renames them into place only at stratum close — so a ZOMBIE attempt
-  * (a task re-launched while the presumed-lost attempt is still
-  * running, which `spark.speculation=false` does not rule out) can
-  * never interleave bytes into another attempt's open file, on any
-  * filesystem, lease semantics or not. Both attempts produce identical
-  * bytes (the writer is deterministic), so whichever rename lands last
-  * is correct; orphaned attempt files from failed attempts are swept
-  * before publish. SPECULATIVE execution is still refused loudly at
-  * the call — it adds concurrency for no benefit here (there is no
-  * output committer underneath this writer, and the exchange already
-  * gives each stratum exactly one task).
+  * Scale shape: each binary level is ONE exchange on its part key, a
+  * spill-safe partition sort, then one streaming pass with O(1) task
+  * state ([[ShardArtifact.writeParts]]). The stratum is the
+  * parallelism unit, exactly like the packing operators that produce
+  * the input — at 100 TB you shard first (x22) and write many bounded
+  * file pairs, never one global blob.
   *
   * The reference stops at row-wise JSON ingest
   * (ParquetArangoLoader.java:85-288); this is the engine's
@@ -65,26 +50,31 @@ object TrainerShards {
   val TokensSuffix = ".tokens"
   val IdxSuffix = ".idx"
   val OrdSuffix = ".ord"
-  private[graft] val AttemptMark = ".attempt-"
-  private[graft] val EpochMagic: Array[Byte] =
-    "GRFTEPOC".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  private[graft] val EpochVersion = 1
-  private[graft] val EpochHeaderBytes = 16
+  val BlendSuffix = ".blend"
+  val BlendDirName = "blend"
+  val ManifestName = "_MANIFEST.json"
+  val EpochManifestName = "_EPOCH.json"
+  val BlendManifestName = "_BLEND.json"
+  val RunManifestName = "_RUN.json"
+  private[graft] val BlendHeaderBytes = BlendPart.headerBytes
+
+  private val ShardKind = ManifestKind(ManifestName, "graft-trainer-shards",
+    ShardIdx.version, "trainer-shard",
+    "written by a pre-manifest version? re-run write()")
+  private val EpochKind = ManifestKind(EpochManifestName,
+    "graft-epoch-order", EpochOrd.version, "epoch-order",
+    "written by a pre-manifest version? re-run writeEpochOrder")
+  private val BlendKind = ManifestKind(BlendManifestName,
+    "graft-blend-schedule", BlendPart.version, "blend-schedule",
+    "writeBlendSchedule first")
+  private val RunKind = ManifestKind(RunManifestName, "graft-training-run",
+    1, "training-run", "writeRunManifest first")
 
   /** The per-epoch sidecar directory name under a shard set. */
   def epochDirName(epoch: Int): String = f"epoch-$epoch%05d"
 
-  val BlendSuffix = ".blend"
-  val BlendDirName = "blend"
-  val BlendManifestName = "_BLEND.json"
-  private[graft] val BlendMagic: Array[Byte] =
-    "GRFTBLNP".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  private[graft] val BlendVersion = 1
-  private[graft] val BlendHeaderBytes = 24
-  private[graft] val Magic: Array[Byte] =
-    "GRFTSHRD".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  private[graft] val Version = 1
-  private[graft] val HeaderBytes = 16
+  private def blendDir(dir: String, epoch: Int): String =
+    s"$dir/${epochDirName(epoch)}/$BlendDirName"
 
   /** File-safe encoding of a stratum value (injective, reversible —
     * URL percent-encoding), so any stratum string maps to exactly one
@@ -93,13 +83,14 @@ object TrainerShards {
   def fileStem(stratum: String): String =
     java.net.URLEncoder.encode(stratum, "UTF-8")
 
-  private def u32le(v: Int): Array[Byte] =
-    java.nio.ByteBuffer.allocate(4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+  /** A driver-built inventory frame (strata- or parts-sized). */
+  private def frame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows,
+      math.max(1, math.min(rows.length, 4))), schema)
 
-  private def u64le(v: Long): Array[Byte] =
-    java.nio.ByteBuffer.allocate(8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
+  private def fields(names: (String, DataType)*): StructType =
+    StructType(names.map { case (n, t) => StructField(n, t, nullable = false) })
 
   /** Write one file pair per stratum under `dir` and return the
     * manifest: (stratum, n_sequences, n_tokens, token_bytes, file,
@@ -128,19 +119,6 @@ object TrainerShards {
     require(width == 1 || width == 2 || width == 4,
       s"width must be 1, 2, or 4 bytes, got $width")
     val spark = seqs.sparkSession
-    // each stratum's file pair is written by exactly one TASK with no
-    // output-committer protocol underneath — a SPECULATIVE duplicate
-    // attempt of that task would interleave writes into the same
-    // staging files and could publish a corrupt shard; refuse loudly
-    // instead (serial task RETRIES are fine: overwrite=true truncates)
-    require(!spark.conf.getOption("spark.speculation")
-        .exists(_.toBoolean),
-      "TrainerShards.write is incompatible with spark.speculation — " +
-        "duplicate task attempts would interleave writes into one " +
-        "shard file; disable speculation for this job")
-    val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val staging = stagingFor(spark, dir)
     // pack compiled BEFORE the exchange: the shuffle moves the final
     // bytes exactly once, and the fold below never touches id arrays
     val packed = seqs.select(
@@ -149,148 +127,40 @@ object TrainerShards {
       graft.expressions.GraftFunctions.packedTokenBinary(
         col(tokenIdsCol), width).as("__b"),
       size(col(tokenIdsCol)).cast("long").as("__n"))
-    import org.apache.spark.sql.types._
-    val manifestSchema = StructType(Seq(
-      StructField("stratum", StringType, nullable = false),
-      StructField("n_sequences", LongType, nullable = false),
-      StructField("n_tokens", LongType, nullable = false),
-      StructField("token_bytes", LongType, nullable = false),
-      StructField("file", StringType, nullable = false),
-      StructField("tokens_md5", StringType, nullable = false),
-      StructField("idx_md5", StringType, nullable = false)))
-    val manifestRows = packed
-      .repartition(col("__s"))
-      .sortWithinPartitions(col("__s"), col("__q"))
-      .mapPartitions { it =>
-        // strata are contiguous under the sort; a key change closes the
-        // current file pair and opens the next. O(1) state: two open
-        // streams + a running byte offset (+ two running md5 digests —
-        // the manifest's integrity checksums cost no second read).
-        val fsConf = conf.value
-        // attempt-unique staging names: a zombie prior attempt of this
-        // task (presumed lost, still running) writes DIFFERENT files;
-        // the close-time rename is the per-stratum commit point
-        val attempt = attemptSuffix()
-        var cur: String = null
-        var tokOut: org.apache.hadoop.fs.FSDataOutputStream = null
-        var idxOut: org.apache.hadoop.fs.FSDataOutputStream = null
-        var tokMd: java.security.MessageDigest = null
-        var idxMd: java.security.MessageDigest = null
-        var off = 0L
-        var nSeq = 0L
-        var nTok = 0L
-        val done = Seq.newBuilder[Row]
-        def hex(md: java.security.MessageDigest): String =
-          md.digest().map(b => f"$b%02x").mkString
-        def close(): Unit = if (cur != null) {
-          tokOut.close(); idxOut.close()
-          val stem = fileStem(cur)
-          val base = new HPath(staging)
-          val fs = base.getFileSystem(fsConf)
-          for (sfx <- Seq(TokensSuffix, IdxSuffix))
-            commitAttemptFile(fs, base, stem, sfx, attempt)
-          done += Row(cur, nSeq, nTok, off, stem, hex(tokMd), hex(idxMd))
-          cur = null
+    val schema = fields("stratum" -> StringType, "n_sequences" -> LongType,
+      "n_tokens" -> LongType, "token_bytes" -> LongType,
+      "file" -> StringType, "tokens_md5" -> StringType,
+      "idx_md5" -> StringType)
+    val rows = writeParts("write", dir, packed, Seq("__s", "__q"),
+        Seq(TokensSuffix, IdxSuffix), schema) { first =>
+      val stratum = first.getString(0)
+      new Part(fileStem(stratum)) {
+        private var off, nSeq, nTok = 0L
+        def headers = Seq(Array.emptyByteArray, ShardIdx.header(u32le(width)))
+        def write(r: Row, out: (Int, Array[Byte]) => Unit): Unit = {
+          val bytes = r.getAs[Array[Byte]](2)
+          out(0, bytes)
+          off += bytes.length
+          out(1, u64le(off))
+          nSeq += 1
+          nTok += r.getLong(3)
         }
-        def open(s: String): Unit = {
-          cur = s; off = 0L; nSeq = 0L; nTok = 0L
-          tokMd = java.security.MessageDigest.getInstance("MD5")
-          idxMd = java.security.MessageDigest.getInstance("MD5")
-          val stem = fileStem(s)
-          val base = new HPath(staging)
-          val fs = base.getFileSystem(fsConf)
-          fs.mkdirs(base)
-          tokOut = fs.create(
-            new HPath(base, stem + TokensSuffix + attempt), true)
-          idxOut = fs.create(
-            new HPath(base, stem + IdxSuffix + attempt), true)
-          idxOut.write(Magic); idxMd.update(Magic)
-          val ver = u32le(Version); val wid = u32le(width)
-          idxOut.write(ver); idxMd.update(ver)
-          idxOut.write(wid); idxMd.update(wid)
-        }
-        // eager drain: bytes stream straight to the filesystem; only
-        // the per-stratum manifest rows (bounded: strata per partition)
-        // are held. The finally closes the open pair on a mid-write
-        // failure (disk full, datanode loss) — a leaked HDFS lease
-        // would otherwise block the retry's overwriting create until
-        // lease recovery
-        try {
-          while (it.hasNext) {
-            val r = it.next()
-            val s = r.getString(0)
-            if (s != cur) { close(); open(s) }
-            val bytes = r.getAs[Array[Byte]](2)
-            tokOut.write(bytes); tokMd.update(bytes)
-            off += bytes.length
-            val end = u64le(off)
-            idxOut.write(end); idxMd.update(end)
-            nSeq += 1
-            nTok += r.getLong(3)
-          }
-          close()
-        } finally if (cur != null) {
-          // failure path only (success nulls cur in close())
-          try tokOut.close() catch { case _: Throwable => () }
-          try idxOut.close() catch { case _: Throwable => () }
-        }
-        done.result().iterator
-      }(org.apache.spark.sql.Encoders.row(manifestSchema))
-      .collect()
-    sweepAttemptFiles(spark, staging)
-    // the manifest SHIPS WITH the artifact (written into staging, so
-    // the publish swap makes shard files and manifest visible
-    // atomically): a loader reads counts/width/bytes without deriving
-    // them from file sizes, and a shard set is self-describing
-    writeManifest(spark, staging, width, manifestRows, provenance)
-    publish(spark, staging, dir)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(manifestRows.toIndexedSeq,
-        math.max(1, math.min(manifestRows.length, 4))),
-      manifestSchema)
-  }
-
-  val ManifestName = "_MANIFEST.json"
-
-  /** Serialize the stratum manifest into staging as
-    * [[ManifestName]] — strata-count-sized driver IO; the leading
-    * underscore keeps it outside every `*.tokens`/`*.idx`/`*.ord`
-    * reader glob.
-    */
-  private def writeManifest(spark: SparkSession, staging: String,
-      width: Int, rows: Array[Row],
-      provenance: Map[String, String]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("format", "graft-trainer-shards")
-    root.put("version", Version)
-    root.put("width", width)
-    val prov = mapper.createObjectNode()
-    provenance.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      prov.put(k, v); ()
+        def close(md5s: Seq[String]) =
+          Row(stratum, nSeq, nTok, off, stem, md5s(0), md5s(1))
+      }
+    } { (staging, rows) =>
+      // the manifest SHIPS WITH the artifact (same publish swap): a
+      // loader reads counts/width/bytes without deriving them from file
+      // sizes, and a shard set is self-describing
+      writeManifest(spark, staging, ShardKind, "width" -> width,
+        "provenance" -> provenance,
+        "strata" -> rows.sortBy(_.getString(0)).toSeq.map(r => obj(
+          "stratum" -> r.getString(0), "n_sequences" -> r.getLong(1),
+          "n_tokens" -> r.getLong(2), "token_bytes" -> r.getLong(3),
+          "file_stem" -> r.getString(4), "tokens_md5" -> r.getString(5),
+          "idx_md5" -> r.getString(6))))
     }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("provenance",
-      prov)
-    val arr = mapper.createArrayNode()
-    rows.sortBy(_.getString(0)).foreach { r =>
-      val n = mapper.createObjectNode()
-      n.put("stratum", r.getString(0))
-      n.put("n_sequences", r.getLong(1))
-      n.put("n_tokens", r.getLong(2))
-      n.put("token_bytes", r.getLong(3))
-      n.put("file_stem", r.getString(4))
-      n.put("tokens_md5", r.getString(5))
-      n.put("idx_md5", r.getString(6))
-      arr.add(n)
-    }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("strata", arr)
-    val fs = new HPath(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new HPath(staging)) // empty input still ships a manifest
-    val out = fs.create(new HPath(staging, ManifestName), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    frame(spark, rows.toIndexedSeq, schema)
   }
 
   /** Read a published shard set's manifest back:
@@ -298,137 +168,51 @@ object TrainerShards {
     * the loader-facing inventory, strata-count-sized; the first five
     * columns match [[write]]'s returned manifest frame name-for-name
     * so the two inventories are interchangeable.
-    * Readers do not run crash recovery: after a crash between a
-    * rewrite's retire and publish steps `dir` is absent beside its one
-    * `.old-` copy, and this refuses loudly until the next [[write]]
-    * recovers the set.
     */
   def readManifest(spark: SparkSession, dir: String): DataFrame = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new HPath(dir, ManifestName)
-    require(fs.exists(p), s"no shard manifest at $p — written by a " +
-      "pre-manifest version? re-run write()")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    // null-safe field access: a truncated or foreign JSON must hit
-    // the loud diagnostic, never an opaque NPE
-    def field(node: com.fasterxml.jackson.databind.JsonNode,
-        name: String): com.fasterxml.jackson.databind.JsonNode = {
-      val v = if (node == null) null else node.get(name)
-      require(v != null && !v.isNull,
-        s"not a trainer-shard manifest (missing '$name'): $p")
-      v
+    val m = loadManifest(spark, dir, ShardKind)
+    val width = m("width").asInt()
+    val rows = m.array(m.root, "strata").map { n =>
+      // checksum fields are null for a manifest written by a
+      // pre-checksum version — readable, but [[verifyManifest]]
+      // refuses it loudly rather than vacuously passing
+      def opt(name: String): String =
+        Option(n.get(name)).filterNot(_.isNull).map(_.asText()).orNull
+      Row(m.field(n, "stratum").asText(), m.field(n, "n_sequences").asLong(),
+        m.field(n, "n_tokens").asLong(), m.field(n, "token_bytes").asLong(),
+        m.field(n, "file_stem").asText(), width, opt("tokens_md5"),
+        opt("idx_md5"))
     }
-    require(field(tree, "format").asText() == "graft-trainer-shards" &&
-      field(tree, "version").asInt() == Version,
-      s"not a trainer-shard manifest: $p")
-    val width = field(tree, "width").asInt()
-    val strataNode = field(tree, "strata")
-    require(strataNode.isArray,
-      s"not a trainer-shard manifest (strata is not an array): $p")
-    val rows = {
-      val b = Seq.newBuilder[Row]
-      val it = strataNode.elements()
-      while (it.hasNext) {
-        val n = it.next()
-        // checksum fields are null for a manifest written by a
-        // pre-checksum version — readable, but [[verifyManifest]]
-        // refuses it loudly rather than vacuously passing
-        def opt(name: String): String = {
-          val v = n.get(name)
-          if (v == null || v.isNull) null else v.asText()
-        }
-        b += Row(field(n, "stratum").asText(),
-          field(n, "n_sequences").asLong(),
-          field(n, "n_tokens").asLong(),
-          field(n, "token_bytes").asLong(),
-          field(n, "file_stem").asText(), width,
-          opt("tokens_md5"), opt("idx_md5"))
-      }
-      b.result()
-    }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows,
-        math.max(1, math.min(rows.length, 4))),
-      StructType(Seq(
-        StructField("stratum", StringType, nullable = false),
-        StructField("n_sequences", LongType, nullable = false),
-        StructField("n_tokens", LongType, nullable = false),
-        StructField("token_bytes", LongType, nullable = false),
-        StructField("file", StringType, nullable = false),
-        StructField("width", IntegerType, nullable = false),
-        StructField("tokens_md5", StringType, nullable = true),
-        StructField("idx_md5", StringType, nullable = true))))
+    frame(spark, rows, StructType(fields("stratum" -> StringType,
+      "n_sequences" -> LongType, "n_tokens" -> LongType,
+      "token_bytes" -> LongType, "file" -> StringType,
+      "width" -> IntegerType) ++ Seq(
+      StructField("tokens_md5", StringType, nullable = true),
+      StructField("idx_md5", StringType, nullable = true))))
   }
 
   /** Verify a published shard set against its manifest's content
-    * checksums WITHOUT the engine that wrote it doing anything clever:
-    * every `.tokens`/`.idx` file is re-read through the binaryFile
-    * source (one task per file, the artifact's natural unit), its md5
-    * recomputed, and compared against `_MANIFEST.json` — corruption,
-    * truncation, a missing committed file, or an extra unmanifested
-    * shard all fail LOUDLY with the offending stems named. A manifest
-    * written by a pre-checksum version refuses (no vacuous pass).
-    * Returns the per-stratum verified frame (stratum, file,
-    * tokens_md5, idx_md5) for callers who want the inventory.
-    * Readers do not run crash recovery: after a crash between a
-    * rewrite's retire and publish steps `dir` is absent beside its one
-    * `.old-` copy, and this refuses loudly (as [[readManifest]]) until
-    * the next [[write]] recovers the set.
+    * checksums WITHOUT the engine that wrote it doing anything clever
+    * ([[ShardArtifact.verify]]: every `.tokens`/`.idx` file re-read,
+    * its md5 compared) — corruption, truncation, a missing committed
+    * file, or an extra unmanifested shard all fail LOUDLY with the
+    * offending files named. A manifest written by a pre-checksum
+    * version refuses (no vacuous pass). Returns the per-stratum
+    * verified frame (stratum, file, tokens_md5, idx_md5).
     */
   def verifyManifest(spark: SparkSession, dir: String): DataFrame = {
-    val m = readManifest(spark, dir)
-    val expected = m.select(col("stratum"), col("file"),
-      col("tokens_md5"), col("idx_md5")).collect()
+    val m = readManifest(spark, dir).select(col("stratum"), col("file"),
+      col("tokens_md5"), col("idx_md5"))
+    val expected = m.collect()
     require(expected.forall(r => r.getString(2) != null &&
       r.getString(3) != null),
       s"manifest at $dir carries no content checksums (written by a " +
         "pre-checksum version) — re-run write() to certify integrity")
-    def actualMd5(suffix: String): Map[String, String] = {
-      // an EMPTY published shard set (empty input) has a manifest but
-      // no shard files — the binaryFile glob would fail on zero
-      // matches, so list first (vacuous verification is correct here:
-      // the manifest declares nothing)
-      val fs = new HPath(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.listStatus(new HPath(dir))
-          .exists(_.getPath.getName.endsWith(suffix)))
-        return Map.empty
-      val files = spark.read.format("binaryFile").load(s"$dir/*$suffix")
-        .select(regexp_extract(col("path"),
-            "([^/]+)\\" + suffix + "$", 1).as("stem"),
-          md5(col("content")).as("md5"))
-        .collect()
-      files.map(r => r.getString(0) -> r.getString(1)).toMap
-    }
-    val tokActual = actualMd5(TokensSuffix)
-    val idxActual = actualMd5(IdxSuffix)
-    val problems = Seq.newBuilder[String]
-    expected.foreach { r =>
-      val stem = r.getString(1)
-      def check(kind: String, actual: Map[String, String], want: String)
-          : Unit = actual.get(stem) match {
-        case None => problems += s"$stem$kind: MISSING"
-        case Some(got) if got != want =>
-          problems += s"$stem$kind: md5 $got != manifest $want"
-        case _ => ()
-      }
-      check(TokensSuffix, tokActual, r.getString(2))
-      check(IdxSuffix, idxActual, r.getString(3))
-    }
-    val manifested = expected.map(_.getString(1)).toSet
-    (tokActual.keySet ++ idxActual.keySet).diff(manifested).toSeq.sorted
-      .foreach(s => problems += s"$s: present but not in manifest")
-    val bad = problems.result()
-    require(bad.isEmpty,
-      s"shard set at $dir fails manifest verification:\n  " +
-        bad.mkString("\n  "))
-    m.select(col("stratum"), col("file"), col("tokens_md5"),
-      col("idx_md5"))
+    verify(spark, s"shard set at $dir", dir,
+      s"*{$TokensSuffix,$IdxSuffix}", expected.toSeq.flatMap(r => Seq(
+        Expected(r.getString(1) + TokensSuffix, r.getString(2)),
+        Expected(r.getString(1) + IdxSuffix, r.getString(3)))))
+    m
   }
 
   /** The provenance map a shard set was written with — empty for a
@@ -437,102 +221,8 @@ object TrainerShards {
     * vocabulary you are about to decode with).
     */
   def readProvenance(spark: SparkSession, dir: String)
-      : Map[String, String] = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new HPath(dir, ManifestName)
-    require(fs.exists(p), s"no shard manifest at $p")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val prov = tree.get("provenance")
-    if (prov == null || prov.isNull || !prov.isObject) Map.empty
-    else {
-      val b = Map.newBuilder[String, String]
-      val it = prov.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        b += (e.getKey -> e.getValue.asText())
-      }
-      b.result()
-    }
-  }
-
-  /** The attempt-unique staging suffix for the running task — the
-    * shared half of the zombie-safe commit protocol [[write]] and
-    * [[writeEpochOrder]] both use.
-    */
-  private def attemptSuffix(): String =
-    Option(org.apache.spark.TaskContext.get())
-      .map(tc => s"$AttemptMark${tc.taskAttemptId()}")
-      .getOrElse(s"${AttemptMark}driver")
-
-  /** Commit one attempt-staged file to its final staging name —
-    * RENAME-FIRST, never delete the destination: a losing attempt that
-    * finds the final name already present simply drops its own copy
-    * (both attempts write identical bytes — deterministic writers — so
-    * whichever rename landed is correct). The earlier delete-then-
-    * rename variant let a zombie attempt delete the winning attempt's
-    * committed file and die before its own rename, leaving staging
-    * missing that stratum's file while the manifest still listed it.
-    * Only a committed COMPLETE file can occupy the final name (the
-    * rename happens at stratum close, after every byte is written), so
-    * "destination exists" is always a completed twin, never a partial.
-    * Shared by [[write]], [[writeEpochOrder]] and
-    * [[writeBlendSchedule]] so the commit protocol has exactly one
-    * implementation.
-    */
-  private def commitAttemptFile(
-      fs: org.apache.hadoop.fs.FileSystem, base: HPath, stem: String,
-      suffix: String, attempt: String): Unit = {
-    val from = new HPath(base, stem + suffix + attempt)
-    val to = new HPath(base, stem + suffix)
-    if (!fs.rename(from, to)) {
-      if (fs.exists(to)) fs.delete(from, false) // lost to an identical twin
-      else throw new IllegalStateException(
-        s"could not commit $to from attempt staging $from")
-    }
-  }
-
-  /** Drop orphaned attempt files (a FAILED attempt's leftovers — its
-    * successful retry committed under a different attempt id) from
-    * staging before publish, so the published directory holds only
-    * committed `<stem>.tokens`/`<stem>.idx` pairs. RESIDUAL window,
-    * documented honestly: a zombie attempt still RUNNING when the
-    * driver sweeps can recreate attempt files between the sweep and
-    * the publish rename, landing suffix-tagged garbage in the
-    * published dir (every reader ignores non-suffix files, so answers
-    * are unaffected; the next re-write retires it) — closing that
-    * fully needs a job-level commit protocol, which this writer
-    * deliberately does not carry.
-    */
-  private def sweepAttemptFiles(spark: SparkSession,
-      staging: String): Unit = {
-    val p = new HPath(staging)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        if (st.getPath.getName.contains(AttemptMark))
-          fs.delete(st.getPath, false)
-      }
-  }
-
-  /** Recover `target`, then name its staging directory: recovery runs
-    * before anything is staged, or the live staging would look like
-    * crash residue. Readers do not recover; with no set they refuse.
-    */
-  private def stagingFor(spark: SparkSession, target: String): String = {
-    val t = new HPath(target)
-    Publish.recover(spark.sparkContext.hadoopConfiguration, t)
-    Publish.staging(t).toString
-  }
-
-  /** Swap a staged shard set (or epoch / blend directory) in. */
-  private def publish(spark: SparkSession, staging: String,
-      target: String): Unit =
-    Publish.swap(spark.sparkContext.hadoopConfiguration,
-      new HPath(staging), new HPath(target))
+      : Map[String, String] =
+    loadManifest(spark, dir, ShardKind).strings("provenance")
 
   /** Driver-side reference reader — the loader contract made
     * executable for the round-trip spec: parse the idx header +
@@ -542,31 +232,15 @@ object TrainerShards {
     */
   def readShard(spark: SparkSession, dir: String, stratum: String)
       : (Int, Seq[Seq[Long]]) = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readAll(p: HPath): Array[Byte] = {
-      val in = fs.open(p)
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    }
     val stem = fileStem(stratum)
-    val idx = readAll(new HPath(dir, stem + IdxSuffix))
-    require(idx.length >= HeaderBytes &&
-      idx.take(Magic.length).sameElements(Magic),
-      s"not a trainer-shard idx: $stem$IdxSuffix")
-    val bb = java.nio.ByteBuffer.wrap(idx)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(Magic.length)
-    require(version == Version, s"unsupported shard version $version")
-    val width = bb.getInt(Magic.length + 4)
+    val idx = readBytes(spark, new HPath(dir, stem + IdxSuffix))
+    val bb = ShardIdx.check(idx, stem + IdxSuffix)
+    val width = bb.getInt(ShardIdx.magic.length + 4)
     require(width == 1 || width == 2 || width == 4,
       s"corrupt width $width in $stem$IdxSuffix")
-    require((idx.length - HeaderBytes) % 8 == 0,
-      s"truncated idx: $stem$IdxSuffix")
-    val count = (idx.length - HeaderBytes) / 8
-    val ends = (0 until count.toInt)
-      .map(i => bb.getLong(HeaderBytes + i * 8))
-    val blob = readAll(new HPath(dir, stem + TokensSuffix))
+    val ends = (0 until (idx.length - ShardIdx.headerBytes) / 8)
+      .map(i => bb.getLong(ShardIdx.headerBytes + i * 8))
+    val blob = readBytes(spark, new HPath(dir, stem + TokensSuffix))
     require(ends.isEmpty || ends.last == blob.length,
       s"idx/tokens size mismatch for $stem: ${ends.lastOption
         .getOrElse(0L)} vs ${blob.length}")
@@ -600,26 +274,17 @@ object TrainerShards {
     * sliced by the compiled [[graft.expressions.ShardSequences]]
     * kernel; parallelism is one task per shard, the artifact's natural
     * unit. The binaryFile source bounds one file at the 2 GB row
-    * limit — the same bound the writer's
-    * `targetRecordsPerFile`-less-but-stratum-sized shards should be
-    * sized under; a real trainer mmaps instead.
-    * Readers do not run crash recovery: after a crash between a
-    * rewrite's retire and publish steps `dir` is absent beside its one
-    * `.old-` copy, and this refuses loudly until the next [[write]]
-    * recovers the set.
+    * limit, which stratum-sized shards should be sized under; a real
+    * trainer mmaps instead.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val tokens = spark.read.format("binaryFile")
-      .load(dir + "/*" + TokensSuffix)
-      .select(regexp_extract(col("path"),
-          "([^/]+)\\" + TokensSuffix + "$", 1).as("__stem"),
-        col("content").as("__blob"))
-    val idx = spark.read.format("binaryFile")
-      .load(dir + "/*" + IdxSuffix)
-      .select(regexp_extract(col("path"),
-          "([^/]+)\\" + IdxSuffix + "$", 1).as("__stem"),
-        col("content").as("__idx"))
-    tokens.join(idx, Seq("__stem"))
+    def files(suffix: String, as: String): DataFrame =
+      spark.read.format("binaryFile").load(dir + "/*" + suffix)
+        .select(regexp_extract(col("path"),
+            "([^/]+)\\" + suffix + "$", 1).as("__stem"),
+          col("content").as(as))
+    files(TokensSuffix, "__blob").join(files(IdxSuffix, "__idx"),
+        Seq("__stem"))
       .select(expr("url_decode(__stem)").as("stratum"),
         posexplode(graft.expressions.GraftFunctions.shardSequences(
           col("__blob"), col("__idx"))))
@@ -632,10 +297,10 @@ object TrainerShards {
     * half of the Megatron-style indexed artifact family: the token
     * blob says WHAT the sequences are; these say in WHICH ORDER epoch
     * `epoch` consumes them. One `<stem>.ord` per stratum under
-    * `<dir>/epoch-NNNNN/`: a 16-byte header (`GRFTEPOC`, u32 LE
-    * version, u32 LE epoch) then u64 LE sequence POSITIONS (0-based
-    * indexes into the stratum's `.idx` order) in consumption order —
-    * mmap-able with no parsing, like the pair it annotates.
+    * `<dir>/epoch-NNNNN/` (layout: [[ShardArtifact.EpochOrd]]), u64
+    * sequence POSITIONS (0-based indexes into the stratum's `.idx`
+    * order) in consumption order — mmap-able with no parsing, like the
+    * pair it annotates.
     *
     * The permutation is the x73 construction carried to the artifact:
     * position `p` of stratum `s` sorts by
@@ -652,27 +317,17 @@ object TrainerShards {
     *
     * Scale shape: sequence counts come from the published `.idx`
     * SIZES (one driver listing, strata-bounded); the position frame is
-    * a distributed range join, then ONE stratum-keyed exchange sorted
-    * by the hash key streams each stratum's positions to its sidecar
-    * with O(1) task state — the [[write]] machinery, including
-    * attempt-unique staging files and the publish swap of the
-    * epoch directory (the live `.tokens`/`.idx` files are never
-    * touched; re-writing an epoch swaps its directory atomically).
+    * a distributed range join, then [[ShardArtifact.writeParts]] sorts
+    * each stratum by the hash key and streams its positions to its
+    * sidecar. The live `.tokens`/`.idx` files are never touched;
+    * re-writing an epoch swaps its directory atomically.
     */
   def writeEpochOrder(seqsSpark: SparkSession, dir: String,
       seed: String, epoch: Int): DataFrame = {
     val spark = seqsSpark
     require(epoch >= 0, s"epoch must be >= 0, got $epoch")
-    require(!spark.conf.getOption("spark.speculation")
-        .exists(_.toBoolean),
-      "TrainerShards.writeEpochOrder is incompatible with " +
-        "spark.speculation — same single-writer contract as write")
     val strata = listIdxCounts(spark, dir)
     require(strata.nonEmpty, s"no shards at $dir — write() first")
-    val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val target = s"$dir/${epochDirName(epoch)}"
-    val staging = stagingFor(spark, target)
     import spark.implicits._
     val counts = strata.toDF("__s", "__n")
     val maxN = strata.map(_._2).max
@@ -683,192 +338,67 @@ object TrainerShards {
       .select(col("__s"), col("__p"),
         md5(concat_ws(":", lit(seed), lit(epoch.toString), col("__s"),
           col("__p").cast("string"))).as("__k"))
-    import org.apache.spark.sql.types._
-    val manifestSchema = StructType(Seq(
-      StructField("stratum", StringType, nullable = false),
-      StructField("n_sequences", LongType, nullable = false),
-      StructField("file", StringType, nullable = false),
-      StructField("ord_md5", StringType, nullable = false)))
-    val manifestRows = positions
-      .repartition(col("__s"))
-      .sortWithinPartitions(col("__s"), col("__k"), col("__p"))
-      .mapPartitions { it =>
-        val fsConf = conf.value
-        val attempt = attemptSuffix()
-        var cur: String = null
-        var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        var md: java.security.MessageDigest = null
-        var n = 0L
-        val done = Seq.newBuilder[Row]
-        def close(): Unit = if (cur != null) {
-          out.close()
-          val stem = fileStem(cur)
-          val base = new HPath(staging)
-          val fsL = base.getFileSystem(fsConf)
-          commitAttemptFile(fsL, base, stem, OrdSuffix, attempt)
-          done += Row(cur, n, stem + OrdSuffix,
-            md.digest().map(b => f"$b%02x").mkString)
-          cur = null
+    val schema = fields("stratum" -> StringType, "n_sequences" -> LongType,
+      "file" -> StringType, "ord_md5" -> StringType)
+    val rows = writeParts("writeEpochOrder", s"$dir/${epochDirName(epoch)}",
+        positions, Seq("__s", "__k", "__p"), Seq(OrdSuffix), schema) { first =>
+      val stratum = first.getString(0)
+      new Part(fileStem(stratum)) {
+        private var n = 0L
+        def headers = Seq(EpochOrd.header(u32le(epoch)))
+        def write(r: Row, out: (Int, Array[Byte]) => Unit): Unit = {
+          out(0, u64le(r.getLong(1)))
+          n += 1
         }
-        def open(s: String): Unit = {
-          cur = s; n = 0L
-          md = java.security.MessageDigest.getInstance("MD5")
-          val base = new HPath(staging)
-          val fsL = base.getFileSystem(fsConf)
-          fsL.mkdirs(base)
-          out = fsL.create(
-            new HPath(base, fileStem(s) + OrdSuffix + attempt),
-            true)
-          out.write(EpochMagic); md.update(EpochMagic)
-          val ver = u32le(EpochVersion); val ep = u32le(epoch)
-          out.write(ver); md.update(ver)
-          out.write(ep); md.update(ep)
-        }
-        try {
-          while (it.hasNext) {
-            val r = it.next()
-            val s = r.getString(0)
-            if (s != cur) { close(); open(s) }
-            val pos = u64le(r.getLong(1))
-            out.write(pos); md.update(pos)
-            n += 1
-          }
-          close()
-        } finally if (cur != null) {
-          try out.close() catch { case _: Throwable => () }
-        }
-        done.result().iterator
-      }(org.apache.spark.sql.Encoders.row(manifestSchema))
-      .collect()
-    sweepAttemptFiles(spark, staging)
-    // the epoch manifest SHIPS WITH the sidecars (same atomic
-    // publish): seed + per-file checksums, so the epoch artifact is
-    // self-describing and integrity-verifiable without the engine —
-    // the _MANIFEST.json contract carried one level up
-    writeEpochManifest(spark, staging, epoch, seed, manifestRows)
-    publish(spark, staging, target)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(manifestRows.toIndexedSeq,
-        math.max(1, math.min(manifestRows.length, 4))),
-      manifestSchema)
-  }
-
-  val EpochManifestName = "_EPOCH.json"
-
-  private def writeEpochManifest(spark: SparkSession, staging: String,
-      epoch: Int, seed: String, rows: Array[Row]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("format", "graft-epoch-order")
-    root.put("version", EpochVersion)
-    root.put("epoch", epoch)
-    root.put("seed", seed)
-    val arr = mapper.createArrayNode()
-    rows.sortBy(_.getString(0)).foreach { r =>
-      val n = mapper.createObjectNode()
-      n.put("stratum", r.getString(0))
-      n.put("n_sequences", r.getLong(1))
-      n.put("file", r.getString(2))
-      n.put("ord_md5", r.getString(3))
-      arr.add(n)
+        def close(md5s: Seq[String]) =
+          Row(stratum, n, stem + OrdSuffix, md5s(0))
+      }
+    } { (staging, rows) =>
+      // seed + per-file checksums ship with the sidecars, so the epoch
+      // artifact is self-describing and integrity-verifiable
+      writeManifest(spark, staging, EpochKind, "epoch" -> epoch,
+        "seed" -> seed,
+        "strata" -> rows.sortBy(_.getString(0)).toSeq.map(r => obj(
+          "stratum" -> r.getString(0), "n_sequences" -> r.getLong(1),
+          "file" -> r.getString(2), "ord_md5" -> r.getString(3))))
     }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("strata", arr)
-    val fs = new HPath(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new HPath(staging))
-    val out = fs.create(new HPath(staging, EpochManifestName), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
+    frame(spark, rows.toIndexedSeq, schema)
   }
 
   /** Verify a published epoch's `.ord` sidecars against the shipped
     * `_EPOCH.json` checksums — [[verifyManifest]]'s contract one
-    * level up: every sidecar re-read through the binaryFile source,
-    * md5 compared, and corruption / truncation / a missing committed
-    * file / an unmanifested extra all refused LOUDLY with the
-    * offending stems named. Also cross-checks each stratum's
-    * `n_sequences` against the live `.idx` sizes, so an epoch
-    * manifest from a RETIRED shard generation (counts no longer
+    * level up (md5 and size per sidecar). Also cross-checks each
+    * stratum's `n_sequences` against the live `.idx` sizes, so an
+    * epoch manifest from a RETIRED shard generation (counts no longer
     * matching) refuses instead of silently resuming the wrong
     * permutation length. Returns (stratum, file, ord_md5, seed).
     */
   def verifyEpochOrder(spark: SparkSession, dir: String, epoch: Int)
       : DataFrame = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}", EpochManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no epoch manifest at $p — written by a pre-manifest version? " +
-        "re-run writeEpochOrder")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    def field(node: com.fasterxml.jackson.databind.JsonNode,
-        name: String): com.fasterxml.jackson.databind.JsonNode = {
-      val v = if (node == null) null else node.get(name)
-      require(v != null && !v.isNull,
-        s"not an epoch-order manifest (missing '$name'): $p")
-      v
-    }
-    require(field(tree, "format").asText() == "graft-epoch-order" &&
-      field(tree, "version").asInt() == EpochVersion &&
-      field(tree, "epoch").asInt() == epoch,
-      s"not this epoch's manifest: $p")
-    val seed = field(tree, "seed").asText()
-    val strataNode = field(tree, "strata")
-    require(strataNode.isArray,
-      s"not an epoch-order manifest (strata is not an array): $p")
-    val expected = {
-      val b = Seq.newBuilder[(String, Long, String, String)]
-      val it = strataNode.elements()
-      while (it.hasNext) {
-        val n = it.next()
-        b += ((field(n, "stratum").asText(),
-          field(n, "n_sequences").asLong(),
-          field(n, "file").asText(), field(n, "ord_md5").asText()))
-      }
-      b.result()
-    }
+    val epochDir = s"$dir/${epochDirName(epoch)}"
+    val m = loadManifest(spark, epochDir, EpochKind)
+    require(m("epoch").asInt() == epoch,
+      s"not this epoch's manifest: ${m.path}")
+    val seed = m("seed").asText()
+    val strata = m.array(m.root, "strata").map(n =>
+      (m.field(n, "stratum").asText(), m.field(n, "n_sequences").asLong(),
+        m.field(n, "file").asText(), m.field(n, "ord_md5").asText()))
     val idxCounts = listIdxCounts(spark, dir).toMap
-    val actual = spark.read.format("binaryFile")
-      .load(s"$dir/${epochDirName(epoch)}/*$OrdSuffix")
-      .select(regexp_extract(col("path"),
-          "([^/]+\\" + OrdSuffix + ")$", 1).as("file"),
-        md5(col("content")).as("md5"),
-        col("length"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-    val problems = Seq.newBuilder[String]
-    expected.foreach { case (stratum, nSeq, file, wantMd5) =>
-      actual.get(file) match {
-        case None => problems += s"$file: MISSING"
-        case Some((gotMd5, len)) =>
-          if (gotMd5 != wantMd5)
-            problems += s"$file: md5 $gotMd5 != manifest $wantMd5"
-          else if (len != EpochHeaderBytes + 8L * nSeq)
-            problems += s"$file: $len bytes, manifest says $nSeq " +
-              "positions"
-      }
+    val stale = strata.flatMap { case (stratum, nSeq, _, _) =>
       idxCounts.get(stratum) match {
-        case Some(n) if n != nSeq =>
-          problems += s"$stratum: manifest says $nSeq sequences but " +
-            s"the live shard holds $n — epoch order from a retired " +
-            "shard generation"
-        case None =>
-          problems += s"$stratum: no live shard for this epoch order"
-        case _ => ()
+        case Some(n) if n != nSeq => Some(s"$stratum: manifest says " +
+          s"$nSeq sequences but the live shard holds $n — epoch order " +
+          "from a retired shard generation")
+        case None => Some(s"$stratum: no live shard for this epoch order")
+        case _ => None
       }
     }
-    val manifested = expected.map(_._3).toSet
-    actual.keySet.diff(manifested).toSeq.sorted
-      .foreach(f => problems += s"$f: present but not in manifest")
-    val bad = problems.result()
-    require(bad.isEmpty,
-      s"epoch $epoch at $dir fails manifest verification:\n  " +
-        bad.mkString("\n  "))
+    verify(spark, s"epoch $epoch at $dir", epochDir, s"*$OrdSuffix",
+      strata.map { case (_, nSeq, file, md5) =>
+        Expected(file, md5, EpochOrd.bytes(nSeq), s"$nSeq positions")
+      }, stale)
     import spark.implicits._
-    expected.map(t => (t._1, t._3, t._4, seed))
+    strata.map(t => (t._1, t._3, t._4, seed))
       .toDF("stratum", "file", "ord_md5", "seed")
   }
 
@@ -893,8 +423,8 @@ object TrainerShards {
     import spark.implicits._
     val counts = broadcast(
       listIdxCounts(spark, dir).toDF("__cs", "__cn"))
-    spark.read.format("binaryFile")
-      .load(s"$dir/${epochDirName(epoch)}/*$OrdSuffix")
+    val ords = s"$dir/${epochDirName(epoch)}/*$OrdSuffix"
+    spark.read.format("binaryFile").load(ords)
       .select(regexp_extract(col("path"),
           "([^/]+)\\" + OrdSuffix + "$", 1).as("__stem"),
         col("content").as("__ord"))
@@ -958,14 +488,12 @@ object TrainerShards {
     * restarting trainer reconstructs the whole interleaved consumption
     * plan from the published directory alone (the same gap x117 closed
     * one level down). Files land under
-    * `<dir>/epoch-NNNNN/blend/`: `part-NNNNN.blend` parts (24-byte
-    * header `GRFTBLNP` + u32 LE version + u32 LE epoch + u64 LE first
-    * global step, then one 12-byte record per step: u32 LE stratum
-    * ordinal + u64 LE 1-based rank within that stratum) plus a
-    * `_BLEND.json` manifest carrying the ordinal table, the quantized
-    * weights, and the per-part inventory — all published by the same
-    * [[graft.core.Publish]] swap, so readers never observe a half-written
-    * schedule.
+    * `<dir>/epoch-NNNNN/blend/`: `part-NNNNN.blend` parts (layout:
+    * [[ShardArtifact.BlendPart]], one (stratum ordinal, rank) record
+    * per step) plus a `_BLEND.json` manifest carrying the ordinal
+    * table, the quantized weights, and the per-part inventory — all
+    * published by the same [[graft.core.Publish]] swap, so readers
+    * never observe a half-written schedule.
     *
     * SEMANTICS — deterministic weighted fair interleave (the public
     * Megatron "blendable dataset" shape, stated in closed form):
@@ -999,10 +527,9 @@ object TrainerShards {
     * frame is the distributed range × broadcast-counts join; the
     * global step is computed MAP-SIDE per row from the closed form
     * (O(|strata|) longs per row, no sort, no window, nothing
-    * corpus-sized on the driver); then ONE part-keyed exchange
-    * streams each part's records to its file with O(1) task state —
-    * [[write]]'s machinery, attempt-unique staging files included.
-    * Each part writer ASSERTS its steps arrive dense and sequential
+    * corpus-sized on the driver); then [[ShardArtifact.writeParts]]
+    * streams each part's records to its file with O(1) task state.
+    * Each part ASSERTS its steps arrive dense and sequential
     * (`first_step + written`), so a closed-form bug can never publish
     * a silently gapped or duplicated schedule. HONEST BOUND: total
     * work is O(|strata| · Σm) — linear in steps but also linear in
@@ -1034,14 +561,8 @@ object TrainerShards {
     require(maxStrata >= 1, s"maxStrata must be >= 1, got $maxStrata")
     require(stepsPerFile >= 1,
       s"stepsPerFile must be >= 1, got $stepsPerFile")
-    require(!spark.conf.getOption("spark.speculation")
-        .exists(_.toBoolean),
-      "TrainerShards.writeBlendSchedule is incompatible with " +
-        "spark.speculation — same single-writer contract as write")
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val epochDir = s"$dir/${epochDirName(epoch)}"
-    require(fs.exists(new HPath(epochDir)),
+    require(fs(spark, dir).exists(new HPath(epochDir)),
       s"no epoch-order sidecars at $epochDir — writeEpochOrder first " +
         "(blend ranks index into that consumption order)")
     // strata in unsigned UTF-8 byte order — the tie-break and ordinal
@@ -1107,6 +628,8 @@ object TrainerShards {
       s"k*w overflows a long: max steps $maxM x max milli-weight $maxW")
     val m = names.length
     val ordinalOf = names.zipWithIndex.toMap
+    val table = names.indices.map(i => (names(i), i, ws(i), ns(i), fms(i),
+      ms(i)))
 
     import spark.implicits._
     val countsDf = names.indices.map(i => (names(i), ms(i)))
@@ -1116,127 +639,70 @@ object TrainerShards {
       .select(col("__s"), col("__p"))
     // closed-form global step, map-side: O(m) long ops per row. The
     // tie-break name_j < name_i is ordinal order (names are sorted).
-    val msL = ms; val wsL = ws; val mL = m
-    val ordinalOfL = ordinalOf
-    val stepsPerFileL = stepsPerFile
     val scheduled = positions.as[(String, Long)].map { case (s, p) =>
-      val i = ordinalOfL(s)
-      val wi = wsL(i)
+      val i = ordinalOf(s)
+      val wi = ws(i)
       val k = p + 1 // 1-based consumption step within stratum
       var g = k // own stratum: itself + its k-1 predecessors
       var j = 0
-      while (j < mL) {
+      while (j < m) {
         if (j != i) {
-          val a = k * wsL(j)
-          var cnt = math.min(msL(j), (a - 1) / wi)
-          if (a % wi == 0 && a / wi <= msL(j) && j < i) cnt += 1
+          val a = k * ws(j)
+          var cnt = math.min(ms(j), (a - 1) / wi)
+          if (a % wi == 0 && a / wi <= ms(j) && j < i) cnt += 1
           g += cnt
         }
         j += 1
       }
-      ((g - 1) / stepsPerFileL, g, i, k)
+      ((g - 1) / stepsPerFile, g, i, k)
     }.toDF("__part", "__g", "__o", "__r")
 
-    val conf = new org.apache.spark.sql.graftbridge.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val target = s"$epochDir/$BlendDirName"
-    val staging = stagingFor(spark, target)
-    import org.apache.spark.sql.types._
-    val partSchema = StructType(Seq(
-      StructField("part", LongType, nullable = false),
-      StructField("first_step", LongType, nullable = false),
-      StructField("n_steps", LongType, nullable = false),
-      StructField("file", StringType, nullable = false),
-      StructField("md5", StringType, nullable = false)))
-    val epochL = epoch
-    val totalL = total
-    val partRows = scheduled
-      .repartition(col("__part"))
-      .sortWithinPartitions(col("__part"), col("__g"))
-      .mapPartitions { it =>
-        val fsConf = conf.value
-        val attempt = attemptSuffix()
-        var cur = -1L
-        var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        var md: java.security.MessageDigest = null
-        var firstStep = 0L
-        var n = 0L
-        val done = Seq.newBuilder[Row]
-        def stem(part: Long): String = f"part-$part%05d"
-        def close(): Unit = if (cur >= 0) {
-          out.close()
-          val expected =
-            math.min(stepsPerFileL, totalL - cur * stepsPerFileL)
+    writeParts("writeBlendSchedule", blendDir(dir, epoch), scheduled,
+        Seq("__part", "__g"), Seq(BlendSuffix),
+        fields("part" -> LongType, "first_step" -> LongType,
+          "n_steps" -> LongType, "file" -> StringType,
+          "md5" -> StringType)) { first =>
+      val part = first.getLong(0)
+      new Part(f"part-$part%05d") {
+        private val firstStep = part * stepsPerFile + 1
+        private var n = 0L
+        def headers = Seq(BlendPart.header(u32le(epoch), u64le(firstStep)))
+        def write(r: Row, out: (Int, Array[Byte]) => Unit): Unit = {
+          require(r.getLong(1) == firstStep + n,
+            s"blend step ${r.getLong(1)} arrived out of sequence " +
+              s"(expected ${firstStep + n}) — closed-form collision")
+          out(0, u32le(r.getInt(2)))
+          out(0, u64le(r.getLong(3)))
+          n += 1
+        }
+        def close(md5s: Seq[String]) = {
+          val expected = math.min(stepsPerFile, total - part * stepsPerFile)
           require(n == expected,
-            s"blend part $cur wrote $n steps, expected $expected — " +
+            s"blend part $part wrote $n steps, expected $expected — " +
               "the closed-form schedule has a gap or duplicate")
-          val base = new HPath(staging)
-          val fsL = base.getFileSystem(fsConf)
-          commitAttemptFile(fsL, base, stem(cur), BlendSuffix, attempt)
-          done += Row(cur, firstStep, n, stem(cur) + BlendSuffix,
-            md.digest().map(b => f"$b%02x").mkString)
-          cur = -1L
+          Row(part, firstStep, n, stem + BlendSuffix, md5s(0))
         }
-        def open(part: Long): Unit = {
-          cur = part; firstStep = part * stepsPerFileL + 1; n = 0L
-          md = java.security.MessageDigest.getInstance("MD5")
-          val base = new HPath(staging)
-          val fsL = base.getFileSystem(fsConf)
-          fsL.mkdirs(base)
-          out = fsL.create(
-            new HPath(base, stem(part) + BlendSuffix + attempt), true)
-          def w(bytes: Array[Byte]): Unit = {
-            out.write(bytes); md.update(bytes)
-          }
-          w(BlendMagic)
-          w(u32le(BlendVersion))
-          w(u32le(epochL))
-          w(u64le(firstStep))
-        }
-        try {
-          while (it.hasNext) {
-            val r = it.next()
-            val part = r.getLong(0)
-            if (part != cur) { close(); open(part) }
-            require(r.getLong(1) == firstStep + n,
-              s"blend step ${r.getLong(1)} arrived out of sequence " +
-                s"(expected ${firstStep + n}) — closed-form collision")
-            val o = u32le(r.getInt(2)); val rk = u64le(r.getLong(3))
-            out.write(o); md.update(o)
-            out.write(rk); md.update(rk)
-            n += 1
-          }
-          close()
-        } finally if (cur >= 0) {
-          try out.close() catch { case _: Throwable => () }
-        }
-        done.result().iterator
-      }(org.apache.spark.sql.Encoders.row(partSchema))
-      .collect()
-    sweepAttemptFiles(spark, staging)
-    val nParts = ((total + stepsPerFile - 1) / stepsPerFile).toInt
-    require(partRows.length == nParts &&
-      partRows.map(_.getLong(0)).sorted.sameElements(
-        Array.range(0, nParts).map(_.toLong)) &&
-      partRows.map(_.getLong(2)).sum == total,
-      s"blend schedule wrote ${partRows.length} parts covering " +
-        s"${partRows.map(_.getLong(2)).sum} steps; expected $nParts " +
-        s"parts / $total steps")
-    writeBlendManifest(spark, staging, epoch, stepsPerFile, total,
-      names, ws, ns, fms, ms, partRows)
-    publish(spark, staging, target)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        names.indices.map(i =>
-          Row(names(i), i, ws(i), ns(i), fms(i), ms(i))),
-        math.max(1, math.min(m, 4))),
-      StructType(Seq(
-        StructField("stratum", StringType, nullable = false),
-        StructField("ordinal", IntegerType, nullable = false),
-        StructField("weight_milli", LongType, nullable = false),
-        StructField("n_sequences", LongType, nullable = false),
-        StructField("factor_milli", LongType, nullable = false),
-        StructField("n_steps", LongType, nullable = false))))
+      }
+    } { (staging, partRows) =>
+      val nParts = ((total + stepsPerFile - 1) / stepsPerFile).toInt
+      require(partRows.length == nParts &&
+        partRows.map(_.getLong(0)).sorted.sameElements(
+          Array.range(0, nParts).map(_.toLong)) &&
+        partRows.map(_.getLong(2)).sum == total,
+        s"blend schedule wrote ${partRows.length} parts covering " +
+          s"${partRows.map(_.getLong(2)).sum} steps; expected $nParts " +
+          s"parts / $total steps")
+      writeManifest(spark, staging, BlendKind, "epoch" -> epoch,
+        "steps_per_file" -> stepsPerFile, "total_steps" -> total,
+        "strata" -> strataJson(table),
+        "files" -> partRows.sortBy(_.getLong(0)).toSeq.map(r => obj(
+          "file" -> r.getString(3), "first_step" -> r.getLong(1),
+          "n_steps" -> r.getLong(2), "md5" -> r.getString(4))))
+    }
+    frame(spark, table.map(t => Row(t.productIterator.toSeq: _*)),
+      fields("stratum" -> StringType, "ordinal" -> IntegerType,
+        "weight_milli" -> LongType, "n_sequences" -> LongType,
+        "factor_milli" -> LongType, "n_steps" -> LongType))
   }
 
   /** Per-stratum consumption steps m_s = (n_s · f_milli) div 1000 —
@@ -1253,96 +719,38 @@ object TrainerShards {
       ns(i) * fms(i) / 1000L
     }.toArray
 
-  private def writeBlendManifest(spark: SparkSession, staging: String,
-      epoch: Int, stepsPerFile: Long, total: Long,
-      names: Array[String], ws: Array[Long], ns: Array[Long],
-      fms: Array[Long], ms: Array[Long],
-      partRows: Array[Row]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("format", "graft-blend-schedule")
-    root.put("version", BlendVersion)
-    root.put("epoch", epoch)
-    root.put("steps_per_file", stepsPerFile)
-    root.put("total_steps", total)
-    val arr = mapper.createArrayNode()
-    names.indices.foreach { i =>
-      val n = mapper.createObjectNode()
-      n.put("stratum", names(i))
-      n.put("ordinal", i)
-      n.put("weight_milli", ws(i))
-      n.put("n_sequences", ns(i))
-      n.put("factor_milli", fms(i))
-      n.put("n_steps", ms(i))
-      arr.add(n)
-    }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("strata", arr)
-    val files = mapper.createArrayNode()
-    partRows.sortBy(_.getLong(0)).foreach { r =>
-      val n = mapper.createObjectNode()
-      n.put("file", r.getString(3))
-      n.put("first_step", r.getLong(1))
-      n.put("n_steps", r.getLong(2))
-      n.put("md5", r.getString(4))
-      files.add(n)
-    }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("files", files)
-    val fs = new HPath(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new HPath(staging))
-    val out = fs.create(new HPath(staging, BlendManifestName), true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally out.close()
-  }
+  /** A blend's strata table: (stratum, ordinal, weight_milli,
+    * n_sequences, factor_milli, n_steps), the `strata` array of both
+    * `_BLEND.json` and each `_RUN.json` epoch.
+    */
+  private type Strata = Seq[(String, Int, Long, Long, Long, Long)]
 
-  /** The blend manifest parsed back: (stratum, ordinal, weight_milli,
-    * n_sequences, factor_milli, n_steps) in ordinal order plus
-    * (stepsPerFile, totalSteps).
+  private def strataJson(strata: Strata): Seq[ObjectNode] =
+    strata.map { case (s, o, w, n, f, m) =>
+      obj("stratum" -> s, "ordinal" -> o, "weight_milli" -> w,
+        "n_sequences" -> n, "factor_milli" -> f, "n_steps" -> m)
+    }
+
+  private def readStrata(m: Manifest, node: JsonNode): Strata =
+    m.array(node, "strata").map(n => (m.field(n, "stratum").asText(),
+      m.field(n, "ordinal").asInt(), m.field(n, "weight_milli").asLong(),
+      m.field(n, "n_sequences").asLong(),
+      m.field(n, "factor_milli").asLong(), m.field(n, "n_steps").asLong()))
+
+  /** The blend manifest parsed back: the strata table in ordinal order
+    * plus (stepsPerFile, totalSteps).
     */
   private[graft] def readBlendMeta(spark: SparkSession, dir: String,
-      epoch: Int)
-      : (Seq[(String, Int, Long, Long, Long, Long)], Long, Long) = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}/$BlendDirName",
-      BlendManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no blend schedule at $p — writeBlendSchedule first")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    def field(node: com.fasterxml.jackson.databind.JsonNode,
-        name: String): com.fasterxml.jackson.databind.JsonNode = {
-      val v = if (node == null) null else node.get(name)
-      require(v != null && !v.isNull,
-        s"not a blend-schedule manifest (missing '$name'): $p")
-      v
-    }
-    require(field(tree, "format").asText() == "graft-blend-schedule" &&
-      field(tree, "version").asInt() == BlendVersion,
-      s"not a blend-schedule manifest: $p")
-    require(field(tree, "epoch").asInt() == epoch,
-      s"blend manifest at $p is for epoch " +
-        s"${field(tree, "epoch").asInt()}, not $epoch")
-    val strataNode = field(tree, "strata")
-    require(strataNode.isArray,
-      s"not a blend-schedule manifest (strata is not an array): $p")
-    val b = Seq.newBuilder[(String, Int, Long, Long, Long, Long)]
-    val it = strataNode.elements()
-    while (it.hasNext) {
-      val n = it.next()
-      b += ((field(n, "stratum").asText(), field(n, "ordinal").asInt(),
-        field(n, "weight_milli").asLong(),
-        field(n, "n_sequences").asLong(),
-        field(n, "factor_milli").asLong(),
-        field(n, "n_steps").asLong()))
-    }
-    val strata = b.result().sortBy(_._2)
+      epoch: Int): (Strata, Long, Long) = {
+    val m = loadManifest(spark, blendDir(dir, epoch), BlendKind)
+    require(m("epoch").asInt() == epoch,
+      s"blend manifest at ${m.path} is for epoch " +
+        s"${m("epoch").asInt()}, not $epoch")
+    val strata = readStrata(m, m.root).sortBy(_._2)
     require(strata.map(_._2) == strata.indices,
-      s"blend manifest ordinals are not dense 0..${strata.size - 1}: $p")
-    (strata, field(tree, "steps_per_file").asLong(),
-      field(tree, "total_steps").asLong())
+      s"blend manifest ordinals are not dense 0..${strata.size - 1}: " +
+        m.path)
+    (strata, m("steps_per_file").asLong(), m("total_steps").asLong())
   }
 
   /** DISTRIBUTED read of the blend schedule: one row per global step —
@@ -1364,8 +772,8 @@ object TrainerShards {
     // exceed the sequence count when factors > 1 wrap around)
     val counts = broadcast(
       strata.map(t => (t._1, t._6)).toDF("__cs", "__cn"))
-    spark.read.format("binaryFile")
-      .load(s"$dir/${epochDirName(epoch)}/$BlendDirName/*$BlendSuffix")
+    val parts = s"${blendDir(dir, epoch)}/*$BlendSuffix"
+    spark.read.format("binaryFile").load(parts)
       .select(graft.expressions.GraftFunctions.blendEntries(
         col("content")).as("__b"))
       .filter(assert_true(col("__b.epoch") === epoch,
@@ -1462,98 +870,38 @@ object TrainerShards {
         col("pos"), col("token_ids"))
   }
 
+  /** (file, first_step, n_steps, md5) per part `_BLEND.json` declares. */
+  private def blendFiles(spark: SparkSession, dir: String, epoch: Int)
+      : Seq[(String, Long, Long, String)] = {
+    val m = loadManifest(spark, blendDir(dir, epoch), BlendKind)
+    m.array(m.root, "files").map(n => (m.field(n, "file").asText(),
+      m.field(n, "first_step").asLong(), m.field(n, "n_steps").asLong(),
+      m.field(n, "md5").asText()))
+  }
+
   /** The part-file names a published blend's `_BLEND.json` declares —
     * the completeness ground truth the consumption stream checks a
     * micro-batch against (epoch-part-count sized).
     */
   private[graft] def blendPartNames(spark: SparkSession, dir: String,
-      epoch: Int): Seq[String] = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}/$BlendDirName",
-      BlendManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no blend schedule at $p — writeBlendSchedule first")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val filesNode = tree.get("files")
-    require(filesNode != null && filesNode.isArray,
-      s"not a blend-schedule manifest (files is not an array): $p")
-    val b = Seq.newBuilder[String]
-    val it = filesNode.elements()
-    while (it.hasNext) {
-      val n = it.next().get("file")
-      require(n != null && !n.isNull,
-        s"not a blend-schedule manifest (missing 'file'): $p")
-      b += n.asText()
-    }
-    b.result()
-  }
+      epoch: Int): Seq[String] =
+    blendFiles(spark, dir, epoch).map(_._1)
 
   /** Verify a published blend schedule against its `_BLEND.json`
     * per-part checksums — [[verifyManifest]] / [[verifyEpochOrder]]'s
-    * contract at the blend level: every part re-read through the
-    * binaryFile source, md5 + declared step count compared, missing
-    * committed parts and unmanifested extras refused LOUDLY. Returns
-    * (file, first_step, n_steps, md5).
+    * contract at the blend level (md5 and declared step count per
+    * part). Returns (file, first_step, n_steps, md5).
     */
   def verifyBlendSchedule(spark: SparkSession, dir: String, epoch: Int)
       : DataFrame = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}/$BlendDirName",
-      BlendManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no blend schedule at $p — writeBlendSchedule first")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val filesNode = tree.get("files")
-    require(filesNode != null && filesNode.isArray,
-      s"not a blend-schedule manifest (files is not an array): $p")
-    val expected = {
-      val b = Seq.newBuilder[(String, Long, Long, String)]
-      val it = filesNode.elements()
-      while (it.hasNext) {
-        val n = it.next()
-        def f(name: String) = {
-          val v = n.get(name)
-          require(v != null && !v.isNull,
-            s"not a blend-schedule manifest (missing '$name'): $p")
-          v
-        }
-        b += ((f("file").asText(), f("first_step").asLong(),
-          f("n_steps").asLong(), f("md5").asText()))
-      }
-      b.result()
-    }
-    val actual = spark.read.format("binaryFile")
-      .load(s"$dir/${epochDirName(epoch)}/$BlendDirName/*$BlendSuffix")
-      .select(regexp_extract(col("path"),
-          "([^/]+\\" + BlendSuffix + ")$", 1).as("file"),
-        md5(col("content")).as("md5"), col("length"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-    val problems = Seq.newBuilder[String]
-    expected.foreach { case (file, _, nSteps, wantMd5) =>
-      actual.get(file) match {
-        case None => problems += s"$file: MISSING"
-        case Some((gotMd5, len)) =>
-          if (gotMd5 != wantMd5)
-            problems += s"$file: md5 $gotMd5 != manifest $wantMd5"
-          else if (len != BlendHeaderBytes + 12L * nSteps)
-            problems += s"$file: $len bytes, manifest says $nSteps steps"
-      }
-    }
-    actual.keySet.diff(expected.map(_._1).toSet).toSeq.sorted
-      .foreach(f => problems += s"$f: present but not in manifest")
-    val bad = problems.result()
-    require(bad.isEmpty,
-      s"blend schedule for epoch $epoch at $dir fails manifest " +
-        s"verification:\n  ${bad.mkString("\n  ")}")
+    val files = blendFiles(spark, dir, epoch)
+    verify(spark, s"blend schedule for epoch $epoch at $dir",
+      blendDir(dir, epoch), s"*$BlendSuffix",
+      files.map { case (file, _, nSteps, md5) =>
+        Expected(file, md5, BlendPart.bytes(nSteps), s"$nSteps steps")
+      })
     import spark.implicits._
-    expected.toDF("file", "first_step", "n_steps", "md5")
+    files.toDF("file", "first_step", "n_steps", "md5")
   }
 
   /** One DATA-PARALLEL rank's slice of the composed blend read — the
@@ -1576,9 +924,6 @@ object TrainerShards {
 
   // ==================== run-level manifest ====================
 
-  val RunManifestName = "_RUN.json"
-  private[graft] val RunVersion = 1
-
   /** One epoch's row in the run manifest: its seed, its 1-based first
     * RUN step (prefix sum over the preceding epochs' totals), its
     * within-epoch total, its blend stepsPerFile, and the full strata
@@ -1592,10 +937,9 @@ object TrainerShards {
   /** The epoch numbers with a published directory under `dir`. */
   private def epochDirsOnDisk(spark: SparkSession, dir: String)
       : Seq[Int] = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(dir))) Nil
-    else fs.listStatus(new HPath(dir)).toSeq
+    val f = fs(spark, dir)
+    if (!f.exists(new HPath(dir))) Nil
+    else f.listStatus(new HPath(dir)).toSeq
       .map(_.getPath.getName)
       .collect { case n if n.matches("epoch-\\d{5}") =>
         n.stripPrefix("epoch-").toInt }
@@ -1604,19 +948,9 @@ object TrainerShards {
 
   /** The seed a published epoch's `_EPOCH.json` records. */
   private def readEpochSeed(spark: SparkSession, dir: String,
-      epoch: Int): String = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}", EpochManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no epoch manifest at $p")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val v = tree.get("seed")
-    require(v != null && !v.isNull,
-      s"not an epoch-order manifest (missing 'seed'): $p")
-    v.asText()
-  }
+      epoch: Int): String =
+    loadManifest(spark, s"$dir/${epochDirName(epoch)}", EpochKind)("seed")
+      .asText()
 
   /** One committed run-binding generation: `_RUN.<gen>.json`. */
   private def runGenName(gen: Long): String = s"_RUN.$gen.json"
@@ -1628,10 +962,9 @@ object TrainerShards {
     */
   private[graft] def maxRunGeneration(spark: SparkSession,
       dir: String): Long = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(dir))) 0L
-    else fs.listStatus(new HPath(dir)).iterator
+    val f = fs(spark, dir)
+    if (!f.exists(new HPath(dir))) 0L
+    else f.listStatus(new HPath(dir)).iterator
       .map(_.getPath.getName)
       .collect { case runGenRe(g) => g.toLong }
       .maxOption.getOrElse(0L)
@@ -1649,9 +982,7 @@ object TrainerShards {
     *     readers key on (the pointer IS the manifest; the generation
     *     files are the serialization token and the binding's audit
     *     trail, one small JSON per extend). Both steps are
-    *     [[graft.core.Publish.writeFile]]; a crash inside the pointer
-    *     swap leaves no `_RUN.json`, which readers refuse loudly
-    *     until the next publish recovers it.
+    *     [[graft.core.Publish.writeFile]].
     * A publisher crashing between 1 and 2 leaves a committed
     * generation newer than the pointer — [[verifyRun]] refuses that
     * state loudly (re-publish to heal); it can never LOSE a bound
@@ -1733,38 +1064,13 @@ object TrainerShards {
         m
       }
     }
-    val provenance = readProvenance(spark, dir)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("format", "graft-training-run")
-    root.put("version", RunVersion)
-    root.put("total_steps", metas.map(_.totalSteps).sum)
-    val pn = mapper.createObjectNode()
-    provenance.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      pn.put(k, v) }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("provenance", pn)
-    val arr = mapper.createArrayNode()
-    metas.foreach { m =>
-      val n = mapper.createObjectNode()
-      n.put("epoch", m.epoch)
-      n.put("seed", m.seed)
-      n.put("first_run_step", m.firstRunStep)
-      n.put("total_steps", m.totalSteps)
-      n.put("steps_per_file", m.stepsPerFile)
-      val sa = mapper.createArrayNode()
-      m.strata.foreach { case (s, o, w, ns, fm, ms) =>
-        val sn = mapper.createObjectNode()
-        sn.put("stratum", s); sn.put("ordinal", o)
-        sn.put("weight_milli", w); sn.put("n_sequences", ns)
-        sn.put("factor_milli", fm); sn.put("n_steps", ms)
-        sa.add(sn)
-      }
-      n.set[com.fasterxml.jackson.databind.JsonNode]("strata", sa)
-      arr.add(n)
-    }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("epochs", arr)
-    publishRunManifest(spark, dir,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    publishRunManifest(spark, dir, manifestBytes(RunKind,
+      "total_steps" -> metas.map(_.totalSteps).sum,
+      "provenance" -> readProvenance(spark, dir),
+      "epochs" -> metas.map(m => obj("epoch" -> m.epoch, "seed" -> m.seed,
+        "first_run_step" -> m.firstRunStep, "total_steps" -> m.totalSteps,
+        "steps_per_file" -> m.stepsPerFile,
+        "strata" -> strataJson(m.strata)))))
     import spark.implicits._
     metas.map(m => (m.epoch, m.seed, m.firstRunStep, m.totalSteps))
       .toDF("epoch", "seed", "first_run_step", "total_steps")
@@ -1808,69 +1114,24 @@ object TrainerShards {
     */
   private[graft] def readRunMeta(spark: SparkSession, dir: String)
       : (Seq[RunEpoch], Map[String, String]) = {
-    val p = new HPath(dir, RunManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no run manifest at $p — writeRunManifest first")
-    val in = fs.open(p)
-    val tree =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    def field(node: com.fasterxml.jackson.databind.JsonNode,
-        name: String): com.fasterxml.jackson.databind.JsonNode = {
-      val v = if (node == null) null else node.get(name)
-      require(v != null && !v.isNull,
-        s"not a training-run manifest (missing '$name'): $p")
-      v
-    }
-    require(field(tree, "format").asText() == "graft-training-run" &&
-      field(tree, "version").asInt() == RunVersion,
-      s"not a training-run manifest: $p")
-    val b = Seq.newBuilder[RunEpoch]
-    val it = field(tree, "epochs").elements()
-    while (it.hasNext) {
-      val n = it.next()
-      val sb = Seq.newBuilder[(String, Int, Long, Long, Long, Long)]
-      val sit = field(n, "strata").elements()
-      while (sit.hasNext) {
-        val s = sit.next()
-        sb += ((field(s, "stratum").asText(),
-          field(s, "ordinal").asInt(),
-          field(s, "weight_milli").asLong(),
-          field(s, "n_sequences").asLong(),
-          field(s, "factor_milli").asLong(),
-          field(s, "n_steps").asLong()))
-      }
-      b += RunEpoch(field(n, "epoch").asInt(),
-        field(n, "seed").asText(),
-        field(n, "first_run_step").asLong(),
-        field(n, "total_steps").asLong(),
-        field(n, "steps_per_file").asLong(), sb.result())
-    }
-    val metas = b.result()
-    require(metas.nonEmpty, s"run manifest binds no epochs: $p")
+    val m = loadManifest(spark, dir, RunKind)
+    val metas = m.array(m.root, "epochs").map(n => RunEpoch(
+      m.field(n, "epoch").asInt(), m.field(n, "seed").asText(),
+      m.field(n, "first_run_step").asLong(),
+      m.field(n, "total_steps").asLong(),
+      m.field(n, "steps_per_file").asLong(), readStrata(m, n)))
+    require(metas.nonEmpty, s"run manifest binds no epochs: ${m.path}")
     // the prefix sums must be dense — a hand-edited manifest with a
     // gap would silently shift every later epoch's run steps
     var first = 1L
-    metas.foreach { m =>
-      require(m.firstRunStep == first,
-        s"run manifest epoch ${m.epoch} starts at run step " +
-          s"${m.firstRunStep}, expected $first — the epoch list is " +
-          s"gapped or reordered: $p")
-      first += m.totalSteps
+    metas.foreach { e =>
+      require(e.firstRunStep == first,
+        s"run manifest epoch ${e.epoch} starts at run step " +
+          s"${e.firstRunStep}, expected $first — the epoch list is " +
+          s"gapped or reordered: ${m.path}")
+      first += e.totalSteps
     }
-    val provNode = tree.get("provenance")
-    val prov =
-      if (provNode == null || !provNode.isObject) Map.empty[String, String]
-      else {
-        val pb = Map.newBuilder[String, String]
-        val pit = provNode.fields()
-        while (pit.hasNext) {
-          val e = pit.next(); pb += (e.getKey -> e.getValue.asText())
-        }
-        pb.result()
-      }
-    (metas, prov)
+    (metas, m.strings("provenance"))
   }
 
   /** Verify a published run against what is actually on disk —
@@ -1884,9 +1145,6 @@ object TrainerShards {
     * additionally re-checksums every level through [[verifyManifest]],
     * [[verifyEpochOrder]] and [[verifyBlendSchedule]]. Returns
     * (epoch, seed, first_run_step, total_steps).
-    * Readers do not run crash recovery: a crash inside a publish's
-    * `_RUN.json` swap leaves no `_RUN.json`, and this refuses loudly
-    * until the next publish recovers it.
     */
   def verifyRun(spark: SparkSession, dir: String,
       deep: Boolean = false): DataFrame = {
@@ -1925,22 +1183,13 @@ object TrainerShards {
     // (re-publish via writeRunManifest to heal; no bound epoch is
     // ever lost — the pointer still holds the last full publish)
     val gen = maxRunGeneration(spark, dir)
-    if (gen > 0) {
-      val fs = new HPath(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def slurp(p: HPath): Array[Byte] = {
-        val in = fs.open(p)
-        try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-      }
-      if (!java.util.Arrays.equals(
-          slurp(new HPath(dir, runGenName(gen))),
-          slurp(new HPath(dir, RunManifestName))))
-        problems += s"committed generation $gen does not match the " +
-          s"$RunManifestName pointer — a publisher crashed between " +
-          "commit and pointer, or the pointer was clobbered; " +
-          "re-publish the binding (writeRunManifest) to heal"
-    }
+    if (gen > 0 && !java.util.Arrays.equals(
+        readBytes(spark, new HPath(dir, runGenName(gen))),
+        readBytes(spark, new HPath(dir, RunManifestName))))
+      problems += s"committed generation $gen does not match the " +
+        s"$RunManifestName pointer — a publisher crashed between " +
+        "commit and pointer, or the pointer was clobbered; " +
+        "re-publish the binding (writeRunManifest) to heal"
     val bad = problems.result()
     require(bad.isEmpty,
       s"training run at $dir fails verification:\n  " +
@@ -2015,9 +1264,6 @@ object TrainerShards {
     * through its epoch's `.ord` permutation (wraparound included) to
     * its sequence bytes, as `(run_step, epoch, global_step, stratum,
     * rank, pos, token_ids)`. Order by `run_step` to consume.
-    * Readers do not run crash recovery: a crash inside a publish's
-    * `_RUN.json` swap leaves no `_RUN.json`, and this refuses loudly
-    * until the next publish recovers it.
     */
   def readInRunOrder(spark: SparkSession, dir: String,
       afterStep: Long = 0L): DataFrame = {
@@ -2089,29 +1335,14 @@ object TrainerShards {
     */
   def readBlendPartDriver(spark: SparkSession, dir: String, epoch: Int,
       file: String): (Int, Long, Seq[(Int, Long)]) = {
-    val p = new HPath(s"$dir/${epochDirName(epoch)}/$BlendDirName", file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val blob =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    require(blob.length >= BlendHeaderBytes &&
-      blob.take(BlendMagic.length).sameElements(BlendMagic),
-      s"not a blend-schedule part: $p")
-    val bb = java.nio.ByteBuffer.wrap(blob)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(BlendMagic.length)
-    require(version == BlendVersion,
-      s"unsupported blend-schedule version $version")
-    val fileEpoch = bb.getInt(BlendMagic.length + 4)
-    val firstStep = bb.getLong(BlendMagic.length + 8)
-    require((blob.length - BlendHeaderBytes) % 12 == 0,
-      s"truncated blend-schedule part: $p")
-    val count = (blob.length - BlendHeaderBytes) / 12
-    (fileEpoch, firstStep, (0 until count.toInt).map { i =>
-      (bb.getInt(BlendHeaderBytes + i * 12),
-        bb.getLong(BlendHeaderBytes + i * 12 + 4))
-    })
+    val p = new HPath(blendDir(dir, epoch), file)
+    val blob = readBytes(spark, p)
+    val bb = BlendPart.check(blob, p.toString)
+    val h = BlendPart.headerBytes
+    (bb.getInt(BlendPart.magic.length + 4),
+      bb.getLong(BlendPart.magic.length + 8),
+      (0 until (blob.length - h) / 12).map(i =>
+        (bb.getInt(h + i * 12), bb.getLong(h + i * 12 + 4))))
   }
 
   /** Driver-side reference reader for one stratum's epoch sidecar —
@@ -2120,28 +1351,13 @@ object TrainerShards {
     */
   def readEpochOrderShard(spark: SparkSession, dir: String, epoch: Int,
       stratum: String): (Int, Seq[Long]) = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new HPath(s"$dir/${epochDirName(epoch)}",
       fileStem(stratum) + OrdSuffix)
-    val in = fs.open(p)
-    val ord =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    require(ord.length >= EpochHeaderBytes &&
-      ord.take(EpochMagic.length).sameElements(EpochMagic),
-      s"not an epoch-order sidecar: $p")
-    val bb = java.nio.ByteBuffer.wrap(ord)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val version = bb.getInt(EpochMagic.length)
-    require(version == EpochVersion,
-      s"unsupported epoch-order version $version")
-    val fileEpoch = bb.getInt(EpochMagic.length + 4)
-    require((ord.length - EpochHeaderBytes) % 8 == 0,
-      s"truncated epoch-order sidecar: $p")
-    val count = (ord.length - EpochHeaderBytes) / 8
-    (fileEpoch, (0 until count.toInt)
-      .map(i => bb.getLong(EpochHeaderBytes + i * 8)))
+    val ord = readBytes(spark, p)
+    val bb = EpochOrd.check(ord, p.toString)
+    val h = EpochOrd.headerBytes
+    (bb.getInt(EpochOrd.magic.length + 4),
+      (0 until (ord.length - h) / 8).map(i => bb.getLong(h + i * 8)))
   }
 
   /** (stratum, sequence count) for every shard in a written set,
@@ -2151,28 +1367,21 @@ object TrainerShards {
     */
   private[graft] def listIdxCounts(spark: SparkSession, dir: String)
       : Seq[(String, Long)] = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new HPath(dir)), s"no shard set at $dir")
-    fs.listStatus(new HPath(dir)).toSeq
+    val f = fs(spark, dir)
+    require(f.exists(new HPath(dir)), s"no shard set at $dir")
+    f.listStatus(new HPath(dir)).toSeq
       .filter(_.getPath.getName.endsWith(IdxSuffix))
-      .map { st =>
-        require(st.getLen >= HeaderBytes &&
-          (st.getLen - HeaderBytes) % 8 == 0,
-          s"truncated idx sidecar ${st.getPath}")
-        (java.net.URLDecoder.decode(
+      .map(st => (java.net.URLDecoder.decode(
           st.getPath.getName.stripSuffix(IdxSuffix), "UTF-8"),
-          (st.getLen - HeaderBytes) / 8)
-      }
+        ShardIdx.records(st.getLen, st.getPath.toString)))
       .sortBy(_._1)
   }
 
   /** The strata present in a written shard set — one idx listing. */
   def listShards(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(dir))) Nil
-    else fs.listStatus(new HPath(dir)).toSeq
+    val f = fs(spark, dir)
+    if (!f.exists(new HPath(dir))) Nil
+    else f.listStatus(new HPath(dir)).toSeq
       .map(_.getPath.getName)
       .filter(_.endsWith(IdxSuffix))
       .map(n => java.net.URLDecoder.decode(

@@ -353,7 +353,10 @@ object Packing {
           col("n_tokens").as("n"), col("truncated"),
           col("__ids").as("ids")).as("__frag"))
       .groupBy(col(strataCol), col("seq_id"))
-      .agg(array_sort(collect_list(col("__frag"))).as("__frags"))
+      // compiled sort_array, as in materializeSequences: pos leads the
+      // struct and no fragment is null
+      .agg(sort_array(collect_list(col("__frag")), asc = true)
+        .as("__frags"))
       .select(col(strataCol), col("seq_id"),
         flatten(col("__frags.ids")).as("token_ids"),
         expr("transform(__frags, f -> named_struct('pos', f.pos, " +

@@ -46,6 +46,7 @@ class FaultyFileSystem extends RawLocalFileSystem {
 
   override def rename(src: Path, dst: Path): Boolean = {
     check("rename", src, dst)
+    if (!FaultyFileSystem.beforeRename(src, dst)) return false
     val r = super.rename(src, dst)
     FaultyFileSystem.afterRename(src, dst)
     r
@@ -53,7 +54,9 @@ class FaultyFileSystem extends RawLocalFileSystem {
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
     check("delete", p)
-    super.delete(p, recursive)
+    val r = super.delete(p, recursive)
+    FaultyFileSystem.afterDelete(p)
+    r
   }
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
@@ -96,6 +99,15 @@ object FaultyFileSystem {
     * nested-publish spec uses to act between two renames.
     */
   @volatile var afterRename: (Path, Path) => Unit = (_, _) => ()
+
+  /** Called before every `FileSystem` rename (any path); `false` fails
+    * it the way HDFS refuses an existing destination — the hook the
+    * attempt-commit specs use to stage a committed twin.
+    */
+  @volatile var beforeRename: (Path, Path) => Boolean = (_, _) => true
+
+  /** Called after every `FileSystem` delete (any path). */
+  @volatile var afterDelete: Path => Unit = _ => ()
 
   def register(conf: Configuration): Unit = {
     conf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)

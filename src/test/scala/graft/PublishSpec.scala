@@ -468,6 +468,130 @@ class PublishSpec extends SparkSpec {
     assert(crashes >= 5, s"commit, then the pointer swap: $crashes")
   }
 
+  test("fault matrix: TrainerShards.writeBlendSchedule") {
+    val template = localDir("graft_publish_blend_t")
+    val tdir = faulty(s"$template/shards")
+    writeShards(shardDocs, tdir)
+    TrainerShards.writeEpochOrder(spark, tdir, seed = "s", epoch = 0)
+    val oldW = Map("en" -> 2.0, "de" -> 1.0, "fr" -> 1.0)
+    val newW = Map("en" -> 1.0, "de" -> 3.0, "fr" -> 2.0)
+    TrainerShards.writeBlendSchedule(spark, tdir, 0, oldW, stepsPerFile = 2)
+    def milli(w: Map[String, Double]) =
+      w.map { case (s, x) => s -> math.round(x * 1000) }
+    // a reader's view: the weights of a schedule that verifies and reads
+    def seen(dir: String) = scala.util.Try {
+      TrainerShards.verifyBlendSchedule(spark, dir, 0).collect()
+      TrainerShards.readBlendSchedule(spark, dir, 0).collect()
+      TrainerShards.readBlendMeta(spark, dir, 0)._1
+        .map(t => t._1 -> t._3).toMap
+    }
+    val crashes = faultMatrix { k =>
+      val parent = localDir("graft_publish_blend")
+      copyTree(template, parent)
+      val local = s"$parent/shards"
+      val dir = faulty(local)
+      val blendDir = s"$local/${TrainerShards.epochDirName(0)}/" +
+        TrainerShards.BlendDirName
+      val crashed = crashAt(k, blendDir) {
+        TrainerShards.writeBlendSchedule(spark, dir, 0, newW,
+          stepsPerFile = 2)
+      }
+      // readers do not recover: old, new, or a loud refusal
+      val s = seen(dir)
+      assert(s.isFailure || Set(milli(oldW), milli(newW)).contains(s.get),
+        s"k=$k: $s")
+      TrainerShards.writeBlendSchedule(spark, dir, 0, newW, stepsPerFile = 2)
+      assert(seen(dir).toOption.contains(milli(newW)), s"k=$k")
+      assert(residue(blendDir).isEmpty, s"k=$k: ${residue(blendDir)}")
+      crashed
+    }
+    assert(crashes >= 3, s"retire, publish and cleanup: $crashes")
+  }
+
+  /** Each binary level (sub-directory of the shard root, and its write)
+    * with `hook` on every rename of an attempt file, run on the faulty
+    * filesystem under `zombie`, then checked against `plain`'s
+    * undisturbed write: the same files, byte for byte, no attempt file
+    * published, and the level's verifier passes.
+    */
+  private def attemptLevels(hook: (Path, Path) => Boolean): Unit = {
+    val weights = Map("en" -> 2.0, "de" -> 1.0, "fr" -> 1.5)
+    def levels(root: String) = Seq[(String, () => Any)](
+      "" -> (() => writeShards(shardDocs, root)),
+      TrainerShards.epochDirName(0) -> (() =>
+        TrainerShards.writeEpochOrder(spark, root, seed = "s", epoch = 0)),
+      s"${TrainerShards.epochDirName(0)}/${TrainerShards.BlendDirName}" ->
+        (() => TrainerShards.writeBlendSchedule(spark, root, 0, weights,
+          stepsPerFile = 2)))
+    val plain = s"${localDir("graft_attempt_plain")}/shards"
+    levels(plain).foreach(_._2())
+    val zombie = s"${localDir("graft_attempt_zombie")}/shards"
+    levels(faulty(zombie)).foreach { case (sub, write) =>
+      FaultyFileSystem.beforeRename = (src, dst) =>
+        !src.getName.contains(".attempt-") || hook(src, dst)
+      try write() finally FaultyFileSystem.beforeRename = (_, _) => true
+      def files(d: String) = new File(s"$d/$sub").listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith(".")).map(_.getName)
+        .toSet
+      assert(!files(zombie).exists(_.contains(".attempt-")),
+        s"$sub: attempt files published: ${files(zombie)}")
+      assert(files(zombie) == files(plain), s"$sub: ${files(zombie)}")
+      files(plain).foreach(n => assert(java.util.Arrays.equals(
+        Files.readAllBytes(Paths.get(s"$zombie/$sub/$n")),
+        Files.readAllBytes(Paths.get(s"$plain/$sub/$n"))), s"$sub/$n"))
+    }
+    TrainerShards.verifyManifest(spark, faulty(zombie))
+    TrainerShards.verifyEpochOrder(spark, faulty(zombie), 0)
+    TrainerShards.verifyBlendSchedule(spark, faulty(zombie), 0)
+    ()
+  }
+
+  private def local(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
+
+  test("attempt commit: a commit that finds an identical committed twin " +
+      "drops its own attempt file, at every binary level") {
+    val refused = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val dropped = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // a zombie attempt committed the identical file first; the rename
+    // then fails as HDFS fails a rename onto an existing file
+    val twin = (src: Path, dst: Path) => {
+      Files.copy(local(src), local(dst))
+      refused.add(local(src).toString)
+      false
+    }
+    // only a delete inside a task is the commit's own drop (the
+    // driver's sweep runs after the job)
+    FaultyFileSystem.afterDelete = p =>
+      if (org.apache.spark.TaskContext.get() != null)
+        dropped.add(local(p).toString)
+    try attemptLevels(twin)
+    finally FaultyFileSystem.afterDelete = _ => ()
+    assert(!refused.isEmpty, "no commit met a twin")
+    assert(dropped.containsAll(refused),
+      s"attempt files not dropped by their commit: $refused vs $dropped")
+  }
+
+  test("attempt commit: an orphaned attempt file left in staging is " +
+      "swept before publish, at every binary level") {
+    val planted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // a failed attempt's leftover beside each committing file
+    val orphan = (_: Path, dst: Path) => {
+      val o = Paths.get(local(dst).toString + ".attempt-999999")
+      Files.write(o, Array[Byte](1, 2, 3))
+      planted.add(o.toString)
+      true
+    }
+    FaultyFileSystem.afterDelete = p =>
+      if (org.apache.spark.TaskContext.get() == null)
+        swept.add(local(p).toString)
+    try attemptLevels(orphan)
+    finally FaultyFileSystem.afterDelete = _ => ()
+    assert(!planted.isEmpty, "no orphan planted")
+    assert(swept.containsAll(planted),
+      s"orphans not swept: $planted vs $swept")
+  }
+
   test("fault matrix: the streaming extend marker") {
     val crashes = faultMatrix { k =>
       val idx = localDir("graft_publish_marker")
@@ -691,7 +815,7 @@ class PublishSpec extends SparkSpec {
       "src/main is on the allow-list") {
     // (file, the exact call, why it is not a publish)
     val allowed = Seq(
-      ("io/TrainerShards.scala", "fs.rename(from, to)",
+      ("io/ShardArtifact.scala", "fs.rename(from, to)",
         "commitAttemptFile: task-level rename-first commit between " +
           "identical attempt twins"),
       ("sources/DocumentCollectionSource.scala",
